@@ -22,8 +22,13 @@ import os
 import time
 
 import numpy as np
+import pandas as pd
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from .index_build import write_local
+
+DELETES_DDL = "docid long"
 
 
 class DeleteLog:
@@ -52,12 +57,18 @@ class DeleteLog:
             json.dump({"generations": gens, "committed_at": time.time()}, f)
         os.replace(tmp, self._state_path())
 
-    def delete_docids(self, docids_df: DataFrame) -> str:
-        """Record docids (column `docid`) as deleted; atomic generation."""
+    def delete_docids(self, docids: DataFrame | np.ndarray) -> str:
+        """Record docids as deleted (a DataFrame's `docid` column, or ids
+        already on the driver, written with pyarrow and no Spark job);
+        atomic generation."""
         gen = os.path.join(self.dir, f"gen-{len(self.generations()):06d}")
-        docids_df.select("docid").distinct().coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(gen)
+        if isinstance(docids, DataFrame):
+            docids.select("docid").distinct().coalesce(1).write.mode(
+                "overwrite"
+            ).parquet(gen)
+        else:
+            ids = np.unique(np.asarray(docids, dtype=np.int64))
+            write_local(gen, [pd.DataFrame({"docid": ids})], DELETES_DDL)
         self._publish(gen)
         return gen
 
@@ -76,14 +87,25 @@ class DeleteLog:
         gens = self.generations()
         if not gens:
             return None
-        df = self.spark.read.parquet(*gens).select("docid").distinct()
-        return df
+        return (
+            self.spark.read.schema(DELETES_DDL).parquet(*gens).select("docid").distinct()
+        )
 
     def deleted_array(self) -> np.ndarray:
-        """Sorted deleted docids as numpy (the broadcastable liveDocs set)."""
-        d = self.deleted()
-        if d is None:
+        """Sorted deleted docids as numpy (the broadcastable liveDocs set),
+        read on the driver."""
+        gens = self.generations()
+        if not gens:
             return np.empty(0, dtype=np.int64)
-        return np.sort(
-            np.array([r["docid"] for r in d.collect()], dtype=np.int64)
-        )
+        t = self._dataset(gens).to_table(columns=["docid"])
+        return np.unique(t.column("docid").to_numpy().astype(np.int64))
+
+    def count_upper(self) -> int:
+        """Logged rows over all generations, from the parquet footers: an
+        upper bound on the deleted-doc count, with no scan and no job."""
+        gens = self.generations()
+        return self._dataset(gens).count_rows() if gens else 0
+
+    @staticmethod
+    def _dataset(gens: list[str]) -> ds.Dataset:
+        return ds.dataset([ds.dataset(g, format="parquet") for g in gens])

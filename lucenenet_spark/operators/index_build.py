@@ -36,7 +36,13 @@ ONE compact shuffle, everything else metadata-only):
                   materialized inside the same write (block_no = -2).
   metadata only:  field_stats from ingest meta sums (no job); docs "table" is
                   a column-pruned VIEW of staging (no rewrite); commit reads
-                  just the checkpoint meta rows.
+                  just the checkpoint meta rows. Metadata is read and written
+                  with pyarrow on the driver, and Spark reads pin their schema,
+                  so none of it launches a job.
+
+In-process path: a pandas frame (a collected NRT batch of at most
+LOCAL_MAX_DOCS turns) runs the same ingest and encode kernels on the driver as
+one partition and writes the same layout with pyarrow — no Spark job.
 
 Skew: hot terms (df above salt_target, estimated from the ingest sketches)
 are salted by source-partition range rank, so their sub-lists stay
@@ -56,6 +62,7 @@ from __future__ import annotations
 import json
 import math
 import os
+import shutil
 import time
 import zlib
 from collections import Counter
@@ -63,6 +70,9 @@ from datetime import datetime, timezone
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -128,6 +138,102 @@ POSTINGS_COLS = [c.split()[0] for c in POSTINGS_DDL.split(",")]
 
 DOC_COLS = ["conv_id", "turn_idx", "role", "tool", "ts", "field_length", "norm_byte"]
 
+# the docs table a delete-merge rewrites (docid + DOC_COLS + numeric fields)
+DOCS_DDL = (
+    "docid long, conv_id string, turn_idx int, role string, tool string,"
+    " ts timestamp, field_length int, norm_byte short"
+)
+
+FIELD_STATS_DDL = (
+    "field string, max_doc long, doc_count long, sum_ttf long, avgdl double"
+)
+
+CHECKPOINTS_DDL = (
+    "build_id string, stage string, partition_id int, status string,"
+    " postings long, postings_per_sec double, lineage string, committed_at string"
+)
+
+# Largest NRT batch (turns) or merge (total max_doc) that is built on the
+# driver instead of as Spark jobs. Both paths run the same kernels
+# (make_ingest, make_merge_encode, merge.make_decode) and write the same
+# layout; only the scheduling differs. Set from a sweep of one NRT delta
+# build (collect + build + publish, warm JVM, local[4] on a 4-core host),
+# seconds in-process / on Spark, two runs each:
+#   1k turns 0.92-0.98 / 4.02-4.04     4k turns 2.21-2.32 / 4.18-4.22
+#   16k turns 6.16-6.45 / 5.30-5.75   64k turns 16.6-16.9 / 9.68-9.75
+# Spark's ~4 s of fixed job cost is repaid between 8k and 16k turns; the
+# bound sits below that crossover.
+LOCAL_MAX_DOCS = 8192
+
+
+def runs_in_process(n_docs: int) -> bool:
+    return n_docs <= LOCAL_MAX_DOCS
+
+
+def with_numeric(ddl: str, numeric_fields) -> str:
+    """A table DDL plus its numeric doc-value columns (doubles)."""
+    return ddl + "".join(f", {nf} double" for nf in numeric_fields)
+
+
+def read_table(spark: SparkSession, path: str, ddl: str) -> DataFrame:
+    """Parquet read with a pinned schema: a schema-less read launches a
+    footer-inference job (~150-200 ms) before the query even plans."""
+    return spark.read.schema(ddl).parquet(path)
+
+
+_ARROW_TYPES = {
+    "string": pa.string(),
+    "binary": pa.binary(),
+    "short": pa.int16(),
+    "int": pa.int32(),
+    "long": pa.int64(),
+    "float": pa.float32(),
+    "double": pa.float64(),
+    # Spark reads a UTC-adjusted micros timestamp back as TimestampType
+    "timestamp": pa.timestamp("us", tz="UTC"),
+}
+
+
+def arrow_schema(ddl: str) -> pa.Schema:
+    return pa.schema(
+        [(name, _ARROW_TYPES[typ]) for name, typ in (c.split() for c in ddl.split(","))]
+    )
+
+
+def write_local(path: str, frames, ddl: str) -> None:
+    """In-process twin of df.write.mode("overwrite").parquet(path): one
+    parquet file holding each frame as its own row group (so driver reads
+    prune by row-group stats), typed by the same DDL Spark writes with."""
+    schema = arrow_schema(ddl)
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    with pq.ParquetWriter(os.path.join(path, "part-00000.parquet"), schema) as w:
+        for f in frames:
+            w.write_table(pa.Table.from_pandas(f, schema=schema, preserve_index=False))
+
+
+def read_local(path: str, columns: list[str], where=None) -> pd.DataFrame:
+    """Driver-side read of a (hive-partitioned) parquet table, pruned by
+    partition values and row-group stats on `where`."""
+    data = ds.dataset(path, format="parquet", partitioning="hive") if os.path.isdir(path) else None
+    if data is None or not data.files:  # never written, or an empty build
+        return pd.DataFrame(columns=columns)
+    return data.to_table(columns=columns, filter=where).to_pandas()
+
+
+def meta_rows(path: str, where, col: str) -> list[dict]:
+    """The JSON checkpoint meta rows of a staging or postings table."""
+    return [json.loads(x) for x in read_local(path, [col], where)[col]]
+
+
+def to_utc(ts: pd.Series, tz: str) -> pd.Series:
+    """Timestamps as UTC instants; naive values are wall time in `tz`,
+    resolved the way pyspark resolves a pandas UDF's naive output."""
+    ts = pd.to_datetime(ts)
+    if ts.dt.tz is None:
+        ts = ts.dt.tz_localize(tz, ambiguous=False)
+    return ts.dt.tz_convert("UTC")
+
 
 def local_table(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
     """Tiny driver-side table -> DataFrame via pandas/Arrow (a JVM
@@ -150,7 +256,7 @@ def term_stats_view(spark: SparkSession, postings_path: str) -> DataFrame:
     through the aggregation to the parquet scan (bucket dirs + row-group
     term stats)."""
     return (
-        spark.read.parquet(postings_path)
+        read_table(spark, postings_path, POSTINGS_DDL)
         .filter(F.col("block_no") == -2)
         .groupBy("field", "term")
         .agg(
@@ -350,6 +456,410 @@ def make_merge_encode(
     return merge_encode
 
 
+class InputOrderError(ValueError):
+    """Rows of one ingest partition are not in (conv_id, turn_idx) order —
+    the only failure the clustered fast path may recover from by shuffling.
+    Raised inside a Python worker it reaches the driver as a PythonException
+    whose text carries this class name."""
+
+
+def _is_order_error(e: BaseException) -> bool:
+    return isinstance(e, InputOrderError) or InputOrderError.__name__ in str(e)
+
+
+def make_ingest(
+    *,
+    staging_ddl: str,
+    keyword_fields: tuple[str, ...],
+    numeric_fields: tuple[str, ...],
+    index_options: str,
+    payload_provider: str | None,
+    analyzer: str,
+    norm_spec: str,
+    max_partial_postings: int,
+    max_partial_positions: int,
+    top_terms: int,
+    input_lineage: str,
+):
+    """The single text pass over ONE partition of (conv_id, turn_idx)-ordered
+    transcript frames -> staging rows (docs, partial posting lists, one
+    checkpoint meta row). The same kernel runs under mapInPandas (pid from
+    the task context) and in-process on a collected batch (pid passed)."""
+    staging_cols = [c.strip().split()[0] for c in staging_ddl.split(",")]
+
+    def _frame(cols: dict, n: int) -> pd.DataFrame:
+        data = {c: cols.get(c) for c in staging_cols}
+        for c, v in data.items():
+            if v is None:
+                data[c] = pd.Series([None] * n, dtype="object")
+        return pd.DataFrame(data)[staging_cols]
+
+    with_positions = index_options != "docs_freqs"
+    with_offsets = index_options == "docs_freqs_positions_offsets"
+    with_payloads = payload_provider == "position_float"
+    has_overlaps = analyzer_has_overlaps(analyzer)
+
+    def ingest_partition(it, pid: int | None = None):
+        # STREAMING doc rows (pipelined with the JVM read/write) while the
+        # per-partition partial posting lists accumulate as per-(field,
+        # term) lists of numpy chunks — the in-RAM DWPT. Term counting is
+        # fully vectorized: one findall per row builds flat (term, doc,
+        # pos) arrays, then factorize + lexsort + run-length boundaries
+        # produce per-(term, doc) tfs and position slices with NO
+        # per-token Python dict work. Order is VERIFIED with vectorized
+        # comparisons, never re-sorted: the clustered fast path gets it
+        # from the input files, the fallback from the JVM range+sort
+        # exchange. Violation = InputOrderError (builder falls back).
+        from pyspark import TaskContext
+
+        from ..functions.sweetspot import norm_encoder
+
+        enc_norms = norm_encoder(norm_spec)
+        gt0 = time.time()
+        rank = 0
+        # pid from the task context, NOT a spark_partition_id() column:
+        # Catalyst's ConvertToLocalRelation evaluates projections over
+        # in-memory relations at PLAN time where spark_partition_id()=0
+        # for every row — which would collide all docid offsets. The
+        # in-process build passes its single partition's pid explicitly.
+        if pid is None:
+            pid = TaskContext.get().partitionId()
+        seen_rows = False
+        postings = 0
+        sum_len = 0
+        doc_count = 0
+        kw_sums: dict[str, int] = {f: 0 for f in keyword_fields}
+        lo = hi = None
+        prev_key = None
+        # (field, term) -> list of (docids i32, tfs i32, norms u8, poss i32)
+        store: dict[tuple[str, str], list] = {}
+        def sub_batches(frames, max_rows=8192):
+            # bound the per-batch flat token arrays: a 64k-row Arrow
+            # batch of long turns builds ~1 GB of transient Python
+            # lists per worker, which at 32 concurrent workers turns
+            # into memory pressure and inverse scaling
+            for pdf0 in frames:
+                if len(pdf0) <= max_rows:
+                    yield pdf0
+                else:
+                    for c0 in range(0, len(pdf0), max_rows):
+                        yield pdf0.iloc[c0 : c0 + max_rows].reset_index(
+                            drop=True
+                        )
+
+        for pdf in sub_batches(it):
+            n = len(pdf)
+            if n == 0:
+                continue
+            seen_rows = True
+            conv = pdf["conv_id"].to_numpy()
+            turn = pdf["turn_idx"].to_numpy()
+            same = conv[1:] == conv[:-1]
+            ok = np.all(
+                (conv[1:] > conv[:-1]) | (same & (turn[1:] > turn[:-1]))
+            )
+            first_key = (conv[0], int(turn[0]))
+            if not ok or (prev_key is not None and first_key <= prev_key):
+                raise InputOrderError(
+                    "input rows not in (conv_id, turn_idx) order within a "
+                    "partition — rebuild with input_clustered=False to "
+                    "force the range-shuffle path"
+                )
+            prev_key = (conv[-1], int(turn[-1]))
+            if lo is None:
+                lo = [str(first_key[0]), first_key[1]]
+            hi = [str(prev_key[0]), prev_key[1]]
+            lengths = np.empty(n, dtype=np.int32)
+            totals = np.empty(n, dtype=np.int32)
+            term_flat: list[str] = []
+            pos_flat: list[int] = []
+            off_flat: list[int] = []  # interleaved [start, end-start]
+            for i, text in enumerate(pdf["text"].to_numpy()):
+                if with_offsets:
+                    toks, poss, st_, en_ = tokenize_with_offsets(
+                        text, analyzer
+                    )
+                else:
+                    toks, poss = tokenize_with_positions(text, analyzer)
+                totals[i] = len(toks)
+                if has_overlaps and toks:
+                    # norm fieldLength discounts posInc-0 overlap
+                    # tokens (FieldInvertState.NumOverlap;
+                    # BM25Similarity.cs:156-160 discountOverlaps) —
+                    # anchors = position-change count; sumTotalTermFreq
+                    # below keeps counting every emitted token
+                    lengths[i] = 1 + sum(
+                        1 for a, b in zip(poss, poss[1:]) if b != a
+                    )
+                else:
+                    lengths[i] = len(toks)
+                term_flat.extend(toks)
+                if with_positions:
+                    pos_flat.extend(poss)
+                if with_offsets:
+                    for a, b in zip(st_, en_):
+                        off_flat.append(a)
+                        off_flat.append(b - a)
+            norm_bytes = enc_norms(lengths)
+            total = len(term_flat)
+            if total:
+                codes, uniques = pd.factorize(
+                    pd.Series(term_flat, dtype="object"), sort=False
+                )
+                uniques = np.asarray(uniques)
+                d_arr = np.repeat(
+                    np.arange(n, dtype=np.int64) + rank,
+                    totals.astype(np.int64),
+                )
+                ov = np.empty((0, 2), dtype=np.int32)
+                pay = np.empty(0, dtype=">f4")
+                if with_positions:
+                    p_arr = np.asarray(pos_flat, dtype=np.int32)
+                    o = np.lexsort((p_arr, d_arr, codes))
+                    c, d, p = codes[o], d_arr[o], p_arr[o]
+                    if with_offsets:
+                        ov = np.asarray(off_flat, dtype=np.int32).reshape(
+                            -1, 2
+                        )[o]
+                    if with_payloads:
+                        # position_float provider: payload is a pure
+                        # function of the (sorted) position array, so
+                        # it is derived vectorized AFTER the lexsort —
+                        # no per-occurrence bytes to reorder
+                        pay = (p.astype(np.float32) + np.float32(1.0)).astype(
+                            ">f4"
+                        )
+                else:
+                    o = np.lexsort((d_arr, codes))
+                    c, d = codes[o], d_arr[o]
+                    p = np.empty(0, dtype=np.int32)
+                # (term, doc) group boundaries -> tf runs + pos slices
+                gchange = np.nonzero((c[1:] != c[:-1]) | (d[1:] != d[:-1]))[0]
+                gb = np.concatenate([[0], gchange + 1, [total]])
+                g_tf = np.diff(gb).astype(np.int32)
+                g_doc = d[gb[:-1]]
+                g_code = c[gb[:-1]]
+                g_norm = norm_bytes[(g_doc - rank)]
+                postings += len(g_code)
+                tchange = np.nonzero(g_code[1:] != g_code[:-1])[0]
+                tb = np.concatenate([[0], tchange + 1, [len(g_code)]])
+                for t0, t1 in zip(tb[:-1], tb[1:]):
+                    term = uniques[g_code[t0]]
+                    store.setdefault((FIELD, term), []).append(
+                        (
+                            # local ranks fit int32 (a partition never
+                            # holds 2^31 rows) — halves the payload
+                            g_doc[t0:t1].astype(np.int32),
+                            g_tf[t0:t1],
+                            g_norm[t0:t1].astype(np.uint8),
+                            p[gb[t0] : gb[t1]],
+                            ov[gb[t0] : gb[t1]].reshape(-1)
+                            if with_offsets
+                            else np.empty(0, dtype=np.int32),
+                            np.full(gb[t1] - gb[t0], 4, dtype=np.int32)
+                            if with_payloads
+                            else np.empty(0, dtype=np.int32),
+                            pay[gb[t0] : gb[t1]].tobytes()
+                            if with_payloads
+                            else b"",
+                        )
+                    )
+            # keyword fields: untokenized exact values, tf=1, pos=0,
+            # omitNorms (norm byte 0 is ignored by the scorer).
+            # array<string> columns are MULTI-VALUED keyword fields
+            # (the SortedSet doc-values shape JoinUtil joins on,
+            # Lucene.Net.Join/JoinUtil.cs + TestJoinUtil multi-value
+            # cases): each DISTINCT value indexed once per doc —
+            # StringField is IndexOptions.DOCS, so repeated adds of the
+            # same value collapse to one posting with freq read as 1.
+            # Multi-valued keyword fields are indexed, not stored.
+            for kf in keyword_fields:
+                if kf not in pdf.columns:
+                    continue
+                vals = pdf[kf].to_numpy()
+                ids_l: list[int] = []
+                vs_l: list[str] = []
+                for i, v in enumerate(vals):
+                    if isinstance(v, str):
+                        if v:
+                            ids_l.append(i)
+                            vs_l.append(v)
+                    elif isinstance(v, (list, tuple, np.ndarray)):
+                        for x in sorted(
+                            {x for x in v if isinstance(x, str) and x}
+                        ):
+                            ids_l.append(i)
+                            vs_l.append(x)
+                if not ids_l:
+                    continue
+                ids = np.asarray(ids_l, dtype=np.int64) + rank
+                vs = np.asarray(vs_l, dtype=object)
+                # group by value, docids ascending within each value
+                # (ids are already asc; lexsort is stable on ties)
+                o = np.lexsort((ids, vs))
+                sv, si = vs[o], ids[o]
+                vchange = np.nonzero(sv[1:] != sv[:-1])[0]
+                vb = np.concatenate([[0], vchange + 1, [len(sv)]])
+                kw_sums[kf] += int(len(sv))
+                postings += len(vb) - 1
+                for v0, v1 in zip(vb[:-1], vb[1:]):
+                    m = v1 - v0
+                    store.setdefault((kf, sv[v0]), []).append(
+                        (
+                            si[v0:v1].astype(np.int32),
+                            np.ones(m, dtype=np.int32),
+                            np.zeros(m, dtype=np.uint8),
+                            np.zeros(m, dtype=np.int32),
+                            # StringFields never carry offsets or
+                            # payloads (the value is untokenized) —
+                            # off_enc/pay_enc stay empty at every level
+                            np.empty(0, dtype=np.int32),
+                            np.empty(0, dtype=np.int32),
+                            b"",
+                        )
+                    )
+            sum_len += int(totals.sum())
+            doc_count += int((totals > 0).sum())
+            yield _frame(
+                {
+                    "pid": np.full(n, pid, dtype=np.int32),
+                    "local_rank": rank + np.arange(n, dtype=np.int64),
+                    "conv_id": pdf["conv_id"],
+                    "turn_idx": pdf["turn_idx"],
+                    "role": pdf["role"],
+                    "tool": pdf["tool"],
+                    "ts": pdf["ts"],
+                    "field_length": lengths,
+                    "norm_byte": norm_bytes.astype(np.int16),
+                    **{nf: pdf[nf] for nf in numeric_fields},
+                },
+                n,
+            )
+            rank += n
+        if not seen_rows:
+            return
+        # flush the partial index: rows per (field, term), raw arrays.
+        # A single partial row's channels are CAPPED (hot terms in a big
+        # partition otherwise produce multi-MB binary rows, and Spark's
+        # vectorized parquet reader batches by ROW COUNT — 4096 fat rows
+        # per columnar batch OOMs the encode scan as the corpus grows).
+        # Oversized lists split on posting boundaries into consecutive
+        # first_local-ordered rows; merge-encode already concatenates
+        # partials in first_docid order, so chunks need no special
+        # handling downstream.
+        entries: list[tuple] = []
+        key_df: dict[tuple[str, str], int] = {}
+        for key in store:
+            chunks = store[key]
+            if len(chunks) == 1:
+                d, t, nrm, p, o, yl, yb = chunks[0]
+            else:
+                d, t, nrm, p, o, yl = (
+                    np.concatenate([ch[j] for ch in chunks])
+                    for j in range(6)
+                )
+                yb = b"".join(ch[6] for ch in chunks)
+            key_df[key] = len(d)
+            if len(d) <= max_partial_postings and len(p) <= max_partial_positions:
+                entries.append(
+                    (key, len(d), int(d[0]), d.tobytes(), t.tobytes(),
+                     nrm.tobytes(), p.tobytes(), o.tobytes(),
+                     yl.tobytes(), yb)
+                )
+                continue
+            cum = np.concatenate([[0], np.cumsum(t, dtype=np.int64)])
+            cumy = (
+                np.concatenate([[0], np.cumsum(yl, dtype=np.int64)])
+                if len(yl)
+                else None
+            )
+            i = 0
+            n_post = len(d)
+            while i < n_post:
+                j = min(i + max_partial_postings, n_post)
+                j2 = int(
+                    np.searchsorted(
+                        cum, cum[i] + max_partial_positions, side="right"
+                    )
+                    - 1
+                )
+                j = max(i + 1, min(j, j2))
+                pa, pb = int(cum[i]), int(cum[j])
+                entries.append(
+                    (
+                        key, j - i, int(d[i]),
+                        d[i:j].tobytes(), t[i:j].tobytes(),
+                        nrm[i:j].tobytes(), p[pa:pb].tobytes(),
+                        o[2 * pa : 2 * pb].tobytes() if len(o) else b"",
+                        yl[pa:pb].tobytes() if len(yl) else b"",
+                        yb[int(cumy[pa]) : int(cumy[pb])]
+                        if cumy is not None
+                        else b"",
+                    )
+                )
+                i = j
+        for c0 in range(0, len(entries), 65536):
+            chunk = entries[c0 : c0 + 65536]
+            yield _frame(
+                {
+                    "pid": np.full(len(chunk), pid, dtype=np.int32),
+                    "local_rank": np.full(len(chunk), -2, dtype=np.int64),
+                    "field_length": np.zeros(len(chunk), dtype=np.int32),
+                    "norm_byte": np.zeros(len(chunk), dtype=np.int16),
+                    "field": [e[0][0] for e in chunk],
+                    "term": [e[0][1] for e in chunk],
+                    "pcount": np.array([e[1] for e in chunk], dtype=np.int32),
+                    "first_local": np.array(
+                        [e[2] for e in chunk], dtype=np.int64
+                    ),
+                    "docids": [e[3] for e in chunk],
+                    "tfs": [e[4] for e in chunk],
+                    "norms": [e[5] for e in chunk],
+                    "poss": [e[6] for e in chunk],
+                    "offs": [e[7] for e in chunk],
+                    "pay_lens": [e[8] for e in chunk],
+                    "pays": [e[9] for e in chunk],
+                },
+                len(chunk),
+            )
+        elapsed = time.time() - gt0
+        meta = {
+            "stage": "ingest",
+            "pid": pid,
+            "rows": rank,
+            "lo": lo,
+            "hi": hi,
+            "postings": postings,
+            "sum_len": sum_len,
+            "doc_count": doc_count,
+            "kw_sums": kw_sums,
+            "elapsed_sec": round(elapsed, 3),
+            "postings_per_sec": round(postings / max(elapsed, 1e-9), 1),
+            "top_terms": dict(
+                sorted(
+                    (
+                        (k[0] + FKEY_SEP + k[1], n_df)
+                        for k, n_df in key_df.items()
+                    ),
+                    key=lambda kv: -kv[1],
+                )[:top_terms]
+            ),
+            "lineage": input_lineage,
+        }
+        yield _frame(
+            {
+                "pid": [pid],
+                "local_rank": [-1],
+                "field_length": [0],
+                "norm_byte": [0],
+                "meta": [json.dumps(meta)],
+            },
+            1,
+        )
+
+    return ingest_partition
+
+
 def write_postings(encoded: DataFrame, path: str, n_buckets: int) -> None:
     """Read-optimized layout: bucket directories, term-sorted files, so a
     query prunes to |buckets(query terms)| dirs then row-group min/max.
@@ -367,6 +877,28 @@ def write_postings(encoded: DataFrame, path: str, n_buckets: int) -> None:
         .partitionBy("bucket")
         .parquet(path)
     )
+
+
+# the postings file schema: `bucket` lives in the directory name
+_POSTINGS_FILE_DDL = POSTINGS_DDL.removesuffix(", bucket int")
+
+
+def write_postings_local(frames, path: str) -> None:
+    """In-process twin of write_postings: the same hive layout
+    (postings/bucket=N/), one file per bucket, rows sorted by (term, salt,
+    block_no)."""
+    frames = [f for f in frames if len(f)]
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    if not frames:
+        return
+    pdf = pd.concat(frames, ignore_index=True)
+    for bucket, g in pdf.groupby("bucket", sort=True):
+        write_local(
+            os.path.join(path, f"bucket={bucket}"),
+            [g.sort_values(["term", "salt", "block_no"], kind="stable")],
+            _POSTINGS_FILE_DDL,
+        )
 
 
 class IndexBuilder:
@@ -515,455 +1047,112 @@ class IndexBuilder:
         )
         return all(a[1] < b[0] for a, b in zip(spans, spans[1:]))
 
-    def ingest(self, transcripts: DataFrame, build_id: str) -> dict:
-        info = self._stage_info("staging")
-        if info is not None:
-            return info
-        t0 = time.time()
-        top_terms = self.top_terms
+    def _ingest_columns(self, columns) -> list[str]:
+        """Input columns the ingest kernel reads: the stored schema, extra
+        keyword fields (e.g. multi-valued array<string> columns, indexed
+        only) and the numeric doc-value fields."""
+        base_cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+        extra_kw = [
+            kf for kf in self.keyword_fields if kf not in base_cols and kf in columns
+        ]
+        missing = [nf for nf in self.numeric_fields if nf not in columns]
+        if missing:
+            raise ValueError(f"numeric fields missing from input: {missing}")
+        return base_cols + extra_kw + list(self.numeric_fields)
 
+    def _ingest_kernel(self, input_lineage: str):
+        return make_ingest(
+            staging_ddl=with_numeric(STAGING_DDL, self.numeric_fields),
+            keyword_fields=self.keyword_fields,
+            numeric_fields=self.numeric_fields,
+            index_options=self.index_options,
+            payload_provider=self.payload_provider,
+            analyzer=self.analyzer,
+            norm_spec=self.norm_spec,
+            max_partial_postings=self.max_partial_postings,
+            max_partial_positions=self.max_partial_positions,
+            top_terms=self.top_terms,
+            input_lineage=input_lineage,
+        )
+
+    def _ingest_pass(self, transcripts: DataFrame, clustered: bool, lineage: str) -> None:
+        """One Spark text pass: the ingest kernel under mapInPandas, over the
+        input's own partitions (clustered) or a range exchange."""
+        src = transcripts
+        conf = self.spark.conf
+        prev_cost = conf.get("spark.sql.files.openCostInBytes", "4194304")
+        if clustered:
+            # one file split per partition: Spark's size-ordered file packing
+            # would interleave key ranges within a partition. Splits of a
+            # single file remain contiguous, so per-partition order holds.
+            conf.set("spark.sql.files.openCostInBytes", str(128 * 1024 * 1024))
+        else:
+            src = src.repartitionByRange(
+                self.n_segments, "conv_id", "turn_idx"
+            ).sortWithinPartitions("conv_id", "turn_idx")
+        try:
+            src.select(*self._ingest_columns(src.columns)).mapInPandas(
+                self._ingest_kernel(lineage),
+                with_numeric(STAGING_DDL, self.numeric_fields),
+            ).write.mode("overwrite").parquet(self._p("staging"))
+        finally:
+            conf.set("spark.sql.files.openCostInBytes", prev_cost)
+
+    def _ingest_spark(self, transcripts: DataFrame, build_id: str) -> None:
         clustered = (
             self._input_is_clustered(transcripts)
             if self.input_clustered is None
             else self.input_clustered
         )
-        input_lineage = json.dumps(
-            {"build_id": build_id, "source": "transcripts", "clustered": clustered}
+        lineage = {"build_id": build_id, "source": "transcripts", "clustered": clustered}
+        try:
+            self._ingest_pass(transcripts, clustered, json.dumps(lineage))
+        except Exception as e:
+            # only a failed order verification means "input was not actually
+            # clustered"; any other error (OOM, IO, a bug) propagates
+            if not (clustered and _is_order_error(e)):
+                raise
+            lineage.update(
+                clustered=False,
+                note="clustered fast path failed verification; shuffled",
+            )
+            self._ingest_pass(transcripts, False, json.dumps(lineage))
+
+    def _ingest_local(self, batch: pd.DataFrame, build_id: str) -> None:
+        """In-process text pass over a collected batch: the same kernel on one
+        (conv_id, turn_idx)-sorted partition, staging written with pyarrow."""
+        lineage = json.dumps(
+            {"build_id": build_id, "source": "transcripts", "in_process": True}
+        )
+        batch = batch.sort_values(["conv_id", "turn_idx"], kind="stable")
+        # toPandas hands timestamps over as naive session-local wall time
+        # (as mapInPandas does); staging stores UTC instants either way
+        batch = batch.assign(
+            ts=to_utc(batch["ts"], self.spark.conf.get("spark.sql.session.timeZone"))
+        )
+        frames = self._ingest_kernel(lineage)(
+            [batch[self._ingest_columns(batch.columns)].reset_index(drop=True)], 0
+        )
+        write_local(
+            self._p("staging"), frames, with_numeric(STAGING_DDL, self.numeric_fields)
         )
 
-        numeric_fields = self.numeric_fields
-        staging_ddl = STAGING_DDL + "".join(
-            f", {nf} double" for nf in numeric_fields
-        )
-        staging_cols = [c.strip().split()[0] for c in staging_ddl.split(",")]
-
-        def _frame(cols: dict, n: int) -> pd.DataFrame:
-            data = {c: cols.get(c) for c in staging_cols}
-            for c, v in data.items():
-                if v is None:
-                    data[c] = pd.Series([None] * n, dtype="object")
-            return pd.DataFrame(data)[staging_cols]
-
-        keyword_fields = self.keyword_fields
-        with_positions = self.index_options != "docs_freqs"
-        with_offsets = self.index_options == "docs_freqs_positions_offsets"
-        with_payloads = self.payload_provider == "position_float"
-        analyzer = self.analyzer
-        has_overlaps = analyzer_has_overlaps(analyzer)
-        norm_spec = self.norm_spec
-        max_partial_postings = self.max_partial_postings
-        max_partial_positions = self.max_partial_positions
-
-        def ingest_partition(it):
-            # STREAMING doc rows (pipelined with the JVM read/write) while the
-            # per-partition partial posting lists accumulate as per-(field,
-            # term) lists of numpy chunks — the in-RAM DWPT. Term counting is
-            # fully vectorized: one findall per row builds flat (term, doc,
-            # pos) arrays, then factorize + lexsort + run-length boundaries
-            # produce per-(term, doc) tfs and position slices with NO
-            # per-token Python dict work. Order is VERIFIED with vectorized
-            # comparisons, never re-sorted: the clustered fast path gets it
-            # from the input files, the fallback from the JVM range+sort
-            # exchange. Violation = hard error (builder falls back).
-            from pyspark import TaskContext
-
-            from ..functions.sweetspot import norm_encoder
-
-            enc_norms = norm_encoder(norm_spec)
-            gt0 = time.time()
-            rank = 0
-            # pid from the task context, NOT a spark_partition_id() column:
-            # Catalyst's ConvertToLocalRelation evaluates projections over
-            # in-memory relations at PLAN time where spark_partition_id()=0
-            # for every row — which would collide all docid offsets
-            pid = TaskContext.get().partitionId()
-            seen_rows = False
-            postings = 0
-            sum_len = 0
-            doc_count = 0
-            kw_sums: dict[str, int] = {f: 0 for f in keyword_fields}
-            lo = hi = None
-            prev_key = None
-            # (field, term) -> list of (docids i32, tfs i32, norms u8, poss i32)
-            store: dict[tuple[str, str], list] = {}
-            def sub_batches(frames, max_rows=8192):
-                # bound the per-batch flat token arrays: a 64k-row Arrow
-                # batch of long turns builds ~1 GB of transient Python
-                # lists per worker, which at 32 concurrent workers turns
-                # into memory pressure and inverse scaling
-                for pdf0 in frames:
-                    if len(pdf0) <= max_rows:
-                        yield pdf0
-                    else:
-                        for c0 in range(0, len(pdf0), max_rows):
-                            yield pdf0.iloc[c0 : c0 + max_rows].reset_index(
-                                drop=True
-                            )
-
-            for pdf in sub_batches(it):
-                n = len(pdf)
-                if n == 0:
-                    continue
-                seen_rows = True
-                conv = pdf["conv_id"].to_numpy()
-                turn = pdf["turn_idx"].to_numpy()
-                same = conv[1:] == conv[:-1]
-                ok = np.all(
-                    (conv[1:] > conv[:-1]) | (same & (turn[1:] > turn[:-1]))
-                )
-                first_key = (conv[0], int(turn[0]))
-                if not ok or (prev_key is not None and first_key <= prev_key):
-                    raise ValueError(
-                        "input rows not in (conv_id, turn_idx) order within a "
-                        "partition — rebuild with input_clustered=False to "
-                        "force the range-shuffle path"
-                    )
-                prev_key = (conv[-1], int(turn[-1]))
-                if lo is None:
-                    lo = [str(first_key[0]), first_key[1]]
-                hi = [str(prev_key[0]), prev_key[1]]
-                lengths = np.empty(n, dtype=np.int32)
-                totals = np.empty(n, dtype=np.int32)
-                term_flat: list[str] = []
-                pos_flat: list[int] = []
-                off_flat: list[int] = []  # interleaved [start, end-start]
-                for i, text in enumerate(pdf["text"].to_numpy()):
-                    if with_offsets:
-                        toks, poss, st_, en_ = tokenize_with_offsets(
-                            text, analyzer
-                        )
-                    else:
-                        toks, poss = tokenize_with_positions(text, analyzer)
-                    totals[i] = len(toks)
-                    if has_overlaps and toks:
-                        # norm fieldLength discounts posInc-0 overlap
-                        # tokens (FieldInvertState.NumOverlap;
-                        # BM25Similarity.cs:156-160 discountOverlaps) —
-                        # anchors = position-change count; sumTotalTermFreq
-                        # below keeps counting every emitted token
-                        lengths[i] = 1 + sum(
-                            1 for a, b in zip(poss, poss[1:]) if b != a
-                        )
-                    else:
-                        lengths[i] = len(toks)
-                    term_flat.extend(toks)
-                    if with_positions:
-                        pos_flat.extend(poss)
-                    if with_offsets:
-                        for a, b in zip(st_, en_):
-                            off_flat.append(a)
-                            off_flat.append(b - a)
-                norm_bytes = enc_norms(lengths)
-                total = len(term_flat)
-                if total:
-                    codes, uniques = pd.factorize(
-                        pd.Series(term_flat, dtype="object"), sort=False
-                    )
-                    uniques = np.asarray(uniques)
-                    d_arr = np.repeat(
-                        np.arange(n, dtype=np.int64) + rank,
-                        totals.astype(np.int64),
-                    )
-                    ov = np.empty((0, 2), dtype=np.int32)
-                    pay = np.empty(0, dtype=">f4")
-                    if with_positions:
-                        p_arr = np.asarray(pos_flat, dtype=np.int32)
-                        o = np.lexsort((p_arr, d_arr, codes))
-                        c, d, p = codes[o], d_arr[o], p_arr[o]
-                        if with_offsets:
-                            ov = np.asarray(off_flat, dtype=np.int32).reshape(
-                                -1, 2
-                            )[o]
-                        if with_payloads:
-                            # position_float provider: payload is a pure
-                            # function of the (sorted) position array, so
-                            # it is derived vectorized AFTER the lexsort —
-                            # no per-occurrence bytes to reorder
-                            pay = (p.astype(np.float32) + np.float32(1.0)).astype(
-                                ">f4"
-                            )
-                    else:
-                        o = np.lexsort((d_arr, codes))
-                        c, d = codes[o], d_arr[o]
-                        p = np.empty(0, dtype=np.int32)
-                    # (term, doc) group boundaries -> tf runs + pos slices
-                    gchange = np.nonzero((c[1:] != c[:-1]) | (d[1:] != d[:-1]))[0]
-                    gb = np.concatenate([[0], gchange + 1, [total]])
-                    g_tf = np.diff(gb).astype(np.int32)
-                    g_doc = d[gb[:-1]]
-                    g_code = c[gb[:-1]]
-                    g_norm = norm_bytes[(g_doc - rank)]
-                    postings += len(g_code)
-                    tchange = np.nonzero(g_code[1:] != g_code[:-1])[0]
-                    tb = np.concatenate([[0], tchange + 1, [len(g_code)]])
-                    for t0, t1 in zip(tb[:-1], tb[1:]):
-                        term = uniques[g_code[t0]]
-                        store.setdefault((FIELD, term), []).append(
-                            (
-                                # local ranks fit int32 (a partition never
-                                # holds 2^31 rows) — halves the payload
-                                g_doc[t0:t1].astype(np.int32),
-                                g_tf[t0:t1],
-                                g_norm[t0:t1].astype(np.uint8),
-                                p[gb[t0] : gb[t1]],
-                                ov[gb[t0] : gb[t1]].reshape(-1)
-                                if with_offsets
-                                else np.empty(0, dtype=np.int32),
-                                np.full(gb[t1] - gb[t0], 4, dtype=np.int32)
-                                if with_payloads
-                                else np.empty(0, dtype=np.int32),
-                                pay[gb[t0] : gb[t1]].tobytes()
-                                if with_payloads
-                                else b"",
-                            )
-                        )
-                # keyword fields: untokenized exact values, tf=1, pos=0,
-                # omitNorms (norm byte 0 is ignored by the scorer).
-                # array<string> columns are MULTI-VALUED keyword fields
-                # (the SortedSet doc-values shape JoinUtil joins on,
-                # Lucene.Net.Join/JoinUtil.cs + TestJoinUtil multi-value
-                # cases): each DISTINCT value indexed once per doc —
-                # StringField is IndexOptions.DOCS, so repeated adds of the
-                # same value collapse to one posting with freq read as 1.
-                # Multi-valued keyword fields are indexed, not stored.
-                for kf in keyword_fields:
-                    if kf not in pdf.columns:
-                        continue
-                    vals = pdf[kf].to_numpy()
-                    ids_l: list[int] = []
-                    vs_l: list[str] = []
-                    for i, v in enumerate(vals):
-                        if isinstance(v, str):
-                            if v:
-                                ids_l.append(i)
-                                vs_l.append(v)
-                        elif isinstance(v, (list, tuple, np.ndarray)):
-                            for x in sorted(
-                                {x for x in v if isinstance(x, str) and x}
-                            ):
-                                ids_l.append(i)
-                                vs_l.append(x)
-                    if not ids_l:
-                        continue
-                    ids = np.asarray(ids_l, dtype=np.int64) + rank
-                    vs = np.asarray(vs_l, dtype=object)
-                    # group by value, docids ascending within each value
-                    # (ids are already asc; lexsort is stable on ties)
-                    o = np.lexsort((ids, vs))
-                    sv, si = vs[o], ids[o]
-                    vchange = np.nonzero(sv[1:] != sv[:-1])[0]
-                    vb = np.concatenate([[0], vchange + 1, [len(sv)]])
-                    kw_sums[kf] += int(len(sv))
-                    postings += len(vb) - 1
-                    for v0, v1 in zip(vb[:-1], vb[1:]):
-                        m = v1 - v0
-                        store.setdefault((kf, sv[v0]), []).append(
-                            (
-                                si[v0:v1].astype(np.int32),
-                                np.ones(m, dtype=np.int32),
-                                np.zeros(m, dtype=np.uint8),
-                                np.zeros(m, dtype=np.int32),
-                                # StringFields never carry offsets or
-                                # payloads (the value is untokenized) —
-                                # off_enc/pay_enc stay empty at every level
-                                np.empty(0, dtype=np.int32),
-                                np.empty(0, dtype=np.int32),
-                                b"",
-                            )
-                        )
-                sum_len += int(totals.sum())
-                doc_count += int((totals > 0).sum())
-                yield _frame(
-                    {
-                        "pid": np.full(n, pid, dtype=np.int32),
-                        "local_rank": rank + np.arange(n, dtype=np.int64),
-                        "conv_id": pdf["conv_id"],
-                        "turn_idx": pdf["turn_idx"],
-                        "role": pdf["role"],
-                        "tool": pdf["tool"],
-                        "ts": pdf["ts"],
-                        "field_length": lengths,
-                        "norm_byte": norm_bytes.astype(np.int16),
-                        **{nf: pdf[nf] for nf in numeric_fields},
-                    },
-                    n,
-                )
-                rank += n
-            if not seen_rows:
-                return
-            # flush the partial index: rows per (field, term), raw arrays.
-            # A single partial row's channels are CAPPED (hot terms in a big
-            # partition otherwise produce multi-MB binary rows, and Spark's
-            # vectorized parquet reader batches by ROW COUNT — 4096 fat rows
-            # per columnar batch OOMs the encode scan as the corpus grows).
-            # Oversized lists split on posting boundaries into consecutive
-            # first_local-ordered rows; merge-encode already concatenates
-            # partials in first_docid order, so chunks need no special
-            # handling downstream.
-            entries: list[tuple] = []
-            key_df: dict[tuple[str, str], int] = {}
-            for key in store:
-                chunks = store[key]
-                if len(chunks) == 1:
-                    d, t, nrm, p, o, yl, yb = chunks[0]
-                else:
-                    d, t, nrm, p, o, yl = (
-                        np.concatenate([ch[j] for ch in chunks])
-                        for j in range(6)
-                    )
-                    yb = b"".join(ch[6] for ch in chunks)
-                key_df[key] = len(d)
-                if len(d) <= max_partial_postings and len(p) <= max_partial_positions:
-                    entries.append(
-                        (key, len(d), int(d[0]), d.tobytes(), t.tobytes(),
-                         nrm.tobytes(), p.tobytes(), o.tobytes(),
-                         yl.tobytes(), yb)
-                    )
-                    continue
-                cum = np.concatenate([[0], np.cumsum(t, dtype=np.int64)])
-                cumy = (
-                    np.concatenate([[0], np.cumsum(yl, dtype=np.int64)])
-                    if len(yl)
-                    else None
-                )
-                i = 0
-                n_post = len(d)
-                while i < n_post:
-                    j = min(i + max_partial_postings, n_post)
-                    j2 = int(
-                        np.searchsorted(
-                            cum, cum[i] + max_partial_positions, side="right"
-                        )
-                        - 1
-                    )
-                    j = max(i + 1, min(j, j2))
-                    pa, pb = int(cum[i]), int(cum[j])
-                    entries.append(
-                        (
-                            key, j - i, int(d[i]),
-                            d[i:j].tobytes(), t[i:j].tobytes(),
-                            nrm[i:j].tobytes(), p[pa:pb].tobytes(),
-                            o[2 * pa : 2 * pb].tobytes() if len(o) else b"",
-                            yl[pa:pb].tobytes() if len(yl) else b"",
-                            yb[int(cumy[pa]) : int(cumy[pb])]
-                            if cumy is not None
-                            else b"",
-                        )
-                    )
-                    i = j
-            for c0 in range(0, len(entries), 65536):
-                chunk = entries[c0 : c0 + 65536]
-                yield _frame(
-                    {
-                        "pid": np.full(len(chunk), pid, dtype=np.int32),
-                        "local_rank": np.full(len(chunk), -2, dtype=np.int64),
-                        "field_length": np.zeros(len(chunk), dtype=np.int32),
-                        "norm_byte": np.zeros(len(chunk), dtype=np.int16),
-                        "field": [e[0][0] for e in chunk],
-                        "term": [e[0][1] for e in chunk],
-                        "pcount": np.array([e[1] for e in chunk], dtype=np.int32),
-                        "first_local": np.array(
-                            [e[2] for e in chunk], dtype=np.int64
-                        ),
-                        "docids": [e[3] for e in chunk],
-                        "tfs": [e[4] for e in chunk],
-                        "norms": [e[5] for e in chunk],
-                        "poss": [e[6] for e in chunk],
-                        "offs": [e[7] for e in chunk],
-                        "pay_lens": [e[8] for e in chunk],
-                        "pays": [e[9] for e in chunk],
-                    },
-                    len(chunk),
-                )
-            elapsed = time.time() - gt0
-            meta = {
-                "stage": "ingest",
-                "pid": pid,
-                "rows": rank,
-                "lo": lo,
-                "hi": hi,
-                "postings": postings,
-                "sum_len": sum_len,
-                "doc_count": doc_count,
-                "kw_sums": kw_sums,
-                "elapsed_sec": round(elapsed, 3),
-                "postings_per_sec": round(postings / max(elapsed, 1e-9), 1),
-                "top_terms": dict(
-                    sorted(
-                        (
-                            (k[0] + FKEY_SEP + k[1], n_df)
-                            for k, n_df in key_df.items()
-                        ),
-                        key=lambda kv: -kv[1],
-                    )[:top_terms]
-                ),
-                "lineage": input_lineage,
-            }
-            yield _frame(
-                {
-                    "pid": [pid],
-                    "local_rank": [-1],
-                    "field_length": [0],
-                    "norm_byte": [0],
-                    "meta": [json.dumps(meta)],
-                },
-                1,
-            )
-
-        def run_pass(use_clustered: bool) -> None:
-            src = transcripts
-            if not use_clustered:
-                src = src.repartitionByRange(
-                    self.n_segments, "conv_id", "turn_idx"
-                ).sortWithinPartitions("conv_id", "turn_idx")
-            base_cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-            # keyword fields beyond the stored schema (e.g. multi-valued
-            # array<string> columns) ride along for indexing only
-            extra_kw = [
-                kf for kf in self.keyword_fields
-                if kf not in base_cols and kf in src.columns
-            ]
-            missing = [nf for nf in numeric_fields if nf not in src.columns]
-            if missing:
-                raise ValueError(f"numeric fields missing from input: {missing}")
-            staged = (
-                src.select(*base_cols, *extra_kw, *numeric_fields)
-                .mapInPandas(ingest_partition, staging_ddl)
-            )
-            staged.write.mode("overwrite").parquet(self._p("staging"))
-
-        conf = self.spark.conf
-        if clustered:
-            # one file split per partition: Spark's size-ordered file packing
-            # would interleave key ranges within a partition. Splits of a
-            # single file remain contiguous, so per-partition order holds.
-            prev_cost = conf.get("spark.sql.files.openCostInBytes", "4194304")
-            conf.set("spark.sql.files.openCostInBytes", str(128 * 1024 * 1024))
-            try:
-                run_pass(True)
-            except Exception:
-                # order verification failed inside the pass — input was not
-                # actually clustered; fall back to the range-shuffle path
-                clustered = False
-                input_lineage = json.dumps(
-                    {"build_id": build_id, "source": "transcripts", "clustered": False,
-                     "note": "clustered fast path failed verification; shuffled"}
-                )
-                run_pass(False)
-            finally:
-                conf.set("spark.sql.files.openCostInBytes", prev_cost)
+    def ingest(self, transcripts: DataFrame | pd.DataFrame, build_id: str) -> dict:
+        """Stage 1. A pandas frame (a collected NRT batch) runs in-process;
+        a Spark DataFrame runs as one Spark pass."""
+        info = self._stage_info("staging")
+        if info is not None:
+            return info
+        t0 = time.time()
+        in_process = isinstance(transcripts, pd.DataFrame)
+        if in_process:
+            self._ingest_local(transcripts, build_id)
         else:
-            run_pass(False)
+            self._ingest_spark(transcripts, build_id)
 
         # driver-side prefix sum over the tiny meta rows -> docid offsets,
         # partitions ordered by their (conv_id, turn_idx) range start
-        metas = [
-            json.loads(r["meta"])
-            for r in self.spark.read.parquet(self._p("staging"))
-            .filter(F.col("local_rank") == -1)
-            .select("meta")
-            .collect()
-        ]
+        metas = meta_rows(self._p("staging"), ds.field("local_rank") == -1, "meta")
         metas.sort(key=lambda m: (m["lo"][0], m["lo"][1]))
         # range disjointness must hold or docids would not be a global rank
         for a, b in zip(metas, metas[1:]):
@@ -1002,6 +1191,7 @@ class IndexBuilder:
                     for f in self.keyword_fields
                 },
                 "hot_terms": hot,
+                "in_process": in_process,
                 # slim per-partition checkpoint info so commit() needs no
                 # staging re-read
                 "metas": [
@@ -1012,21 +1202,6 @@ class IndexBuilder:
             },
         )
 
-    # -- docid expression / docs view ----------------------------------------
-    @staticmethod
-    def _docid_expr(offsets: dict):
-        pairs = [x for pid, off in offsets.items() for x in (F.lit(int(pid)), F.lit(off))]
-        m = F.create_map(*pairs) if pairs else F.create_map()
-        return (F.element_at(m, F.col("pid")) + F.col("local_rank")).alias("docid")
-
-    def _staging_docs(self, offsets: dict) -> DataFrame:
-        """docs view: column-pruned staging scan + on-the-fly docid (no rewrite)."""
-        return (
-            self.spark.read.parquet(self._p("staging"))
-            .filter(F.col("local_rank") >= 0)
-            .select(self._docid_expr(offsets), *DOC_COLS, *self.numeric_fields)
-        )
-
     # -- stage 2: encode postings (the single explode shuffle) ----------------
     def encode_postings(self, build_id: str, staging_info: dict) -> dict:
         info = self._stage_info("postings")
@@ -1034,17 +1209,47 @@ class IndexBuilder:
             return info
         t0 = time.time()
         offsets = {int(k): v for k, v in staging_info["offsets"].items()}
-        pid_rank = {int(k): v for k, v in staging_info["pid_rank"].items()}
-        n_parts = max(len(pid_rank), 1)
         max_doc = int(staging_info["n_docs"])
-        hot = {t: n for t, n in staging_info["hot_terms"].items() if n > 1}
         avgdl = self._avgdl(staging_info)
         caches = {FIELD: norm_cache(self.k1, self.b, avgdl)}
         kw_cache = omit_norms_cache(self.k1)
         for kf in self.keyword_fields:
             caches[kf] = kw_cache
-        n_buckets = self.n_buckets
-        block = self.block_size
+        lineage = json.dumps({"build_id": build_id, "stage": "encode", "max_doc": max_doc})
+        encode = make_merge_encode(caches, self.n_buckets, self.block_size, lineage, offsets)
+        if staging_info.get("in_process"):
+            self._encode_local(encode)
+        else:
+            self._encode_spark(encode, staging_info)
+        return self._mark_stage(
+            "postings", {"build_id": build_id, "elapsed": round(time.time() - t0, 2)}
+        )
+
+    _PARTIAL_COLS = [
+        "field", "term", "docids", "tfs", "norms", "poss", "offs", "pay_lens", "pays",
+        "pid",
+    ]
+
+    def _encode_local(self, encode) -> None:
+        """In-process encode of an in-process staging table. It holds ONE
+        partition (pid 0, range rank 0), so partition-granular salting puts
+        every term in salt 0 and first_docid is the partial's first local
+        rank."""
+        part = read_local(
+            self._p("staging"),
+            self._PARTIAL_COLS + ["pcount", "first_local"],
+            ds.field("local_rank") == -2,
+        )
+        partials = part.assign(
+            salt=0, count=part["pcount"], first_docid=part["first_local"]
+        )
+        write_postings_local(encode(iter([partials])), self._p("postings"))
+
+    def _encode_spark(self, encode, staging_info: dict) -> None:
+        offsets = {int(k): v for k, v in staging_info["offsets"].items()}
+        pid_rank = {int(k): v for k, v in staging_info["pid_rank"].items()}
+        n_parts = max(len(pid_rank), 1)
+        hot = {t: n for t, n in staging_info["hot_terms"].items() if n > 1}
         n_shuffle = max(
             int(self.spark.conf.get("spark.sql.shuffle.partitions", "32")), 8
         )
@@ -1054,25 +1259,17 @@ class IndexBuilder:
         # linearly with the corpus (OOMs past ~10M docs at 32 partitions).
         # Staging bytes via the Hadoop FS API (works on HDFS/S3 the same);
         # ~4x parquet->in-memory expansion, target <=128 MiB per task.
-        try:
-            jpath = self.spark._jvm.org.apache.hadoop.fs.Path(self._p("staging"))
-            fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-            staged_bytes = int(fs.getContentSummary(jpath).getLength())
-        except Exception:
-            staged_bytes = 0
+        jpath = self.spark._jvm.org.apache.hadoop.fs.Path(self._p("staging"))
+        fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
+        staged_bytes = int(fs.getContentSummary(jpath).getLength())
         n_shuffle = max(n_shuffle, math.ceil(staged_bytes * 4 / (128 << 20)))
 
         # the partial posting lists were flushed during ingest; this stage is
         # a pure shuffle of compact binary rows + numpy merge-encode — no
         # per-object Arrow conversion anywhere on the hot path.
-        partials = (
-            self.spark.read.parquet(self._p("staging"))
-            .filter(F.col("local_rank") == -2)
-            .select(
-                "pid", "field", "term", "pcount", "first_local",
-                "docids", "tfs", "norms", "poss", "offs", "pay_lens", "pays",
-            )
-        )
+        partials = read_table(
+            self.spark, self._p("staging"), with_numeric(STAGING_DDL, self.numeric_fields)
+        ).filter(F.col("local_rank") == -2)
         off_expr = F.create_map(
             *[x for p, o in offsets.items() for x in (F.lit(p), F.lit(o))]
         )
@@ -1098,25 +1295,15 @@ class IndexBuilder:
         else:
             salt_col = F.lit(0)
         partials = partials.select(
-            "field",
-            "term",
+            *self._PARTIAL_COLS,
             salt_col.alias("salt"),
             F.col("pcount").alias("count"),
             (F.element_at(off_expr, F.col("pid")) + F.col("first_local")).alias(
                 "first_docid"
             ),
-            "docids",
-            "tfs",
-            "norms",
-            "poss",
-            "offs",
-            "pay_lens",
-            "pays",
-            "pid",
         )
-        lineage = json.dumps({"build_id": build_id, "stage": "encode", "max_doc": max_doc})
         encoded = partials.repartition(n_shuffle, "field", "term", "salt").mapInPandas(
-            make_merge_encode(caches, n_buckets, block, lineage, offsets), POSTINGS_DDL
+            encode, POSTINGS_DDL
         )
         # the partials scan reads wide binary rows (<=~0.5 MB each after the
         # flush caps); the vectorized reader batches by ROW COUNT, so drop
@@ -1126,12 +1313,9 @@ class IndexBuilder:
         prev_batch = self.spark.conf.get(batch_conf, "4096")
         self.spark.conf.set(batch_conf, "256")
         try:
-            write_postings(encoded, self._p("postings"), n_buckets)
+            write_postings(encoded, self._p("postings"), self.n_buckets)
         finally:
             self.spark.conf.set(batch_conf, prev_batch)
-        return self._mark_stage(
-            "postings", {"build_id": build_id, "elapsed": round(time.time() - t0, 2)}
-        )
 
     @staticmethod
     def _avgdl(staging_info: dict) -> np.float32:
@@ -1158,7 +1342,6 @@ class IndexBuilder:
             if sum_ttf > 0
             else 1.0
         )
-        rows = [(FIELD, max_doc, doc_count, sum_ttf, avgdl)]
         fields = {
             FIELD: {
                 "doc_count": doc_count,
@@ -1168,18 +1351,13 @@ class IndexBuilder:
             }
         }
         for kf, s in (staging_info.get("kw_sums") or {}).items():
-            rows.append((kf, max_doc, int(s), int(s), 1.0))
             fields[kf] = {
                 "doc_count": int(s),
                 "sum_ttf": int(s),
                 "avgdl": 1.0,
                 "omit_norms": True,
             }
-        local_table(
-            self.spark,
-            rows,
-            "field string, max_doc long, doc_count long, sum_ttf long, avgdl double",
-        ).coalesce(1).write.mode("overwrite").parquet(self._p("field_stats"))
+        write_field_stats(self._p("field_stats"), max_doc, fields)
         return self._mark_stage(
             "stats",
             {
@@ -1197,33 +1375,11 @@ class IndexBuilder:
     def commit(self, build_id: str, staging_info: dict, stats_info: dict) -> dict:
         # ingest checkpoint metas ride in the stage marker (no staging re-read)
         ingest_metas = [dict(m, stage="ingest") for m in staging_info["metas"]]
-        encode_metas = [
-            json.loads(r["term"])
-            for r in self.spark.read.parquet(self._p("postings"))
-            .filter(F.col("block_no") == -1)
-            .select("term")
-            .collect()
-        ]
-        now = datetime.now(timezone.utc).isoformat()
-        rows = [
-            (
-                build_id,
-                m["stage"],
-                int(m.get("pid", i)),
-                "done",
-                int(m["postings"]),
-                float(m["postings_per_sec"]),
-                m["lineage"],
-                now,
-            )
-            for i, m in enumerate(ingest_metas + encode_metas)
-        ]
-        local_table(
-            self.spark,
-            rows,
-            "build_id string, stage string, partition_id int, status string,"
-            " postings long, postings_per_sec double, lineage string, committed_at string",
-        ).coalesce(1).write.mode("overwrite").parquet(self._p("build_checkpoints"))
+        now = write_checkpoints(
+            self._p("build_checkpoints"),
+            build_id,
+            ingest_metas + encode_metas(self._p("postings")),
+        )
 
         manifest = {
             "format_version": 5,
@@ -1253,6 +1409,7 @@ class IndexBuilder:
                 }
             ],
             "hot_terms": staging_info["hot_terms"],
+            "in_process": bool(staging_info.get("in_process")),
             "tables": {
                 "staging": self._p("staging"),
                 "postings": self._p("postings"),
@@ -1261,15 +1418,16 @@ class IndexBuilder:
             },
             "committed_at": now,
         }
-        tmp = self._p("_manifest.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1)
-        os.replace(tmp, self._p("_manifest.json"))  # atomic publish (Commit)
+        publish_manifest(self.out_dir, manifest)
         return manifest
 
-    def build(self, transcripts: DataFrame, build_id: str = "build-0") -> dict:
+    def build(
+        self, transcripts: DataFrame | pd.DataFrame, build_id: str = "build-0"
+    ) -> dict:
         """Full build: ingest -> encode -> stats -> commit. Idempotent/resumable:
-        completed stages (marker files) are skipped on re-run."""
+        completed stages (marker files) are skipped on re-run. A pandas
+        frame (a collected NRT batch, see LOCAL_MAX_DOCS) is built in-process
+        with no Spark job; a Spark DataFrame is built on Spark."""
         os.makedirs(self.out_dir, exist_ok=True)
         staging_info = self.ingest(transcripts, build_id)
         self.encode_postings(build_id, staging_info)
@@ -1277,9 +1435,58 @@ class IndexBuilder:
         return self.commit(build_id, staging_info, stats_info)
 
 
+def write_field_stats(path: str, max_doc: int, fields: dict) -> None:
+    rows = [
+        (f, max_doc, info["doc_count"], info["sum_ttf"], info["avgdl"])
+        for f, info in fields.items()
+    ]
+    write_local(path, [_ddl_frame(rows, FIELD_STATS_DDL)], FIELD_STATS_DDL)
+
+
+def encode_metas(postings_path: str) -> list[dict]:
+    """The encode checkpoint meta rows (bucket -1, block_no -1)."""
+    return meta_rows(
+        postings_path,
+        (ds.field("bucket") == -1) & (ds.field("block_no") == -1),
+        "term",
+    )
+
+
+def write_checkpoints(path: str, build_id: str, metas: list[dict]) -> str:
+    """build_checkpoints: one row per ingest/encode partition; returns the
+    commit timestamp it stamped."""
+    now = datetime.now(timezone.utc).isoformat()
+    rows = [
+        (build_id, m["stage"], int(m.get("pid", i)), "done", int(m["postings"]),
+         float(m["postings_per_sec"]), m["lineage"], now)
+        for i, m in enumerate(metas)
+    ]
+    write_local(path, [_ddl_frame(rows, CHECKPOINTS_DDL)], CHECKPOINTS_DDL)
+    return now
+
+
+def _ddl_frame(rows: list[tuple], ddl: str) -> pd.DataFrame:
+    return pd.DataFrame(rows, columns=[c.split()[0] for c in ddl.split(",")])
+
+
+def publish_manifest(out_dir: str, manifest: dict) -> None:
+    """segments_N-style commit: write aside, then one atomic rename."""
+    tmp = os.path.join(out_dir, "_manifest.json.tmp")
+    with open(tmp, "w") as f:
+        json.dump(manifest, f, indent=1)
+    os.replace(tmp, os.path.join(out_dir, "_manifest.json"))
+
+
 def load_manifest(index_dir: str) -> dict:
     with open(os.path.join(index_dir, "_manifest.json")) as f:
         return json.load(f)
+
+
+def stagings_of(manifest: dict) -> list[dict]:
+    """The staging tables an index's docs live in, each with its docbase."""
+    return manifest.get("stagings") or [
+        {"path": manifest["tables"]["staging"], "offsets": manifest["offsets"], "docbase": 0}
+    ]
 
 
 def docs_view(spark: SparkSession, manifest: dict) -> DataFrame:
@@ -1290,24 +1497,42 @@ def docs_view(spark: SparkSession, manifest: dict) -> DataFrame:
     fields analogue of Lucene's merge keeping doc data per segment file.
     A merge that applied deletes rewrote (renumbered) docs into an explicit
     docs table instead (MergeState.DocMap semantics)."""
+    numeric = manifest.get("numeric_fields") or []
     if manifest.get("docs_table"):
-        return spark.read.parquet(manifest["docs_table"])
-    stagings = manifest.get("stagings") or [
-        {"path": manifest["tables"]["staging"], "offsets": manifest["offsets"], "docbase": 0}
-    ]
+        return read_table(spark, manifest["docs_table"], with_numeric(DOCS_DDL, numeric))
     out = None
-    for sg in stagings:
+    for sg in stagings_of(manifest):
         offsets = {int(k): v + int(sg.get("docbase", 0)) for k, v in sg["offsets"].items()}
         pairs = [x for pid, off in offsets.items() for x in (F.lit(pid), F.lit(off))]
         m = F.create_map(*pairs) if pairs else F.create_map()
         df = (
-            spark.read.parquet(sg["path"])
+            read_table(spark, sg["path"], with_numeric(STAGING_DDL, numeric))
             .filter(F.col("local_rank") >= 0)
             .select(
                 (F.element_at(m, F.col("pid")) + F.col("local_rank")).alias("docid"),
                 *DOC_COLS,
-                *(manifest.get("numeric_fields") or []),
+                *numeric,
             )
         )
         out = df if out is None else out.unionByName(df)
     return out
+
+
+def docs_frame(manifest: dict) -> pd.DataFrame:
+    """docs_view read on the driver with pyarrow (small indexes only).
+    Timestamps come back as UTC instants whichever writer stored them
+    (Spark's INT96 reads as naive UTC, pyarrow's as tz-aware UTC)."""
+    cols = DOC_COLS + list(manifest.get("numeric_fields") or [])
+    if manifest.get("docs_table"):
+        parts = [read_local(manifest["docs_table"], ["docid"] + cols)]
+    else:
+        parts = []
+        for sg in stagings_of(manifest):
+            df = read_local(sg["path"], ["pid", "local_rank"] + cols, ds.field("local_rank") >= 0)
+            offsets = {int(k): v + int(sg.get("docbase", 0)) for k, v in sg["offsets"].items()}
+            docid = df["pid"].map(offsets).to_numpy(dtype=np.int64) + df["local_rank"].to_numpy(
+                dtype=np.int64
+            )
+            parts.append(df[cols].assign(docid=docid))
+    out = pd.concat([p.assign(ts=pd.to_datetime(p["ts"], utc=True)) for p in parts])
+    return out[["docid"] + cols].sort_values("docid").reset_index(drop=True)

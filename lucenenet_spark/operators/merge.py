@@ -23,23 +23,43 @@ from __future__ import annotations
 
 import json
 import math
+import os
 import time
 
 import numpy as np
 import pandas as pd
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..oracle import norm_cache
 from .codec import BLOCK_SIZE
 from .index_build import (
+    DOC_COLS,
+    DOCS_DDL,
     FIELD,
+    FKEY_SEP,
     PARTIALS_DDL,
     POSTINGS_DDL,
+    docs_frame,
+    docs_view,
+    encode_metas,
     load_manifest,
     make_merge_encode,
+    omit_norms_cache,
+    publish_manifest,
+    read_local,
+    read_table,
+    runs_in_process,
     split_salts,
+    stagings_of,
+    term_stats_view,
+    with_numeric,
+    write_checkpoints,
+    write_field_stats,
+    write_local,
     write_postings,
+    write_postings_local,
 )
 
 
@@ -67,17 +87,12 @@ def _remap(docids: np.ndarray, deleted: np.ndarray) -> tuple[np.ndarray, np.ndar
     return keep, docids - below
 
 
-def _decoded_partials(
-    spark: SparkSession,
-    segments: list[dict],
-    deleted: np.ndarray,
-    hot: dict,
-    max_doc: int,
-) -> DataFrame:
-    """Union of all segments' postings decoded to compact PARTIALS rows (one
-    per block, split at new salt boundaries) with docids shifted to the global
-    space and deletes applied/renumbered. Block granularity keeps the merge
-    shuffle at ~postings/128 rows."""
+def make_decode(deleted: np.ndarray, hot: dict, max_doc: int):
+    """Map side of the merge: one segment's posting blocks (plus a `docbase`
+    column) -> compact PARTIALS rows (one per block, split at the merged salt
+    boundaries) with docids shifted to the global space and deletes applied
+    and renumbered. Block granularity keeps the merge shuffle at
+    ~postings/128 rows. Runs under mapInPandas or in-process."""
 
     def decode_partition(it):
         from .codec import (
@@ -169,21 +184,139 @@ def _decoded_partials(
                 ],
             )
 
+    return decode_partition
+
+
+_DECODE_COLS = [
+    "field", "term", "first_docid", "count", "docids_enc", "tfs_enc",
+    "norms_enc", "pos_enc", "off_enc", "pay_enc",
+]
+
+
+def _decoded_partials(spark: SparkSession, segments: list[dict], decode) -> DataFrame:
+    """Union of all segments' decoded postings, as Spark partials."""
     out = None
     for s in segments:
         df = (
-            spark.read.parquet(s["manifest"]["tables"]["postings"])
+            read_table(spark, s["manifest"]["tables"]["postings"], POSTINGS_DDL)
             .filter(F.col("block_no") >= 0)
-            .withColumn("docbase", F.lit(s["docbase"]))
-            .select(
-                "field", "term", "first_docid", "count", "docids_enc",
-                "tfs_enc", "norms_enc", "pos_enc", "off_enc", "pay_enc",
-                "docbase",
-            )
-            .mapInPandas(decode_partition, PARTIALS_DDL)
+            .select(*_DECODE_COLS, F.lit(s["docbase"]).alias("docbase"))
+            .mapInPandas(decode, PARTIALS_DDL)
         )
         out = df if out is None else out.unionByName(df)
     return out
+
+
+def _local_partials(segments: list[dict], decode):
+    """The same decode over each segment's postings read on the driver."""
+    return decode(
+        read_local(
+            s["manifest"]["tables"]["postings"], _DECODE_COLS, ds.field("block_no") >= 0
+        ).assign(docbase=s["docbase"])
+        for s in segments
+    )
+
+
+def _rewrite_docs_local(segments, deleted, docs_path, kw_fields) -> dict:
+    """Delete-merge docs rewrite on the driver (DocMap renumbering) ->
+    counts {max_doc, dc, st, <kw field>: docs with a value}."""
+    num_fields = _merged_numeric_fields(segments)
+    docs = pd.concat(
+        [
+            docs_frame(s["manifest"]).assign(docid=lambda d, b=s["docbase"]: d["docid"] + b)
+            for s in segments
+        ]
+    )
+    keep, new = _remap(docs["docid"].to_numpy(dtype=np.int64), deleted)
+    docs = docs[keep].assign(docid=new[keep]).sort_values("docid")
+    write_local(
+        docs_path,
+        [docs[["docid", *DOC_COLS, *num_fields]]],
+        with_numeric(DOCS_DDL, num_fields),
+    )
+    fl = docs["field_length"]
+    return {
+        "max_doc": len(docs),
+        "dc": int((fl > 0).sum()),
+        "st": int(fl.sum()),
+        **{f: int((docs[f].notna() & (docs[f] != "")).sum()) for f in kw_fields},
+    }
+
+
+def _rewrite_docs_spark(spark, segments, deleted, docs_path, kw_fields) -> dict:
+    """The same rewrite and counts as Spark jobs (one write, one agg)."""
+    num_fields = _merged_numeric_fields(segments)
+    docs_union = None
+    for s in segments:
+        df = docs_view(spark, s["manifest"])
+        if s["docbase"]:
+            df = df.withColumn("docid", F.col("docid") + F.lit(s["docbase"]))
+        docs_union = df if docs_union is None else docs_union.unionByName(df)
+
+    def remap_docid(ser: pd.Series) -> pd.Series:
+        ids = ser.to_numpy(dtype=np.int64)
+        keep, new = _remap(ids, deleted)
+        out = new.astype("float64")
+        out[~keep] = np.nan  # dropped below
+        return pd.Series(out, index=ser.index)
+
+    docs_union = (
+        docs_union.withColumn(
+            "new_docid", F.pandas_udf(remap_docid, "double")(F.col("docid"))
+        )
+        .filter(F.col("new_docid").isNotNull())
+        .select(
+            F.col("new_docid").cast("long").alias("docid"),
+            *DOC_COLS,
+            *num_fields,
+        )
+    )
+    n_ranges = max(len(segments), 2)
+    docs_union.repartitionByRange(n_ranges, "docid").sortWithinPartitions(
+        "docid"
+    ).write.mode("overwrite").parquet(docs_path)
+    ones = lambda cond: F.sum(F.when(cond, 1).otherwise(0))  # noqa: E731
+    row = (
+        read_table(spark, docs_path, with_numeric(DOCS_DDL, num_fields))
+        .agg(
+            F.count("*").alias("max_doc"),
+            ones(F.col("field_length") > 0).alias("dc"),
+            F.sum("field_length").alias("st"),
+            *[
+                ones(F.col(f).isNotNull() & (F.col(f) != "")).alias(f)
+                for f in kw_fields
+            ],
+        )
+        .collect()[0]
+    )
+    return {k: int(row[k] or 0) for k in ["max_doc", "dc", "st", *kw_fields]}
+
+
+def _merged_df_local(segments) -> dict[str, int]:
+    """(field SEP term) -> df summed over the segments' stat rows."""
+    stats = pd.concat(
+        read_local(
+            s["manifest"]["tables"]["postings"],
+            ["field", "term", "count"],
+            ds.field("block_no") == -2,
+        )
+        for s in segments
+    )
+    df = stats.groupby(["field", "term"])["count"].sum()
+    return {f + FKEY_SEP + t: int(n) for (f, t), n in df.items()}
+
+
+def _merged_df_spark(spark, segments, salt_target) -> dict[str, int]:
+    ts = None
+    for s in segments:
+        df = term_stats_view(spark, s["manifest"]["tables"]["postings"])
+        ts = df if ts is None else ts.unionByName(df)
+    rows = (
+        ts.groupBy("field", "term").agg(F.sum("df").alias("df"))
+        .filter(F.col("df") > salt_target)
+        .collect()
+    )
+    return {r["field"] + FKEY_SEP + r["term"]: int(r["df"]) for r in rows}
 
 
 def merge_segments(
@@ -195,9 +328,10 @@ def merge_segments(
     block_size: int = BLOCK_SIZE,
     build_id: str = "merge-0",
 ) -> dict:
-    """Compact N segments into one index at out_dir; returns its manifest."""
-    import os
+    """Compact N segments into one index at out_dir; returns its manifest.
 
+    Inputs whose total max_doc fits LOCAL_MAX_DOCS merge in-process (no
+    Spark job); larger merges run the same decode/encode kernels on Spark."""
     os.makedirs(out_dir, exist_ok=True)
     t0 = time.time()
     segments = []
@@ -208,6 +342,7 @@ def merge_segments(
         docbase += int(m["max_doc"])
     first = segments[0]["manifest"]
     k1, b = float(first["k1"]), float(first["b"])
+    local = runs_in_process(docbase)
 
     # gather per-segment delete logs -> one sorted global delete set
     from .deletes import DeleteLog
@@ -221,73 +356,41 @@ def merge_segments(
         np.unique(np.concatenate(del_parts)) if del_parts else np.empty(0, np.int64)
     )
 
-    docs_union = None
+    kw_fields: list[str] = []
+    for s in segments:
+        for f, info in (s["manifest"].get("fields") or {}).items():
+            if info.get("omit_norms") and f not in kw_fields:
+                kw_fields.append(f)
     if deleted.size:
         # rewrite docs with MergeState.DocMap renumbering (docid - #deleted
-        # below); postings get the same remap during decode
-        from .index_build import DOC_COLS, docs_view
-
-        num_fields = _merged_numeric_fields(segments)
-        for s in segments:
-            df = docs_view(spark, s["manifest"])
-            if s["docbase"]:
-                df = df.withColumn("docid", F.col("docid") + F.lit(s["docbase"]))
-            docs_union = df if docs_union is None else docs_union.unionByName(df)
-        def remap_docid(ser: pd.Series) -> pd.Series:
-            ids = ser.to_numpy(dtype=np.int64)
-            keep, new = _remap(ids, deleted)
-            out = new.astype("float64")
-            out[~keep] = np.nan  # dropped below
-            return pd.Series(out, index=ser.index)
-
-        docs_union = (
-            docs_union.withColumn(
-                "new_docid", F.pandas_udf(remap_docid, "double")(F.col("docid"))
-            )
-            .filter(F.col("new_docid").isNotNull())
-            .select(
-                F.col("new_docid").cast("long").alias("docid"),
-                *DOC_COLS,
-                *num_fields,
-            )
+        # below); postings get the same remap during decode. Field stats
+        # are recounted from the rewritten docs.
+        docs_path = os.path.join(out_dir, "docs")
+        counts = (
+            _rewrite_docs_local(segments, deleted, docs_path, kw_fields)
+            if local
+            else _rewrite_docs_spark(spark, segments, deleted, docs_path, kw_fields)
         )
-        import os as _os
-
-        docs_path = _os.path.join(out_dir, "docs")
-        n_ranges = max(len(segments), 2)
-        docs_union.repartitionByRange(n_ranges, "docid").sortWithinPartitions(
-            "docid"
-        ).write.mode("overwrite").parquet(docs_path)
-        docs_tbl = spark.read.parquet(docs_path)
-        st = docs_tbl.agg(
-            F.count("*").alias("max_doc"),
-            F.sum(F.when(F.col("field_length") > 0, 1).otherwise(0)).alias("dc"),
-            F.sum("field_length").alias("st"),
-        ).collect()[0]
-        max_doc = int(st["max_doc"])
-        doc_count = int(st["dc"])
-        sum_ttf = int(st["st"] or 0)
+        max_doc, doc_count, sum_ttf = counts["max_doc"], counts["dc"], counts["st"]
+        kw_counts = {f: counts[f] for f in kw_fields}
     else:
         max_doc = docbase
         sum_ttf = sum(int(s["manifest"]["sum_ttf"]) for s in segments)
         doc_count = sum(int(s["manifest"]["doc_count"]) for s in segments)
+        # keyword (omitNorms) field stats sum over the source manifests
+        kw_counts = {
+            f: sum(
+                int((s["manifest"].get("fields") or {}).get(f, {}).get("doc_count", 0))
+                for s in segments
+            )
+            for f in kw_fields
+        }
 
     avgdl = (
         float(np.float32(np.float64(sum_ttf) / np.float64(max_doc)))
         if sum_ttf > 0
         else 1.0
     )
-
-    # per-field stats: text recomputed above; keyword (omitNorms) fields
-    # summed from the source manifests, or recounted from the rewritten docs
-    # table when a delete-merge renumbered
-    from .index_build import FIELD, omit_norms_cache
-
-    kw_fields: list[str] = []
-    for s in segments:
-        for f, info in (s["manifest"].get("fields") or {}).items():
-            if info.get("omit_norms") and f not in kw_fields:
-                kw_fields.append(f)
     fields = {
         FIELD: {
             "doc_count": doc_count,
@@ -296,48 +399,23 @@ def merge_segments(
             "omit_norms": False,
         }
     }
-    if deleted.size:
-        for f in kw_fields:
-            cnt = int(
-                docs_tbl.filter(
-                    F.col(f).isNotNull() & (F.col(f) != "")
-                ).count()
-            )
-            fields[f] = {
-                "doc_count": cnt, "sum_ttf": cnt, "avgdl": 1.0, "omit_norms": True,
-            }
-    else:
-        for f in kw_fields:
-            s_cnt = sum(
-                int((s["manifest"].get("fields") or {}).get(f, {}).get("doc_count", 0))
-                for s in segments
-            )
-            fields[f] = {
-                "doc_count": s_cnt, "sum_ttf": s_cnt, "avgdl": 1.0, "omit_norms": True,
-            }
+    for f, cnt in kw_counts.items():
+        fields[f] = {"doc_count": cnt, "sum_ttf": cnt, "avgdl": 1.0, "omit_norms": True}
     caches = {FIELD: norm_cache(k1, b, np.float32(avgdl))}
     kwc = omit_norms_cache(k1)
     for f in kw_fields:
         caches[f] = kwc
 
     # exact merged df from the per-segment terms dictionaries -> salt plan
-    from .index_build import term_stats_view
-
-    ts = None
-    for s in segments:
-        df = term_stats_view(spark, s["manifest"]["tables"]["postings"])
-        ts = df if ts is None else ts.unionByName(df)
-    hot_rows = (
-        ts.groupBy("field", "term").agg(F.sum("df").alias("df"))
-        .filter(F.col("df") > salt_target)
-        .collect()
+    merged_df = (
+        _merged_df_local(segments) if local else _merged_df_spark(spark, segments, salt_target)
     )
     hot = {
-        r["field"] + "\x1f" + r["term"]: int(math.ceil(r["df"] / salt_target))
-        for r in hot_rows
+        key: int(math.ceil(df / salt_target))
+        for key, df in merged_df.items()
+        if df > salt_target
     }
 
-    n_shuffle = max(int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 8)
     lineage = json.dumps(
         {
             "build_id": build_id,
@@ -346,59 +424,33 @@ def merge_segments(
             "docbases": [s["docbase"] for s in segments],
         }
     )
-    partials = _decoded_partials(spark, segments, deleted, hot, max_doc)
-    encoded = partials.repartition(n_shuffle, "field", "term", "salt").mapInPandas(
-        make_merge_encode(caches, n_buckets, block_size, lineage), POSTINGS_DDL
-    )
-    write_postings(encoded, os.path.join(out_dir, "postings"), n_buckets)
+    decode = make_decode(deleted, hot, max_doc)
+    encode = make_merge_encode(caches, n_buckets, block_size, lineage)
+    postings_path = os.path.join(out_dir, "postings")
+    if local:
+        write_postings_local(encode(_local_partials(segments, decode)), postings_path)
+    else:
+        n_shuffle = max(int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 8)
+        partials = _decoded_partials(spark, segments, decode)
+        encoded = partials.repartition(n_shuffle, "field", "term", "salt").mapInPandas(
+            encode, POSTINGS_DDL
+        )
+        write_postings(encoded, postings_path, n_buckets)
 
     # terms dictionary is embedded in the postings write (block_no = -2 rows)
-    from .index_build import local_table
-
-    local_table(
-        spark,
-        [
-            (f, max_doc, info["doc_count"], info["sum_ttf"], info["avgdl"])
-            for f, info in fields.items()
-        ],
-        "field string, max_doc long, doc_count long, sum_ttf long, avgdl double",
-    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(out_dir, "field_stats"))
-
+    write_field_stats(os.path.join(out_dir, "field_stats"), max_doc, fields)
     # checkpoints: the encode meta rows of this merge
-    metas = [
-        json.loads(r["term"])
-        for r in spark.read.parquet(os.path.join(out_dir, "postings"))
-        .filter(F.col("block_no") == -1)
-        .select("term")
-        .collect()
-    ]
-    from datetime import datetime, timezone
-
-    now = datetime.now(timezone.utc).isoformat()
-    local_table(
-        spark,
-        [
-            (build_id, "merge", i, "done", int(m["postings"]),
-             float(m["postings_per_sec"]), m["lineage"], now)
-            for i, m in enumerate(metas)
-        ],
-        "build_id string, stage string, partition_id int, status string,"
-        " postings long, postings_per_sec double, lineage string, committed_at string",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(out_dir, "build_checkpoints")
+    now = write_checkpoints(
+        os.path.join(out_dir, "build_checkpoints"),
+        build_id,
+        [dict(m, stage="merge") for m in encode_metas(postings_path)],
     )
 
     # merged manifest: postings/stats here; doc stores shared from sources
     # unless deletes forced a renumbering rewrite (docs_table)
     stagings = []
     for s in segments:
-        for sg in s["manifest"].get("stagings") or [
-            {
-                "path": s["manifest"]["tables"]["staging"],
-                "offsets": s["manifest"]["offsets"],
-                "docbase": 0,
-            }
-        ]:
+        for sg in stagings_of(s["manifest"]):
             stagings.append(
                 {
                     "path": sg["path"],
@@ -452,6 +504,7 @@ def merge_segments(
         "docs_table": os.path.join(out_dir, "docs") if deleted.size else None,
         "n_deletes_applied": int(deleted.size),
         "hot_terms": hot,
+        "in_process": local,
         "merged_from": [s["dir"] for s in segments],
         "tables": {
             "staging": stagings[0]["path"],
@@ -462,8 +515,5 @@ def merge_segments(
         "committed_at": now,
         "merge_elapsed": round(time.time() - t0, 2),
     }
-    tmp = os.path.join(out_dir, "_manifest.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1)
-    os.replace(tmp, os.path.join(out_dir, "_manifest.json"))  # atomic publish
+    publish_manifest(out_dir, manifest)
     return manifest

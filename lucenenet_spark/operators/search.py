@@ -67,9 +67,11 @@ from .codec import BLOCK_SIZE
 from .index_build import (
     FIELD,
     FKEY_SEP,
+    POSTINGS_DDL,
     docs_view,
     load_manifest,
     omit_norms_cache,
+    read_table,
     term_bucket,
 )
 
@@ -235,7 +237,7 @@ class IndexSearcher:
         out = None
         for s in self.segments:
             df = (
-                self.spark.read.parquet(s["manifest"]["tables"]["postings"])
+                read_table(self.spark, s["manifest"]["tables"]["postings"], POSTINGS_DDL)
                 .filter(F.col("block_no") >= 0)
                 .withColumn("docbase", F.lit(s["docbase"]))
             )
@@ -278,8 +280,8 @@ class IndexSearcher:
             tset = sorted({t for _f, t in self._as_keys(terms)})
         out = None
         for s in self.segments:
-            df = self.spark.read.parquet(
-                s["manifest"]["tables"]["postings"]
+            df = read_table(
+                self.spark, s["manifest"]["tables"]["postings"], POSTINGS_DDL
             ).filter(F.col("block_no") == -2)
             if tset is not None:
                 nb = int(s["manifest"]["n_buckets"])
@@ -392,12 +394,15 @@ class IndexSearcher:
         )
 
     def _deleted_count_capped(self) -> int:
-        """Delete-set size, counted once per delete generation and capped at
-        MAX_BROADCAST_DOCIDS + 1 — only the broadcast decision needs it."""
+        """Upper bound on the delete-set size (logged rows, from the delete
+        logs' parquet footers — no job), capped at MAX_BROADCAST_DOCIDS + 1:
+        only the broadcast decision needs it."""
         if self._deleted_count_cache is None:
-            d = self._deleted_docids()
-            self._deleted_count_cache = (
-                0 if d is None else d.limit(self.MAX_BROADCAST_DOCIDS + 1).count()
+            from .deletes import DeleteLog
+
+            self._deleted_count_cache = min(
+                sum(DeleteLog(self.spark, s["dir"]).count_upper() for s in self.segments),
+                self.MAX_BROADCAST_DOCIDS + 1,
             )
         return self._deleted_count_cache
 
@@ -411,16 +416,24 @@ class IndexSearcher:
             return scored
         return self._anti_join_docids(scored, dels, self._deleted_count_capped())
 
-    def delete_docids(self, docids: DataFrame) -> None:
-        """Record global docids as deleted, routed to their owning segments."""
+    def delete_docids(self, docids: DataFrame | np.ndarray) -> None:
+        """Record global docids as deleted, routed to their owning segments:
+        by Spark filters for a DataFrame, on the driver for ids already
+        collected there (no Spark job)."""
         from .deletes import DeleteLog
 
         for s in self.segments:
             base, n = s["docbase"], int(s["manifest"]["max_doc"])
-            local = docids.filter(
-                (F.col("docid") >= base) & (F.col("docid") < base + n)
-            ).select((F.col("docid") - F.lit(base)).alias("docid"))
-            if local.limit(1).count():
+            if isinstance(docids, DataFrame):
+                local = docids.filter(
+                    (F.col("docid") >= base) & (F.col("docid") < base + n)
+                ).select((F.col("docid") - F.lit(base)).alias("docid"))
+                hit = local.limit(1).count()
+            else:
+                ids = np.asarray(docids, dtype=np.int64)
+                local = ids[(ids >= base) & (ids < base + n)] - base
+                hit = local.size
+            if hit:
                 DeleteLog(self.spark, s["dir"]).delete_docids(local)
         self._live_docs_cache = False  # invalidate
         self._deleted_count_cache = None
@@ -450,7 +463,7 @@ class IndexSearcher:
             nb = int(s["manifest"]["n_buckets"])
             buckets = sorted({term_bucket(t, nb) for t in tset})
             df = (
-                self.spark.read.parquet(s["manifest"]["tables"]["postings"])
+                read_table(self.spark, s["manifest"]["tables"]["postings"], POSTINGS_DDL)
                 .filter(F.col("bucket").isin(buckets))  # dir partition pruning
                 .filter(F.col("term").isin(tset))  # row-group stats pruning
                 .filter(F.concat_ws(FKEY_SEP, "field", "term").isin(fkeys))

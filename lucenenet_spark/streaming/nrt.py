@@ -7,15 +7,22 @@ SearcherManager), publish atomically via segments_N generations
 compact (ConcurrentMergeScheduler + TieredMergePolicy.cs:73-87).
 
 Spark mapping:
-  readStream -> foreachBatch: each micro-batch is built into an immutable
-  delta segment (a full mini-index via IndexBuilder), then registered in
-  segments.json with a monotonically increasing generation — an atomic
-  rename, exactly the segments_N contract. A size-tiered merge policy
+  readStream -> foreachBatch: each micro-batch becomes an immutable delta
+  segment (a full mini-index), then is registered in segments.json with a
+  monotonically increasing generation — an atomic rename, exactly the
+  segments_N contract. A size-tiered merge policy
   (TieredMergePolicy.cs:73-87 budget: segsPerTier per tier, tiers scaling
   by maxMergeAtOnce) merges the cheapest contiguous window of up to
   maxMergeAtOnce segments when the count exceeds the budget — budgeted
   background merges, never a full-index rewrite per trigger; compact()
   remains the ForceMerge(1) analogue.
+
+Small writes launch no Spark job. A micro-batch is collected once (at most
+LOCAL_MAX_DOCS + 1 rows); when it fits, IndexBuilder builds the segment
+in-process, and merges whose inputs total at most LOCAL_MAX_DOCS docs run
+in-process too. Both run the same ingest/decode/encode kernels as the Spark
+path and write the same table layout with pyarrow. Larger batches and
+merges run on Spark.
 
 Late/out-of-order data: a turn arriving after its conversation's earlier
 turns were indexed simply lands in a later segment with a later docid —
@@ -33,9 +40,11 @@ import math
 import os
 import time
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import index_build
 from ..operators.index_build import IndexBuilder, load_manifest
 from ..operators.merge import merge_segments
 from ..operators.search import IndexSearcher
@@ -91,28 +100,47 @@ class NRTIndex:
         return self.read_generation()["segments"]
 
     # -- batch processing ------------------------------------------------------
+    def _seg_dir(self, batch_id: int) -> str:
+        return os.path.join(self.base_dir, "segments", f"seg-{batch_id:010d}")
+
+    def _built(self, batch_id: int) -> bool:
+        return os.path.exists(os.path.join(self._seg_dir(batch_id), "_manifest.json"))
+
+    @staticmethod
+    def _collect(batch_df: DataFrame) -> DataFrame | pd.DataFrame:
+        """The batch as a pandas frame when it fits LOCAL_MAX_DOCS (one
+        job), else the Spark DataFrame itself."""
+        pdf = batch_df.limit(index_build.LOCAL_MAX_DOCS + 1).toPandas()
+        return pdf if index_build.runs_in_process(len(pdf)) else batch_df
+
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """foreachBatch target: build + publish one delta segment, maybe merge.
 
         Idempotent on streaming retries: a segment whose manifest already
         exists is re-registered, not rebuilt (IndexBuilder stages are also
         individually resumable below that)."""
-        seg_dir = os.path.join(self.base_dir, "segments", f"seg-{batch_id:010d}")
-        IndexBuilder(
-            self.spark,
-            seg_dir,
-            k1=self.k1,
-            b=self.b,
-            n_buckets=self.n_buckets,
-            n_segments=self.n_segments,
-            salt_target=self.salt_target,
-            analyzer=self.analyzer,
-            **(
-                {"keyword_fields": self.keyword_fields}
-                if self.keyword_fields is not None
-                else {}
-            ),
-        ).build(batch_df, build_id=f"nrt-{batch_id}")
+        self._add(None if self._built(batch_id) else self._collect(batch_df), batch_id)
+
+    def _add(self, batch: DataFrame | pd.DataFrame | None, batch_id: int) -> None:
+        """Build `batch` (None = already built) as segment `batch_id`,
+        register it, then run the merge policy."""
+        seg_dir = self._seg_dir(batch_id)
+        if batch is not None:
+            IndexBuilder(
+                self.spark,
+                seg_dir,
+                k1=self.k1,
+                b=self.b,
+                n_buckets=self.n_buckets,
+                n_segments=self.n_segments,
+                salt_target=self.salt_target,
+                analyzer=self.analyzer,
+                **(
+                    {"keyword_fields": self.keyword_fields}
+                    if self.keyword_fields is not None
+                    else {}
+                ),
+            ).build(batch, build_id=f"nrt-{batch_id}")
         segs = self.segments()
         if seg_dir not in segs:
             segs = segs + [seg_dir]
@@ -234,31 +262,35 @@ class NRTIndex:
         already exists, both the delete phase and the rebuild are skipped
         (re-deleting would wrongly mask the batch's OWN published docs).
 
-        The distinct key set is collected driver-side (one small job) —
-        updates are batch-bounded by construction; the delete probe is one
-        bucket-pruned keyword-postings scan for those terms.
+        Jobs: the batch is collected once (see process_batch) and its keys
+        are read from that frame; the delete probe is one bucket-pruned
+        keyword-postings scan for those keys, whose victims are collected
+        once, routed to their segments on the driver and logged with
+        pyarrow. A batch over LOCAL_MAX_DOCS takes its keys with one more
+        distinct job and is built on Spark.
         """
         key_col = key_col or key_field
-        seg_dir = os.path.join(self.base_dir, "segments", f"seg-{batch_id:010d}")
-        if os.path.exists(os.path.join(seg_dir, "_manifest.json")):
-            self.process_batch(batch_df, batch_id)  # re-register only
+        if self._built(batch_id):
+            self._add(None, batch_id)  # re-register only
             return
+        batch = self._collect(batch_df)
         if self.segments():
-            s = self.searcher()
-            keys = [
-                r["k"]
-                for r in batch_df.select(F.col(key_col).alias("k"))
-                .distinct()
-                .collect()
-                if r["k"] is not None
-            ]
+            if isinstance(batch, pd.DataFrame):
+                keys = sorted(set(batch[key_col].dropna()))
+            else:
+                keys = sorted(
+                    r["k"]
+                    for r in batch.select(F.col(key_col).alias("k")).distinct().collect()
+                    if r["k"] is not None
+                )
             if keys:
+                s = self.searcher()
                 victims = s._docids_of_terms(
                     [(key_field, k) for k in keys], dedupe=False
-                )
-                if victims.limit(1).count():
-                    s.delete_docids(victims)
-        self.process_batch(batch_df, batch_id)
+                ).toPandas()["docid"]
+                if len(victims):
+                    s.delete_docids(victims.to_numpy())
+        self._add(batch, batch_id)
 
     # -- public API ------------------------------------------------------------
     def start(self, stream_df: DataFrame, checkpoint_dir: str, **trigger):

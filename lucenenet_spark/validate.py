@@ -22,14 +22,14 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .operators.index_build import docs_view, load_manifest
+from .operators.index_build import POSTINGS_DDL, docs_view, load_manifest, read_table
 from .oracle import norm_cache
 
 
 def check_index(spark: SparkSession, index_dir: str) -> dict:
     """Run all invariant checks; returns {check: {'ok': bool, ...detail}}."""
     m = load_manifest(index_dir)
-    postings = spark.read.parquet(m["tables"]["postings"]).filter(
+    postings = read_table(spark, m["tables"]["postings"], POSTINGS_DDL).filter(
         F.col("block_no") >= 0
     )
     docs = docs_view(spark, m)

@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
+from contextlib import contextmanager
 
 import pytest
 
@@ -20,6 +22,11 @@ N_DOCS = 500  # small enough for a fast suite, big enough for multi-block terms
 def spark():
     from lucenenet_spark.session import get_spark
 
+    # a bounded driver heap: under get_spark's default (32g, sized for a
+    # cluster node) one oversized allocation grows the JVM past the RAM of
+    # a small test host, and the kernel's OOM killer then picks among all
+    # of the host's processes instead of the JVM failing on its own heap
+    os.environ.setdefault("SPARK_DRIVER_MEM", "4g")
     s = get_spark("tests", cores=8, shuffle_partitions=8)
     yield s
     s.stop()
@@ -87,3 +94,47 @@ def hits(df) -> list[tuple[int, "np.float32"]]:
     import numpy as np
 
     return [(r["docid"], np.float32(r["score"])) for r in df.collect()]
+
+
+@contextmanager
+def count_jobs(spark):
+    """Count, exactly, the Spark jobs launched inside the block: they run
+    under a fresh job group, read back through statusTracker() once the
+    listener bus has delivered their events. Yields a dict whose "jobs"
+    entry is set on exit."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count_jobs")
+    out: dict = {}
+    try:
+        yield out
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        out["jobs"] = len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@contextmanager
+def forced_build_path(path: str):
+    """Force NRT batches and merges onto one build path: "in_process"
+    (everything fits LOCAL_MAX_DOCS) or "spark" (nothing does)."""
+    from lucenenet_spark.operators import index_build
+
+    mp = pytest.MonkeyPatch()
+    mp.setattr(index_build, "LOCAL_MAX_DOCS", {"in_process": 10**9, "spark": -1}[path])
+    try:
+        yield path
+    finally:
+        mp.undo()
+
+
+@pytest.fixture(scope="module")
+def in_process_path():
+    with forced_build_path("in_process") as p:
+        yield p
+
+
+@pytest.fixture(scope="module")
+def spark_path():
+    with forced_build_path("spark") as p:
+        yield p

@@ -23,6 +23,9 @@ from lucenenet_spark.validate import check_index
 
 from .conftest import hits
 
+# merges here run in-process; test_build_paths re-runs the delete-merge on Spark
+pytestmark = pytest.mark.usefixtures("in_process_path")
+
 
 @pytest.fixture()
 def del_index(spark, index_dir, tmp_path):

@@ -231,3 +231,56 @@ def test_partial_chunking_bit_identical(spark, corpus_pdf, index_dir, tmp_path):
     assert len(a) == len(b)
     for c in a.columns:
         assert a[c].equals(b[c]), c
+
+
+def _spy_ingest_passes(monkeypatch) -> list:
+    """Record the `clustered` flag of every Spark ingest pass."""
+    calls: list[bool] = []
+    orig = IndexBuilder._ingest_pass
+
+    def spy(self, transcripts, clustered, lineage):
+        calls.append(clustered)
+        return orig(self, transcripts, clustered, lineage)
+
+    monkeypatch.setattr(IndexBuilder, "_ingest_pass", spy)
+    return calls
+
+
+def test_clustered_order_failure_falls_back(spark, corpus_pdf, tmp_path, monkeypatch):
+    """input_clustered=True over unordered input: the kernel's order check
+    fails the clustered pass, which (and only which) reruns it shuffled."""
+    import json
+
+    calls = _spy_ingest_passes(monkeypatch)
+    shuffled = spark.createDataFrame(
+        corpus_pdf.sample(frac=1.0, random_state=7)
+    ).repartition(3)
+    b = IndexBuilder(spark, str(tmp_path / "x"), n_buckets=4, n_segments=4,
+                     input_clustered=True)
+    m = b.build(shuffled)
+    assert calls == [True, False]
+    assert m["max_doc"] == len(corpus_pdf)
+    lineage = json.loads(b._stage_info("staging")["metas"][0]["lineage"])
+    assert lineage["clustered"] is False and "verification" in lineage["note"]
+
+
+def test_clustered_pass_other_error_propagates(spark, corpus_pdf, tmp_path, monkeypatch):
+    """Planted: a non-verification error raised in the clustered pass's
+    Python workers propagates; it is not rerun as a shuffled pass."""
+    from lucenenet_spark.operators import index_build
+
+    def planted_make_ingest(**_):
+        def kernel(it, pid=None):
+            raise OSError("planted disk failure")
+            yield  # a generator, like the real kernel
+
+        return kernel
+
+    monkeypatch.setattr(index_build, "make_ingest", planted_make_ingest)
+    calls = _spy_ingest_passes(monkeypatch)
+    import pytest
+
+    with pytest.raises(Exception, match="planted disk failure"):
+        IndexBuilder(spark, str(tmp_path / "x"), n_buckets=4, n_segments=4,
+                     input_clustered=True).build(spark.createDataFrame(corpus_pdf))
+    assert calls == [True]

@@ -5,6 +5,9 @@ oracle pattern — sharded results must equal the single-index results exactly
 Segments split the corpus by conv_id ranges IN ORDER, so docBase-shifted
 per-segment docids coincide with the single-build docids and equality is
 exact including tie-breaks.
+
+Here every merge runs in-process; test_build_paths re-runs these tests with
+merges on Spark.
 """
 import numpy as np
 import pytest
@@ -18,6 +21,8 @@ from lucenenet_spark.plans.query import BooleanQuery, TermQuery
 from lucenenet_spark.validate import check_index
 
 from .conftest import N_DOCS, hits
+
+pytestmark = pytest.mark.usefixtures("in_process_path")
 
 QUERIES = [
     TermQuery(term="popcorn"),

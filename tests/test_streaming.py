@@ -5,6 +5,9 @@ Chunks arrive in conv_id order (one file per micro-batch via
 maxFilesPerTrigger=1, oldest-first), so streamed docids coincide with the
 batch build's and parity is exact including tie-breaks — the NRT analogue of
 the TestTopDocsMerge oracle.
+
+Here every batch and merge runs in-process; test_build_paths re-runs these
+tests with both on Spark.
 """
 import os
 import time
@@ -18,6 +21,8 @@ from lucenenet_spark.streaming.nrt import NRTIndex
 from lucenenet_spark.validate import check_index
 
 from .conftest import N_DOCS, hits
+
+pytestmark = pytest.mark.usefixtures("in_process_path")
 
 SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, tool string,"
