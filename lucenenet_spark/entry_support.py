@@ -5327,7 +5327,7 @@ LIMIT {k}"""
 
 def dfr_gb2_term_sql(term: str, k: int = 10, boost: float = 1.0) -> str:
     """Top-k TermQuery under DFR GB2, float32-exact (see the engine's
-    _dfr_boolean_scores citations). log2 mirrored as ln(x)/ln(2)."""
+    operators/simbase.py citations). log2 mirrored as ln(x)/ln(2)."""
     # double-precision per-term constants computed in SQL (exact doubles)
     consts = """
   SELECT CAST(t.ttf + 1 AS DOUBLE) AS fv,

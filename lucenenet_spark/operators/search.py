@@ -1,13 +1,15 @@
-"""Query execution: BM25 top-k over the block-encoded index, Spark-first.
+"""Query execution: top-k over the block-encoded index, Spark-first.
 
 Lifecycle mirrors IndexSearcher.Search (SURVEY.md §3.1):
  1. rewrite()  — MultiTermQuery expansion against the terms dict
                  (MultiTermQuery.cs:65-118; fixpoint IndexSearcher.cs:753-760)
  2. weights    — global stats (field_stats/term_stats, counting all docs like
-                 Lucene counts deleted-until-merged) -> frozen float32
-                 weightValue = idf * boost * (k1+1) per clause
+                 Lucene counts deleted-until-merged) -> one frozen SimWeight
+                 per clause from the active similarity's SimScorer
+                 (operators/similarity.py; BM25: idf * boost * (k1+1))
  3. scoring    — bucket- and term-pruned scan of posting blocks; numpy decode
-                 + vectorized float32 BM25 inside mapInPandas (Arrow batches);
+                 + the vectorized float32 SimScorer kernel inside mapInPandas
+                 (Arrow batches);
                  boolean algebra relationally: MUST = match-count filter,
                  SHOULD = sum, MUST_NOT = left_anti join, minShouldMatch =
                  count filter (BooleanScorer's bucket table == Catalyst hash
@@ -33,6 +35,7 @@ summation; see oracle.py for the cited arithmetic.
 
 from __future__ import annotations
 
+import dataclasses
 import math
 from dataclasses import dataclass
 
@@ -43,7 +46,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, FloatType
 
 from ..oracle import idf as idf_f32
-from ..oracle import norm_cache
 from ..plans.query import (
     BooleanQuery,
     CommonTermsQuery,
@@ -70,10 +72,10 @@ from .index_build import (
     POSTINGS_DDL,
     docs_view,
     load_manifest,
-    omit_norms_cache,
     read_table,
     term_bucket,
 )
+from .similarity import SimScorer, SimWeight
 
 SCORE_ROWS_SCHEMA = "docid long, clause int, score float"
 
@@ -82,7 +84,7 @@ SCORE_ROWS_SCHEMA = "docid long, clause int, score float"
 class Clause:
     clause_id: int
     term: str
-    weight: np.float32  # idf * boost * (k1+1), float32
+    weight: SimWeight  # the clause's normalized weight
     field: str = FIELD
 
     @property
@@ -146,10 +148,6 @@ class IndexSearcher:
             if sum_ttf > 0
             else np.float32(1.0)
         )
-        self._cache256 = norm_cache(self.k1, self.b, self.avgdl)
-        # per-field denominator caches: the analyzed text field uses the
-        # byte315 norm cache; omitNorms keyword fields score with norm = k1
-        # (b treated as 0, BM25Similarity.cs:262) — a constant cache
         fields_info: dict[str, dict] = {}
         for s in self.segments:
             for f, info in (s["manifest"].get("fields") or {}).items():
@@ -162,50 +160,16 @@ class IndexSearcher:
         if FIELD not in fields_info:
             fields_info[FIELD] = {"omit_norms": False, "sum_ttf": sum_ttf}
         self.fields_info = fields_info
-        kwc = omit_norms_cache(self.k1)
-        self._field_caches = {
-            f: (self._cache256 if not info.get("omit_norms") else kwc)
-            for f, info in fields_info.items()
-        }
-        # pluggable similarity: "bm25" (default) or "classic" (TF-IDF /
-        # DefaultSimilarity). Norm bytes are similarity-independent
-        # (SURVEY §4.2), so this is a pure query-time switch; classic
-        # decodes them raw (byte315ToFloat), omitNorms fields score raw
-        # (norms == null -> no multiply, TFIDFSimScorer.Score:691)
-        from .simbase import parse_spec
-
-        self.sim_spec = parse_spec(similarity)  # DFR/IB matrix member or None
-        # SweetSpotSimilarity (Lucene.Net.Misc/Misc/SweetSpotSimilarity.cs):
-        # DefaultSimilarity with BaselineTf swapped in at query time —
-        # "sweetspot[:<tf_base>:<tf_min>]". The plateau LengthNorm half is
-        # an index-time choice (IndexBuilder norm_spec); this searcher
-        # simply decodes whatever norm bytes the index stored, exactly like
-        # classic. Defaults (0, 0) degrade BaselineTf to sqrt(freq).
-        self.tf_params: tuple | None = None
-        if similarity.startswith("sweetspot"):
-            parts = similarity.split(":")
-            if len(parts) not in (1, 3):
-                raise ValueError(
-                    "sweetspot takes none or both tf factors: "
-                    "sweetspot[:<tf_base>:<tf_min>]"
-                )
-            base = np.float32(parts[1]) if len(parts) > 1 else np.float32(0.0)
-            mn = np.float32(parts[2]) if len(parts) > 2 else np.float32(0.0)
-            self.tf_params = (base, mn)
-        elif similarity not in ("bm25", "classic", "lmd", "lmjm") and (
-            self.sim_spec is None
-        ):
-            raise ValueError(f"unknown similarity {similarity!r}")
+        # pluggable similarity, a pure query-time switch: norm bytes are
+        # similarity-independent (SURVEY §4.2). The SimScorer is the only
+        # code that knows the family (operators/similarity.py).
         self.similarity = similarity
         self.mu = float(mu)  # LMDirichletSimilarity default mu=2000
         self.lam = float(lam)  # LMJelinekMercerSimilarity lambda
-        from ..functions.smallfloat import DECODE_TABLE
-
-        ones = np.ones(256, dtype=np.float32)
-        self._decode_tables = {
-            f: (DECODE_TABLE if not info.get("omit_norms") else ones)
-            for f, info in fields_info.items()
-        }
+        self.sim = SimScorer(
+            similarity, mu, lam, k1=self.k1, b=self.b, max_doc=self.max_doc,
+            avgdl=self.avgdl, fields_info=fields_info,
+        )
         # (field, term) -> (df, max_block_bound); one pruned scan per term
         self._stats_cache: dict[tuple[str, str], tuple[int, float]] = {}
         # CachingWrapperFilter's per-searcher docid-set cache
@@ -445,12 +409,52 @@ class IndexSearcher:
     def delete_by_query(self, q: Query) -> None:
         self.delete_docids(self.scores(q).select("docid"))
 
-    def weight(self, term: str, boost: float = 1.0, field: str = FIELD) -> np.float32:
-        df = self.doc_freqs([(field, term)])[(field, term)]
-        if df == 0:
-            return np.float32(0.0)
-        w = np.float32(idf_f32(df, self.max_doc) * np.float32(boost))
-        return np.float32(w * np.float32(np.float32(self.k1) + np.float32(1.0)))
+    # -- weights ---------------------------------------------------------------
+    @staticmethod
+    def _slots(q: Query) -> list[tuple[str, ...]] | None:
+        """The alternative terms of each position slot of a term or phrase
+        clause (a term is one one-term slot); None for any other node."""
+        if isinstance(q, TermQuery):
+            return [(q.term,)]
+        if isinstance(q, PhraseQuery):
+            return [(t,) for t in q.terms]
+        if isinstance(q, MultiPhraseQuery):
+            return [tuple(a) for a in q.term_arrays]
+        return None
+
+    def _leaf_keys(self, q: Query) -> list[tuple[str, str]] | None:
+        """The (field, term) leaves a term or phrase clause is weighted
+        over, in declaration order with duplicates and absent terms kept
+        (allTermStats); None for any other node."""
+        slots = self._slots(q)
+        return None if slots is None else [(q.field, t) for arr in slots for t in arr]
+
+    def _sim_weights(self, specs, top_boost: float = 1.0) -> list[SimWeight]:
+        """Normalized SimWeights of the clauses one query scores together.
+
+        specs: (leaf keys, field, boost) per clause. Every leaf's stats come
+        from one term_meta scan (cached), then the SimScorer weighs each
+        clause and normalizes them together (queryNorm)."""
+        metas = self.term_meta({k for keys, _f, _b in specs for k in keys})
+        return self.sim.normalize(
+            [
+                self.sim.weight([metas[k][:2] for k in keys], field, boost)
+                for keys, field, boost in specs
+            ],
+            top_boost,
+        )
+
+    def _matchable(self, q: Query) -> bool:
+        """False when a term/phrase clause cannot match: an absent term, or
+        a phrase slot with no present alternative (MultiPhraseQuery.cs:
+        268-272 returns a null scorer). Other nodes are scored to find out."""
+        slots = self._slots(q)
+        if slots is None:
+            return True
+        dfs = self.doc_freqs(set(self._leaf_keys(q)))
+        return bool(slots) and all(
+            any(dfs[(q.field, t)] > 0 for t in arr) for arr in slots
+        )
 
     # -- block scan --------------------------------------------------------------
     def _blocks_for(self, terms) -> DataFrame:
@@ -473,21 +477,14 @@ class IndexSearcher:
             out = df if out is None else out.unionByName(df)
         return out
 
-    def _score_blocks(
-        self, blocks: DataFrame, clauses: list[Clause], classic: bool = False
-    ) -> DataFrame:
-        """Decode + score blocks -> rows (docid, clause, score:float32).
-
-        classic=False: BM25 kernel (weight*freq)/(freq + cache[norm]).
-        classic=True: TF-IDF kernel f32(f32(sqrt(freq) * value) *
-        decodeNorm[norm]) (TFIDFSimScorer.Score:687-692); `weight` then
-        carries the normalized IDFStats.Value."""
-        by_key: dict[tuple[str, str], list[tuple[int, float]]] = {}
+    def _score_blocks(self, blocks: DataFrame, clauses: list[Clause]) -> DataFrame:
+        """Decode + score blocks -> rows (docid, clause, score:float32): each
+        block scores once per clause on its (field, term) through the
+        SimScorer kernel."""
+        by_key: dict[tuple[str, str], list[tuple[int, SimWeight]]] = {}
         for c in clauses:
-            by_key.setdefault(c.key, []).append((c.clause_id, float(c.weight)))
-        caches = self._field_caches
-        decodes = self._decode_tables
-        tf_params = self.tf_params  # sweetspot BaselineTf; None = sqrt
+            by_key.setdefault(c.key, []).append((c.clause_id, c.weight))
+        sim = self.sim
 
         def score_batches(it):
             from .codec import decode_block  # executor-side import
@@ -502,35 +499,13 @@ class IndexSearcher:
                         docids = docids + r.docbase  # leafDocBase shift
                     nbytes = np.frombuffer(r.norms_enc, dtype=np.uint8)
                     freq = tfs.astype(np.float32)
-                    if classic:
-                        if tf_params is not None:
-                            from ..functions.sweetspot import baseline_tf
-
-                            tfv = baseline_tf(freq, *tf_params)
-                        else:
-                            tfv = np.sqrt(freq)  # f32 sqrt == (float)Math.Sqrt
-                        dec = decodes[r.field][nbytes]
-                        for clause_id, w in by_key[(r.field, r.term)]:
-                            outs.append(
-                                pd.DataFrame(
-                                    {
-                                        "docid": docids,
-                                        "clause": clause_id,
-                                        "score": (tfv * np.float32(w)) * dec,
-                                    }
-                                )
-                            )
-                        continue
-                    denom = freq + caches[r.field][nbytes]  # float32, vectorized
                     for clause_id, w in by_key[(r.field, r.term)]:
-                        # (weight * freq) / (freq + norm), left-to-right in
-                        # float32 exactly like BM25Similarity.cs:263
                         outs.append(
                             pd.DataFrame(
                                 {
                                     "docid": docids,
                                     "clause": clause_id,
-                                    "score": (np.float32(w) * freq) / denom,
+                                    "score": sim.score(w, freq, nbytes, r.field),
                                 }
                             )
                         )
@@ -540,30 +515,6 @@ class IndexSearcher:
 
         cols = ["field", "term", "first_docid", "count", "docids_enc", "tfs_enc", "norms_enc", "docbase"]
         return blocks.select(cols).mapInPandas(score_batches, SCORE_ROWS_SCHEMA)
-
-    @property
-    def _classic_like(self) -> bool:
-        """classic TF-IDF kernel, possibly with SweetSpot's BaselineTf."""
-        return self.similarity == "classic" or self.tf_params is not None
-
-    def _classic_tf_expr(self):
-        """tf(freq) as a Catalyst expression over the `freq` column:
-        sqrt(freq) for DefaultSimilarity (TFIDFSimScorer.Score:687), or
-        BaselineTf (SweetSpotSimilarity.cs:172-180) under sweetspot —
-        float32 operand steps, the sqrt in double, one cast back."""
-        f = F.col("freq").cast("float")
-        if self.tf_params is None:
-            return F.sqrt(f).cast("float")
-        base, mn = self.tf_params
-        bb = np.float32(base * base)
-        op = (
-            (f + F.lit(float(bb)).cast("float")).cast("float")
-            - F.lit(float(mn)).cast("float")
-        ).cast("float")
-        tf = F.sqrt(op.cast("double")).cast("float")
-        return F.when(
-            f <= F.lit(float(mn)).cast("float"), F.lit(float(base)).cast("float")
-        ).otherwise(tf)
 
     def _docids_of_terms(self, terms: list[str], dedupe: bool = True) -> DataFrame:
         """Matching docids only (for MUST_NOT / constant score) — no scoring.
@@ -617,7 +568,7 @@ class IndexSearcher:
         acc = F.coalesce(F.col("s0"), zero)
         for i in range(1, n_clauses):
             acc = acc + F.coalesce(F.col(f"s{i}"), zero)  # float32 each step
-        return acc.alias("score")
+        return acc
 
     # -- rewrite -------------------------------------------------------------------
     def _multiterm_cond(self, q: Query):
@@ -1086,67 +1037,11 @@ class IndexSearcher:
                 return docids.select("docid", const)
             return self._scores_raw(inner, None).select("docid", const)
         if isinstance(q, PayloadTermQuery):
-            # scored under EVERY similarity: the span kernel routes through
-            # the active SimScorer exactly like phrases (_phrase_finalize)
             return self._payload_term_scores(q)
-        if isinstance(q, TermQuery):
+        if isinstance(q, (TermQuery, PhraseQuery, MultiPhraseQuery)):
+            # a lone term/phrase is a one-clause boolean: same weight,
+            # queryNorm over itself, coord 1
             q = BooleanQuery(should=(q,))
-        if self.similarity != "bm25":
-            if isinstance(q, BooleanQuery):
-                pure_terms = all(
-                    isinstance(c, TermQuery)
-                    for c in q.must + q.should + q.must_not
-                )
-                if self._classic_like:
-                    return self._classic_boolean_scores(q)
-                if pure_terms:
-                    if self.sim_spec is not None:
-                        return self._dfr_boolean_scores(q)
-                    return self._lmd_boolean_scores(q)
-                # SimilarityBase members have queryNorm = 1 and coord = 1
-                # (SimilarityBase.cs Coord/QueryNorm), so a boolean with
-                # phrase/span-shaped clauses composes by the plain f32
-                # clause-order fold — the generic nested path is exact.
-                # Push the outer boost into the clauses first (each
-                # clause's kernel multiplies its own f32 boost).
-                if float(q.boost) != 1.0:
-                    import dataclasses
-
-                    b = np.float32(q.boost)
-                    q = BooleanQuery(
-                        must=tuple(
-                            dataclasses.replace(
-                                c, boost=float(np.float32(np.float32(c.boost) * b))
-                            )
-                            for c in q.must
-                        ),
-                        should=tuple(
-                            dataclasses.replace(
-                                c, boost=float(np.float32(np.float32(c.boost) * b))
-                            )
-                            for c in q.should
-                        ),
-                        must_not=q.must_not,
-                        min_should_match=q.min_should_match,
-                    )
-                return self._boolean_scores_nested(q)
-            if isinstance(q, (PhraseQuery, MultiPhraseQuery)):
-                # every Similarity scores every Scorer in the reference
-                # (SimilarityBase.cs Score(stats, freq, docLen);
-                # TestSimilarityBase exercises PhraseQuery under all sims):
-                # the phrase machinery computes (docid, phraseFreq, norm)
-                # and _phrase_finalize applies the active kernel
-                return self._phrase_scores(q)
-            if isinstance(q, DisMaxQuery):
-                if self._classic_like:
-                    return self._classic_dismax_scores(q)
-                return self._dismax_scores_nested(q)
-            raise NotImplementedError(
-                f"{self.similarity} similarity supports term/boolean/phrase/"
-                f"dismax queries (got {type(q).__name__})"
-            )
-        if isinstance(q, (PhraseQuery, MultiPhraseQuery)):
-            return self._phrase_scores(q)
         if isinstance(q, DisMaxQuery):
             return self._dismax_scores(q)
         if isinstance(q, BooleanQuery):
@@ -1170,536 +1065,156 @@ class IndexSearcher:
             return _spans.span_scores(self, q)
         raise TypeError(f"unsupported query node {type(q).__name__}")
 
-    def _term_clauses(self, qs: tuple[Query, ...], start_id: int) -> list[Clause]:
-        out = []
-        for i, sub in enumerate(qs):
-            if not isinstance(sub, TermQuery):
-                raise TypeError("v1 scores nested non-term clauses via scores() recursion")
-            out.append(
-                Clause(
-                    start_id + i,
-                    sub.term,
-                    self.weight(sub.term, sub.boost, sub.field),
-                    field=sub.field,
-                )
-            )
-        return out
-
     def _empty_hits(self) -> DataFrame:
         return self.spark.range(0).select(
             F.col("id").alias("docid"), F.lit(0.0).cast("float").alias("score")
         )
 
+    def _clauses(self, subs, top_boost: float) -> tuple[list[Query], list]:
+        """Weigh one boolean/DisMax level: its subs with the level's boost
+        folded in where the family does (SimScorer.clause_boost), and per
+        sub the normalized SimWeight of a term/phrase clause, or None for a
+        sub scored on its own (nested booleans, spans, ...)."""
+        out = []
+        for c in subs:
+            b = self.sim.clause_boost(c.boost, top_boost)
+            out.append(c if b == c.boost else dataclasses.replace(c, boost=b))
+        flat = [i for i, c in enumerate(out) if self._leaf_keys(c) is not None]
+        if len(flat) < len(out) and not self.sim.nests:
+            raise NotImplementedError(
+                f"{self.similarity} similarity scores term/phrase clauses"
+            )
+        ws = self._sim_weights(
+            [(self._leaf_keys(out[i]), out[i].field, out[i].boost) for i in flat],
+            top_boost,
+        )
+        weights: list = [None] * len(out)
+        for i, w in zip(flat, ws):
+            weights[i] = w
+        return out, weights
+
+    def _clause_rows(
+        self, subs, weights, must_keys=(), prune_k: int | None = None
+    ) -> DataFrame | None:
+        """(docid, clause, score) rows of one boolean/DisMax level, or None
+        when no clause can match. Every matchable term clause scores in one
+        block pass (restricted to the rarest of must_keys' docid ranges;
+        block-max pruned for a top-prune_k); a phrase clause runs its phrase
+        scorer with its weight; any other sub is scored on its own."""
+        terms = [
+            Clause(i, c.term, weights[i], field=c.field)
+            for i, c in enumerate(subs)
+            if isinstance(c, TermQuery) and self._matchable(c)
+        ]
+        rows = None
+        if terms:
+            blocks = self._blocks_for([c.key for c in terms])
+            if must_keys:
+                # leapfrog analogue: restrict every clause's blocks to the
+                # rarest MUST term's docid ranges before decode
+                blocks = self._conjunction_prune(blocks, list(must_keys))
+            if prune_k is not None:
+                blocks, _ = self._prune_blocks(blocks, terms, prune_k)
+            rows = self._score_blocks(blocks, terms)
+        for i, c in enumerate(subs):
+            if isinstance(c, TermQuery) or not self._matchable(c):
+                continue
+            sc = (
+                self._phrase_scores(c, weights[i])
+                if weights[i] is not None
+                else self.scores(c)
+            )
+            part = sc.select("docid", F.lit(i).cast("int").alias("clause"), "score")
+            rows = part if rows is None else rows.unionByName(part)
+        return rows
+
     def _boolean_scores(self, q: BooleanQuery, prune_k: int | None) -> DataFrame:
+        """BooleanQuery under the active similarity (BooleanWeight +
+        BooleanScorer2): MUST = every required clause matched, SHOULD =
+        minShouldMatch count filter, clause scores summed f32 in clause
+        order, times coord(overlap, clauses) where the family has one;
+        MUST_NOT = anti-join (term clauses through the size-guarded mask)."""
         if not q.must and not q.should:
             # clause-less query (e.g. all terms were stopwords) matches nothing
             return self._empty_hits()
         n_must = len(q.must)
-        simple = all(isinstance(c, TermQuery) for c in q.must + q.should)
-        if not simple:
-            return self._boolean_scores_nested(q)
-        must_c = self._term_clauses(q.must, 0)
-        should_c = self._term_clauses(q.should, n_must)
-        clauses = must_c + should_c
-        live = [c for c in clauses if float(c.weight) > 0.0 or c.clause_id < n_must]
-        # a MUST term with df=0 means zero hits
-        if any(float(c.weight) == 0.0 and self._df_of(c) == 0 for c in must_c):
-            return self.spark.range(0).select(
-                F.col("id").alias("docid"), F.lit(0.0).cast("float").alias("score")
-            )
-        not_terms = []
-        for c in q.must_not:
-            if isinstance(c, TermQuery):
-                not_terms.append((c.field, c.term))
-            else:
-                raise TypeError("v1 supports term clauses under MUST_NOT")
-
-        blocks = self._blocks_for([c.key for c in live])
-        if n_must:
-            # leapfrog analogue: restrict every clause's blocks to the
-            # rarest MUST clause's docid ranges before decode
-            blocks = self._conjunction_prune(blocks, [c.key for c in must_c])
+        subs, weights = self._clauses(q.must + q.should, q.boost)
+        live = [self._matchable(c) for c in subs]
+        if not all(live[:n_must]):
+            return self._empty_hits()
+        live_terms = [
+            (c.field, c.term)
+            for c, ok in zip(subs, live)
+            if ok and isinstance(c, TermQuery)
+        ]
         # adaptive block-max pruning: only worth its 2 extra (tiny) jobs when
         # the candidate posting volume is large; below the threshold a single
         # scan-and-score pass is strictly faster. Rank-safe either way.
-        total_df = sum(self._df_of(c) for c in live)
         can_prune = (
             prune_k is not None
+            and self.sim.block_max
             and self._prunable
             and n_must == 0
-            and not not_terms
+            and not q.must_not
             and q.min_should_match <= 1
-            and len(live) > 0
-            and total_df >= self.wand_min_postings
+            and live_terms
+            and len(live_terms) == sum(live)
+            and sum(self.doc_freqs(live_terms).values()) >= self.wand_min_postings
             # deletes inflate probe θ (a high-scoring deleted doc is masked
             # only after scoring) — pruning with a delete log could drop
             # blocks holding live true top-k hits
             and self._deleted_docids() is None
         )
-        if can_prune:
-            blocks, _ = self._prune_blocks(blocks, live, prune_k)
-
-        rows = self._score_blocks(blocks, live)
+        must_keys = [(c.field, c.term) for c in q.must if isinstance(c, TermQuery)]
+        rows = self._clause_rows(
+            subs, weights, must_keys, prune_k if can_prune else None
+        )
+        if rows is None:
+            return self._empty_hits()
+        n_total = len(subs)
         msm = q.min_should_match
         need_should = msm if n_must else max(1, msm) if q.should else 0
-
+        n_live_should = sum(live[n_must:])
+        coord = self.sim.coord(n_total) if n_total > 1 else None
         # single-clause fast path: no clause combination -> no groupBy shuffle;
         # rows are already (docid, score). TermScorer's direct path. Only valid
         # when the minShouldMatch constraint is satisfiable by the live clauses
         # (a lone MUST clause with need_should>=1 and every SHOULD term df=0
-        # must return empty, which the pivot path gets right).
-        n_live_should = sum(1 for c in live if c.clause_id >= n_must)
+        # must return empty, which the pivot path gets right) and coord is 1
+        # (coord(1, 1) is exactly 1).
         if (
-            len(live) == 1
+            sum(live) == 1
             and n_must <= 1
-            and not not_terms
+            and not q.must_not
             and (need_should == 0 or n_live_should >= need_should)
             and need_should <= 1
+            and coord is None
         ):
             return rows.select("docid", "score")
 
-        n_total = len(clauses)
         agg = self._pivot_agg(rows, n_total)
+        matched = [
+            F.when(F.col(f"s{j}").isNotNull(), 1).otherwise(0) for j in range(n_total)
+        ]
         cond = F.lit(True)
         for i in range(n_must):
             cond = cond & F.col(f"s{i}").isNotNull()
         if need_should:
-            matched = None
-            for j in range(n_must, n_total):
-                c = F.when(F.col(f"s{j}").isNotNull(), 1).otherwise(0)
-                matched = c if matched is None else matched + c
-            cond = cond & (matched >= need_should)
-        scored = agg.filter(cond).select("docid", self._fold_expr(n_total))
-        if not_terms:
-            scored = self._must_not_mask(scored, not_terms)
-        return scored
-
-    def _classic_boolean_scores(self, q: BooleanQuery) -> DataFrame:
-        """BooleanQuery under DefaultSimilarity (TF-IDF), float32-exact.
-
-        Per clause: queryWeight = f32(idf * boost); query-level
-        sumOfSquaredWeights = f32 fold of qw^2 over non-prohibited clauses
-        (incl. df=0 ones) * f32(boost^2) (BooleanWeight); queryNorm =
-        (float)(1/sqrt(sum)); value = f32(f32(qw*qnorm)*idf)
-        (IDFStats.Normalize). Doc score = f32 clause-order sum of kernel
-        scores * coord(overlap, maxOverlap) where maxOverlap counts ALL
-        non-prohibited clauses (BooleanWeight maxCoord)."""
-        from ..oracle import classic_idf
-
-        if not q.must and not q.should:
-            return self._empty_hits()
-        ok_types = (TermQuery, PhraseQuery, MultiPhraseQuery)
-        if not all(isinstance(c, ok_types) for c in q.must_not):
-            raise NotImplementedError(
-                "classic MUST_NOT supports term/phrase clauses"
-            )
-        if not all(isinstance(c, ok_types) for c in q.must + q.should):
-            raise NotImplementedError(
-                "classic similarity scores term/phrase clauses"
-            )
-        clauses_q = list(q.must) + list(q.should)
-        n_must = len(q.must)
-
-        def _clause_flat(c):
-            """(field, term) pairs in declaration order (phrase: all
-            (slot, term) pairs — TFIDFSimilarity.IdfExplain allTermStats)."""
-            if isinstance(c, TermQuery):
-                return [(c.field, c.term)]
-            if isinstance(c, PhraseQuery):
-                return [(c.field, t) for t in c.terms]
-            return [(c.field, t) for arr in c.term_arrays for t in arr]
-
-        all_keys = sorted({k for c in clauses_q for k in _clause_flat(c)})
-        dfs = self.doc_freqs(all_keys)
-
-        def _clause_matchable(c):
-            if isinstance(c, TermQuery):
-                return dfs[(c.field, c.term)] > 0
-            if isinstance(c, PhraseQuery):
-                return all(dfs[(c.field, t)] > 0 for t in c.terms)
-            return all(
-                any(dfs[(c.field, t)] > 0 for t in arr) for arr in c.term_arrays
-            )
-
-        if any(not _clause_matchable(c) for c in clauses_q[:n_must]):
-            return self._empty_hits()
-        # per-clause idf: f32 fold over the clause's term stats
-        idfs = []
-        for c in clauses_q:
-            acc = np.float32(0.0)
-            for k in _clause_flat(c):
-                acc = np.float32(acc + classic_idf(dfs[k], self.max_doc))
-            idfs.append(acc)
-        qws = [
-            np.float32(i * np.float32(c.boost)) for i, c in zip(idfs, clauses_q)
-        ]
-        ssq = np.float32(0.0)
-        for qw in qws:
-            ssq = np.float32(ssq + np.float32(qw * qw))
-        ssq = np.float32(ssq * np.float32(np.float32(q.boost) * np.float32(q.boost)))
-        qnorm = (
-            np.float32(np.float64(1.0) / np.sqrt(np.float64(ssq)))
-            if ssq > 0
-            else np.float32(1.0)
-        )
-        values = [np.float32(np.float32(qw * qnorm) * i) for qw, i in zip(qws, idfs)]
-        term_ids = [
-            i for i, c in enumerate(clauses_q) if isinstance(c, TermQuery)
-        ]
-        phrase_ids = [
-            i for i, c in enumerate(clauses_q) if not isinstance(c, TermQuery)
-        ]
-        clauses = [
-            Clause(i, clauses_q[i].term, values[i], field=clauses_q[i].field)
-            for i in term_ids
-        ]
-        live = [c for c in clauses if dfs[c.key] > 0]
-        rows = None
-        if live:
-            blocks = self._blocks_for([c.key for c in live])
-            must_term_keys = [
-                (clauses_q[i].field, clauses_q[i].term)
-                for i in term_ids
-                if i < n_must
-            ]
-            if must_term_keys and len(must_term_keys) == n_must:
-                blocks = self._conjunction_prune(blocks, must_term_keys)
-            rows = self._score_blocks(blocks, live, classic=True)
-        # phrase clauses: freq stream + the TFIDF kernel with the SHARED
-        # queryNorm-folded value (sqrt(freq) * value * byte315Decode)
-        from ..functions.smallfloat import DECODE_TABLE
-
-        for i in phrase_ids:
-            c = clauses_q[i]
-            if not _clause_matchable(c):
-                continue
-            pf, _flat = self._phrase_scores(c, return_freqs=True)
-            raw = (
-                self._classic_tf_expr()
-                * F.lit(float(values[i])).cast("float")
-            ).cast("float")
-            omit = c.field in {
-                f
-                for f, info in self.fields_info.items()
-                if info.get("omit_norms")
-            }
-            if omit:
-                sc = raw
-            else:
-                dec = F.array(
-                    *[F.lit(float(x)).cast("float") for x in DECODE_TABLE]
-                )
-                sc = (raw * F.element_at(dec, F.col("nb").cast("int") + 1)).cast(
-                    "float"
-                )
-            prow = pf.select(
-                "docid", F.lit(i).cast("int").alias("clause"), sc.alias("score")
-            )
-            rows = prow if rows is None else rows.unionByName(prow)
-        if rows is None:
-            return self._empty_hits()
-        n_total = len(clauses_q)
-        agg = self._pivot_agg(rows, n_total)
-        cond = F.lit(True)
-        for i in range(n_must):
-            cond = cond & F.col(f"s{i}").isNotNull()
-        msm = q.min_should_match
-        need_should = msm if n_must else max(1, msm) if q.should else 0
-        matched_should = None
-        overlap = None
-        for j in range(n_total):
-            c = F.when(F.col(f"s{j}").isNotNull(), 1).otherwise(0)
-            overlap = c if overlap is None else overlap + c
-            if j >= n_must:
-                matched_should = c if matched_should is None else matched_should + c
-        if need_should:
-            cond = cond & (matched_should >= need_should)
-        zero = F.lit(0.0).cast("float")
-        acc = F.coalesce(F.col("s0"), zero)
-        for i in range(1, n_total):
-            acc = acc + F.coalesce(F.col(f"s{i}"), zero)
-        coord = overlap.cast("float") / F.lit(float(np.float32(n_total))).cast("float")
-        scored = agg.filter(cond).select(
-            "docid", (acc * coord.cast("float")).cast("float").alias("score")
-        )
-        not_keys = [
-            (c.field, c.term) for c in q.must_not if isinstance(c, TermQuery)
-        ]
+            cond = cond & (sum(matched[n_must:], F.lit(0)) >= need_should)
+        score = self._fold_expr(n_total)
+        if coord is not None:
+            factors = F.array(*[F.lit(float(x)).cast("float") for x in coord])
+            overlap = sum(matched, F.lit(0))
+            score = (score * F.element_at(factors, overlap + 1)).cast("float")
+        scored = agg.filter(cond).select("docid", score.alias("score"))
+        not_keys = [(c.field, c.term) for c in q.must_not if isinstance(c, TermQuery)]
         if not_keys:
             scored = self._must_not_mask(scored, not_keys)
         for c in q.must_not:
             if not isinstance(c, TermQuery):
-                pf, _fl = self._phrase_scores(c, return_freqs=True)
                 scored = scored.join(
-                    pf.select("docid"), "docid", "left_anti"
+                    self.scores(c).select("docid"), "docid", "left_anti"
                 )
-        return scored
-
-    def _lmd_boolean_scores(self, q: BooleanQuery) -> DataFrame:
-        """BooleanQuery under LM smoothing (Dirichlet or Jelinek-Mercer),
-        float32-exact.
-
-        Shared (LMSimilarity DefaultCollectionModel:158-161):
-          cp = f32(f32(ttf) + 1) / f32(f32(sumTotalTermFreq) + 1);
-          docLen = 1/(byte315Decode)^2 = NORM_TABLE
-          (SimilarityBase.cs:227-238,259-262,307); omitNorms fields use
-          docLen = 1; queryNorm = coord = 1 -> plain f32 clause-order sum.
-        Dirichlet (LMDirichletSimilarity.cs:74-78):
-          score = f32(boost) * f32( ln(f32(1 + f32(freq / f32(mu*cp))))
-                                  + ln(f32(mu / f32(docLen + mu))) ),
-          clamped at 0.
-        Jelinek-Mercer (LMJelinekMercerSimilarity.cs:57-60):
-          score = f32(boost) * f32(ln(f32(1 +
-                  f32(f32(f32((1-λ)*freq) / docLen) / f32(λ*cp)))))."""
-        from ..functions.smallfloat import NORM_TABLE
-
-        if not q.must and not q.should:
-            return self._empty_hits()
-        if not all(isinstance(c, TermQuery) for c in q.must + q.should + q.must_not):
-            raise NotImplementedError("lmd similarity scores term clauses")
-        terms = list(q.must) + list(q.should)
-        n_must = len(q.must)
-        keys = [(c.field, c.term) for c in terms]
-        metas = self.term_meta(keys)
-        if any(metas[k][0] == 0 for k in keys[:n_must]):
-            return self._empty_hits()
-        mu = np.float32(self.mu)
-        smooth = np.float32(self.lam) if self.similarity == "lmjm" else mu
-        field_tokens = {
-            f: int(info.get("sum_ttf", 0)) for f, info in self.fields_info.items()
-        }
-        params = []  # per clause: (boost32, f32(smooth * cp), field)
-        for c, k in zip(terms, keys):
-            cp = np.float32(
-                (np.float32(metas[k][1]) + np.float32(1.0))
-                / (np.float32(field_tokens.get(c.field, 0)) + np.float32(1.0))
-            )
-            params.append(
-                (np.float32(np.float32(c.boost) * np.float32(q.boost)),
-                 np.float32(smooth * cp), c.field)
-            )
-        live = [i for i, k in enumerate(keys) if metas[k][0] > 0]
-        by_key: dict[tuple[str, str], list[tuple[int, float, float]]] = {}
-        for i in live:
-            by_key.setdefault(keys[i], []).append(
-                (i, float(params[i][0]), float(params[i][1]))
-            )
-        blocks = self._blocks_for([keys[i] for i in live])
-        if n_must:
-            blocks = self._conjunction_prune(blocks, keys[:n_must])
-        omit = {f for f, info in self.fields_info.items() if info.get("omit_norms")}
-        mu_f = float(self.mu)
-        jm = self.similarity == "lmjm"
-        oml = np.float32(np.float32(1.0) - np.float32(self.lam))
-
-        def score_batches(it):
-            from .codec import decode_block
-
-            for pdf in it:
-                outs = []
-                for r in pdf.itertuples(index=False):
-                    docids, tfs = decode_block(
-                        r.docids_enc, r.tfs_enc, r.first_docid, r.count
-                    )
-                    if r.docbase:
-                        docids = docids + r.docbase
-                    nbytes = np.frombuffer(r.norms_enc, dtype=np.uint8)
-                    freq = tfs.astype(np.float32)
-                    dl = (
-                        np.ones(len(freq), dtype=np.float32)
-                        if r.field in omit
-                        else NORM_TABLE[nbytes]
-                    )
-                    if not jm:
-                        l2 = np.log(
-                            (np.float32(mu_f) / (dl + np.float32(mu_f))).astype(
-                                np.float64
-                            )
-                        )
-                    for cid, boost, scp in by_key[(r.field, r.term)]:
-                        if jm:
-                            # ((1-λ)*freq / docLen) / (λ*cp), left-to-right f32
-                            inner = np.float32(1.0) + ((oml * freq) / dl) / np.float32(scp)
-                            sc = np.float32(boost) * np.log(
-                                inner.astype(np.float64)
-                            ).astype(np.float32)
-                        else:
-                            inner1 = np.float32(1.0) + freq / np.float32(scp)
-                            sc = (
-                                np.float32(boost)
-                                * (np.log(inner1.astype(np.float64)) + l2).astype(
-                                    np.float32
-                                )
-                            )
-                            np.maximum(sc, np.float32(0.0), out=sc)
-                        outs.append(
-                            pd.DataFrame(
-                                {"docid": docids, "clause": cid, "score": sc}
-                            )
-                        )
-                yield pd.concat(outs, ignore_index=True) if outs else pd.DataFrame(
-                    {
-                        "docid": pd.Series(dtype="int64"),
-                        "clause": pd.Series(dtype="int32"),
-                        "score": pd.Series(dtype="float32"),
-                    }
-                )
-
-        cols = [
-            "field", "term", "first_docid", "count", "docids_enc", "tfs_enc",
-            "norms_enc", "docbase",
-        ]
-        rows = blocks.select(cols).mapInPandas(score_batches, SCORE_ROWS_SCHEMA)
-        n_total = len(terms)
-        agg = self._pivot_agg(rows, n_total)
-        cond = F.lit(True)
-        for i in range(n_must):
-            cond = cond & F.col(f"s{i}").isNotNull()
-        msm = q.min_should_match
-        need_should = msm if n_must else max(1, msm) if q.should else 0
-        if need_should:
-            matched = None
-            for j in range(n_must, n_total):
-                c = F.when(F.col(f"s{j}").isNotNull(), 1).otherwise(0)
-                matched = c if matched is None else matched + c
-            cond = cond & (matched >= need_should)
-        scored = agg.filter(cond).select("docid", self._fold_expr(n_total))
-        not_keys = [(c.field, c.term) for c in q.must_not]
-        if not_keys:
-            scored = self._must_not_mask(scored, not_keys)
-        return scored
-
-    def _dfr_boolean_scores(self, q: BooleanQuery) -> DataFrame:
-        """BooleanQuery under any SimilarityBase matrix member (DFR basic
-        model x after-effect x normalization, or IB distribution x lambda x
-        normalization) — see operators/simbase.py for the cited float32-exact
-        component kernels (SimilarityBase.cs:117-139, DFRSimilarity.cs:121-125,
-        IBSimilarity.cs:90-93). docLen comes from the byte315^-2 table
-        (1 for omitNorms fields); per-clause stats are driver-side scalars,
-        so each decoded block scores in a few numpy SIMD passes."""
-        from ..functions.smallfloat import NORM_TABLE
-        from . import simbase
-
-        if not q.must and not q.should:
-            return self._empty_hits()
-        if not all(isinstance(c, TermQuery) for c in q.must + q.should + q.must_not):
-            raise NotImplementedError("dfr/ib similarity scores term clauses")
-        terms = list(q.must) + list(q.should)
-        n_must = len(q.must)
-        keys = [(c.field, c.term) for c in terms]
-        metas = self.term_meta(keys)
-        if any(metas[k][0] == 0 for k in keys[:n_must]):
-            return self._empty_hits()
-        field_tokens = {
-            f: int(info.get("sum_ttf", 0)) for f, info in self.fields_info.items()
-        }
-        by_key: dict[tuple[str, str], list[tuple]] = {}
-        for i, (c, k) in enumerate(zip(terms, keys)):
-            df_, ttf, _b = metas[k]
-            if df_ == 0:
-                continue
-            st = simbase.make_stats(
-                self.max_doc, df_, ttf, field_tokens.get(c.field, 0)
-            )
-            boost = np.float32(np.float32(c.boost) * np.float32(q.boost))
-            by_key.setdefault(k, []).append((i, float(boost), st))
-        if not by_key:
-            return self._empty_hits()
-        blocks = self._blocks_for(list(by_key))
-        if n_must:
-            blocks = self._conjunction_prune(blocks, keys[:n_must])
-        omit = {f for f, info in self.fields_info.items() if info.get("omit_norms")}
-        spec = self.sim_spec
-
-        def score_batches(it):
-            from .codec import decode_block
-
-            for pdf in it:
-                outs = []
-                for r in pdf.itertuples(index=False):
-                    docids, tfs = decode_block(
-                        r.docids_enc, r.tfs_enc, r.first_docid, r.count
-                    )
-                    if r.docbase:
-                        docids = docids + r.docbase
-                    nbytes = np.frombuffer(r.norms_enc, dtype=np.uint8)
-                    freq = tfs.astype(np.float32)
-                    dl = (
-                        np.ones(len(freq), dtype=np.float32)
-                        if r.field in omit
-                        else NORM_TABLE[nbytes]
-                    )
-                    for cid, boost, st in by_key[(r.field, r.term)]:
-                        sc = simbase.block_scores(spec, st, boost, freq, dl)
-                        outs.append(
-                            pd.DataFrame(
-                                {"docid": docids, "clause": cid, "score": sc}
-                            )
-                        )
-                yield pd.concat(outs, ignore_index=True) if outs else pd.DataFrame(
-                    {
-                        "docid": pd.Series(dtype="int64"),
-                        "clause": pd.Series(dtype="int32"),
-                        "score": pd.Series(dtype="float32"),
-                    }
-                )
-
-        cols = [
-            "field", "term", "first_docid", "count", "docids_enc", "tfs_enc",
-            "norms_enc", "docbase",
-        ]
-        rows = blocks.select(cols).mapInPandas(score_batches, SCORE_ROWS_SCHEMA)
-        n_total = len(terms)
-        agg = self._pivot_agg(rows, n_total)
-        cond = F.lit(True)
-        for i in range(n_must):
-            cond = cond & F.col(f"s{i}").isNotNull()
-        msm = q.min_should_match
-        need_should = msm if n_must else max(1, msm) if q.should else 0
-        if need_should:
-            matched = None
-            for j in range(n_must, n_total):
-                c = F.when(F.col(f"s{j}").isNotNull(), 1).otherwise(0)
-                matched = c if matched is None else matched + c
-            cond = cond & (matched >= need_should)
-        scored = agg.filter(cond).select("docid", self._fold_expr(n_total))
-        not_keys = [(c.field, c.term) for c in q.must_not]
-        if not_keys:
-            scored = self._must_not_mask(scored, not_keys)
-        return scored
-
-    def _boolean_scores_nested(self, q: BooleanQuery) -> DataFrame:
-        """General path: recursively score sub-queries, combine relationally.
-
-        Mirrors BooleanScorer2's composition of req/opt/prohibited scorers
-        (Search/BooleanScorer2.cs) with joins + an ordered float32 fold."""
-        if not q.must and not q.should:
-            return self._empty_hits()
-        parts = []
-        for i, sub in enumerate(q.must):
-            parts.append((i, True, self.scores(sub)))
-        for j, sub in enumerate(q.should):
-            parts.append((len(q.must) + j, False, self.scores(sub)))
-        union = None
-        for cid, _req, df in parts:
-            tagged = df.select("docid", F.lit(cid).alias("clause"), "score")
-            union = tagged if union is None else union.unionByName(tagged)
-        n_must = len(q.must)
-        n_total = len(parts)
-        need_should = q.min_should_match if n_must else max(1, q.min_should_match) if q.should else 0
-        agg = self._pivot_agg(union, n_total)
-        cond = F.lit(True)
-        for i in range(n_must):
-            cond = cond & F.col(f"s{i}").isNotNull()
-        if need_should:
-            matched = None
-            for j in range(n_must, n_total):
-                c = F.when(F.col(f"s{j}").isNotNull(), 1).otherwise(0)
-                matched = c if matched is None else matched + c
-            cond = cond & (matched >= need_should)
-        scored = agg.filter(cond).select("docid", self._fold_expr(n_total))
-        for sub in q.must_not:
-            scored = scored.join(self.scores(sub).select("docid"), "docid", "left_anti")
         return scored
 
     # -- conjunction skipping (Advance analogue) -------------------------------
@@ -1767,7 +1282,7 @@ class IndexSearcher:
         return rare_blocks.unionByName(pruned)
 
     # -- phrase scoring --------------------------------------------------------
-    def _phrase_scores(self, q, return_freqs: bool = False):
+    def _phrase_scores(self, q, w: SimWeight) -> DataFrame:
         """Phrase / MultiPhrase scorer, relational-first.
 
         Exact (slop=0): decode (docid, clause, pos - queryOffset) rows for
@@ -1780,29 +1295,16 @@ class IndexSearcher:
         the loop is per-doc, not per-row of the corpus). MultiPhraseQuery
         (Search/MultiPhraseQuery.cs): a slot with several alternative terms
         maps them all to the same clause id — exactly
-        UnionDocsAndPositionsEnum's position union. Scoring: weight = f32
-        fold of idf over every (slot, term) pair in declaration order
-        (MultiPhraseWeight allTermStats), through the term weight chain;
-        score = w*freq/(freq + norm_cache[norm_byte]) — same float32
-        operation order as TermScorer."""
-        if isinstance(q, PhraseQuery):
-            arrays = tuple((t,) for t in q.terms)
-        else:
-            arrays = tuple(tuple(a) for a in q.term_arrays)
+        UnionDocsAndPositionsEnum's position union. Scoring: w is the
+        phrase's SimWeight over every (slot, term) pair in declaration order
+        (MultiPhraseWeight allTermStats); each doc's (phraseFreq, norm byte)
+        goes through the SimScorer kernel — every Similarity scores every
+        Scorer in the reference (SimilarityBase.cs Score(stats, freq,
+        docLen))."""
+        arrays = self._slots(q)
         offsets = list(q.offsets)
-
-        def _empty(reason=None):
-            if return_freqs:
-                pf0 = self.spark.range(0).select(
-                    F.col("id").alias("docid"),
-                    F.lit(0.0).cast("float").alias("freq"),
-                    F.lit(0).cast("short").alias("nb"),
-                )
-                return pf0, []
-            return self._empty_hits()
-
         if not arrays:
-            return _empty()
+            return self._empty_hits()
         if any(
             s["manifest"].get("index_options") == "docs_freqs"
             for s in self.segments
@@ -1811,24 +1313,11 @@ class IndexSearcher:
                 "phrase queries need positions; this index was built with "
                 "index_options='docs_freqs'"
             )
+        if not self._matchable(q):
+            return self._empty_hits()
         flat = [(slot, t) for slot, arr in enumerate(arrays) for t in arr]
         keys = [(q.field, t) for _slot, t in flat]
         dfs = self.doc_freqs(set(keys))
-        # a slot with no present alternative can never match
-        # (MultiPhraseQuery.cs:268-272 returns a null scorer)
-        for arr in arrays:
-            if all(dfs[(q.field, t)] == 0 for t in arr):
-                return _empty()
-        # idf fold over ALL (slot, term) pairs in declaration order,
-        # absent terms included with df=0 stats (allTermStats)
-        s = np.float32(0.0)
-        for _slot, t in flat:
-            s = np.float32(s + idf_f32(dfs[(q.field, t)], self.max_doc))
-        w = np.float32(
-            np.float32(s * np.float32(q.boost))
-            * np.float32(np.float32(self.k1) + np.float32(1.0))
-        )
-        emit_freq = return_freqs or self.similarity != "bm25"
         live_keys = sorted({k for k in keys if dfs[k] > 0})
         blocks = self._blocks_for(live_keys)
         single_keys = [
@@ -1862,15 +1351,9 @@ class IndexSearcher:
             mode == "bulk" or (mode == "auto" and not prune_bounds)
         )
         if use_bulk:
-            out = self._phrase_scores_bulk(
-                blocks, by_term, len(arrays), int(q.slop), q.field, w,
-                emit_freq=emit_freq,
+            return self._phrase_scores_bulk(
+                blocks, by_term, len(arrays), int(q.slop), q.field, w
             )
-            if return_freqs:
-                return out, flat
-            if emit_freq:
-                out = self._phrase_finalize(out, flat, q.field, q.boost)
-            return out
 
         def expand(it):
             from .codec import decode_block, decode_positions
@@ -1913,9 +1396,7 @@ class IndexSearcher:
         ).mapInPandas(expand, "docid long, clause int, bpos long, norm_byte short")
 
         n = len(arrays)
-        cache = self._field_caches[q.field]
-        nc_arr = F.array(*[F.lit(float(c)).cast("float") for c in cache])
-        w_lit = F.lit(float(w)).cast("float")
+        sim, field = self.sim, q.field
         if q.slop == 0:
             aligned = (
                 rows.groupBy("docid", "bpos")
@@ -1928,54 +1409,49 @@ class IndexSearcher:
             pf = aligned.groupBy("docid").agg(
                 F.count("*").cast("float").alias("freq"), F.max("nb").alias("nb")
             )
-        else:
-            present = (
-                rows.groupBy("docid")
-                .agg(
-                    F.countDistinct("clause").alias("ncl"),
-                    F.max("norm_byte").alias("nb"),
-                    F.collect_list(F.struct("clause", "bpos")).alias("ps"),
-                )
-                .filter(F.col("ncl") == n)
-            )
-            slop = int(q.slop)
 
-            def sloppy(it):
-                from ..oracle import sloppy_phrase_freq
-
+            def score_freqs(it):
                 for pdf in it:
-                    out_rows = []
-                    for r in pdf.itertuples(index=False):
-                        per: list[list[int]] = [[] for _ in range(n)]
-                        for st in r.ps:
-                            per[int(st["clause"])].append(int(st["bpos"]))
-                        freq = sloppy_phrase_freq(per, [0] * n, slop)
-                        if freq > 0:
-                            out_rows.append((int(r.docid), float(freq), int(r.nb)))
-                    yield pd.DataFrame(
-                        out_rows, columns=["docid", "freq", "nb"]
-                    ) if out_rows else pd.DataFrame(
-                        {
-                            "docid": pd.Series(dtype="int64"),
-                            "freq": pd.Series(dtype="float32"),
-                            "nb": pd.Series(dtype="int16"),
-                        }
-                    )
+                    freq = pdf["freq"].to_numpy(dtype=np.float32)
+                    sc = sim.score(w, freq, pdf["nb"].to_numpy(), field)
+                    yield pd.DataFrame({"docid": pdf["docid"], "score": sc})
 
-            pf = present.select("docid", "nb", "ps").mapInPandas(
-                sloppy, "docid long, freq float, nb short"
+            return pf.mapInPandas(score_freqs, "docid long, score float")
+        present = (
+            rows.groupBy("docid")
+            .agg(
+                F.countDistinct("clause").alias("ncl"),
+                F.max("norm_byte").alias("nb"),
+                F.collect_list(F.struct("clause", "bpos")).alias("ps"),
             )
-        pf = pf.filter(F.col("freq") > 0)
-        if return_freqs:
-            return pf.select("docid", "freq", "nb"), flat
-        if emit_freq:
-            return self._phrase_finalize(
-                pf.select("docid", "freq", "nb"), flat, q.field, q.boost
-            )
-        freq_f = F.col("freq").cast("float")
-        nc = F.element_at(nc_arr, F.col("nb").cast("int") + 1)
-        return pf.select(
-            "docid", ((w_lit * freq_f) / (freq_f + nc)).cast("float").alias("score")
+            .filter(F.col("ncl") == n)
+        )
+        slop = int(q.slop)
+
+        def sloppy(it):
+            from ..oracle import sloppy_phrase_freq
+
+            for pdf in it:
+                out_d, out_f, out_nb = [], [], []
+                for r in pdf.itertuples(index=False):
+                    per: list[list[int]] = [[] for _ in range(n)]
+                    for st in r.ps:
+                        per[int(st["clause"])].append(int(st["bpos"]))
+                    freq = sloppy_phrase_freq(per, [0] * n, slop)
+                    if freq > 0:
+                        out_d.append(int(r.docid))
+                        out_f.append(freq)
+                        out_nb.append(int(r.nb))
+                freq = np.array(out_f, dtype=np.float32)
+                yield pd.DataFrame(
+                    {
+                        "docid": np.array(out_d, dtype=np.int64),
+                        "score": sim.score(w, freq, np.array(out_nb, dtype=np.int64), field),
+                    }
+                )
+
+        return present.select("docid", "nb", "ps").mapInPandas(
+            sloppy, "docid long, score float"
         )
 
     def _phrase_scores_bulk(
@@ -1985,8 +1461,7 @@ class IndexSearcher:
         n: int,
         slop: int,
         field: str,
-        w: np.float32,
-        emit_freq: bool = False,
+        w: SimWeight,
     ) -> DataFrame:
         """Scale-safe phrase evaluation: positions shuffled as docid-range-
         sliced binary sub-arrays (one row per (range, clause, block-slice),
@@ -1999,7 +1474,7 @@ class IndexSearcher:
         gather path (same freq, same float32 score chain) — asserted by
         tests/test_phrase.py bulk-parity cases."""
         R = self.BULK_RANGE
-        cache = self._field_caches[field]
+        sim = self.sim
         full_mask = (1 << n) - 1
 
         def slice_ranges(it):
@@ -2068,13 +1543,7 @@ class IndexSearcher:
                 gd = d[starts][full]
                 uniq_d, freq = np.unique(gd, return_counts=True)
                 nbu = nb[np.searchsorted(d, uniq_d)]
-                f32 = freq.astype(np.float32)
-                if emit_freq:
-                    yield pd.DataFrame(
-                        {"docid": uniq_d, "freq": f32, "nb": nbu.astype(np.int16)}
-                    )
-                    return
-                sc = (np.float32(w) * f32) / (f32 + cache[nbu])
+                sc = sim.score(w, freq.astype(np.float32), nbu, field)
                 yield pd.DataFrame({"docid": uniq_d, "score": sc})
                 return
             # sloppy: per-doc merge over docs holding every clause
@@ -2083,7 +1552,7 @@ class IndexSearcher:
             starts = np.concatenate(
                 [[0], np.nonzero(d[1:] != d[:-1])[0] + 1, [len(d)]]
             )
-            out_d, out_s = [], []
+            out_d, out_f, out_nb = [], [], []
             for g0, g1 in zip(starts[:-1], starts[1:]):
                 cmask = 0
                 for c in cl[g0:g1]:
@@ -2095,36 +1564,17 @@ class IndexSearcher:
                     per[int(cl[i])].append(int(p[i]))
                 freq = sloppy_phrase_freq(per, [0] * n, slop)
                 if freq > 0:
-                    fr = np.float32(freq)
                     out_d.append(int(d[g0]))
-                    if emit_freq:
-                        out_s.append((fr, int(nb[g0])))
-                    else:
-                        out_s.append(
-                            np.float32(
-                                np.float32(w) * fr / (fr + cache[int(nb[g0])])
-                            )
-                        )
+                    out_f.append(freq)
+                    out_nb.append(int(nb[g0]))
             if out_d:
-                if emit_freq:
-                    yield pd.DataFrame(
-                        {
-                            "docid": np.array(out_d, dtype=np.int64),
-                            "freq": np.array(
-                                [x[0] for x in out_s], dtype=np.float32
-                            ),
-                            "nb": np.array(
-                                [x[1] for x in out_s], dtype=np.int16
-                            ),
-                        }
-                    )
-                else:
-                    yield pd.DataFrame(
-                        {
-                            "docid": np.array(out_d, dtype=np.int64),
-                            "score": np.array(out_s, dtype=np.float32),
-                        }
-                    )
+                freq = np.array(out_f, dtype=np.float32)
+                yield pd.DataFrame(
+                    {
+                        "docid": np.array(out_d, dtype=np.int64),
+                        "score": sim.score(w, freq, np.array(out_nb, dtype=np.int64), field),
+                    }
+                )
 
         n_shuffle = max(
             int(self.spark.conf.get("spark.sql.shuffle.partitions", "32")), 8
@@ -2136,170 +1586,9 @@ class IndexSearcher:
             slice_ranges,
             "rid long, clause int, docids binary, bpos binary, norms binary",
         )
-        out_schema = (
-            "docid long, freq float, nb short"
-            if emit_freq
-            else "docid long, score float"
-        )
         return sliced.repartition(n_shuffle, "rid").mapInPandas(
-            reduce_ranges, out_schema
+            reduce_ranges, "docid long, score float"
         )
-
-    def _phrase_finalize(
-        self, pf: DataFrame, flat: list[tuple[int, str]], field: str,
-        qboost: float, factor_col: str | None = None,
-    ) -> DataFrame:
-        """Score phrase candidates (docid, freq float, nb short) under the
-        active non-BM25 similarity.
-
-        factor_col names an extra float column multiplied into the kernel
-        score LAST (f32) — the payload route: PayloadTermSpanScorer.Score()
-        is GetSpanScore() * GetPayloadScore(), where the span score is the
-        ACTIVE similarity's kernel at the sloppy freq
-        (Search/Payloads/PayloadTermQuery.cs GetScore via
-        Similarity.SimScorer ComputeSlopFactor/ComputePayloadFactor).
-
-        Reference semantics (every Similarity scores every Scorer):
-        - classic TF-IDF: PhraseWeight idf = f32 SUM of per-term idfs over
-          allTermStats in declaration order (TFIDFSimilarity.IdfExplain);
-          one IDFStats value; score = f32(f32(sqrt(freq)) * value) *
-          DecodeNormValue(norm) (TFIDFSimScorer.Score) — no coord (a
-          standalone phrase has no BooleanWeight).
-        - SimilarityBase members (LM-Dirichlet/JM, DFR, IB): ComputeWeight
-          over several termStats builds ONE BasicStats per term, and
-          MultiSimilarity.MultiSimScorer SUMS the per-term kernels at the
-          SAME phrase freq (SimilarityBase.cs GetSimScorer multi branch) —
-          f32 accumulation in declaration order."""
-        from ..functions.smallfloat import DECODE_TABLE, NORM_TABLE
-
-        keys = [(field, t) for _slot, t in flat]
-        omit = field in {
-            f for f, info in self.fields_info.items() if info.get("omit_norms")
-        }
-        if self._classic_like:
-            from ..oracle import classic_idf
-
-            dfs = self.doc_freqs(sorted(set(keys)))
-            s = np.float32(0.0)
-            for k in keys:
-                s = np.float32(s + classic_idf(dfs[k], self.max_doc))
-            qw = np.float32(s * np.float32(qboost))
-            ssq = np.float32(qw * qw)
-            qnorm = (
-                np.float32(np.float64(1.0) / np.sqrt(np.float64(ssq)))
-                if ssq > 0
-                else np.float32(1.0)
-            )
-            value = np.float32(np.float32(qw * qnorm) * s)
-            raw = (
-                self._classic_tf_expr()
-                * F.lit(float(value)).cast("float")
-            ).cast("float")
-            if omit:
-                sc = raw
-            else:
-                dec = F.array(
-                    *[F.lit(float(x)).cast("float") for x in DECODE_TABLE]
-                )
-                sc = (
-                    raw * F.element_at(dec, F.col("nb").cast("int") + 1)
-                ).cast("float")
-            if factor_col is not None:
-                sc = (sc * F.col(factor_col).cast("float")).cast("float")
-            return pf.select("docid", sc.alias("score"))
-
-        # SimilarityBase family: per-term scalar params, kernels summed at
-        # the shared phrase freq in one tiny mapInPandas over the few
-        # surviving candidates (one row per matching doc)
-        metas = self.term_meta(sorted(set(keys)))
-        field_tokens = {
-            f: int(info.get("sum_ttf", 0)) for f, info in self.fields_info.items()
-        }
-        nft = field_tokens.get(field, 0)
-        boost32 = np.float32(qboost)
-        if self.sim_spec is not None:
-            from . import simbase
-
-            spec = self.sim_spec
-            stats = [
-                simbase.make_stats(self.max_doc, metas[k][0], metas[k][1], nft)
-                for k in keys
-            ]
-
-            def fin(it):
-                for pdf in it:
-                    if not len(pdf):
-                        continue
-                    freq = pdf["freq"].to_numpy().astype(np.float32)
-                    nb = pdf["nb"].to_numpy().astype(np.int64) & 0xFF
-                    dl = (
-                        np.ones(len(freq), dtype=np.float32)
-                        if omit
-                        else NORM_TABLE[nb]
-                    )
-                    total = np.zeros(len(freq), dtype=np.float32)
-                    for st in stats:
-                        sc = simbase.block_scores(spec, st, boost32, freq, dl)
-                        total = (total + sc).astype(np.float32)
-                    if factor_col is not None:
-                        fac = pdf[factor_col].to_numpy().astype(np.float32)
-                        total = (total * fac).astype(np.float32)
-                    yield pd.DataFrame({"docid": pdf["docid"], "score": total})
-
-        else:  # lmd / lmjm
-            mu = np.float32(self.mu)
-            jm = self.similarity == "lmjm"
-            smooth = np.float32(self.lam) if jm else mu
-            oml = np.float32(np.float32(1.0) - np.float32(self.lam))
-            scps = []
-            for k in keys:
-                cp = np.float32(
-                    (np.float32(metas[k][1]) + np.float32(1.0))
-                    / (np.float32(nft) + np.float32(1.0))
-                )
-                scps.append(np.float32(smooth * cp))
-            mu_f = float(self.mu)
-
-            def fin(it):
-                for pdf in it:
-                    if not len(pdf):
-                        continue
-                    freq = pdf["freq"].to_numpy().astype(np.float32)
-                    nb = pdf["nb"].to_numpy().astype(np.int64) & 0xFF
-                    dl = (
-                        np.ones(len(freq), dtype=np.float32)
-                        if omit
-                        else NORM_TABLE[nb]
-                    )
-                    if not jm:
-                        l2 = np.log(
-                            (np.float32(mu_f) / (dl + np.float32(mu_f))).astype(
-                                np.float64
-                            )
-                        )
-                    total = np.zeros(len(freq), dtype=np.float32)
-                    for scp in scps:
-                        if jm:
-                            inner = (
-                                np.float32(1.0)
-                                + ((oml * freq) / dl) / np.float32(scp)
-                            )
-                            sc = boost32 * np.log(inner.astype(np.float64)).astype(
-                                np.float32
-                            )
-                        else:
-                            inner1 = np.float32(1.0) + freq / np.float32(scp)
-                            sc = boost32 * (
-                                np.log(inner1.astype(np.float64)) + l2
-                            ).astype(np.float32)
-                            np.maximum(sc, np.float32(0.0), out=sc)
-                        total = (total + sc).astype(np.float32)
-                    if factor_col is not None:
-                        fac = pdf[factor_col].to_numpy().astype(np.float32)
-                        total = (total * fac).astype(np.float32)
-                    yield pd.DataFrame({"docid": pdf["docid"], "score": total})
-
-        return pf.mapInPandas(fin, "docid long, score float")
 
     def _payload_term_scores(self, q: PayloadTermQuery) -> DataFrame:
         """PayloadTermQuery scorer (Search/Payloads/PayloadTermQuery.cs).
@@ -2319,15 +1608,11 @@ class IndexSearcher:
                 (Min/MaxPayloadFunction.cs; vectorized reduceat)
         No payloads seen -> DocScore = 1. Final score = f32(spanScore *
         DocScore), or DocScore alone when include_span_score=False
-        (PayloadTermQuery.cs GetScore). One job: the term's blocks decode
-        and score in a single mapInPandas — no shuffle before top-k.
-
-        Non-BM25 similarities (the reference routes the span score through
-        the ACTIVE SimScorer — Similarity.SimScorer ComputeSlopFactor is
-        1/(distance+1) in every family, so freq = 0.5*tf everywhere): the
-        decode pass emits (docid, freq, nb, factor) and _phrase_finalize
-        applies the active kernel * factor — still two chained narrow maps,
-        no shuffle."""
+        (PayloadTermQuery.cs GetScore). The span score is the ACTIVE
+        similarity's kernel at that freq (Similarity.SimScorer
+        ComputeSlopFactor is 1/(distance+1) in every family), the payload
+        factor multiplied in last. One job: the term's blocks decode and
+        score in a single mapInPandas — no shuffle before top-k."""
         for s in self.segments:
             if s["manifest"].get("payload_provider") is None:
                 raise NotImplementedError(
@@ -2340,13 +1625,8 @@ class IndexSearcher:
         fn, include_span = q.function, q.include_span_score
         if fn not in ("avg", "min", "max"):
             raise ValueError(f"unknown payload function {fn!r}")
-        kernel_path = include_span and self.similarity != "bm25"
-        w = (
-            self.weight(q.term, q.boost, q.field)
-            if include_span and not kernel_path
-            else np.float32(0.0)
-        )
-        caches = self._field_caches
+        w = self._sim_weights([([key], q.field, q.boost)])[0]
+        sim = self.sim
 
         def score_batches(it):
             from .codec import decode_block, decode_float_payloads
@@ -2395,204 +1675,43 @@ class IndexSearcher:
                         factor = np.where(
                             cnt > 0, factor, np.float32(1.0)
                         ).astype(np.float32)
-                    if kernel_path:
-                        # hand (freq, norm byte, factor) to the active
-                        # similarity kernel — exactly the phrase route
-                        freq = tfs.astype(np.float32) * np.float32(0.5)
-                        nbytes = np.frombuffer(r.norms_enc, dtype=np.uint8)
-                        outs.append(
-                            pd.DataFrame(
-                                {
-                                    "docid": docids,
-                                    "freq": freq,
-                                    "nb": nbytes.astype(np.int16),
-                                    "factor": factor,
-                                }
-                            )
-                        )
-                        continue
                     if include_span:
                         freq = tfs.astype(np.float32) * np.float32(0.5)
                         nbytes = np.frombuffer(r.norms_enc, dtype=np.uint8)
-                        span = (np.float32(w) * freq) / (
-                            freq + caches[r.field][nbytes]
-                        )
+                        span = sim.score(w, freq, nbytes, r.field)
                         score = (span * factor).astype(np.float32)
                     else:
                         score = factor
                     outs.append(pd.DataFrame({"docid": docids, "score": score}))
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
-                elif kernel_path:
-                    yield pd.DataFrame(
-                        {
-                            "docid": pd.Series(dtype="int64"),
-                            "freq": pd.Series(dtype="float32"),
-                            "nb": pd.Series(dtype="int16"),
-                            "factor": pd.Series(dtype="float32"),
-                        }
-                    )
-                else:
-                    yield pd.DataFrame(
-                        {
-                            "docid": pd.Series(dtype="int64"),
-                            "score": pd.Series(dtype="float32"),
-                        }
-                    )
+                yield pd.concat(outs, ignore_index=True) if outs else pd.DataFrame(
+                    {
+                        "docid": pd.Series(dtype="int64"),
+                        "score": pd.Series(dtype="float32"),
+                    }
+                )
 
         cols = [
             "field", "first_docid", "count", "docids_enc", "tfs_enc",
             "norms_enc", "pay_enc", "docbase",
         ]
         blocks = self._blocks_for([key]).select(cols)
-        if kernel_path:
-            pf = blocks.mapInPandas(
-                score_batches, "docid long, freq float, nb short, factor float"
-            )
-            return self._phrase_finalize(
-                pf, [(0, q.term)], q.field, q.boost, factor_col="factor"
-            )
         return blocks.mapInPandas(score_batches, "docid long, score float")
-
-    def _dismax_scores_nested(self, q: DisMaxQuery) -> DataFrame:
-        """DisjunctionMaxQuery under a SimilarityBase member: queryNorm = 1,
-        so each sub-query scores independently under the active similarity
-        and DisjunctionMaxScorer's fold composes them — score =
-        f32(max + tie * (sum - max)) with the sum accumulated f32 in
-        clause order (Search/DisjunctionMaxScorer.cs)."""
-        if not q.queries:
-            return self._empty_hits()
-        import dataclasses
-
-        b = np.float32(q.boost)
-        parts = []
-        for i, sub in enumerate(q.queries):
-            if float(q.boost) != 1.0:
-                sub = dataclasses.replace(
-                    sub, boost=float(np.float32(np.float32(sub.boost) * b))
-                )
-            parts.append(
-                self.scores(sub).select(
-                    "docid", F.lit(i).alias("clause"), "score"
-                )
-            )
-        union = parts[0]
-        for pdf in parts[1:]:
-            union = union.unionByName(pdf)
-        n = len(parts)
-        agg = self._pivot_agg(union, n)
-        zero = F.lit(0.0).cast("float")
-        cols = [F.coalesce(F.col(f"s{i}"), zero) for i in range(n)]
-        mx = cols[0] if n == 1 else F.greatest(*cols)
-        ssum = cols[0]
-        for c in cols[1:]:
-            ssum = ssum + c
-        tie = F.lit(float(np.float32(q.tie_breaker))).cast("float")
-        return agg.select("docid", (mx + tie * (ssum - mx)).alias("score"))
-
-    def _classic_dismax_scores(self, q: DisMaxQuery) -> DataFrame:
-        """DisjunctionMaxQuery under classic TFIDF: the shared query norm
-        sums every sub-clause's queryWeight^2 (DisjunctionMaxWeight
-        GetValueForNormalization), then each clause scores with its
-        normalized value and DisjunctionMaxScorer folds max + tie*(rest).
-        Term and phrase sub-queries supported; no coord (not a boolean)."""
-        from ..functions.smallfloat import DECODE_TABLE
-        from ..oracle import classic_idf
-
-        clauses_q = list(q.queries)
-        if not clauses_q:
-            return self._empty_hits()
-        ok_types = (TermQuery, PhraseQuery, MultiPhraseQuery)
-        if not all(isinstance(c, ok_types) for c in clauses_q):
-            raise NotImplementedError(
-                "classic dismax scores term/phrase sub-queries"
-            )
-
-        def _flat(c):
-            if isinstance(c, TermQuery):
-                return [(c.field, c.term)]
-            if isinstance(c, PhraseQuery):
-                return [(c.field, t) for t in c.terms]
-            return [(c.field, t) for arr in c.term_arrays for t in arr]
-
-        all_keys = sorted({k for c in clauses_q for k in _flat(c)})
-        dfs = self.doc_freqs(all_keys)
-        idfs = []
-        for c in clauses_q:
-            acc = np.float32(0.0)
-            for k in _flat(c):
-                acc = np.float32(acc + classic_idf(dfs[k], self.max_doc))
-            idfs.append(acc)
-        qws = [
-            np.float32(i * np.float32(c.boost)) for i, c in zip(idfs, clauses_q)
-        ]
-        ssq = np.float32(0.0)
-        for qw in qws:
-            ssq = np.float32(ssq + np.float32(qw * qw))
-        ssq = np.float32(
-            ssq * np.float32(np.float32(q.boost) * np.float32(q.boost))
-        )
-        qnorm = (
-            np.float32(np.float64(1.0) / np.sqrt(np.float64(ssq)))
-            if ssq > 0
-            else np.float32(1.0)
-        )
-        values = [
-            np.float32(np.float32(qw * qnorm) * i) for qw, i in zip(qws, idfs)
-        ]
-        term_ids = [
-            i for i, c in enumerate(clauses_q) if isinstance(c, TermQuery)
-        ]
-        rows = None
-        live = [
-            Clause(i, clauses_q[i].term, values[i], field=clauses_q[i].field)
-            for i in term_ids
-            if dfs[(clauses_q[i].field, clauses_q[i].term)] > 0
-        ]
-        if live:
-            rows = self._score_blocks(
-                self._blocks_for([c.key for c in live]), live, classic=True
-            )
-        for i, c in enumerate(clauses_q):
-            if isinstance(c, TermQuery):
-                continue
-            pf, _flat2 = self._phrase_scores(c, return_freqs=True)
-            raw = (
-                self._classic_tf_expr()
-                * F.lit(float(values[i])).cast("float")
-            ).cast("float")
-            dec = F.array(
-                *[F.lit(float(x)).cast("float") for x in DECODE_TABLE]
-            )
-            sc = (raw * F.element_at(dec, F.col("nb").cast("int") + 1)).cast(
-                "float"
-            )
-            prow = pf.select(
-                "docid", F.lit(i).cast("int").alias("clause"), sc.alias("score")
-            )
-            rows = prow if rows is None else rows.unionByName(prow)
-        if rows is None:
-            return self._empty_hits()
-        n = len(clauses_q)
-        agg = self._pivot_agg(rows, n)
-        zero = F.lit(0.0).cast("float")
-        cols = [F.coalesce(F.col(f"s{i}"), zero) for i in range(n)]
-        mx = cols[0] if n == 1 else F.greatest(*cols)
-        ssum = cols[0]
-        for c in cols[1:]:
-            ssum = ssum + c
-        tie = F.lit(float(np.float32(q.tie_breaker))).cast("float")
-        return agg.select("docid", (mx + tie * (ssum - mx)).alias("score"))
 
     def _dismax_scores(self, q: DisMaxQuery) -> DataFrame:
         """max + tie*(sum-max) over clause scores (DisjunctionMaxScorer).
 
-        Pure-Catalyst float32: greatest() for the max, nested float adds for
+        Clause weights normalize together (DisjunctionMaxWeight
+        GetValueForNormalization sums every sub-weight); no coord. Pure-
+        Catalyst float32 fold: greatest() for the max, nested float adds for
         the ordered sum, then mx + tie*(sum-mx) — each op single-precision,
         matching the oracle's numpy float32 chain bit for bit."""
-        clauses = self._term_clauses(q.queries, 0)
-        rows = self._score_blocks(self._blocks_for([c.key for c in clauses]), clauses)
-        n = len(clauses)
+        if not q.queries:
+            return self._empty_hits()
+        subs, weights = self._clauses(q.queries, q.boost)
+        rows = self._clause_rows(subs, weights)
+        if rows is None:
+            return self._empty_hits()
+        n = len(subs)
         agg = self._pivot_agg(rows, n)
         zero = F.lit(0.0).cast("float")
         cols = [F.coalesce(F.col(f"s{i}"), zero) for i in range(n)]
@@ -2618,42 +1737,34 @@ class IndexSearcher:
         pivot fold), applies MUST/minShouldMatch/MUST_NOT/liveDocs masks
         vectorized, and emits only its local top-k — TopScoreDocCollector per
         partition, merged by the global orderBy. Returns None when the query
-        shape or volume doesn't warrant it."""
-        if self.similarity != "bm25":
-            return None  # bulk kernel is BM25-specific
+        shape or volume doesn't warrant it. Clause weights and the kernel
+        are the relational path's (SimScorer); under a family with coord
+        the reducer applies it from its per-doc match counts."""
         q = self.rewrite(q)
         if isinstance(q, DisMaxQuery):
-            if not all(isinstance(c, TermQuery) for c in q.queries):
-                return None
-            clauses = self._term_clauses(q.queries, 0)
-            n_must, need_should, not_terms = 0, 1, []
+            subs, must_not, n_must, need_should = q.queries, (), 0, 1
             mode = ("dismax", float(np.float32(q.tie_breaker)))
         elif isinstance(q, BooleanQuery):
-            if not all(
-                isinstance(c, TermQuery) for c in q.must + q.should + q.must_not
-            ):
-                return None
-            n_must = len(q.must)
-            clauses = self._term_clauses(q.must, 0) + self._term_clauses(
-                q.should, n_must
-            )
-            not_terms = [(c.field, c.term) for c in q.must_not]
+            subs, must_not, n_must = q.must + q.should, q.must_not, len(q.must)
             msm = q.min_should_match
             need_should = msm if n_must else max(1, msm) if q.should else 0
             mode = ("sum", 0.0)
         else:
             return None
+        if not all(isinstance(c, TermQuery) for c in subs + must_not):
+            return None
+        not_terms = [(c.field, c.term) for c in must_not]
+        subs, weights = self._clauses(subs, q.boost)
+        clauses = [
+            Clause(i, c.term, weights[i], field=c.field) for i, c in enumerate(subs)
+        ]
         dfs = self.doc_freqs([c.key for c in clauses])
-        # a MUST term with df=0 can never match; but weight can also be 0 with
-        # boost=0 while df>0 — such a clause stays live as a zero-contribution
-        # match constraint (mirrors _boolean_scores / Lucene semantics)
+        # a MUST term with df=0 can never match; a present term stays live
+        # whatever its weight (a boost=0 MUST clause is still a zero-
+        # contribution match constraint — Lucene semantics)
         if any(dfs[c.key] == 0 and c.clause_id < n_must for c in clauses):
             return self._empty_hits()
-        live = [
-            c
-            for c in clauses
-            if float(c.weight) > 0.0 or (c.clause_id < n_must and dfs[c.key] > 0)
-        ]
+        live = [c for c in clauses if dfs[c.key] > 0]
         if len(live) < 2:
             return None  # single-list path is already shuffle-free
         total_df = sum(self._df_of(c) for c in live)
@@ -2662,7 +1773,7 @@ class IndexSearcher:
         # prohibited terms ride along as extra clause ids
         n_score = len(clauses)
         proh = [
-            Clause(n_score + i, t, np.float32(0.0), field=f)
+            Clause(n_score + i, t, None, field=f)
             for i, (f, t) in enumerate(not_terms)
         ]
         allc = live + proh
@@ -2673,6 +1784,7 @@ class IndexSearcher:
             )
         if (
             prune
+            and self.sim.block_max
             and self._prunable
             and n_must == 0
             and not not_terms
@@ -2682,10 +1794,10 @@ class IndexSearcher:
         ):
             blocks, _ = self._prune_blocks(blocks, live, k)
 
-        by_key: dict[tuple[str, str], list[tuple[int, float]]] = {}
+        by_key: dict[tuple[str, str], list[tuple[int, SimWeight | None]]] = {}
         for c in allc:
-            by_key.setdefault(c.key, []).append((c.clause_id, float(c.weight)))
-        caches = self._field_caches
+            by_key.setdefault(c.key, []).append((c.clause_id, c.weight))
+        sim = self.sim
         R = self.BULK_RANGE
         deleted = self._deleted_array()
         if deleted is None:
@@ -2708,8 +1820,11 @@ class IndexSearcher:
                     change = np.nonzero(rid[1:] != rid[:-1])[0]
                     bounds = np.concatenate([[0], change + 1, [len(docids)]])
                     for clause_id, w in by_key[(r.field, r.term)]:
-                        sc = (np.float32(w) * freq) / (freq + caches[r.field][nbytes]) \
-                            if w else np.zeros(len(docids), dtype=np.float32)
+                        sc = (
+                            sim.score(w, freq, nbytes, r.field)
+                            if w is not None
+                            else np.zeros(len(docids), dtype=np.float32)
+                        )
                         for b0, b1 in zip(bounds[:-1], bounds[1:]):
                             rows.append(
                                 (
@@ -2727,6 +1842,7 @@ class IndexSearcher:
 
         tie = np.float32(mode[1])
         is_dismax = mode[0] == "dismax"
+        coord = None if is_dismax else sim.coord(n_score)
 
         def reduce_ranges(it):
             bufs = [p for p in it if len(p)]
@@ -2781,6 +1897,8 @@ class IndexSearcher:
                     scores = mx[cand] + tie * (acc[cand] - mx[cand])
                 else:
                     scores = acc[cand]
+                    if coord is not None:
+                        scores = scores * coord[nm[cand] + ns[cand]]
                 if len(cand) > k:
                     o = np.lexsort((cand, -scores))[:k]
                     cand, scores = cand[o], scores[o]
@@ -2827,7 +1945,7 @@ class IndexSearcher:
         self, blocks: DataFrame, clauses: list[Clause], k: int
     ) -> tuple[DataFrame, dict]:
         """Two-phase WAND-style pruning over block metadata. Rank-safe."""
-        w_by_key = {c.key: float(c.weight) for c in clauses}
+        w_by_key = {c.key: float(c.weight.value) for c in clauses}
         fkey_col = F.concat_ws(FKEY_SEP, "field", "term")
         w_expr = F.create_map(
             *[
@@ -2881,7 +1999,13 @@ class IndexSearcher:
 
     # -- public search API --------------------------------------------------------------
     def search(self, q: Query, k: int = 10, prune: bool = True) -> DataFrame:
-        """Top-k: (docid, score) ordered score desc, docid asc (HitQueue order)."""
+        """Top-k: (docid, score) ordered score desc, docid asc (HitQueue order).
+
+        k is capped at maxDoc (TopScoreDocCollector never holds more hits
+        than the index has docs): Spark's TakeOrderedAndProject sizes its
+        selector by the limit, so an uncapped k of 10**9 exhausts the
+        JVM heap."""
+        k = min(k, self.max_doc)
         bulk = self._try_bulk_topk(q, k, prune)
         if bulk is not None:
             return bulk.orderBy(F.desc("score"), F.asc("docid")).limit(k)
@@ -2889,7 +2013,9 @@ class IndexSearcher:
         return scored.orderBy(F.desc("score"), F.asc("docid")).limit(k)
 
     def search_after(self, q: Query, k: int, after_score: float, after_doc: int) -> DataFrame:
-        """Deep paging (IndexSearcher.cs:282-301): hits strictly after cursor."""
+        """Deep paging (IndexSearcher.cs:282-301): hits strictly after cursor;
+        k capped at maxDoc like search()."""
+        k = min(k, self.max_doc)
         s = self.scores(q)
         return (
             s.filter(
@@ -2921,6 +2047,7 @@ class IndexSearcher:
         f32(freq + norm_k)); classic score == f32(f32(f32(sqrt(freq)) *
         f32(f32(idf*boost*qnorm)*idf)) * field_norm).
         """
+        k = min(k, self.max_doc)  # see search()
         if isinstance(q, BooleanQuery) and not q.must and not q.must_not \
                 and len(q.should) == 1 and isinstance(q.should[0], TermQuery):
             q = q.should[0]
@@ -2947,10 +2074,7 @@ class IndexSearcher:
             )
             return self.spark.createDataFrame([], cols)
         else:
-            table = (
-                self._decode_tables[q.field] if classic
-                else self._field_caches[q.field]
-            )
+            table = self.sim.norms[q.field]
 
             def leaf_batches(it):
                 from .codec import decode_block  # executor-side import
@@ -3008,7 +2132,7 @@ class IndexSearcher:
             )
         else:
             idf = idf_f32(df, self.max_doc) if df else np.float32(0.0)
-            w = self.weight(q.term, q.boost, q.field)
+            w = self._sim_weights([([key], q.field, q.boost)])[0].value
             score = (
                 (F.lit(float(w)).cast("float") * freq32)
                 / (freq32 + F.col("nrm"))

@@ -505,7 +505,9 @@ def span_scores(searcher, q: Query) -> DataFrame:
     Same shape as the sloppy-phrase scorer: decode (docid, leaf, pos) rows
     for the tree's terms (conjunction-pruned by the required set), gather
     per candidate doc, evaluate the span algebra per doc (few docs survive),
-    score with the phrase weight chain."""
+    score each doc's (spanFreq, norm byte) through the searcher's SimScorer
+    with one weight over ALL leaf termStats (SpanWeight ->
+    Similarity.ComputeWeight)."""
     q = expand_span_multiterm(searcher, q)
     leaves = leaf_terms(q)
     if not leaves:
@@ -516,30 +518,18 @@ def span_scores(searcher, q: Query) -> DataFrame:
     req = required_terms(q)
     if any(dfs[k] == 0 for k in req):
         return searcher._empty_hits()
-    from ..oracle import idf as idf_f32
-
-    s = np.float32(0.0)
-    for k in leaves:
-        s = np.float32(s + idf_f32(dfs[k], searcher.max_doc))
-    w = np.float32(
-        np.float32(s * np.float32(q.boost))
-        * np.float32(np.float32(searcher.k1) + np.float32(1.0))
-    )
+    field = keys[0][0]
+    w = searcher._sim_weights([(leaves, field, q.boost)])[0]
+    sim = searcher.sim
     blocks = searcher._blocks_for(keys)
     if len(req) >= 2:
         blocks = searcher._conjunction_prune(blocks, sorted(req))
     clause_of = {k: i for i, k in enumerate(keys)}
-    cache = searcher._field_caches[keys[0][0]]
     req_mask = 0
     for k in req:
         req_mask |= 1 << clause_of[k]
     qq = q
     R = searcher.BULK_RANGE
-    # non-BM25 similarity: the span machinery emits (docid, spanFreq, norm)
-    # and the shared phrase/span finalize applies the active kernel (the
-    # reference scores spans under every Similarity via SpanWeight ->
-    # Similarity.ComputeWeight over all leaf termStats)
-    emit_freq = searcher.similarity != "bm25"
 
     # Scale-safe gather (VERDICT r02 #2): positions are shuffled as docid-
     # range-sliced BINARY sub-arrays — O(blocks) rows, never one row per
@@ -580,8 +570,6 @@ def span_scores(searcher, q: Query) -> DataFrame:
                 rows, columns=["rid", "leaf", "docids", "pos", "norms"]
             )
 
-    w32 = np.float32(w)
-
     def reduce_ranges(it):
         bufs = [p for p in it if len(p)]
         if not bufs:
@@ -595,7 +583,7 @@ def span_scores(searcher, q: Query) -> DataFrame:
         order = np.lexsort((p, lf, d))
         d, p, nb, lf = d[order], p[order], nb[order], lf[order]
         starts = np.concatenate([[0], np.nonzero(d[1:] != d[:-1])[0] + 1, [len(d)]])
-        out_d, out_s = [], []
+        out_d, out_f, out_nb = [], [], []
         for g0, g1 in zip(starts[:-1], starts[1:]):
             present = 0
             for leaf in lf[g0:g1]:
@@ -608,28 +596,17 @@ def span_scores(searcher, q: Query) -> DataFrame:
             spans = eval_spans(qq, pos)
             if not spans:
                 continue
-            freq = span_freq(spans)
             out_d.append(int(d[g0]))
-            if emit_freq:
-                out_s.append((np.float32(freq), int(nb[g0])))
-            else:
-                out_s.append(np.float32(w32 * freq / (freq + cache[int(nb[g0])])))
+            out_f.append(span_freq(spans))
+            out_nb.append(int(nb[g0]))
         if out_d:
-            if emit_freq:
-                yield pd.DataFrame(
-                    {
-                        "docid": np.array(out_d, dtype=np.int64),
-                        "freq": np.array([x[0] for x in out_s], dtype=np.float32),
-                        "nb": np.array([x[1] for x in out_s], dtype=np.int16),
-                    }
-                )
-            else:
-                yield pd.DataFrame(
-                    {
-                        "docid": np.array(out_d, dtype=np.int64),
-                        "score": np.array(out_s, dtype=np.float32),
-                    }
-                )
+            freq = np.array(out_f, dtype=np.float32)
+            yield pd.DataFrame(
+                {
+                    "docid": np.array(out_d, dtype=np.int64),
+                    "score": sim.score(w, freq, np.array(out_nb, dtype=np.int64), field),
+                }
+            )
 
     n_shuffle = max(
         int(searcher.spark.conf.get("spark.sql.shuffle.partitions", "32")), 8
@@ -641,22 +618,15 @@ def span_scores(searcher, q: Query) -> DataFrame:
         slice_ranges,
         "rid long, leaf int, docids binary, pos binary, norms binary",
     )
-    out_schema = (
-        "docid long, freq float, nb short"
-        if emit_freq
-        else "docid long, score float"
+    return sliced.repartition(n_shuffle, "rid").mapInPandas(
+        reduce_ranges, "docid long, score float"
     )
-    out = sliced.repartition(n_shuffle, "rid").mapInPandas(
-        reduce_ranges, out_schema
-    )
-    if emit_freq:
-        flat = [(i, t) for i, (_f, t) in enumerate(leaves)]
-        return searcher._phrase_finalize(out, flat, keys[0][0], q.boost)
-    return out
 
 
 def span_search(searcher, q: Query, k: int = 10) -> DataFrame:
-    """Top-k span search with the standard tie-break."""
+    """Top-k span search with the standard tie-break; k capped at maxDoc
+    like IndexSearcher.search."""
+    k = min(k, searcher.max_doc)
     # _apply_live_docs carries the broadcast-vs-shuffle size guard
     scored = searcher._apply_live_docs(span_scores(searcher, q))
     return scored.orderBy(F.desc("score"), F.asc("docid")).limit(k)
@@ -670,19 +640,19 @@ def payload_near_scores(searcher, q: PayloadNearQuery) -> DataFrame:
     shuffle rows), evaluated per range. The candidate set is conjunction-
     pruned on all clauses (a near requires every clause).
 
-    Scored under EVERY similarity (r5): PayloadNearSpanScorer routes the
-    span kernel through the active SimScorer (Search/Payloads/
-    PayloadNearQuery.cs; ComputeSlopFactor = 1/(distance+1) in every
-    family, so the sloppyFreq fold is shared) — non-BM25 emits
-    (docid, freq, nb, factor) and _phrase_finalize applies the kernel,
-    exactly the PayloadTermQuery route."""
+    Scored under EVERY similarity: PayloadNearSpanScorer routes the span
+    score through the active SimScorer (Search/Payloads/PayloadNearQuery.cs;
+    ComputeSlopFactor = 1/(distance+1) in every family, so the sloppyFreq
+    fold is shared), one weight over the clauses in DECLARATION order
+    (duplicates kept, like PayloadNearSpanWeight's multi-stats
+    ComputeWeight), the payload factor multiplied in last — exactly the
+    PayloadTermQuery route."""
     if not q.in_order:
         raise NotImplementedError(
             "PayloadNearQuery: unordered payload collection order is "
             "heap-dependent in the reference (NearSpansUnordered); ordered "
             "only here"
         )
-    kernel_path = searcher.similarity != "bm25"
     for c in q.clauses:
         if not isinstance(c, SpanTermQuery):
             raise TypeError(
@@ -705,21 +675,14 @@ def payload_near_scores(searcher, q: PayloadNearQuery) -> DataFrame:
     dfs = searcher.doc_freqs(keys)
     if any(dfs[k] == 0 for k in keys):
         return searcher._empty_hits()
-    from ..oracle import idf as idf_f32
-
-    s = np.float32(0.0)
-    for k in clauses:
-        s = np.float32(s + idf_f32(dfs[k], searcher.max_doc))
-    w32 = np.float32(
-        np.float32(s * np.float32(q.boost))
-        * np.float32(np.float32(searcher.k1) + np.float32(1.0))
-    )
+    field = keys[0][0]
+    w = searcher._sim_weights([(clauses, field, q.boost)])[0]
+    sim = searcher.sim
     blocks = searcher._blocks_for(keys)
     if len(keys) >= 2:
         blocks = searcher._conjunction_prune(blocks, keys)
     key_of = {k: i for i, k in enumerate(keys)}
     clause_keys = [key_of[c] for c in clauses]
-    cache = searcher._field_caches[keys[0][0]]
     req_mask = 0
     for k in keys:
         req_mask |= 1 << key_of[k]
@@ -778,7 +741,7 @@ def payload_near_scores(searcher, q: PayloadNearQuery) -> DataFrame:
         order = np.lexsort((p, lf, d))
         d, p, pv, nb, lf = d[order], p[order], pv[order], nb[order], lf[order]
         starts = np.concatenate([[0], np.nonzero(d[1:] != d[:-1])[0] + 1, [len(d)]])
-        out_d, out_s = [], []
+        out_d, out_f, out_nb, out_ds = [], [], [], []
         for g0, g1 in zip(starts[:-1], starts[1:]):
             present = 0
             for leaf in lf[g0:g1]:
@@ -799,32 +762,20 @@ def payload_near_scores(searcher, q: PayloadNearQuery) -> DataFrame:
             if freq <= 0:
                 continue
             out_d.append(int(d[g0]))
-            if kernel_path:
-                # hand (freq, norm byte, factor) to the active kernel
-                out_s.append((np.float32(freq), int(nb[g0]), np.float32(ds)))
-            else:
-                span_score = np.float32(
-                    w32 * freq / (freq + cache[int(nb[g0])])
-                )
-                out_s.append(np.float32(span_score * ds))
+            out_f.append(freq)
+            out_nb.append(int(nb[g0]))
+            out_ds.append(ds)
         if out_d:
-            if kernel_path:
-                fr, nbv, fac = zip(*out_s)
-                yield pd.DataFrame(
-                    {
-                        "docid": np.array(out_d, dtype=np.int64),
-                        "freq": np.array(fr, dtype=np.float32),
-                        "nb": np.array(nbv, dtype=np.int16),
-                        "factor": np.array(fac, dtype=np.float32),
-                    }
-                )
-            else:
-                yield pd.DataFrame(
-                    {
-                        "docid": np.array(out_d, dtype=np.int64),
-                        "score": np.array(out_s, dtype=np.float32),
-                    }
-                )
+            freq = np.array(out_f, dtype=np.float32)
+            span = sim.score(w, freq, np.array(out_nb, dtype=np.int64), field)
+            yield pd.DataFrame(
+                {
+                    "docid": np.array(out_d, dtype=np.int64),
+                    "score": (span * np.array(out_ds, dtype=np.float32)).astype(
+                        np.float32
+                    ),
+                }
+            )
 
     n_shuffle = max(
         int(searcher.spark.conf.get("spark.sql.shuffle.partitions", "32")), 8
@@ -836,20 +787,12 @@ def payload_near_scores(searcher, q: PayloadNearQuery) -> DataFrame:
         slice_ranges,
         "rid long, leaf int, docids binary, pos binary, pay binary, norms binary",
     )
-    shuffled = sliced.repartition(n_shuffle, "rid")
-    if kernel_path:
-        pf = shuffled.mapInPandas(
-            reduce_ranges, "docid long, freq float, nb short, factor float"
-        )
-        # weight stats fold over clauses in DECLARATION order (duplicates
-        # kept), like PayloadNearSpanWeight's multi-stats ComputeWeight
-        flat = [(i, t) for i, (_f, t) in enumerate(clauses)]
-        return searcher._phrase_finalize(
-            pf, flat, keys[0][0], q.boost, factor_col="factor"
-        )
-    return shuffled.mapInPandas(reduce_ranges, "docid long, score float")
+    return sliced.repartition(n_shuffle, "rid").mapInPandas(
+        reduce_ranges, "docid long, score float"
+    )
 
 
 def payload_near_search(searcher, q: PayloadNearQuery, k: int = 10) -> DataFrame:
+    k = min(k, searcher.max_doc)  # see IndexSearcher.search
     scored = searcher._apply_live_docs(payload_near_scores(searcher, q))
     return scored.orderBy(F.desc("score"), F.asc("docid")).limit(k)

@@ -479,8 +479,8 @@ def dfr_gb2_term_scores(
     index: OracleIndex, term: str, boost: float = 1.0
 ) -> dict[int, np.float32]:
     """DFR GB2 (DFRSimilarity + BasicModelG + AfterEffectB +
-    NormalizationH2 c=1) — see _dfr_boolean_scores for the cited float
-    operation chain."""
+    NormalizationH2 c=1) — see operators/simbase.py (basic_vec "g",
+    ae_vec "b", tfn_vec "h2") for the cited float operation chain."""
     plist = index.postings.get(term)
     if not plist:
         return {}
@@ -560,8 +560,8 @@ def dfr_pl2_term_scores(
     index: OracleIndex, term: str, boost: float = 1.0
 ) -> dict[int, np.float32]:
     """DFR PL2 (DFRSimilarity + BasicModelP + AfterEffectL + H2 c=1) — see
-    _dfr_boolean_scores for the cited float operation chain
-    (BasicModelP.cs:43-48, AfterEffectL.cs:32-35)."""
+    operators/simbase.py (basic_vec "p", ae_vec "l") for the cited float
+    operation chain (BasicModelP.cs:43-48, AfterEffectL.cs:32-35)."""
     plist = index.postings.get(term)
     if not plist:
         return {}
@@ -1016,15 +1016,32 @@ def multi_phrase_scores(
     return out
 
 
-def _clause_score_map_classic(index, spec, value: np.float32):
-    """docid -> f32 clause score under classic TFIDF for a term or
-    ("phrase", terms, slop) spec, given the normalized value."""
+def classic_tf(freq, tf_params: tuple | None = None) -> np.float32:
+    """tf(freq) of the TF-IDF family, scalar: (float)Math.Sqrt(freq)
+    (DefaultSimilarity.Tf), or SweetSpotSimilarity.BaselineTf
+    (SweetSpotSimilarity.cs:172-180) for tf_params = (tf_base, tf_min):
+    tf_base when freq <= tf_min, else (float)Math.Sqrt(freq + tf_base² -
+    tf_min) with float operands."""
+    freq = np.float32(freq)
+    if tf_params is None:
+        return np.float32(np.sqrt(freq))
+    base, mn = np.float32(tf_params[0]), np.float32(tf_params[1])
+    if freq <= mn:
+        return base
+    op = np.float32(np.float32(freq + np.float32(base * base)) - mn)
+    return np.float32(np.sqrt(np.float64(op)))
+
+
+def _clause_score_map_classic(index, spec, value: np.float32, tf_params=None):
+    """docid -> f32 clause score under classic TFIDF (or SweetSpot's
+    BaselineTf for tf_params) for a term or ("phrase", terms, slop) spec,
+    given the normalized value."""
     from .functions.smallfloat import DECODE_TABLE
 
     out: dict[int, np.float32] = {}
     if isinstance(spec, str):
         for docid, tf in index.postings.get(spec, ()):
-            raw = np.float32(np.float32(np.sqrt(np.float32(tf))) * value)
+            raw = np.float32(classic_tf(tf, tf_params) * value)
             out[docid] = np.float32(raw * DECODE_TABLE[index.norm_bytes[docid]])
         return out
     _tag, terms, slop = spec
@@ -1044,7 +1061,7 @@ def _clause_score_map_classic(index, spec, value: np.float32):
                 slop,
             )
         if fr > 0:
-            raw = np.float32(np.float32(np.sqrt(np.float32(fr))) * value)
+            raw = np.float32(classic_tf(fr, tf_params) * value)
             out[d] = np.float32(raw * DECODE_TABLE[index.norm_bytes[d]])
     return out
 
@@ -1080,11 +1097,12 @@ def classic_mixed_boolean_scores(
     must_not: list[str] = (),
     min_should_match: int = 0,
     query_boost: float = 1.0,
+    tf_params: tuple | None = None,
 ) -> dict[int, np.float32]:
     """Classic TFIDF BooleanQuery with term AND phrase clauses: the shared
     sumOfSquaredWeights couples every clause's queryWeight; coord counts
     all non-prohibited clauses. Clause spec: a term string or
-    ("phrase", [terms], slop)."""
+    ("phrase", [terms], slop). tf_params: SweetSpot's (tf_base, tf_min)."""
     clauses = list(must) + list(should)
     n_must = len(must)
 
@@ -1113,7 +1131,8 @@ def classic_mixed_boolean_scores(
     )
     values = [np.float32(np.float32(qw * qnorm) * i) for qw, i in zip(qws, idfs)]
     maps = [
-        _clause_score_map_classic(index, c, v) for c, v in zip(clauses, values)
+        _clause_score_map_classic(index, c, v, tf_params)
+        for c, v in zip(clauses, values)
     ]
     not_docs: set[int] = set()
     for spec in must_not:
@@ -1245,9 +1264,11 @@ def classic_dismax_scores(
     specs: list,
     tie_breaker: float = 0.0,
     query_boost: float = 1.0,
+    tf_params: tuple | None = None,
 ) -> dict[int, np.float32]:
-    """DisMax under classic TFIDF: shared queryNorm over all sub-clause
-    weights, per-clause TFIDF kernel, max + tie*(sum - max)."""
+    """DisMax under classic TFIDF (or SweetSpot's BaselineTf for
+    tf_params): shared queryNorm over all sub-clause weights, per-clause
+    TFIDF kernel, max + tie*(sum - max)."""
 
     def _idf(spec):
         if isinstance(spec, str):
@@ -1274,7 +1295,8 @@ def classic_dismax_scores(
     )
     values = [np.float32(np.float32(qw * qnorm) * i) for qw, i in zip(qws, idfs)]
     maps = [
-        _clause_score_map_classic(index, sp, v) for sp, v in zip(specs, values)
+        _clause_score_map_classic(index, sp, v, tf_params)
+        for sp, v in zip(specs, values)
     ]
     docs = set()
     for m in maps:

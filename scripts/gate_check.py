@@ -90,12 +90,6 @@ def main():
     sys.exit(1 if fails else 0)
 
 
-def _filter(qs, os_):
-    if ONLY:
-        return {k: qs[k] for k in ONLY}, {k: os_[k] for k in ONLY if k in os_}
-    return qs, os_
-
-
 if __name__ == "__main__":
     if ONLY:
         _q, _o = e.queries(), e.oracle_sql()

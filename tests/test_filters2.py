@@ -21,6 +21,35 @@ def _ids(df):
     return sorted(r["docid"] for r in df.select("docid").collect())
 
 
+def _topk_limit(df) -> int:
+    """The TakeOrderedAndProject limit of df's executed plan (read from
+    the plan only; no job runs)."""
+    import re
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    found = re.findall(r"TakeOrderedAndProject\(limit=(\d+)", plan)
+    assert found, plan
+    return int(found[0])
+
+
+def test_huge_k_is_capped_at_max_doc(searcher):
+    """A top-k of 10**9 must not size Spark's top-k selector by k: every
+    top-k entry point caps k at maxDoc (a 10**9-slot selector kills the
+    Spark JVM)."""
+    from lucenenet_spark.operators import spans
+    from lucenenet_spark.plans.query import TermQuery
+
+    q = ConstantScoreQuery(query=PrefixQuery(prefix="word1"))
+    plans = [
+        searcher.search(q, 10**9),
+        searcher.search_after(q, 10**9, 1.0, 0),
+        searcher.explain(TermQuery(term="popcorn"), 10**9),
+        spans.span_search(searcher, spans.SpanTermQuery(term="popcorn"), 10**9),
+    ]
+    for df in plans:
+        assert _topk_limit(df) <= searcher.max_doc
+
+
 def test_prefix_filter_equals_prefix_query(searcher):
     got = _ids(
         searcher.search(

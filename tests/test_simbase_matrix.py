@@ -116,3 +116,71 @@ def test_engine_end_to_end_matrix(spark, index_dir, oracle_index, spec):
         want = oracle.top_k(oracle.simbase_term_scores(oracle_index, t, spec), 15)
         got = hits(s.search(TermQuery(term=t), 15))
         assert got == want, (spec, t)
+
+
+# -- the SimScorer kernel, every similarity name the searcher accepts --------
+SCORER_SIMS = (
+    ["bm25", "classic", "sweetspot", "sweetspot:1.5:2", "lmd", "lmjm"]
+    + sorted(simbase.ALIASES)
+    + DFR_SPECS
+    + IB_SPECS
+)
+
+
+def _grid_index():
+    """One term 't' whose postings cover freq 1..64 x every norm byte
+    (docid = (freq-1)*256 + byte), inside a larger collection so df < N."""
+    freqs = np.repeat(np.arange(1, 65), 256)
+    nbytes = np.tile(np.arange(256), 64).astype(np.uint8)
+    max_doc = len(freqs) + 3000
+    norm_bytes = np.full(max_doc, 124, dtype=np.uint8)
+    norm_bytes[: len(freqs)] = nbytes
+    ttf = int(freqs.sum())
+    return oracle.OracleIndex(
+        postings={"t": [(int(d), int(f)) for d, f in enumerate(freqs)]},
+        norm_bytes=norm_bytes,
+        max_doc=max_doc,
+        sum_ttf=ttf + 50_000,
+        doc_count=max_doc,
+    ), freqs.astype(np.float32), nbytes
+
+
+def _scalar_oracle(idx, name):
+    if name == "bm25":
+        return oracle.term_scores(idx, "t")
+    if name == "classic":
+        return oracle.classic_term_scores(idx, "t")
+    if name.startswith("sweetspot"):
+        parts = name.split(":")[1:] or ["0", "0"]
+        # a one-clause boolean: queryNorm over itself, coord 1
+        return oracle.classic_mixed_boolean_scores(
+            idx, should=["t"], tf_params=tuple(float(x) for x in parts)
+        )
+    if name == "lmd":
+        return oracle.lmd_term_scores(idx, "t")
+    if name == "lmjm":
+        return oracle.lmjm_term_scores(idx, "t")
+    return oracle.simbase_term_scores(idx, "t", name)
+
+
+@pytest.mark.parametrize("name", SCORER_SIMS)
+def test_sim_scorer_kernel_vs_scalar_oracle(name):
+    """SimScorer.score over freq 1..64 x all 256 norm bytes equals the
+    scalar oracle's per-doc arithmetic bit for bit (NaN from the infinite
+    docLen of byte 0 must be NaN on both sides)."""
+    from lucenenet_spark.operators.similarity import SimScorer
+
+    idx, freq, nbytes = _grid_index()
+    sim = SimScorer(
+        name, 2000.0, 0.1, k1=1.2, b=0.75, max_doc=idx.max_doc,
+        avgdl=idx.avgdl, fields_info={"text": {"sum_ttf": idx.sum_ttf}},
+    )
+    w = sim.normalize([sim.weight([(len(freq), int(freq.sum()))], "text", 1.0)])[0]
+    with np.errstate(all="ignore"):
+        got = sim.score(w, freq, nbytes, "text")
+        want_map = _scalar_oracle(idx, name)
+    want = np.array([want_map[d] for d in range(len(freq))], dtype=np.float32)
+    assert got.dtype == np.float32
+    nan = np.isnan(want)
+    assert (np.isnan(got) == nan).all(), name
+    assert got[~nan].tobytes() == want[~nan].tobytes(), name

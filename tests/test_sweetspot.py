@@ -131,8 +131,8 @@ def test_engine_term_scores_match_recompute(
 
 
 def test_engine_phrase_under_sweetspot_runs(sweet_searcher, corpus_pdf):
-    # phrase freq routes through the same BaselineTf swap (_phrase_finalize
-    # classic-like branch); value-exactness is gated by phrase_sweetspot
+    # phrase freq routes through the same BaselineTf swap (SimScorer's
+    # TF-IDF kernel); value-exactness is gated by phrase_sweetspot
     from lucenenet_spark.functions.analysis import tokenize_text
 
     pairs: dict = {}
