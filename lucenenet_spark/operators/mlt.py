@@ -132,7 +132,8 @@ def more_like_this_sql(
     """DuckDB oracle (appended to the prelude): same term selection
     (float64 tf*idf rounded to 9 dp, same tie-break) and the float32 score
     fold in clause-rank order via list_reduce (+0f clauses are identities,
-    so folding only the present scores matches the engine's pivot fold)."""
+    so folding only the present scores matches the engine's range reducer,
+    which adds only the clauses a doc matches)."""
     return f"""mlt AS (
   SELECT p.term,
          row_number() OVER (

@@ -10,10 +10,10 @@ Lifecycle mirrors IndexSearcher.Search (SURVEY.md §3.1):
  3. scoring    — bucket- and term-pruned scan of posting blocks; numpy decode
                  + the vectorized float32 SimScorer kernel inside mapInPandas
                  (Arrow batches);
-                 boolean algebra relationally: MUST = match-count filter,
-                 SHOULD = sum, MUST_NOT = left_anti join, minShouldMatch =
-                 count filter (BooleanScorer's bucket table == Catalyst hash
-                 aggregate, BooleanScorer.cs:28-55)
+                 boolean algebra in one range reducer (BooleanScorer's bucket
+                 table, BooleanScorer.cs:28-55): MUST = match count, SHOULD =
+                 sum, MUST_NOT = banned clause, minShouldMatch = count mask;
+                 liveDocs = one anti-join per query
  4. collect    — orderBy(score desc, docid asc).limit(k): Spark's
                  TakeOrderedAndProject is per-partition heaps + driver merge,
                  exactly TopScoreDocCollector + TopDocs.Merge semantics
@@ -29,8 +29,8 @@ block *metadata* columns, so pruned blocks are never even read past the
 parquet row-group footer.
 
 Float32 parity: clause scores are summed in clause order with float32
-accumulation (a sorted-fold in a pandas UDF), matching Lucene's scorer-order
-summation; see oracle.py for the cited arithmetic.
+accumulation (the range reducer), matching Lucene's scorer-order summation;
+see oracle.py for the cited arithmetic.
 """
 
 from __future__ import annotations
@@ -43,7 +43,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, FloatType
+from pyspark.sql.types import ArrayType
 
 from ..oracle import idf as idf_f32
 from ..plans.query import (
@@ -77,19 +77,195 @@ from .index_build import (
 )
 from .similarity import SimScorer, SimWeight
 
-SCORE_ROWS_SCHEMA = "docid long, clause int, score float"
+RANGE_ROWS_SCHEMA = "rid long, clause int, offs binary, scores binary"
+HITS_SCHEMA = "docid long, score float"
+BLOCK_COLS = [
+    "field", "term", "first_docid", "count", "docids_enc", "tfs_enc",
+    "norms_enc", "docbase",
+]
 
 
 @dataclass
 class Clause:
     clause_id: int
     term: str
-    weight: SimWeight  # the clause's normalized weight
+    weight: SimWeight | None  # the clause's normalized weight; None = MUST_NOT
     field: str = FIELD
 
     @property
     def key(self) -> tuple[str, str]:
         return (self.field, self.term)
+
+
+# -- the range reducer: one clause combiner for every boolean and DisMax -------
+# Lucene's windowed BooleanScorer bucket table (BooleanScorer.cs:28-55),
+# vectorized and distributed. Clause postings are cut at fixed docid-range
+# boundaries (R docids per range) into (rid, clause, offs, scores) rows —
+# binary sub-arrays, O(blocks) rows, never one row per posting — and each
+# range is reduced on its own, emitting at most its local top-k: per-range
+# top-k, then a merge by the global orderBy (TopScoreDocCollector per
+# partition + TopDocs.Merge; the scheme of "External Merge Sort for Top-K
+# Queries", SIGMOD 2020). They are plain functions of pandas frames: they
+# run under mapInPandas, and could as well run on a collected frame.
+
+
+def range_slices(docids: np.ndarray, R: int) -> list[tuple[int, int, int]]:
+    """(rid, start, end) of each run of ascending docids that falls in one
+    range of R docids."""
+    if not len(docids):
+        return []
+    rid = docids // R
+    change = np.nonzero(rid[1:] != rid[:-1])[0]
+    bounds = np.concatenate([[0], change + 1, [len(docids)]])
+    return [(int(rid[b0]), b0, b1) for b0, b1 in zip(bounds[:-1], bounds[1:])]
+
+
+def _range_rows(docids: np.ndarray, scores, clause: int, R: int) -> list[tuple]:
+    """(rid, clause, offs, scores) rows of one clause's ascending docids:
+    offs are uint32 offsets inside the range, scores float32 bytes (empty
+    for a MUST_NOT clause, which only bans)."""
+    return [
+        (
+            rid,
+            clause,
+            (docids[b0:b1] - rid * R).astype(np.uint32).tobytes(),
+            b"" if scores is None else scores[b0:b1].tobytes(),
+        )
+        for rid, b0, b1 in range_slices(docids, R)
+    ]
+
+
+def slice_blocks(clauses: list[Clause], sim: SimScorer, R: int):
+    """Posting blocks (BLOCK_COLS) -> range rows: each block decodes once and
+    scores once per clause on its (field, term) through the SimScorer
+    kernel; a MUST_NOT clause (weight None) ships its docids only."""
+    by_key: dict[tuple[str, str], list[tuple[int, SimWeight | None]]] = {}
+    for c in clauses:
+        by_key.setdefault(c.key, []).append((c.clause_id, c.weight))
+
+    def run(it):
+        from .codec import decode_block  # executor-side import
+
+        for pdf in it:
+            rows = []
+            for r in pdf.itertuples(index=False):
+                docids, tfs = decode_block(
+                    r.docids_enc, r.tfs_enc, r.first_docid, r.count
+                )
+                if r.docbase:
+                    docids = docids + r.docbase  # leafDocBase shift
+                nbytes = np.frombuffer(r.norms_enc, dtype=np.uint8)
+                freq = tfs.astype(np.float32)
+                for clause_id, w in by_key[(r.field, r.term)]:
+                    sc = None if w is None else sim.score(w, freq, nbytes, r.field)
+                    rows.extend(_range_rows(docids, sc, clause_id, R))
+            yield pd.DataFrame(rows, columns=["rid", "clause", "offs", "scores"])
+
+    return run
+
+
+def slice_scored(clause: int, R: int):
+    """Pre-scored (docid[, score]) rows of one phrase, span, nested or
+    multi-term clause -> range rows; without a score column the clause is
+    a MUST_NOT one and only bans."""
+
+    def run(it):
+        for pdf in it:
+            order = np.argsort(pdf["docid"].to_numpy(), kind="stable")
+            docids = pdf["docid"].to_numpy()[order]
+            scores = (
+                pdf["score"].to_numpy(dtype=np.float32)[order]
+                if "score" in pdf
+                else None
+            )
+            rows = _range_rows(docids, scores, clause, R)
+            yield pd.DataFrame(rows, columns=["rid", "clause", "offs", "scores"])
+
+    return run
+
+
+def reduce_ranges(
+    R: int,
+    n_score: int,
+    n_must: int = 0,
+    need_should: int = 0,
+    coord: np.ndarray | None = None,
+    tie: np.float32 | None = None,
+    k: int | None = None,
+):
+    """Range rows -> (docid, score) hits, one range at a time.
+
+    Clause ids below n_must are MUST, those below n_score score, the rest
+    are MUST_NOT bans. A range's accumulators are sized by its distinct
+    docids (np.unique + inverse), so a sparse range pays for its postings
+    only. Clause scores add in float32 in clause order (Lucene's scorer
+    order; adding nothing where a clause is absent is the exact identity
+    of adding +0f); then the MUST and minShouldMatch masks, the bans,
+    coord(overlap) where the family has one — or, for a DisMax (tie set),
+    max + tie*(sum - max) over the clauses present. With k set each range
+    keeps only its top k in HitQueue order (score desc, docid asc)."""
+
+    def run(it):
+        bufs = [p for p in it if len(p)]
+        if not bufs:
+            return
+        pdf = pd.concat(bufs, ignore_index=True) if len(bufs) > 1 else bufs[0]
+        order = np.lexsort((pdf["clause"].to_numpy(), pdf["rid"].to_numpy()))
+        rids = pdf["rid"].to_numpy()[order]
+        cls = pdf["clause"].to_numpy()[order]
+        offs_b = pdf["offs"].to_numpy()[order]
+        sc_b = pdf["scores"].to_numpy()[order]
+        change = np.nonzero(rids[1:] != rids[:-1])[0]
+        bounds = np.concatenate([[0], change + 1, [len(rids)]])
+        out_ids, out_scores = [], []
+        for g0, g1 in zip(bounds[:-1], bounds[1:]):
+            offs = [np.frombuffer(b, dtype=np.uint32) for b in offs_b[g0:g1]]
+            docs, inv = np.unique(np.concatenate(offs), return_inverse=True)
+            acc = np.zeros(len(docs), dtype=np.float32)
+            mx = np.zeros(len(docs), dtype=np.float32) if tie is not None else None
+            nm = np.zeros(len(docs), dtype=np.int16)
+            ns = np.zeros(len(docs), dtype=np.int16)
+            banned = np.zeros(len(docs), dtype=bool)
+            at = 0
+            for i, o in zip(range(g0, g1), offs):  # clause-ascending
+                idx = inv[at : at + len(o)]
+                at += len(o)
+                cid = int(cls[i])
+                if cid >= n_score:
+                    banned[idx] = True
+                    continue
+                sc = np.frombuffer(sc_b[i], dtype=np.float32)
+                acc[idx] = acc[idx] + sc  # float32, clause order
+                if tie is not None:
+                    mx[idx] = np.maximum(mx[idx], sc)
+                    ns[idx] += 1
+                elif cid < n_must:
+                    nm[idx] += 1
+                else:
+                    ns[idx] += 1
+            mask = (nm == n_must) if n_must else (ns > 0)
+            if need_should:
+                mask &= ns >= need_should
+            cand = np.nonzero(mask & ~banned)[0]
+            if not len(cand):
+                continue
+            if tie is not None:
+                scores = mx[cand] + tie * (acc[cand] - mx[cand])
+            else:
+                scores = acc[cand]
+                if coord is not None:
+                    scores = scores * coord[nm[cand] + ns[cand]]
+            if k is not None and len(cand) > k:
+                o = np.lexsort((cand, -scores))[:k]
+                cand, scores = cand[o], scores[o]
+            out_ids.append(int(rids[g0]) * R + docs[cand].astype(np.int64))
+            out_scores.append(scores.astype(np.float32))
+        if out_ids:
+            yield pd.DataFrame(
+                {"docid": np.concatenate(out_ids), "score": np.concatenate(out_scores)}
+            )
+
+    return run
 
 
 class IndexSearcher:
@@ -174,8 +350,10 @@ class IndexSearcher:
         self._stats_cache: dict[tuple[str, str], tuple[int, float]] = {}
         # CachingWrapperFilter's per-searcher docid-set cache
         self._filter_cache: dict = {}
-        # below this many candidate postings, block-max pruning costs more
-        # (2 extra jobs) than the decode it saves — scan-and-score instead
+        # below this many postings saved, a planning step costs more (its
+        # extra jobs) than the decode it avoids: conjunction skipping and
+        # the phrase gather path engage above it; every boolean and DisMax
+        # combines in the range reducer whatever the volume
         self.prune_min_postings = prune_min_postings
         # Block-max WAND has a HIGHER engage threshold than the other
         # adaptive guards: it costs 2 extra jobs (block-bound probe +
@@ -300,9 +478,6 @@ class IndexSearcher:
     def doc_freqs(self, terms) -> dict[tuple[str, str], int]:
         return {k: m[0] for k, m in self.term_meta(terms).items()}
 
-    def _df_of(self, clause: "Clause") -> int:
-        return self.doc_freqs([clause.key])[clause.key]
-
     # -- deletes (liveDocs) ----------------------------------------------------
     def _deleted_docids(self) -> DataFrame | None:
         """Union of per-segment delete logs, docbase-shifted to global ids.
@@ -323,39 +498,11 @@ class IndexSearcher:
         self._live_docs_cache = out
         return out
 
-    # A docid-set probe above this is never broadcast: 10^7 longs is ~80 MB
+    # A delete set above this is never broadcast: 10^7 longs is ~80 MB
     # serialized — at Spark's broadcast ceiling and a per-executor memory
-    # cliff at 1000 executors. Above it the anti-join runs as a plain
-    # shuffled left_anti, the right plan for a NOT clause on a hot term
-    # (df ~10^9 at the 10^12-turn target) or a mass-delete backlog.
+    # cliff at 1000 executors. Above it the liveDocs mask runs as a plain
+    # shuffled left_anti, the right plan for a mass-delete backlog.
     MAX_BROADCAST_DOCIDS = 10_000_000
-
-    def _anti_join_docids(
-        self, scored: DataFrame, docids: DataFrame, bound: int | None
-    ) -> DataFrame:
-        """left_anti docid mask with a size-guarded broadcast.
-
-        `bound` is an upper bound on the docid-set row count (Σdf for term
-        sets, the capped cached count for the delete set); None = unknown =
-        never broadcast. Join SEMANTICS are identical either way — only the
-        physical strategy changes (acceptDocs, SegmentReader.cs:100)."""
-        if bound is not None and bound <= self.MAX_BROADCAST_DOCIDS:
-            docids = F.broadcast(docids)
-        return scored.join(docids, "docid", "left_anti")
-
-    def _must_not_mask(self, scored: DataFrame, not_keys) -> DataFrame:
-        """Mask MUST_NOT term matches (BooleanWeight prohibited scorers).
-
-        Σdf over the prohibited terms — from the cached term_meta scan, no
-        extra job — bounds the probe size, so a NOT on a hot term degrades
-        to a shuffled anti-join instead of an oversized broadcast."""
-        not_keys = list(not_keys)
-        if not not_keys:
-            return scored
-        bound = sum(m[0] for m in self.term_meta(not_keys).values())
-        return self._anti_join_docids(
-            scored, self._docids_of_terms(not_keys, dedupe=False), bound
-        )
 
     def _deleted_count_capped(self) -> int:
         """Upper bound on the delete-set size (logged rows, from the delete
@@ -373,12 +520,16 @@ class IndexSearcher:
     def _apply_live_docs(self, scored: DataFrame) -> DataFrame:
         """acceptDocs mask (SegmentReader.cs:100,136,272): deleted docs never
         match; stats still count them until merged away — exactly Lucene.
-        The mask broadcast has the same size cliff as the bulk scorer's
-        MAX_BULK_DELETES: an oversized delete set shuffles instead."""
+        Applied once per query, by scores(): an oversized delete set
+        shuffles instead of broadcasting."""
         dels = self._deleted_docids()
         if dels is None:
             return scored
-        return self._anti_join_docids(scored, dels, self._deleted_count_capped())
+        # join SEMANTICS are identical either way — only the physical
+        # strategy changes with the (capped) delete-set size
+        if self._deleted_count_capped() <= self.MAX_BROADCAST_DOCIDS:
+            dels = F.broadcast(dels)
+        return scored.join(dels, "docid", "left_anti")
 
     def delete_docids(self, docids: DataFrame | np.ndarray) -> None:
         """Record global docids as deleted, routed to their owning segments:
@@ -477,45 +628,6 @@ class IndexSearcher:
             out = df if out is None else out.unionByName(df)
         return out
 
-    def _score_blocks(self, blocks: DataFrame, clauses: list[Clause]) -> DataFrame:
-        """Decode + score blocks -> rows (docid, clause, score:float32): each
-        block scores once per clause on its (field, term) through the
-        SimScorer kernel."""
-        by_key: dict[tuple[str, str], list[tuple[int, SimWeight]]] = {}
-        for c in clauses:
-            by_key.setdefault(c.key, []).append((c.clause_id, c.weight))
-        sim = self.sim
-
-        def score_batches(it):
-            from .codec import decode_block  # executor-side import
-
-            for pdf in it:
-                outs = []
-                for r in pdf.itertuples(index=False):
-                    docids, tfs = decode_block(
-                        r.docids_enc, r.tfs_enc, r.first_docid, r.count
-                    )
-                    if r.docbase:
-                        docids = docids + r.docbase  # leafDocBase shift
-                    nbytes = np.frombuffer(r.norms_enc, dtype=np.uint8)
-                    freq = tfs.astype(np.float32)
-                    for clause_id, w in by_key[(r.field, r.term)]:
-                        outs.append(
-                            pd.DataFrame(
-                                {
-                                    "docid": docids,
-                                    "clause": clause_id,
-                                    "score": sim.score(w, freq, nbytes, r.field),
-                                }
-                            )
-                        )
-                yield pd.concat(outs, ignore_index=True) if outs else pd.DataFrame(
-                    {"docid": pd.Series(dtype="int64"), "clause": pd.Series(dtype="int32"), "score": pd.Series(dtype="float32")}
-                )
-
-        cols = ["field", "term", "first_docid", "count", "docids_enc", "tfs_enc", "norms_enc", "docbase"]
-        return blocks.select(cols).mapInPandas(score_batches, SCORE_ROWS_SCHEMA)
-
     def _docids_of_terms(self, terms: list[str], dedupe: bool = True) -> DataFrame:
         """Matching docids only (for MUST_NOT / constant score) — no scoring.
 
@@ -548,27 +660,6 @@ class IndexSearcher:
         cols = blocks.select("first_docid", "count", "docids_enc", "tfs_enc", "docbase")
         out = cols.mapInPandas(decode_batches, "docid long")
         return out.distinct() if dedupe else out
-
-    # -- float32 ordered fold (pure Catalyst, whole-stage codegen) --------------
-    # Spark FloatType addition is IEEE float32 (verified bit-exact vs numpy),
-    # and adding +0.0f is an exact identity on the non-negative BM25 scores,
-    # so the Lucene scorer-order sum = pivot per clause + nested float adds.
-    @staticmethod
-    def _pivot_agg(rows: DataFrame, n_clauses: int) -> DataFrame:
-        return rows.groupBy("docid").agg(
-            *[
-                F.max(F.when(F.col("clause") == i, F.col("score"))).alias(f"s{i}")
-                for i in range(n_clauses)
-            ]
-        )
-
-    @staticmethod
-    def _fold_expr(n_clauses: int):
-        zero = F.lit(0.0).cast("float")
-        acc = F.coalesce(F.col("s0"), zero)
-        for i in range(1, n_clauses):
-            acc = acc + F.coalesce(F.col(f"s{i}"), zero)  # float32 each step
-        return acc
 
     # -- rewrite -------------------------------------------------------------------
     def _multiterm_cond(self, q: Query):
@@ -1043,7 +1134,7 @@ class IndexSearcher:
             # queryNorm over itself, coord 1
             q = BooleanQuery(should=(q,))
         if isinstance(q, DisMaxQuery):
-            return self._dismax_scores(q)
+            return self._dismax_scores(q, prune_k)
         if isinstance(q, BooleanQuery):
             return self._boolean_scores(q, prune_k)
         # SpanQuery as a scores() citizen: a span clause inside a boolean
@@ -1093,47 +1184,91 @@ class IndexSearcher:
             weights[i] = w
         return out, weights
 
-    def _clause_rows(
-        self, subs, weights, must_keys=(), prune_k: int | None = None
-    ) -> DataFrame | None:
-        """(docid, clause, score) rows of one boolean/DisMax level, or None
-        when no clause can match. Every matchable term clause scores in one
-        block pass (restricted to the rarest of must_keys' docid ranges;
-        block-max pruned for a top-prune_k); a phrase clause runs its phrase
-        scorer with its weight; any other sub is scored on its own."""
+    def _combine(
+        self,
+        subs,
+        weights,
+        must_not=(),
+        prune_k: int | None = None,
+        *,
+        n_must: int = 0,
+        need_should: int = 0,
+        coord: np.ndarray | None = None,
+        tie: np.float32 | None = None,
+        wand: bool = False,
+    ) -> DataFrame:
+        """Hits of one boolean/DisMax level through the range reducer.
+
+        Every matchable term clause, and every term MUST_NOT clause, scores
+        in one block pass (restricted to the rarest MUST term's docid
+        ranges; block-max pruned when `wand`); a phrase clause runs its
+        phrase scorer with its weight and any other sub is scored on its
+        own, unmasked — scores() applies liveDocs once per query. With one
+        row source and no MUST_NOT clause every doc has one row per clause
+        inside one task, so the reducer runs in the scoring tasks; anything
+        else meets in one coalescable shuffle on the range id. Each range
+        keeps its top prune_k only when no doc is deleted: the liveDocs mask
+        comes after the reducer."""
+        R = self.BULK_RANGE
+        n = len(subs)
+        live = [self._matchable(c) for c in subs]
+        if not any(live):
+            return self._empty_hits()
+        banned = [c for c in must_not if self._matchable(c)]
         terms = [
             Clause(i, c.term, weights[i], field=c.field)
             for i, c in enumerate(subs)
-            if isinstance(c, TermQuery) and self._matchable(c)
+            if live[i] and isinstance(c, TermQuery)
+        ] + [
+            Clause(n + j, c.term, None, field=c.field)
+            for j, c in enumerate(banned)
+            if isinstance(c, TermQuery)
         ]
-        rows = None
+        sources = []  # (frame, slicer) per row source
         if terms:
             blocks = self._blocks_for([c.key for c in terms])
+            must_keys = [c.key for c in terms if c.clause_id < n_must]
             if must_keys:
                 # leapfrog analogue: restrict every clause's blocks to the
                 # rarest MUST term's docid ranges before decode
-                blocks = self._conjunction_prune(blocks, list(must_keys))
-            if prune_k is not None:
+                blocks = self._conjunction_prune(blocks, must_keys)
+            if wand:
                 blocks, _ = self._prune_blocks(blocks, terms, prune_k)
-            rows = self._score_blocks(blocks, terms)
+            sources.append(
+                (blocks.select(BLOCK_COLS), slice_blocks(terms, self.sim, R))
+            )
         for i, c in enumerate(subs):
-            if isinstance(c, TermQuery) or not self._matchable(c):
+            if isinstance(c, TermQuery) or not live[i]:
                 continue
             sc = (
                 self._phrase_scores(c, weights[i])
                 if weights[i] is not None
-                else self.scores(c)
+                else self._scores_raw(c)
             )
-            part = sc.select("docid", F.lit(i).cast("int").alias("clause"), "score")
-            rows = part if rows is None else rows.unionByName(part)
-        return rows
+            sources.append((sc.select("docid", "score"), slice_scored(i, R)))
+        for j, c in enumerate(banned):
+            if not isinstance(c, TermQuery):
+                sources.append(
+                    (self._scores_raw(c).select("docid"), slice_scored(n + j, R))
+                )
+        k = prune_k if self._deleted_docids() is None else None
+        reduce = reduce_ranges(R, n, n_must, need_should, coord, tie, k)
+        # one row source: a single term's blocks or a single scored clause
+        if not banned and len(sources) == 1 and len({c.key for c in terms}) <= 1:
+            frame, slicer = sources[0]
+            return frame.mapInPandas(lambda it: reduce(slicer(it)), HITS_SCHEMA)
+        sliced = None
+        for frame, slicer in sources:
+            part = frame.mapInPandas(slicer, RANGE_ROWS_SCHEMA)
+            sliced = part if sliced is None else sliced.unionByName(part)
+        return sliced.repartition("rid").mapInPandas(reduce, HITS_SCHEMA)
 
     def _boolean_scores(self, q: BooleanQuery, prune_k: int | None) -> DataFrame:
         """BooleanQuery under the active similarity (BooleanWeight +
         BooleanScorer2): MUST = every required clause matched, SHOULD =
-        minShouldMatch count filter, clause scores summed f32 in clause
-        order, times coord(overlap, clauses) where the family has one;
-        MUST_NOT = anti-join (term clauses through the size-guarded mask)."""
+        minShouldMatch count, clause scores summed f32 in clause order,
+        times coord(overlap, clauses) where the family has one; MUST_NOT
+        clauses ban their docs. All in the range reducer."""
         if not q.must and not q.should:
             # clause-less query (e.g. all terms were stopwords) matches nothing
             return self._empty_hits()
@@ -1165,57 +1300,17 @@ class IndexSearcher:
             # blocks holding live true top-k hits
             and self._deleted_docids() is None
         )
-        must_keys = [(c.field, c.term) for c in q.must if isinstance(c, TermQuery)]
-        rows = self._clause_rows(
-            subs, weights, must_keys, prune_k if can_prune else None
-        )
-        if rows is None:
-            return self._empty_hits()
-        n_total = len(subs)
         msm = q.min_should_match
-        need_should = msm if n_must else max(1, msm) if q.should else 0
-        n_live_should = sum(live[n_must:])
-        coord = self.sim.coord(n_total) if n_total > 1 else None
-        # single-clause fast path: no clause combination -> no groupBy shuffle;
-        # rows are already (docid, score). TermScorer's direct path. Only valid
-        # when the minShouldMatch constraint is satisfiable by the live clauses
-        # (a lone MUST clause with need_should>=1 and every SHOULD term df=0
-        # must return empty, which the pivot path gets right) and coord is 1
-        # (coord(1, 1) is exactly 1).
-        if (
-            sum(live) == 1
-            and n_must <= 1
-            and not q.must_not
-            and (need_should == 0 or n_live_should >= need_should)
-            and need_should <= 1
-            and coord is None
-        ):
-            return rows.select("docid", "score")
-
-        agg = self._pivot_agg(rows, n_total)
-        matched = [
-            F.when(F.col(f"s{j}").isNotNull(), 1).otherwise(0) for j in range(n_total)
-        ]
-        cond = F.lit(True)
-        for i in range(n_must):
-            cond = cond & F.col(f"s{i}").isNotNull()
-        if need_should:
-            cond = cond & (sum(matched[n_must:], F.lit(0)) >= need_should)
-        score = self._fold_expr(n_total)
-        if coord is not None:
-            factors = F.array(*[F.lit(float(x)).cast("float") for x in coord])
-            overlap = sum(matched, F.lit(0))
-            score = (score * F.element_at(factors, overlap + 1)).cast("float")
-        scored = agg.filter(cond).select("docid", score.alias("score"))
-        not_keys = [(c.field, c.term) for c in q.must_not if isinstance(c, TermQuery)]
-        if not_keys:
-            scored = self._must_not_mask(scored, not_keys)
-        for c in q.must_not:
-            if not isinstance(c, TermQuery):
-                scored = scored.join(
-                    self.scores(c).select("docid"), "docid", "left_anti"
-                )
-        return scored
+        return self._combine(
+            subs,
+            weights,
+            q.must_not,
+            prune_k,
+            n_must=n_must,
+            need_should=msm if n_must else max(1, msm) if q.should else 0,
+            coord=self.sim.coord(len(subs)) if len(subs) > 1 else None,
+            wand=bool(can_prune),
+        )
 
     # -- conjunction skipping (Advance analogue) -------------------------------
     def _conjunction_prune(
@@ -1492,15 +1587,13 @@ class IndexSearcher:
                     poss = decode_positions(r.pos_enc, int(tfs.sum()))
                     drep = np.repeat(docids, tfs)
                     nrep = np.repeat(nbytes, tfs)
-                    rid = drep // R
-                    change = np.nonzero(rid[1:] != rid[:-1])[0]
-                    bounds = np.concatenate([[0], change + 1, [len(drep)]])
+                    slices = range_slices(drep, R)
                     for cid, off in by_term[r.term]:
                         bpos = poss - off
-                        for b0, b1 in zip(bounds[:-1], bounds[1:]):
+                        for rid, b0, b1 in slices:
                             rows.append(
                                 (
-                                    int(rid[b0]),
+                                    rid,
                                     cid,
                                     drep[b0:b1].tobytes(),
                                     bpos[b0:b1].tobytes(),
@@ -1576,9 +1669,6 @@ class IndexSearcher:
                     }
                 )
 
-        n_shuffle = max(
-            int(self.spark.conf.get("spark.sql.shuffle.partitions", "32")), 8
-        )
         sliced = blocks.select(
             "term", "first_docid", "count", "docids_enc", "tfs_enc",
             "norms_enc", "pos_enc", "docbase",
@@ -1586,7 +1676,7 @@ class IndexSearcher:
             slice_ranges,
             "rid long, clause int, docids binary, bpos binary, norms binary",
         )
-        return sliced.repartition(n_shuffle, "rid").mapInPandas(
+        return sliced.repartition("rid").mapInPandas(
             reduce_ranges, "docid long, score float"
         )
 
@@ -1697,248 +1787,24 @@ class IndexSearcher:
         blocks = self._blocks_for([key]).select(cols)
         return blocks.mapInPandas(score_batches, "docid long, score float")
 
-    def _dismax_scores(self, q: DisMaxQuery) -> DataFrame:
+    def _dismax_scores(self, q: DisMaxQuery, prune_k: int | None) -> DataFrame:
         """max + tie*(sum-max) over clause scores (DisjunctionMaxScorer).
 
         Clause weights normalize together (DisjunctionMaxWeight
-        GetValueForNormalization sums every sub-weight); no coord. Pure-
-        Catalyst float32 fold: greatest() for the max, nested float adds for
-        the ordered sum, then mx + tie*(sum-mx) — each op single-precision,
-        matching the oracle's numpy float32 chain bit for bit."""
+        GetValueForNormalization sums every sub-weight); no coord. The range
+        reducer keeps the max and the clause-order float32 sum, then
+        mx + tie*(sum-mx) — each op single-precision, matching the oracle's
+        numpy float32 chain bit for bit."""
         if not q.queries:
             return self._empty_hits()
         subs, weights = self._clauses(q.queries, q.boost)
-        rows = self._clause_rows(subs, weights)
-        if rows is None:
-            return self._empty_hits()
-        n = len(subs)
-        agg = self._pivot_agg(rows, n)
-        zero = F.lit(0.0).cast("float")
-        cols = [F.coalesce(F.col(f"s{i}"), zero) for i in range(n)]
-        mx = cols[0] if n == 1 else F.greatest(*cols)
-        ssum = cols[0]
-        for c in cols[1:]:
-            ssum = ssum + c  # float32 each step
-        tie = F.lit(float(np.float32(q.tie_breaker))).cast("float")
-        return agg.select("docid", (mx + tie * (ssum - mx)).alias("score"))
-
-    # -- bulk DAAT scorer ------------------------------------------------------------
-    BULK_RANGE = 1 << 17  # docids per dense accumulator (512 KB float32)
-
-    def _try_bulk_topk(self, q: Query, k: int, prune: bool) -> DataFrame | None:
-        """Range-bucketed dense-accumulator scoring for heavy multi-clause
-        queries — Lucene's windowed BooleanScorer bucket table
-        (BooleanScorer.cs:28-55), vectorized and distributed.
-
-        Decoded postings are re-sliced at fixed docid-range boundaries in the
-        map stage and shuffled as BINARY sub-arrays (O(blocks) rows, never one
-        row per posting); each reduce range scatters clause kernels into dense
-        float32/count accumulators IN CLAUSE ORDER (bit-identical to the
-        pivot fold), applies MUST/minShouldMatch/MUST_NOT/liveDocs masks
-        vectorized, and emits only its local top-k — TopScoreDocCollector per
-        partition, merged by the global orderBy. Returns None when the query
-        shape or volume doesn't warrant it. Clause weights and the kernel
-        are the relational path's (SimScorer); under a family with coord
-        the reducer applies it from its per-doc match counts."""
-        q = self.rewrite(q)
-        if isinstance(q, DisMaxQuery):
-            subs, must_not, n_must, need_should = q.queries, (), 0, 1
-            mode = ("dismax", float(np.float32(q.tie_breaker)))
-        elif isinstance(q, BooleanQuery):
-            subs, must_not, n_must = q.must + q.should, q.must_not, len(q.must)
-            msm = q.min_should_match
-            need_should = msm if n_must else max(1, msm) if q.should else 0
-            mode = ("sum", 0.0)
-        else:
-            return None
-        if not all(isinstance(c, TermQuery) for c in subs + must_not):
-            return None
-        not_terms = [(c.field, c.term) for c in must_not]
-        subs, weights = self._clauses(subs, q.boost)
-        clauses = [
-            Clause(i, c.term, weights[i], field=c.field) for i, c in enumerate(subs)
-        ]
-        dfs = self.doc_freqs([c.key for c in clauses])
-        # a MUST term with df=0 can never match; a present term stays live
-        # whatever its weight (a boost=0 MUST clause is still a zero-
-        # contribution match constraint — Lucene semantics)
-        if any(dfs[c.key] == 0 and c.clause_id < n_must for c in clauses):
-            return self._empty_hits()
-        live = [c for c in clauses if dfs[c.key] > 0]
-        if len(live) < 2:
-            return None  # single-list path is already shuffle-free
-        total_df = sum(self._df_of(c) for c in live)
-        if total_df < self.prune_min_postings * 4:
-            return None
-        # prohibited terms ride along as extra clause ids
-        n_score = len(clauses)
-        proh = [
-            Clause(n_score + i, t, None, field=f)
-            for i, (f, t) in enumerate(not_terms)
-        ]
-        allc = live + proh
-        blocks = self._blocks_for([c.key for c in allc])
-        if n_must:
-            blocks = self._conjunction_prune(
-                blocks, [c.key for c in clauses if c.clause_id < n_must]
-            )
-        if (
-            prune
-            and self.sim.block_max
-            and self._prunable
-            and n_must == 0
-            and not not_terms
-            and need_should <= 1
-            and mode[0] == "sum"
-            and self._deleted_docids() is None  # see can_prune in _boolean_scores
-        ):
-            blocks, _ = self._prune_blocks(blocks, live, k)
-
-        by_key: dict[tuple[str, str], list[tuple[int, SimWeight | None]]] = {}
-        for c in allc:
-            by_key.setdefault(c.key, []).append((c.clause_id, c.weight))
-        sim = self.sim
-        R = self.BULK_RANGE
-        deleted = self._deleted_array()
-        if deleted is None:
-            return None  # delete set too large for the dense path; anti-join instead
-
-        def slice_ranges(it):
-            from .codec import decode_block
-
-            for pdf in it:
-                rows = []
-                for r in pdf.itertuples(index=False):
-                    docids, tfs = decode_block(
-                        r.docids_enc, r.tfs_enc, r.first_docid, r.count
-                    )
-                    if r.docbase:
-                        docids = docids + r.docbase
-                    nbytes = np.frombuffer(r.norms_enc, dtype=np.uint8)
-                    freq = tfs.astype(np.float32)
-                    rid = docids // R
-                    change = np.nonzero(rid[1:] != rid[:-1])[0]
-                    bounds = np.concatenate([[0], change + 1, [len(docids)]])
-                    for clause_id, w in by_key[(r.field, r.term)]:
-                        sc = (
-                            sim.score(w, freq, nbytes, r.field)
-                            if w is not None
-                            else np.zeros(len(docids), dtype=np.float32)
-                        )
-                        for b0, b1 in zip(bounds[:-1], bounds[1:]):
-                            rows.append(
-                                (
-                                    int(rid[b0]),
-                                    clause_id,
-                                    (docids[b0:b1] - rid[b0] * R)
-                                    .astype(np.uint32)
-                                    .tobytes(),
-                                    sc[b0:b1].tobytes(),
-                                )
-                            )
-                yield pd.DataFrame(
-                    rows, columns=["rid", "clause", "offs", "scores"]
-                )
-
-        tie = np.float32(mode[1])
-        is_dismax = mode[0] == "dismax"
-        coord = None if is_dismax else sim.coord(n_score)
-
-        def reduce_ranges(it):
-            bufs = [p for p in it if len(p)]
-            if not bufs:
-                return
-            pdf = pd.concat(bufs, ignore_index=True) if len(bufs) > 1 else bufs[0]
-            order = np.lexsort((pdf["clause"].to_numpy(), pdf["rid"].to_numpy()))
-            rids = pdf["rid"].to_numpy()[order]
-            cls = pdf["clause"].to_numpy()[order]
-            offs_b = pdf["offs"].to_numpy()[order]
-            sc_b = pdf["scores"].to_numpy()[order]
-            change = np.nonzero(rids[1:] != rids[:-1])[0]
-            bounds = np.concatenate([[0], change + 1, [len(rids)]])
-            out_ids, out_scores = [], []
-            for g0, g1 in zip(bounds[:-1], bounds[1:]):
-                base = int(rids[g0]) * R
-                acc = np.zeros(R, dtype=np.float32)
-                mx = np.zeros(R, dtype=np.float32) if is_dismax else None
-                nm = np.zeros(R, dtype=np.int16)
-                ns = np.zeros(R, dtype=np.int16)
-                banned = np.zeros(R, dtype=bool)
-                for i in range(g0, g1):  # clause-ascending within the range
-                    offs = np.frombuffer(offs_b[i], dtype=np.uint32)
-                    cid = int(cls[i])
-                    if cid >= n_score:
-                        banned[offs] = True
-                        continue
-                    sc = np.frombuffer(sc_b[i], dtype=np.float32)
-                    acc[offs] = acc[offs] + sc  # float32, clause order
-                    if is_dismax:
-                        mx[offs] = np.maximum(mx[offs], sc)
-                        ns[offs] += 1
-                    elif cid < n_must:
-                        nm[offs] += 1
-                    else:
-                        ns[offs] += 1
-                if is_dismax:
-                    mask = ns > 0
-                else:
-                    mask = (nm == n_must) if n_must else (ns > 0)
-                    if need_should:
-                        mask &= ns >= need_should
-                mask &= ~banned
-                if deleted.size:
-                    lo = np.searchsorted(deleted, base)
-                    hi = np.searchsorted(deleted, base + R)
-                    mask[(deleted[lo:hi] - base)] = False
-                cand = np.nonzero(mask)[0]
-                if not len(cand):
-                    continue
-                if is_dismax:
-                    scores = mx[cand] + tie * (acc[cand] - mx[cand])
-                else:
-                    scores = acc[cand]
-                    if coord is not None:
-                        scores = scores * coord[nm[cand] + ns[cand]]
-                if len(cand) > k:
-                    o = np.lexsort((cand, -scores))[:k]
-                    cand, scores = cand[o], scores[o]
-                out_ids.append(base + cand.astype(np.int64))
-                out_scores.append(scores.astype(np.float32))
-            if out_ids:
-                yield pd.DataFrame(
-                    {
-                        "docid": np.concatenate(out_ids),
-                        "score": np.concatenate(out_scores),
-                    }
-                )
-
-        n_shuffle = max(
-            int(self.spark.conf.get("spark.sql.shuffle.partitions", "32")), 8
-        )
-        cols = [
-            "field", "term", "first_docid", "count", "docids_enc", "tfs_enc",
-            "norms_enc", "docbase",
-        ]
-        sliced = blocks.select(cols).mapInPandas(
-            slice_ranges, "rid long, clause int, offs binary, scores binary"
-        )
-        return sliced.repartition(n_shuffle, "rid").mapInPandas(
-            reduce_ranges, "docid long, score float"
+        return self._combine(
+            subs, weights, prune_k=prune_k, tie=np.float32(q.tie_breaker)
         )
 
-    # above this many deletes the bulk path's driver-side delete array is a
-    # memory cliff — fall back to the relational path's anti-join instead
-    MAX_BULK_DELETES = 1 << 24
-
-    def _deleted_array(self) -> np.ndarray | None:
-        """Sorted global delete set for the bulk scorer, or None when it is
-        too large to ship through the driver (caller falls back)."""
-        d = self._deleted_docids()
-        if d is None:
-            return np.empty(0, dtype=np.int64)
-        if d.limit(self.MAX_BULK_DELETES + 1).count() > self.MAX_BULK_DELETES:
-            return None
-        return np.sort(np.array([r["docid"] for r in d.collect()], dtype=np.int64))
+    # docids per reducer range: bounds one range's accumulators (512 KB of
+    # float32 at most) and the docid offsets to uint32
+    BULK_RANGE = 1 << 17
 
     # -- block-max pruning -----------------------------------------------------------
     def _prune_blocks(
@@ -1968,17 +1834,20 @@ class IndexSearcher:
             F.desc("ub"), F.asc("block_no")
         )
         probe = meta.withColumn("rk", F.row_number().over(win)).filter(F.col("rk") <= j).drop("rk", "ub")
+        R = self.BULK_RANGE
+        n_score = 1 + max(c.clause_id for c in clauses)
         probe_scores = (
-            self._score_blocks(probe, clauses)
-            .groupBy("docid")
-            .agg(F.sum("score").alias("partial"))
-            .orderBy(F.desc("partial"))
+            probe.select(BLOCK_COLS)
+            .mapInPandas(slice_blocks(clauses, self.sim, R), RANGE_ROWS_SCHEMA)
+            .repartition("rid")
+            .mapInPandas(reduce_ranges(R, n_score, k=k), HITS_SCHEMA)
+            .orderBy(F.desc("score"))
             .limit(k)
             .collect()
         )
-        theta = float(probe_scores[-1]["partial"]) if len(probe_scores) >= k else float("-inf")
-        # guard band: partial sums are float64 while true scores fold in
-        # float32 — shave a few ulps so rounding can never prune a true hit
+        theta = float(probe_scores[-1]["score"]) if len(probe_scores) >= k else float("-inf")
+        # guard band: a partial sum misses the clauses whose blocks were not
+        # probed — shave a few ulps so rounding can never prune a true hit
         if math.isfinite(theta):
             theta -= abs(theta) * 1e-5
 
@@ -2006,9 +1875,6 @@ class IndexSearcher:
         selector by the limit, so an uncapped k of 10**9 exhausts the
         JVM heap."""
         k = min(k, self.max_doc)
-        bulk = self._try_bulk_topk(q, k, prune)
-        if bulk is not None:
-            return bulk.orderBy(F.desc("score"), F.asc("docid")).limit(k)
         scored = self.scores(q, prune_k=k if prune else None)
         return scored.orderBy(F.desc("score"), F.asc("docid")).limit(k)
 

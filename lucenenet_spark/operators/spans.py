@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.query import Query
+from .search import range_slices
 
 Span = tuple[int, int]
 
@@ -552,14 +553,11 @@ def span_scores(searcher, q: Query) -> DataFrame:
                 poss = decode_positions(r.pos_enc, int(tfs.sum()))
                 drep = np.repeat(docids, tfs)
                 nrep = np.repeat(nbytes, tfs)
-                rid = drep // R
-                change = np.nonzero(rid[1:] != rid[:-1])[0]
-                bounds = np.concatenate([[0], change + 1, [len(drep)]])
                 leaf = clause_of[(r.field, r.term)]
-                for b0, b1 in zip(bounds[:-1], bounds[1:]):
+                for rid, b0, b1 in range_slices(drep, R):
                     rows.append(
                         (
-                            int(rid[b0]),
+                            rid,
                             leaf,
                             drep[b0:b1].tobytes(),
                             poss[b0:b1].tobytes(),
@@ -608,9 +606,6 @@ def span_scores(searcher, q: Query) -> DataFrame:
                 }
             )
 
-    n_shuffle = max(
-        int(searcher.spark.conf.get("spark.sql.shuffle.partitions", "32")), 8
-    )
     sliced = blocks.select(
         "field", "term", "first_docid", "count", "docids_enc", "tfs_enc",
         "norms_enc", "pos_enc", "docbase",
@@ -618,7 +613,7 @@ def span_scores(searcher, q: Query) -> DataFrame:
         slice_ranges,
         "rid long, leaf int, docids binary, pos binary, norms binary",
     )
-    return sliced.repartition(n_shuffle, "rid").mapInPandas(
+    return sliced.repartition("rid").mapInPandas(
         reduce_ranges, "docid long, score float"
     )
 
@@ -708,14 +703,11 @@ def payload_near_scores(searcher, q: PayloadNearQuery) -> DataFrame:
                 pays = decode_float_payloads(r.pay_enc, n_pos)
                 drep = np.repeat(docids, tfs)
                 nrep = np.repeat(nbytes, tfs)
-                rid = drep // R
-                change = np.nonzero(rid[1:] != rid[:-1])[0]
-                bounds = np.concatenate([[0], change + 1, [len(drep)]])
                 leaf = key_of[(r.field, r.term)]
-                for b0, b1 in zip(bounds[:-1], bounds[1:]):
+                for rid, b0, b1 in range_slices(drep, R):
                     rows.append(
                         (
-                            int(rid[b0]),
+                            rid,
                             leaf,
                             drep[b0:b1].tobytes(),
                             poss[b0:b1].tobytes(),
@@ -777,9 +769,6 @@ def payload_near_scores(searcher, q: PayloadNearQuery) -> DataFrame:
                 }
             )
 
-    n_shuffle = max(
-        int(searcher.spark.conf.get("spark.sql.shuffle.partitions", "32")), 8
-    )
     sliced = blocks.select(
         "field", "term", "first_docid", "count", "docids_enc", "tfs_enc",
         "norms_enc", "pos_enc", "pay_enc", "docbase",
@@ -787,7 +776,7 @@ def payload_near_scores(searcher, q: PayloadNearQuery) -> DataFrame:
         slice_ranges,
         "rid long, leaf int, docids binary, pos binary, pay binary, norms binary",
     )
-    return sliced.repartition(n_shuffle, "rid").mapInPandas(
+    return sliced.repartition("rid").mapInPandas(
         reduce_ranges, "docid long, score float"
     )
 

@@ -1176,11 +1176,15 @@ def sim_mixed_boolean_scores(
     must_not: list[str] = (),
     min_should_match: int = 0,
 ) -> dict[int, np.float32]:
-    """SimilarityBase-family BooleanQuery with term AND phrase clauses:
-    queryNorm = coord = 1, so the score is the plain f32 clause-order fold
-    of the per-clause scores."""
+    """SimilarityBase-family (or BM25) BooleanQuery with term AND phrase
+    clauses: queryNorm = coord = 1, so the score is the plain f32
+    clause-order fold of the per-clause scores."""
 
     def _clause_map(spec):
+        if similarity == "bm25":
+            if isinstance(spec, str):
+                return term_scores(index, spec)
+            return phrase_scores(index, list(spec[1]), slop=spec[2])
         if isinstance(spec, str):
             if similarity == "lmd":
                 return lmd_term_scores(index, spec)

@@ -1,9 +1,12 @@
-"""Bulk DAAT scorer (range-bucketed dense accumulators): forced-on parity.
+"""The range reducer (every boolean and DisMax combines its clauses there):
+parity across searcher settings, reducer range sizes and the oracle.
 
-The bulk path must be bit-identical to the pivot path and the oracle —
-clause-ordered float32 accumulation, identical masks, identical tie-breaks,
-coord where the similarity has one — for every boolean shape, plus deletes
-masking, under every similarity family.
+Results must be bit-identical between a searcher forced onto every
+adaptive path (prune_min_postings=0), the default searcher and the oracle
+— clause-ordered float32 accumulation, identical masks, identical
+tie-breaks, coord where the similarity has one — for every boolean shape,
+phrase SHOULD and MUST_NOT clauses, plus deletes masking, under every
+similarity family and with ranges small enough to cut the corpus.
 """
 import shutil
 
@@ -11,7 +14,12 @@ import pytest
 
 from lucenenet_spark import oracle
 from lucenenet_spark.operators.search import IndexSearcher
-from lucenenet_spark.plans.query import BooleanQuery, DisMaxQuery, TermQuery
+from lucenenet_spark.plans.query import (
+    BooleanQuery,
+    DisMaxQuery,
+    PhraseQuery,
+    TermQuery,
+)
 
 from .conftest import hits
 
@@ -26,24 +34,38 @@ def _tf_params(sim):
 @pytest.fixture()
 def sim():
     """The module's tests run under BM25; TestEverySimilarity below re-runs
-    each of them under every other family."""
+    the term-clause ones under every other family."""
     return SIMS[0]
 
 
 @pytest.fixture()
-def bulk_searcher(spark, index_dir, sim):
-    # prune_min_postings=0 drops the volume threshold -> bulk always engages
-    return IndexSearcher(spark, index_dir, prune_min_postings=0, similarity=sim)
+def bulk_range():
+    """Docids per reducer range; None keeps IndexSearcher.BULK_RANGE.
+    TestSmallRanges below re-runs the tests with ranges of 64 docids."""
+    return None
+
+
+def _forced(spark, d, sim, bulk_range):
+    # prune_min_postings=0 drops every adaptive volume threshold
+    s = IndexSearcher(spark, d, prune_min_postings=0, similarity=sim)
+    if bulk_range is not None:
+        s.BULK_RANGE = bulk_range
+    return s
+
+
+@pytest.fixture()
+def bulk_searcher(spark, index_dir, sim, bulk_range):
+    return _forced(spark, index_dir, sim, bulk_range)
 
 
 @pytest.fixture()
 def rel_searcher(spark, index_dir, sim):
-    # the default thresholds keep this corpus on the relational path
+    # the default thresholds: no conjunction skip or WAND on this corpus
     return IndexSearcher(spark, index_dir, similarity=sim)
 
 
 def _oracle_scores(oidx, sim, must=(), should=(), must_not=(), min_should_match=0):
-    if sim == "bm25":
+    if sim == "bm25" and all(isinstance(c, str) for c in (*must, *should, *must_not)):
         return oracle.boolean_scores(
             oidx, must=must, should=should, must_not=must_not,
             min_should_match=min_should_match,
@@ -64,9 +86,8 @@ def _oracle(oidx, sim, k=20, **kw):
 
 
 def _check(bulk, rel, q, k, want, prune=True):
-    """The forced bulk path engages and matches the relational path and
-    the oracle bit for bit."""
-    assert bulk._try_bulk_topk(q, k, prune) is not None
+    """The forced searcher matches the default searcher and the oracle bit
+    for bit."""
     got = hits(bulk.search(q, k, prune=prune))
     assert got == hits(rel.search(q, k, prune=prune))
     assert got == want
@@ -133,24 +154,89 @@ def test_bulk_large_k_exceeds_range_topk(bulk_searcher, rel_searcher, oracle_ind
     ))
 
 
-def test_bulk_respects_deletes(spark, index_dir, oracle_index, tmp_path, sim):
+def _delete_hello(spark, index_dir, oracle_index, tmp_path, sim):
+    """A copy of the index with every doc holding 'hello' deleted, and the
+    deleted docids."""
     d = str(tmp_path / "bulkdel")
     shutil.copytree(index_dir, d)
-    s = IndexSearcher(spark, d, prune_min_postings=0, similarity=sim)
-    s.delete_by_term("hello")
-    s2 = IndexSearcher(spark, d, prune_min_postings=0, similarity=sim)
-    hello_docs = {doc for doc, _ in oracle_index.postings["hello"]}
+    IndexSearcher(spark, d, similarity=sim).delete_by_term("hello")
+    return d, {doc for doc, _ in oracle_index.postings["hello"]}
+
+
+def test_bulk_respects_deletes(spark, index_dir, oracle_index, tmp_path, sim, bulk_range):
+    d, hello_docs = _delete_hello(spark, index_dir, oracle_index, tmp_path, sim)
     q = BooleanQuery(should=(TermQuery(term="popcorn"), TermQuery(term="word7")))
     want = [
         (doc, sc)
         for doc, sc in _oracle(oracle_index, sim, k=10**6, should=["popcorn", "word7"])
         if doc not in hello_docs
     ][:30]
-    _check(s2, IndexSearcher(spark, d, similarity=sim), q, 30, want)
+    _check(
+        _forced(spark, d, sim, bulk_range), IndexSearcher(spark, d, similarity=sim),
+        q, 30, want,
+    )
+
+
+@pytest.fixture(scope="module")
+def pair(corpus_pdf):
+    """The most frequent adjacent-token pair in the corpus."""
+    from lucenenet_spark.functions.analysis import tokenize_text
+
+    pairs = {}
+    for text in corpus_pdf["text"]:
+        toks = tokenize_text(text)
+        for a, b in zip(toks, toks[1:]):
+            pairs[(a, b)] = pairs.get((a, b), 0) + 1
+    return max(pairs.items(), key=lambda kv: kv[1])[0]
+
+
+def _check_phrase_boolean(
+    spark, index_dir, oracle_index, tmp_path, sim, bulk_range, deletes, q, **kw
+):
+    d, dead = index_dir, set()
+    if deletes:
+        d, dead = _delete_hello(spark, index_dir, oracle_index, tmp_path, sim)
+    want = [
+        (doc, sc) for doc, sc in _oracle(oracle_index, sim, k=10**6, **kw)
+        if doc not in dead
+    ][:20]
+    assert want
+    _check(
+        _forced(spark, d, sim, bulk_range), IndexSearcher(spark, d, similarity=sim),
+        q, 20, want,
+    )
+
+
+@pytest.mark.parametrize("deletes", [False, True])
+def test_bulk_phrase_should(
+    spark, index_dir, oracle_index, tmp_path, sim, bulk_range, pair, deletes
+):
+    q = BooleanQuery(should=(TermQuery(term="popcorn"), PhraseQuery(terms=pair)))
+    _check_phrase_boolean(
+        spark, index_dir, oracle_index, tmp_path, sim, bulk_range, deletes, q,
+        should=["popcorn", ("phrase", list(pair), 0)],
+    )
+
+
+@pytest.mark.parametrize("deletes", [False, True])
+def test_bulk_phrase_must_not(
+    spark, index_dir, oracle_index, tmp_path, sim, bulk_range, pair, deletes
+):
+    # the pair's first term as a SHOULD clause: the banned phrase then
+    # removes docs that would otherwise match
+    q = BooleanQuery(
+        should=(TermQuery(term="popcorn"), TermQuery(term=pair[0])),
+        must_not=(PhraseQuery(terms=pair),),
+    )
+    _check_phrase_boolean(
+        spark, index_dir, oracle_index, tmp_path, sim, bulk_range, deletes, q,
+        should=["popcorn", pair[0]], must_not=[("phrase", list(pair), 0)],
+    )
 
 
 class TestEverySimilarity:
-    """The tests above, parametrised over the other similarity families."""
+    """The term-clause tests above, parametrised over the other similarity
+    families."""
 
     @pytest.fixture(params=SIMS[1:])
     def sim(self, request):
@@ -165,3 +251,21 @@ class TestEverySimilarity:
         test_bulk_large_k_exceeds_range_topk
     )
     test_bulk_respects_deletes = staticmethod(test_bulk_respects_deletes)
+
+
+class TestSmallRanges(TestEverySimilarity):
+    """Every test above, phrase clauses included, with 64-docid reducer
+    ranges, so the 500-doc corpus spans 8 ranges and every clause crosses
+    range boundaries (the default range holds the whole corpus); under BM25
+    and, for coord and queryNorm, TF-IDF."""
+
+    @pytest.fixture(params=SIMS[:2])
+    def sim(self, request):
+        return request.param
+
+    @pytest.fixture()
+    def bulk_range(self):
+        return 64
+
+    test_bulk_phrase_should = staticmethod(test_bulk_phrase_should)
+    test_bulk_phrase_must_not = staticmethod(test_bulk_phrase_must_not)

@@ -1,0 +1,46 @@
+"""liveDocs are masked once per query: nested clauses and MUST_NOT clauses
+are scored unmasked and only the top-level scores() applies the delete set
+(acceptDocs, SegmentReader.cs:100). Deleted docs still count in the stats
+until merged away, so masking once cannot change a live doc's score.
+"""
+import shutil
+
+from lucenenet_spark.operators.search import IndexSearcher
+from lucenenet_spark.plans.query import BooleanQuery, PhraseQuery, TermQuery
+
+from .conftest import count_jobs, hits
+
+NESTED_Q = BooleanQuery(
+    should=(
+        BooleanQuery(must=(TermQuery(term="popcorn"), TermQuery(term="common3"))),
+        BooleanQuery(should=(TermQuery(term="word7"), TermQuery(term="hello"))),
+    ),
+    must_not=(PhraseQuery(terms=("common9", "common9")),),
+)
+
+
+def test_nested_boolean_masks_deletes_once(spark, index_dir, tmp_path):
+    k = 40
+    want_all = hits(IndexSearcher(spark, index_dir).search(NESTED_Q, 10**6))
+    dead = {d for d, _ in want_all[:k:7]}  # a few of the top hits
+    d = str(tmp_path / "nested_del")
+    shutil.copytree(index_dir, d)
+    IndexSearcher(spark, d).delete_docids(spark.createDataFrame(
+        [(i,) for i in sorted(dead)], "docid long"
+    ))
+    s = IndexSearcher(spark, d)
+    s.term_meta(["popcorn", "common3", "word7", "hello", "common9"])  # warm stats
+    with count_jobs(spark) as jobs:
+        df = s.search(NESTED_Q, k)
+        got = hits(df)
+    assert got == [(doc, sc) for doc, sc in want_all if doc not in dead][:k]
+    # one delete-set anti-join in the plan, however deep the nesting; the
+    # job count cannot show it (adaptive execution reuses an identical
+    # broadcast), so it only must not exceed the 7 jobs of a mask per clause
+    assert _initial_plan(df).count("LeftAnti") == 1
+    assert jobs["jobs"] <= 7, jobs
+
+
+def _initial_plan(df) -> str:
+    """The physical plan as planned, before adaptive re-planning."""
+    return df._jdf.queryExecution().executedPlan().inputPlan().toString()
