@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType
 
 from ..oracle import idf as idf_f32
+from ..oracle import sloppy_phrase_freq
 from ..plans.query import (
     BooleanQuery,
     CommonTermsQuery,
@@ -268,6 +269,154 @@ def reduce_ranges(
     return run
 
 
+# -- the positions kernel: one slicer and one reducer for every position
+# scorer (exact and sloppy phrases, MultiPhrase, spans, payload-near) ------
+# Positions are cut at the same docid-range boundaries as clause postings,
+# into (rid, leaf, docids, pos[, pay], norms) binary rows — one row per
+# (block, leaf, range), never one per position — and each range sorts its
+# rows once; a per-query match function then counts matches per doc, the
+# partition-granular analogue of Lucene streaming positions docid-at-a-time
+# ("Columnar Formatted Inverted Index for Highly-Paralleled, Vectorized
+# Query Processing", ICDE 2025).
+
+
+def slice_positions(leaves_of: dict[tuple[str, str], list[tuple[int, int]]], R: int):
+    """Posting blocks (BLOCK_COLS + pos_enc [+ pay_enc]) -> position range
+    rows. leaves_of maps each (field, term) to its (leaf, offset) pairs and
+    each leaf ships pos - offset: a phrase has one leaf per slot (MultiPhrase
+    alternatives share their slot's leaf), spans and payload-near one leaf
+    per term at offset 0. Payloads ship when the frame carries pay_enc."""
+
+    def run(it):
+        from .codec import decode_block, decode_float_payloads, decode_positions
+
+        for pdf in it:
+            pay = "pay_enc" in pdf
+            rows = []
+            for r in pdf.itertuples(index=False):
+                docids, tfs = decode_block(
+                    r.docids_enc, r.tfs_enc, r.first_docid, r.count
+                )
+                if r.docbase:
+                    docids = docids + r.docbase
+                n_pos = int(tfs.sum())
+                poss = decode_positions(r.pos_enc, n_pos)
+                pays = decode_float_payloads(r.pay_enc, n_pos) if pay else None
+                drep = np.repeat(docids, tfs)
+                nrep = np.repeat(np.frombuffer(r.norms_enc, dtype=np.uint8), tfs)
+                slices = range_slices(drep, R)
+                for leaf, off in leaves_of[(r.field, r.term)]:
+                    bpos = poss - off
+                    for rid, b0, b1 in slices:
+                        rows.append(
+                            (rid, leaf, drep[b0:b1].tobytes(), bpos[b0:b1].tobytes())
+                            + ((pays[b0:b1].tobytes(),) if pay else ())
+                            + (nrep[b0:b1].tobytes(),)
+                        )
+            cols = ["rid", "leaf", "docids", "pos"] + (["pay"] if pay else [])
+            yield pd.DataFrame(rows, columns=cols + ["norms"])
+
+    return run
+
+
+def reduce_positions(match, sim: SimScorer, w: SimWeight | None, field: str):
+    """Position range rows -> (docid, score) hits; docids only when w is
+    None (a MUST_NOT clause only bans, so nothing is scored).
+
+    The rows concatenate and sort once by (docid, pos, leaf), so within a
+    doc every leaf's positions ascend. match(docids, pos, leaf, norm bytes,
+    payloads|None) over the sorted arrays returns the matching docs'
+    (docids, freq, norm bytes, factor|None); each doc's (freq, norm byte)
+    goes through the SimScorer kernel and the factor (a payload DocScore)
+    is multiplied in last."""
+
+    def run(it):
+        bufs = [p for p in it if len(p)]
+        if not bufs:
+            return
+        pdf = pd.concat(bufs, ignore_index=True) if len(bufs) > 1 else bufs[0]
+
+        def cat(col, dtype):
+            return np.concatenate([np.frombuffer(b, dtype=dtype) for b in pdf[col]])
+
+        d = cat("docids", np.int64)
+        p = cat("pos", np.int64)
+        lf = np.repeat(pdf["leaf"].to_numpy(), [len(b) // 8 for b in pdf["docids"]])
+        order = np.lexsort((lf, p, d))
+        pay = cat("pay", np.float32)[order] if "pay" in pdf else None
+        docids, freq, nb, factor = match(
+            d[order], p[order], lf[order], cat("norms", np.uint8)[order], pay
+        )
+        if not len(docids):
+            return
+        if w is None:
+            yield pd.DataFrame({"docid": docids})
+            return
+        score = sim.score(w, freq, nb, field)
+        if factor is not None:
+            score = (score * factor).astype(np.float32)
+        yield pd.DataFrame({"docid": docids, "score": score})
+
+    return run
+
+
+def exact_phrase_match(n: int):
+    """ExactPhraseScorer counting: an alignment is a (doc, pos - offset)
+    that all n slot leaves reach (distinct leaves counted, so repeated
+    alternatives count once); phraseFreq = alignments per doc."""
+
+    def match(d, p, lf, nb, _pay):
+        new_pos = np.r_[True, (d[1:] != d[:-1]) | (p[1:] != p[:-1])]
+        new_leaf = new_pos | np.r_[True, lf[1:] != lf[:-1]]
+        starts = np.nonzero(new_pos)[0]
+        full = np.add.reduceat(new_leaf.astype(np.int64), starts) == n
+        docs, freq = np.unique(d[starts[full]], return_counts=True)
+        return docs, freq.astype(np.float32), nb[np.searchsorted(d, docs)], None
+
+    return match
+
+
+def sloppy_phrase_match(n: int, slop: int):
+    """SloppyPhraseScorer per doc over the n slot leaves' positions
+    (oracle.sloppy_phrase_freq; a doc missing a slot scores freq 0)."""
+
+    def freq_of(p, lf, _pay):
+        per: list[list[int]] = [[] for _ in range(n)]
+        for pos, leaf in zip(p.tolist(), lf.tolist()):
+            per[leaf].append(pos)
+        return sloppy_phrase_freq(per, [0] * n, slop), None
+
+    return per_doc(freq_of)
+
+
+def per_doc(freq_of):
+    """A reduce_positions match from a per-document function: freq_of(pos,
+    leaf, payloads|None) over one doc's sorted rows -> (freq, factor|None);
+    a freq of 0 drops the doc."""
+
+    def match(d, p, lf, nb, pay):
+        starts = np.nonzero(np.r_[True, d[1:] != d[:-1]])[0]
+        ends = np.r_[starts[1:], len(d)]
+        hit, freqs, factors = [], [], []
+        for g0, g1 in zip(starts, ends):
+            freq, factor = freq_of(
+                p[g0:g1], lf[g0:g1], None if pay is None else pay[g0:g1]
+            )
+            if freq > 0:
+                hit.append(g0)
+                freqs.append(freq)
+                factors.append(factor)
+        hit = np.array(hit, dtype=np.int64)
+        return (
+            d[hit],
+            np.array(freqs, dtype=np.float32),
+            nb[hit],
+            None if pay is None else np.array(factors, dtype=np.float32),
+        )
+
+    return match
+
+
 class IndexSearcher:
     """Searcher over one or more index segments.
 
@@ -351,9 +500,10 @@ class IndexSearcher:
         # CachingWrapperFilter's per-searcher docid-set cache
         self._filter_cache: dict = {}
         # below this many postings saved, a planning step costs more (its
-        # extra jobs) than the decode it avoids: conjunction skipping and
-        # the phrase gather path engage above it; every boolean and DisMax
-        # combines in the range reducer whatever the volume
+        # extra jobs) than the decode it avoids: conjunction skipping (of
+        # boolean, phrase and span blocks) engages above it; every boolean
+        # and DisMax combines in the range reducer, and every phrase and
+        # span matches in the positions kernel, whatever the volume
         self.prune_min_postings = prune_min_postings
         # Block-max WAND has a HIGHER engage threshold than the other
         # adaptive guards: it costs 2 extra jobs (block-bound probe +
@@ -1202,8 +1352,9 @@ class IndexSearcher:
         Every matchable term clause, and every term MUST_NOT clause, scores
         in one block pass (restricted to the rarest MUST term's docid
         ranges; block-max pruned when `wand`); a phrase clause runs its
-        phrase scorer with its weight and any other sub is scored on its
-        own, unmasked — scores() applies liveDocs once per query. With one
+        phrase scorer with its weight (a MUST_NOT phrase without one: it
+        only matches) and any other sub is scored on its own, unmasked —
+        scores() applies liveDocs once per query. With one
         row source and no MUST_NOT clause every doc has one row per clause
         inside one task, so the reducer runs in the scoring tasks; anything
         else meets in one coalescable shuffle on the range id. Each range
@@ -1248,9 +1399,13 @@ class IndexSearcher:
             sources.append((sc.select("docid", "score"), slice_scored(i, R)))
         for j, c in enumerate(banned):
             if not isinstance(c, TermQuery):
-                sources.append(
-                    (self._scores_raw(c).select("docid"), slice_scored(n + j, R))
+                # a banned phrase only matches: its docids, never a score
+                ids = (
+                    self._phrase_scores(c, None)
+                    if self._slots(c)
+                    else self._scores_raw(c)
                 )
+                sources.append((ids.select("docid"), slice_scored(n + j, R)))
         k = prune_k if self._deleted_docids() is None else None
         reduce = reduce_ranges(R, n, n_must, need_should, coord, tie, k)
         # one row source: a single term's blocks or a single scored clause
@@ -1377,27 +1532,23 @@ class IndexSearcher:
         return rare_blocks.unionByName(pruned)
 
     # -- phrase scoring --------------------------------------------------------
-    def _phrase_scores(self, q, w: SimWeight) -> DataFrame:
-        """Phrase / MultiPhrase scorer, relational-first.
+    def _phrase_scores(self, q, w: SimWeight | None) -> DataFrame:
+        """Phrase / MultiPhrase scorer through the positions kernel.
 
-        Exact (slop=0): decode (docid, clause, pos - queryOffset) rows for
-        the phrase terms' blocks (conjunction-pruned to the rarest
-        single-term slot's docid ranges), then alignment = groupBy(docid,
-        basePos) having all clauses, phraseFreq = alignments per doc
-        (ExactPhraseScorer.cs). Sloppy (slop>0): candidate docs containing
-        every clause gather their adjusted position lists and run the
-        SloppyPhraseScorer merge per doc (few docs survive the conjunction;
-        the loop is per-doc, not per-row of the corpus). MultiPhraseQuery
-        (Search/MultiPhraseQuery.cs): a slot with several alternative terms
-        maps them all to the same clause id — exactly
-        UnionDocsAndPositionsEnum's position union. Scoring: w is the
+        Each slot is one leaf whose terms ship pos - queryOffset (blocks
+        conjunction-pruned to the rarest single-term slot's docid ranges),
+        so an alignment is a (doc, position) that every leaf reaches.
+        MultiPhraseQuery (Search/MultiPhraseQuery.cs): a slot's alternative
+        terms share its leaf — exactly UnionDocsAndPositionsEnum's position
+        union. Exact (slop=0): phraseFreq = alignments per doc, counted
+        vectorized (ExactPhraseScorer.cs); sloppy: the SloppyPhraseScorer
+        merge per doc (oracle.sloppy_phrase_freq). Scoring: w is the
         phrase's SimWeight over every (slot, term) pair in declaration order
         (MultiPhraseWeight allTermStats); each doc's (phraseFreq, norm byte)
         goes through the SimScorer kernel — every Similarity scores every
         Scorer in the reference (SimilarityBase.cs Score(stats, freq,
-        docLen))."""
+        docLen)). w=None (a MUST_NOT phrase) yields the matching docids."""
         arrays = self._slots(q)
-        offsets = list(q.offsets)
         if not arrays:
             return self._empty_hits()
         if any(
@@ -1410,274 +1561,41 @@ class IndexSearcher:
             )
         if not self._matchable(q):
             return self._empty_hits()
-        flat = [(slot, t) for slot, arr in enumerate(arrays) for t in arr]
-        keys = [(q.field, t) for _slot, t in flat]
-        dfs = self.doc_freqs(set(keys))
-        live_keys = sorted({k for k in keys if dfs[k] > 0})
-        blocks = self._blocks_for(live_keys)
-        single_keys = [
-            (q.field, arr[0])
-            for arr in arrays
-            if len(arr) == 1 and dfs[(q.field, arr[0])] > 0
-        ]
+        dfs = self.doc_freqs(set(self._leaf_keys(q)))
+        leaves_of: dict[tuple[str, str], list[tuple[int, int]]] = {}
+        for slot, arr in enumerate(arrays):
+            for t in arr:
+                if dfs[(q.field, t)] > 0:
+                    leaves_of.setdefault((q.field, t), []).append(
+                        (slot, q.offsets[slot])
+                    )
+        blocks = self._blocks_for(sorted(leaves_of))
+        # a matchable phrase's single-term slots are all present
+        single_keys = [(q.field, arr[0]) for arr in arrays if len(arr) == 1]
         if single_keys:
             blocks = self._conjunction_prune(blocks, single_keys)
-        by_term: dict[str, list[tuple[int, int]]] = {}
-        for slot, t in flat:
-            if dfs[(q.field, t)] > 0:
-                by_term.setdefault(t, []).append((slot, offsets[slot]))
+        n, slop = len(arrays), int(q.slop)
+        match = exact_phrase_match(n) if slop == 0 else sloppy_phrase_match(n, slop)
+        return self._position_hits(blocks, leaves_of, match, w, q.field)
 
-        # hot x hot: when no rare single-term slot bounds the candidate set,
-        # the per-position-row shuffle below is O(total positions of all
-        # matching terms). Switch to the bulk-scorer shape (VERDICT r02
-        # #2): docid-range-sliced BINARY position sub-arrays (O(blocks)
-        # shuffle rows), evaluated per range in mapInPandas — Lucene
-        # streams positions docid-at-a-time under the conjunction; this is
-        # the partition-granular analogue. The rule mirrors
-        # _conjunction_prune's own pay-off condition: gather ONLY when the
-        # rare-slot prune actually bounds it.
-        mode = getattr(self, "phrase_mode", "auto")
-        rare_df = min((dfs[k] for k in single_keys), default=None)
-        total_df = sum(dfs[k] for k in set(keys))
-        prune_bounds = rare_df is not None and (
-            total_df - rare_df
-        ) >= max(rare_df * 4, self.prune_min_postings)
-        use_bulk = len(arrays) <= 63 and (
-            mode == "bulk" or (mode == "auto" and not prune_bounds)
-        )
-        if use_bulk:
-            return self._phrase_scores_bulk(
-                blocks, by_term, len(arrays), int(q.slop), q.field, w
-            )
-
-        def expand(it):
-            from .codec import decode_block, decode_positions
-
-            for pdf in it:
-                outs = []
-                for r in pdf.itertuples(index=False):
-                    docids, tfs = decode_block(
-                        r.docids_enc, r.tfs_enc, r.first_docid, r.count
-                    )
-                    if r.docbase:
-                        docids = docids + r.docbase
-                    nbytes = np.frombuffer(r.norms_enc, dtype=np.uint8)
-                    poss = decode_positions(r.pos_enc, int(tfs.sum()))
-                    drep = np.repeat(docids, tfs)
-                    nrep = np.repeat(nbytes, tfs).astype(np.int16)
-                    for cid, off in by_term[r.term]:
-                        outs.append(
-                            pd.DataFrame(
-                                {
-                                    "docid": drep,
-                                    "clause": np.int32(cid),
-                                    "bpos": poss - off,
-                                    "norm_byte": nrep,
-                                }
-                            )
-                        )
-                yield pd.concat(outs, ignore_index=True) if outs else pd.DataFrame(
-                    {
-                        "docid": pd.Series(dtype="int64"),
-                        "clause": pd.Series(dtype="int32"),
-                        "bpos": pd.Series(dtype="int64"),
-                        "norm_byte": pd.Series(dtype="int16"),
-                    }
-                )
-
-        rows = blocks.select(
-            "term", "first_docid", "count", "docids_enc", "tfs_enc",
-            "norms_enc", "pos_enc", "docbase",
-        ).mapInPandas(expand, "docid long, clause int, bpos long, norm_byte short")
-
-        n = len(arrays)
-        sim, field = self.sim, q.field
-        if q.slop == 0:
-            aligned = (
-                rows.groupBy("docid", "bpos")
-                .agg(
-                    F.countDistinct("clause").alias("nc"),
-                    F.max("norm_byte").alias("nb"),
-                )
-                .filter(F.col("nc") == n)
-            )
-            pf = aligned.groupBy("docid").agg(
-                F.count("*").cast("float").alias("freq"), F.max("nb").alias("nb")
-            )
-
-            def score_freqs(it):
-                for pdf in it:
-                    freq = pdf["freq"].to_numpy(dtype=np.float32)
-                    sc = sim.score(w, freq, pdf["nb"].to_numpy(), field)
-                    yield pd.DataFrame({"docid": pdf["docid"], "score": sc})
-
-            return pf.mapInPandas(score_freqs, "docid long, score float")
-        present = (
-            rows.groupBy("docid")
-            .agg(
-                F.countDistinct("clause").alias("ncl"),
-                F.max("norm_byte").alias("nb"),
-                F.collect_list(F.struct("clause", "bpos")).alias("ps"),
-            )
-            .filter(F.col("ncl") == n)
-        )
-        slop = int(q.slop)
-
-        def sloppy(it):
-            from ..oracle import sloppy_phrase_freq
-
-            for pdf in it:
-                out_d, out_f, out_nb = [], [], []
-                for r in pdf.itertuples(index=False):
-                    per: list[list[int]] = [[] for _ in range(n)]
-                    for st in r.ps:
-                        per[int(st["clause"])].append(int(st["bpos"]))
-                    freq = sloppy_phrase_freq(per, [0] * n, slop)
-                    if freq > 0:
-                        out_d.append(int(r.docid))
-                        out_f.append(freq)
-                        out_nb.append(int(r.nb))
-                freq = np.array(out_f, dtype=np.float32)
-                yield pd.DataFrame(
-                    {
-                        "docid": np.array(out_d, dtype=np.int64),
-                        "score": sim.score(w, freq, np.array(out_nb, dtype=np.int64), field),
-                    }
-                )
-
-        return present.select("docid", "nb", "ps").mapInPandas(
-            sloppy, "docid long, score float"
-        )
-
-    def _phrase_scores_bulk(
-        self,
-        blocks: DataFrame,
-        by_term: dict[str, list[tuple[int, int]]],
-        n: int,
-        slop: int,
-        field: str,
-        w: SimWeight,
+    def _position_hits(
+        self, blocks: DataFrame, leaves_of, match, w: SimWeight | None,
+        field: str, pay: bool = False,
     ) -> DataFrame:
-        """Scale-safe phrase evaluation: positions shuffled as docid-range-
-        sliced binary sub-arrays (one row per (range, clause, block-slice),
-        never one row per position), each range evaluated vectorized.
-
-        Exact: lexsort (docid, bpos) + bitwise_or.reduceat of clause masks
-        -> alignments where every slot matched (ExactPhraseScorer counting,
-        all-numpy). Sloppy: per-doc SloppyPhraseScorer merge inside the
-        range, bounded by docs that hold every clause. Bit-identical to the
-        gather path (same freq, same float32 score chain) — asserted by
-        tests/test_phrase.py bulk-parity cases."""
-        R = self.BULK_RANGE
-        sim = self.sim
-        full_mask = (1 << n) - 1
-
-        def slice_ranges(it):
-            from .codec import decode_block, decode_positions
-
-            for pdf in it:
-                rows = []
-                for r in pdf.itertuples(index=False):
-                    docids, tfs = decode_block(
-                        r.docids_enc, r.tfs_enc, r.first_docid, r.count
-                    )
-                    if r.docbase:
-                        docids = docids + r.docbase
-                    nbytes = np.frombuffer(r.norms_enc, dtype=np.uint8)
-                    poss = decode_positions(r.pos_enc, int(tfs.sum()))
-                    drep = np.repeat(docids, tfs)
-                    nrep = np.repeat(nbytes, tfs)
-                    slices = range_slices(drep, R)
-                    for cid, off in by_term[r.term]:
-                        bpos = poss - off
-                        for rid, b0, b1 in slices:
-                            rows.append(
-                                (
-                                    rid,
-                                    cid,
-                                    drep[b0:b1].tobytes(),
-                                    bpos[b0:b1].tobytes(),
-                                    nrep[b0:b1].tobytes(),
-                                )
-                            )
-                yield pd.DataFrame(
-                    rows, columns=["rid", "clause", "docids", "bpos", "norms"]
-                )
-
-        def reduce_ranges(it):
-            from ..oracle import sloppy_phrase_freq
-
-            bufs = [p for p in it if len(p)]
-            if not bufs:
-                return
-            pdf = pd.concat(bufs, ignore_index=True) if len(bufs) > 1 else bufs[0]
-            counts = np.array([len(b) // 8 for b in pdf["docids"]], dtype=np.int64)
-            d = np.concatenate(
-                [np.frombuffer(b, dtype=np.int64) for b in pdf["docids"]]
-            )
-            p = np.concatenate(
-                [np.frombuffer(b, dtype=np.int64) for b in pdf["bpos"]]
-            )
-            nb = np.concatenate(
-                [np.frombuffer(b, dtype=np.uint8) for b in pdf["norms"]]
-            )
-            cl = np.repeat(pdf["clause"].to_numpy(), counts)
-            if slop == 0:
-                order = np.lexsort((p, d))
-                d, p, nb, cl = d[order], p[order], nb[order], cl[order]
-                grp = (d[1:] != d[:-1]) | (p[1:] != p[:-1])
-                starts = np.concatenate([[0], np.nonzero(grp)[0] + 1])
-                mask = np.bitwise_or.reduceat(
-                    (np.uint64(1) << cl.astype(np.uint64)), starts
-                )
-                full = mask == np.uint64(full_mask)
-                if not full.any():
-                    return
-                gd = d[starts][full]
-                uniq_d, freq = np.unique(gd, return_counts=True)
-                nbu = nb[np.searchsorted(d, uniq_d)]
-                sc = sim.score(w, freq.astype(np.float32), nbu, field)
-                yield pd.DataFrame({"docid": uniq_d, "score": sc})
-                return
-            # sloppy: per-doc merge over docs holding every clause
-            order = np.lexsort((p, cl, d))
-            d, p, nb, cl = d[order], p[order], nb[order], cl[order]
-            starts = np.concatenate(
-                [[0], np.nonzero(d[1:] != d[:-1])[0] + 1, [len(d)]]
-            )
-            out_d, out_f, out_nb = [], [], []
-            for g0, g1 in zip(starts[:-1], starts[1:]):
-                cmask = 0
-                for c in cl[g0:g1]:
-                    cmask |= 1 << int(c)
-                if cmask != full_mask:
-                    continue
-                per: list[list[int]] = [[] for _ in range(n)]
-                for i in range(g0, g1):
-                    per[int(cl[i])].append(int(p[i]))
-                freq = sloppy_phrase_freq(per, [0] * n, slop)
-                if freq > 0:
-                    out_d.append(int(d[g0]))
-                    out_f.append(freq)
-                    out_nb.append(int(nb[g0]))
-            if out_d:
-                freq = np.array(out_f, dtype=np.float32)
-                yield pd.DataFrame(
-                    {
-                        "docid": np.array(out_d, dtype=np.int64),
-                        "score": sim.score(w, freq, np.array(out_nb, dtype=np.int64), field),
-                    }
-                )
-
-        sliced = blocks.select(
-            "term", "first_docid", "count", "docids_enc", "tfs_enc",
-            "norms_enc", "pos_enc", "docbase",
-        ).mapInPandas(
-            slice_ranges,
-            "rid long, clause int, docids binary, bpos binary, norms binary",
+        """Hits of a position scorer: its blocks through slice_positions,
+        one coalescable shuffle on the range id, then reduce_positions."""
+        cols = BLOCK_COLS + ["pos_enc"] + (["pay_enc"] if pay else [])
+        schema = (
+            "rid long, leaf int, docids binary, pos binary, "
+            + ("pay binary, " if pay else "")
+            + "norms binary"
+        )
+        sliced = blocks.select(cols).mapInPandas(
+            slice_positions(leaves_of, self.BULK_RANGE), schema
         )
         return sliced.repartition("rid").mapInPandas(
-            reduce_ranges, "docid long, score float"
+            reduce_positions(match, self.sim, w, field),
+            "docid long" if w is None else HITS_SCHEMA,
         )
 
     def _payload_term_scores(self, q: PayloadTermQuery) -> DataFrame:

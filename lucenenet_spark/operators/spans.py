@@ -37,12 +37,11 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.query import Query
-from .search import range_slices
+from .search import per_doc
 
 Span = tuple[int, int]
 
@@ -503,11 +502,12 @@ def payload_near_scores_oracle(
 def span_scores(searcher, q: Query) -> DataFrame:
     """Engine-side: DataFrame(docid, score) for a span query.
 
-    Same shape as the sloppy-phrase scorer: decode (docid, leaf, pos) rows
-    for the tree's terms (conjunction-pruned by the required set), gather
-    per candidate doc, evaluate the span algebra per doc (few docs survive),
-    score each doc's (spanFreq, norm byte) through the searcher's SimScorer
-    with one weight over ALL leaf termStats (SpanWeight ->
+    Through the positions kernel (search.slice_positions +
+    reduce_positions), like the phrase scorer: every (field, term) leaf of
+    the tree ships its positions (blocks conjunction-pruned by the required
+    set), each doc's leaf positions run the span algebra, and the doc's
+    (spanFreq, norm byte) is scored through the searcher's SimScorer with
+    one weight over ALL leaf termStats (SpanWeight ->
     Similarity.ComputeWeight)."""
     q = expand_span_multiterm(searcher, q)
     leaves = leaf_terms(q)
@@ -521,101 +521,18 @@ def span_scores(searcher, q: Query) -> DataFrame:
         return searcher._empty_hits()
     field = keys[0][0]
     w = searcher._sim_weights([(leaves, field, q.boost)])[0]
-    sim = searcher.sim
     blocks = searcher._blocks_for(keys)
     if len(req) >= 2:
         blocks = searcher._conjunction_prune(blocks, sorted(req))
-    clause_of = {k: i for i, k in enumerate(keys)}
-    req_mask = 0
-    for k in req:
-        req_mask |= 1 << clause_of[k]
-    qq = q
-    R = searcher.BULK_RANGE
 
-    # Scale-safe gather (VERDICT r02 #2): positions are shuffled as docid-
-    # range-sliced BINARY sub-arrays — O(blocks) rows, never one row per
-    # position occurrence (the previous groupBy(docid).collect_list built
-    # per-position Spark rows; for a pure-OR tree with empty required set
-    # that was O(total positions of all matching terms)). Each range
-    # evaluates the span algebra per doc locally, emitting scored rows.
-    def slice_ranges(it):
-        from .codec import decode_block, decode_positions
+    def freq_of(p, lf, _pay):
+        pos: dict = {k: [] for k in keys}
+        for pp, leaf in zip(p.tolist(), lf.tolist()):
+            pos[keys[leaf]].append(pp)
+        return span_freq(eval_spans(q, pos)), None
 
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                docids, tfs = decode_block(
-                    r.docids_enc, r.tfs_enc, r.first_docid, r.count
-                )
-                if r.docbase:
-                    docids = docids + r.docbase
-                nbytes = np.frombuffer(r.norms_enc, dtype=np.uint8)
-                poss = decode_positions(r.pos_enc, int(tfs.sum()))
-                drep = np.repeat(docids, tfs)
-                nrep = np.repeat(nbytes, tfs)
-                leaf = clause_of[(r.field, r.term)]
-                for rid, b0, b1 in range_slices(drep, R):
-                    rows.append(
-                        (
-                            rid,
-                            leaf,
-                            drep[b0:b1].tobytes(),
-                            poss[b0:b1].tobytes(),
-                            nrep[b0:b1].tobytes(),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=["rid", "leaf", "docids", "pos", "norms"]
-            )
-
-    def reduce_ranges(it):
-        bufs = [p for p in it if len(p)]
-        if not bufs:
-            return
-        pdf = pd.concat(bufs, ignore_index=True) if len(bufs) > 1 else bufs[0]
-        counts = np.array([len(b) // 8 for b in pdf["docids"]], dtype=np.int64)
-        d = np.concatenate([np.frombuffer(b, dtype=np.int64) for b in pdf["docids"]])
-        p = np.concatenate([np.frombuffer(b, dtype=np.int64) for b in pdf["pos"]])
-        nb = np.concatenate([np.frombuffer(b, dtype=np.uint8) for b in pdf["norms"]])
-        lf = np.repeat(pdf["leaf"].to_numpy(), counts)
-        order = np.lexsort((p, lf, d))
-        d, p, nb, lf = d[order], p[order], nb[order], lf[order]
-        starts = np.concatenate([[0], np.nonzero(d[1:] != d[:-1])[0] + 1, [len(d)]])
-        out_d, out_f, out_nb = [], [], []
-        for g0, g1 in zip(starts[:-1], starts[1:]):
-            present = 0
-            for leaf in lf[g0:g1]:
-                present |= 1 << int(leaf)
-            if (present & req_mask) != req_mask:
-                continue
-            pos: dict = {k: [] for k in keys}
-            for i in range(g0, g1):
-                pos[keys[int(lf[i])]].append(int(p[i]))
-            spans = eval_spans(qq, pos)
-            if not spans:
-                continue
-            out_d.append(int(d[g0]))
-            out_f.append(span_freq(spans))
-            out_nb.append(int(nb[g0]))
-        if out_d:
-            freq = np.array(out_f, dtype=np.float32)
-            yield pd.DataFrame(
-                {
-                    "docid": np.array(out_d, dtype=np.int64),
-                    "score": sim.score(w, freq, np.array(out_nb, dtype=np.int64), field),
-                }
-            )
-
-    sliced = blocks.select(
-        "field", "term", "first_docid", "count", "docids_enc", "tfs_enc",
-        "norms_enc", "pos_enc", "docbase",
-    ).mapInPandas(
-        slice_ranges,
-        "rid long, leaf int, docids binary, pos binary, norms binary",
-    )
-    return sliced.repartition("rid").mapInPandas(
-        reduce_ranges, "docid long, score float"
-    )
+    leaves_of = {k: [(i, 0)] for i, k in enumerate(keys)}
+    return searcher._position_hits(blocks, leaves_of, per_doc(freq_of), w, field)
 
 
 def span_search(searcher, q: Query, k: int = 10) -> DataFrame:
@@ -630,10 +547,9 @@ def span_search(searcher, q: Query, k: int = 10) -> DataFrame:
 def payload_near_scores(searcher, q: PayloadNearQuery) -> DataFrame:
     """DataFrame(docid, score) for a PayloadNearQuery (flat term clauses).
 
-    Same scale-safe shape as span_scores — positions AND the aligned f32
-    payload channel ship as docid-range-sliced binary sub-arrays (O(blocks)
-    shuffle rows), evaluated per range. The candidate set is conjunction-
-    pruned on all clauses (a near requires every clause).
+    Through the positions kernel like span_scores, with the aligned f32
+    payload channel sliced beside the positions. The candidate set is
+    conjunction-pruned on all clauses (a near requires every clause).
 
     Scored under EVERY similarity: PayloadNearSpanScorer routes the span
     score through the active SimScorer (Search/Payloads/PayloadNearQuery.cs;
@@ -672,112 +588,28 @@ def payload_near_scores(searcher, q: PayloadNearQuery) -> DataFrame:
         return searcher._empty_hits()
     field = keys[0][0]
     w = searcher._sim_weights([(clauses, field, q.boost)])[0]
-    sim = searcher.sim
     blocks = searcher._blocks_for(keys)
     if len(keys) >= 2:
         blocks = searcher._conjunction_prune(blocks, keys)
     key_of = {k: i for i, k in enumerate(keys)}
     clause_keys = [key_of[c] for c in clauses]
-    req_mask = 0
-    for k in keys:
-        req_mask |= 1 << key_of[k]
     slop, fn = q.slop, q.function
     if fn not in ("avg", "min", "max"):
         raise ValueError(f"unknown payload function {fn!r}")
-    R = searcher.BULK_RANGE
 
-    def slice_ranges(it):
-        from .codec import decode_block, decode_float_payloads, decode_positions
+    def freq_of(p, lf, pay):
+        pos_k: list[list[int]] = [[] for _ in keys]
+        pay_k: list[dict] = [{} for _ in keys]
+        for pp, leaf, v in zip(p.tolist(), lf.tolist(), pay.tolist()):
+            pos_k[leaf].append(pp)
+            pay_k[leaf][pp] = v
+        children = [[(pp, pp + 1) for pp in pos_k[ck]] for ck in clause_keys]
+        payload_of = [pay_k[ck] for ck in clause_keys]
+        return payload_near_doc_score(children, slop, payload_of, fn)
 
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                docids, tfs = decode_block(
-                    r.docids_enc, r.tfs_enc, r.first_docid, r.count
-                )
-                if r.docbase:
-                    docids = docids + r.docbase
-                nbytes = np.frombuffer(r.norms_enc, dtype=np.uint8)
-                n_pos = int(tfs.sum())
-                poss = decode_positions(r.pos_enc, n_pos)
-                pays = decode_float_payloads(r.pay_enc, n_pos)
-                drep = np.repeat(docids, tfs)
-                nrep = np.repeat(nbytes, tfs)
-                leaf = key_of[(r.field, r.term)]
-                for rid, b0, b1 in range_slices(drep, R):
-                    rows.append(
-                        (
-                            rid,
-                            leaf,
-                            drep[b0:b1].tobytes(),
-                            poss[b0:b1].tobytes(),
-                            pays[b0:b1].astype(np.float32).tobytes(),
-                            nrep[b0:b1].tobytes(),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=["rid", "leaf", "docids", "pos", "pay", "norms"]
-            )
-
-    def reduce_ranges(it):
-        bufs = [p for p in it if len(p)]
-        if not bufs:
-            return
-        pdf = pd.concat(bufs, ignore_index=True) if len(bufs) > 1 else bufs[0]
-        counts = np.array([len(b) // 8 for b in pdf["docids"]], dtype=np.int64)
-        d = np.concatenate([np.frombuffer(b, dtype=np.int64) for b in pdf["docids"]])
-        p = np.concatenate([np.frombuffer(b, dtype=np.int64) for b in pdf["pos"]])
-        pv = np.concatenate([np.frombuffer(b, dtype=np.float32) for b in pdf["pay"]])
-        nb = np.concatenate([np.frombuffer(b, dtype=np.uint8) for b in pdf["norms"]])
-        lf = np.repeat(pdf["leaf"].to_numpy(), counts)
-        order = np.lexsort((p, lf, d))
-        d, p, pv, nb, lf = d[order], p[order], pv[order], nb[order], lf[order]
-        starts = np.concatenate([[0], np.nonzero(d[1:] != d[:-1])[0] + 1, [len(d)]])
-        out_d, out_f, out_nb, out_ds = [], [], [], []
-        for g0, g1 in zip(starts[:-1], starts[1:]):
-            present = 0
-            for leaf in lf[g0:g1]:
-                present |= 1 << int(leaf)
-            if (present & req_mask) != req_mask:
-                continue
-            pos_k: list[list[int]] = [[] for _ in keys]
-            pay_k: list[dict] = [{} for _ in keys]
-            for i in range(g0, g1):
-                ki = int(lf[i])
-                pos_k[ki].append(int(p[i]))
-                pay_k[ki][int(p[i])] = float(pv[i])
-            children = [
-                [(pp, pp + 1) for pp in pos_k[ck]] for ck in clause_keys
-            ]
-            payload_of = [pay_k[ck] for ck in clause_keys]
-            freq, ds = payload_near_doc_score(children, slop, payload_of, fn)
-            if freq <= 0:
-                continue
-            out_d.append(int(d[g0]))
-            out_f.append(freq)
-            out_nb.append(int(nb[g0]))
-            out_ds.append(ds)
-        if out_d:
-            freq = np.array(out_f, dtype=np.float32)
-            span = sim.score(w, freq, np.array(out_nb, dtype=np.int64), field)
-            yield pd.DataFrame(
-                {
-                    "docid": np.array(out_d, dtype=np.int64),
-                    "score": (span * np.array(out_ds, dtype=np.float32)).astype(
-                        np.float32
-                    ),
-                }
-            )
-
-    sliced = blocks.select(
-        "field", "term", "first_docid", "count", "docids_enc", "tfs_enc",
-        "norms_enc", "pos_enc", "pay_enc", "docbase",
-    ).mapInPandas(
-        slice_ranges,
-        "rid long, leaf int, docids binary, pos binary, pay binary, norms binary",
-    )
-    return sliced.repartition("rid").mapInPandas(
-        reduce_ranges, "docid long, score float"
+    leaves_of = {k: [(i, 0)] for k, i in key_of.items()}
+    return searcher._position_hits(
+        blocks, leaves_of, per_doc(freq_of), w, field, pay=True
     )
 
 

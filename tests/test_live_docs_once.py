@@ -5,7 +5,9 @@ until merged away, so masking once cannot change a live doc's score.
 """
 import shutil
 
+from lucenenet_spark import oracle
 from lucenenet_spark.operators.search import IndexSearcher
+from lucenenet_spark.plans.parser import parse
 from lucenenet_spark.plans.query import BooleanQuery, PhraseQuery, TermQuery
 
 from .conftest import count_jobs, hits
@@ -39,6 +41,35 @@ def test_nested_boolean_masks_deletes_once(spark, index_dir, tmp_path):
     # broadcast), so it only must not exceed the 7 jobs of a mask per clause
     assert _initial_plan(df).count("LeftAnti") == 1
     assert jobs["jobs"] <= 7, jobs
+
+
+def test_banned_phrase_is_matched_not_scored(spark, index_dir, oracle_index, corpus_pdf):
+    """A MUST_NOT phrase only bans: the positions kernel emits its docids
+    and nothing scores it, so the plan has no scoring pass of its own (one
+    mapInPandas fewer than scoring it as a one-clause boolean)."""
+    from lucenenet_spark.functions.analysis import tokenize_text
+
+    # the adjacent pair found in the most docs, so the ban removes several
+    docs_of = {}
+    for text in corpus_pdf["text"]:
+        toks = tokenize_text(text)
+        for pair in set(zip(toks, toks[1:])):
+            docs_of[pair] = docs_of.get(pair, 0) + 1
+    t1, t2 = max(sorted(docs_of), key=docs_of.get)
+    q = parse(f'+{t1} -"{t1} {t2}"')
+    assert isinstance(q.must_not[0], PhraseQuery)
+    df = IndexSearcher(spark, index_dir).search(q, 20)
+    want = oracle.top_k(
+        oracle.sim_mixed_boolean_scores(
+            oracle_index, "bm25", must=[t1], must_not=[("phrase", [t1, t2], 0)]
+        ),
+        20,
+    )
+    assert want and hits(df) == want
+    assert len(want) < len(oracle.term_scores(oracle_index, t1))
+    # term slicer, phrase slicer, phrase match (docids only), ban slicer,
+    # reducer
+    assert _initial_plan(df).count("MapInPandas") == 5
 
 
 def _initial_plan(df) -> str:

@@ -130,28 +130,28 @@ def test_parser_phrase_forms():
     assert parse('"the of"') == BooleanQuery()  # all-stopword phrase: no clause
 
 
-# -- bulk (range-sliced) phrase path: bit parity with the gather path --------
+# -- the positions kernel under the conjunction prune ----------------------
 
 
 def test_phrase_bulk_gather_parity(spark, index_dir, oracle_index, corpus_pdf):
-    """The hot-x-hot bulk path (docid-range-sliced binary shuffle) must be
-    bit-identical to the per-position gather path and the oracle, exact and
-    sloppy, incl. multi-phrase slots."""
+    """Every phrase scores through the positions kernel; with every
+    adaptive threshold dropped (prune_min_postings=0) a rare slot's
+    conjunction prune cuts the blocks first. Both searchers must be
+    bit-identical to the oracle, exact and sloppy, incl. multi-phrase
+    slots."""
     from lucenenet_spark.operators.search import IndexSearcher
     from lucenenet_spark.plans.query import MultiPhraseQuery
 
-    bulk = IndexSearcher(spark, index_dir)
-    bulk.phrase_mode = "bulk"
-    gather = IndexSearcher(spark, index_dir)
-    gather.phrase_mode = "gather"
+    default = IndexSearcher(spark, index_dir)
+    pruned = IndexSearcher(spark, index_dir, prune_min_postings=0)
     (t1, t2), (t3, t4), *_ = _phrase_pairs(corpus_pdf)
     for slop in (0, 2):
         q = PhraseQuery(terms=(t1, t2), slop=slop)
         want = oracle.top_k(
             oracle.phrase_scores(oracle_index, [t1, t2], slop=slop), 10
         )
-        assert hits(bulk.search(q, 10)) == want, ("bulk", slop)
-        assert hits(gather.search(q, 10)) == want, ("gather", slop)
+        assert hits(default.search(q, 10)) == want, ("default", slop)
+        assert hits(pruned.search(q, 10)) == want, ("pruned", slop)
         arrays = [[t1, t3] if t1 != t3 else [t1], [t2, t4] if t2 != t4 else [t2]]
         mq = MultiPhraseQuery(
             term_arrays=tuple(tuple(a) for a in arrays), slop=slop
@@ -159,7 +159,30 @@ def test_phrase_bulk_gather_parity(spark, index_dir, oracle_index, corpus_pdf):
         mwant = oracle.top_k(
             oracle.multi_phrase_scores(oracle_index, arrays, slop=slop), 10
         )
-        assert hits(bulk.search(mq, 10)) == mwant, ("bulk-multi", slop)
+        assert hits(default.search(mq, 10)) == mwant, ("default-multi", slop)
+        assert hits(pruned.search(mq, 10)) == mwant, ("pruned-multi", slop)
+
+
+def test_phrase_longer_than_63_slots(searcher, oracle_index, corpus_pdf):
+    """A phrase of more than 63 slots (the old per-slot uint64 bitmask's
+    limit): the first 70 words of the longest turn, parsed so the slot
+    positions keep the analyzer's stopword gaps."""
+    from lucenenet_spark.functions.analysis import tokenize_text
+
+    longest = max(corpus_pdf["text"], key=lambda t: len(tokenize_text(t)))
+    q = parse('"' + " ".join(longest.split()[:70]) + '"')
+    assert isinstance(q, PhraseQuery) and len(q.terms) > 63
+    for slop in (0, 2):
+        want = oracle.top_k(
+            oracle.phrase_scores(
+                oracle_index, list(q.terms), offsets=list(q.offsets), slop=slop
+            ),
+            10,
+        )
+        got = hits(searcher.search(PhraseQuery(
+            terms=q.terms, positions=q.positions, slop=slop
+        ), 10))
+        assert got == want and got, slop
 
 
 # -- MultiPhraseQuery (Search/MultiPhraseQuery.cs) ---------------------------
