@@ -45,7 +45,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType
 
-from ..oracle import idf as idf_f32
 from ..oracle import sloppy_phrase_freq
 from ..plans.query import (
     BooleanQuery,
@@ -270,7 +269,7 @@ def reduce_ranges(
 
 
 # -- the positions kernel: one slicer and one reducer for every position
-# scorer (exact and sloppy phrases, MultiPhrase, spans, payload-near) ------
+# scorer (exact and sloppy phrases, MultiPhrase, spans, payload queries) ---
 # Positions are cut at the same docid-range boundaries as clause postings,
 # into (rid, leaf, docids, pos[, pay], norms) binary rows — one row per
 # (block, leaf, range), never one per position — and each range sorts its
@@ -284,8 +283,8 @@ def slice_positions(leaves_of: dict[tuple[str, str], list[tuple[int, int]]], R: 
     """Posting blocks (BLOCK_COLS + pos_enc [+ pay_enc]) -> position range
     rows. leaves_of maps each (field, term) to its (leaf, offset) pairs and
     each leaf ships pos - offset: a phrase has one leaf per slot (MultiPhrase
-    alternatives share their slot's leaf), spans and payload-near one leaf
-    per term at offset 0. Payloads ship when the frame carries pay_enc."""
+    alternatives share their slot's leaf), spans and payload queries one
+    leaf per term at offset 0. Payloads ship when the frame carries pay_enc."""
 
     def run(it):
         from .codec import decode_block, decode_float_payloads, decode_positions
@@ -326,9 +325,10 @@ def reduce_positions(match, sim: SimScorer, w: SimWeight | None, field: str):
     The rows concatenate and sort once by (docid, pos, leaf), so within a
     doc every leaf's positions ascend. match(docids, pos, leaf, norm bytes,
     payloads|None) over the sorted arrays returns the matching docs'
-    (docids, freq, norm bytes, factor|None); each doc's (freq, norm byte)
-    goes through the SimScorer kernel and the factor (a payload DocScore)
-    is multiplied in last."""
+    (docids, freq|None, norm bytes, factor|None); each doc's (freq, norm
+    byte) goes through the SimScorer kernel and the factor (a payload
+    DocScore) is multiplied in last. A freq of None scores the factor
+    alone (a payload score without its span part)."""
 
     def run(it):
         bufs = [p for p in it if len(p)]
@@ -352,9 +352,12 @@ def reduce_positions(match, sim: SimScorer, w: SimWeight | None, field: str):
         if w is None:
             yield pd.DataFrame({"docid": docids})
             return
-        score = sim.score(w, freq, nb, field)
-        if factor is not None:
-            score = (score * factor).astype(np.float32)
+        if freq is None:
+            score = factor
+        else:
+            score = sim.score(w, freq, nb, field)
+            if factor is not None:
+                score = (score * factor).astype(np.float32)
         yield pd.DataFrame({"docid": docids, "score": score})
 
     return run
@@ -372,6 +375,54 @@ def exact_phrase_match(n: int):
         full = np.add.reduceat(new_leaf.astype(np.int64), starts) == n
         docs, freq = np.unique(d[starts[full]], return_counts=True)
         return docs, freq.astype(np.float32), nb[np.searchsorted(d, docs)], None
+
+    return match
+
+
+def payload_term_match(fn: str, include_span: bool):
+    """PayloadTermQuery over one term's leaf (Search/Payloads/
+    PayloadTermQuery.cs). Each occurrence is a (p, p+1) span, so every match
+    adds sloppyFreq(1) = 0.5f (Spans/SpanScorer.cs:79-95; ComputeSlopFactor
+    is 1/(distance+1) in every family): freq = 0.5*occurrences, exact in
+    float32 below 2^25. The factor folds the doc's 4-byte float payloads
+    (PayloadHelper.DecodeSingle; NaN = no payload at that position) through
+    the PayloadFunction in position order (ProcessPayload runs once per span
+    in doc order):
+      avg — payloadScore += factor, DocScore = payloadScore/seen
+            (AveragePayloadFunction.cs; a strict left-to-right float32
+            fold, swept one occurrence-column at a time across the docs)
+      min/max — running min/max, order-independent
+            (Min/MaxPayloadFunction.cs; vectorized reduceat)
+    No payload seen -> DocScore = 1. include_span=False returns freq None,
+    so the doc scores DocScore alone (PayloadTermQuery.cs GetScore)."""
+
+    def match(d, _p, _lf, nb, pay):
+        starts = np.nonzero(np.r_[True, d[1:] != d[:-1]])[0]
+        tfs = np.diff(np.r_[starts, len(d)])
+        valid = ~np.isnan(pay)
+        m = len(starts)
+        if fn == "avg":
+            # payloadScore accumulates per match in C#: column j holds
+            # every doc's j-th occurrence
+            acc = np.zeros(m, dtype=np.float32)
+            cnt = np.zeros(m, dtype=np.int64)
+            for j in range(int(tfs.max())):
+                live = np.nonzero(tfs > j)[0]
+                v = pay[starts[live] + j]
+                ok = valid[starts[live] + j]
+                upd = live[ok]
+                acc[upd] = (acc[upd] + v[ok]).astype(np.float32)
+                cnt[upd] += 1
+            factor = acc / cnt.astype(np.float32)
+        else:
+            fill = np.float32(np.inf if fn == "min" else -np.inf)
+            red = np.minimum if fn == "min" else np.maximum
+            filled = np.where(valid, pay, fill).astype(np.float32)
+            factor = red.reduceat(filled, starts)
+            cnt = np.add.reduceat(valid.astype(np.int64), starts)
+        factor = np.where(cnt > 0, factor, np.float32(1.0)).astype(np.float32)
+        freq = tfs.astype(np.float32) * np.float32(0.5) if include_span else None
+        return d[starts], freq, nb[starts], factor
 
     return match
 
@@ -435,7 +486,6 @@ class IndexSearcher:
         spark: SparkSession,
         index_dir: str | list[str],
         prune_min_postings: int = 1 << 16,
-        wand_min_postings: int | None = None,
         similarity: str = "bm25",
         mu: float = 2000.0,
         lam: float = 0.1,
@@ -484,13 +534,10 @@ class IndexSearcher:
                     fields_info[f] = dict(info)
         if FIELD not in fields_info:
             fields_info[FIELD] = {"omit_norms": False, "sum_ttf": sum_ttf}
-        self.fields_info = fields_info
         # pluggable similarity, a pure query-time switch: norm bytes are
         # similarity-independent (SURVEY §4.2). The SimScorer is the only
         # code that knows the family (operators/similarity.py).
         self.similarity = similarity
-        self.mu = float(mu)  # LMDirichletSimilarity default mu=2000
-        self.lam = float(lam)  # LMJelinekMercerSimilarity lambda
         self.sim = SimScorer(
             similarity, mu, lam, k1=self.k1, b=self.b, max_doc=self.max_doc,
             avgdl=self.avgdl, fields_info=fields_info,
@@ -513,9 +560,7 @@ class IndexSearcher:
         # cluster the same rule holds per-executor-job overhead. Callers
         # that customize prune_min_postings (tests forcing the path) keep
         # the old coupled behavior.
-        if wand_min_postings is not None:
-            self.wand_min_postings = wand_min_postings
-        elif prune_min_postings == (1 << 16):
+        if prune_min_postings == (1 << 16):
             self.wand_min_postings = 1 << 22
         else:
             self.wand_min_postings = prune_min_postings
@@ -1292,18 +1337,10 @@ class IndexSearcher:
         # machinery, which already honors the active similarity
         from . import spans as _spans
 
-        if isinstance(
-            q,
-            (
-                _spans.SpanTermQuery,
-                _spans.SpanOrQuery,
-                _spans.SpanNearQuery,
-                _spans.SpanFirstQuery,
-                _spans.SpanNotQuery,
-                _spans.SpanMultiTermQueryWrapper,
-            ),
-        ):
+        if isinstance(q, _spans.SpanQuery):
             return _spans.span_scores(self, q)
+        if isinstance(q, _spans.PayloadNearQuery):
+            return _spans.payload_near_scores(self, q)
         raise TypeError(f"unsupported query node {type(q).__name__}")
 
     def _empty_hits(self) -> DataFrame:
@@ -1352,9 +1389,9 @@ class IndexSearcher:
         Every matchable term clause, and every term MUST_NOT clause, scores
         in one block pass (restricted to the rarest MUST term's docid
         ranges; block-max pruned when `wand`); a phrase clause runs its
-        phrase scorer with its weight (a MUST_NOT phrase without one: it
-        only matches) and any other sub is scored on its own, unmasked —
-        scores() applies liveDocs once per query. With one
+        phrase scorer with its weight (a MUST_NOT phrase or span without
+        one: it only matches) and any other sub is scored on its own,
+        unmasked — scores() applies liveDocs once per query. With one
         row source and no MUST_NOT clause every doc has one row per clause
         inside one task, so the reducer runs in the scoring tasks; anything
         else meets in one coalescable shuffle on the range id. Each range
@@ -1397,14 +1434,18 @@ class IndexSearcher:
                 else self._scores_raw(c)
             )
             sources.append((sc.select("docid", "score"), slice_scored(i, R)))
+        from . import spans as _spans
+
         for j, c in enumerate(banned):
             if not isinstance(c, TermQuery):
-                # a banned phrase only matches: its docids, never a score
-                ids = (
-                    self._phrase_scores(c, None)
-                    if self._slots(c)
-                    else self._scores_raw(c)
-                )
+                # a banned phrase or span only matches: its docids, never
+                # a score
+                if self._slots(c):
+                    ids = self._phrase_scores(c, None)
+                elif isinstance(c, _spans.SpanQuery):
+                    ids = _spans.span_scores(self, c, scored=False)
+                else:
+                    ids = self._scores_raw(c)
                 sources.append((ids.select("docid"), slice_scored(n + j, R)))
         k = prune_k if self._deleted_docids() is None else None
         reduce = reduce_ranges(R, n, n_must, need_should, coord, tie, k)
@@ -1583,44 +1624,28 @@ class IndexSearcher:
         field: str, pay: bool = False,
     ) -> DataFrame:
         """Hits of a position scorer: its blocks through slice_positions,
-        one coalescable shuffle on the range id, then reduce_positions."""
-        cols = BLOCK_COLS + ["pos_enc"] + (["pay_enc"] if pay else [])
+        one coalescable shuffle on the range id, then reduce_positions.
+        With one (field, term) key every doc's positions sit in one block
+        row (salts and segments split docids into disjoint ranges), so the
+        reducer runs in the slicing tasks, with no shuffle."""
+        frame = blocks.select(BLOCK_COLS + ["pos_enc"] + (["pay_enc"] if pay else []))
+        slicer = slice_positions(leaves_of, self.BULK_RANGE)
+        reduce = reduce_positions(match, self.sim, w, field)
+        out = "docid long" if w is None else HITS_SCHEMA
+        if len(leaves_of) == 1:
+            return frame.mapInPandas(lambda it: reduce(slicer(it)), out)
         schema = (
             "rid long, leaf int, docids binary, pos binary, "
             + ("pay binary, " if pay else "")
             + "norms binary"
         )
-        sliced = blocks.select(cols).mapInPandas(
-            slice_positions(leaves_of, self.BULK_RANGE), schema
-        )
-        return sliced.repartition("rid").mapInPandas(
-            reduce_positions(match, self.sim, w, field),
-            "docid long" if w is None else HITS_SCHEMA,
-        )
+        sliced = frame.mapInPandas(slicer, schema)
+        return sliced.repartition("rid").mapInPandas(reduce, out)
 
     def _payload_term_scores(self, q: PayloadTermQuery) -> DataFrame:
-        """PayloadTermQuery scorer (Search/Payloads/PayloadTermQuery.cs).
-
-        Span score: each term occurrence is a (p, p+1) span, so every match
-        contributes sloppyFreq(1) = 0.5f (Spans/SpanScorer.cs:79-95 +
-        BM25Similarity sloppy scorer ComputeSlopFactor) — freq = 0.5*tf,
-        exact in float32 for tf < 2^25, then the usual w*freq/(freq+norm)
-        kernel. Payload score: the per-occurrence 4-byte float payload
-        (PayloadHelper.DecodeSingle) folds through the chosen
-        PayloadFunction in position order (ProcessPayload is called once per
-        span in doc order):
-          avg — payloadScore += factor, DocScore = payloadScore/seen
-                (AveragePayloadFunction.cs; strict left-to-right float32
-                fold, emulated with an O(max_tf) vectorized column sweep)
-          min/max — running min/max, order-independent
-                (Min/MaxPayloadFunction.cs; vectorized reduceat)
-        No payloads seen -> DocScore = 1. Final score = f32(spanScore *
-        DocScore), or DocScore alone when include_span_score=False
-        (PayloadTermQuery.cs GetScore). The span score is the ACTIVE
-        similarity's kernel at that freq (Similarity.SimScorer
-        ComputeSlopFactor is 1/(distance+1) in every family), the payload
-        factor multiplied in last. One job: the term's blocks decode and
-        score in a single mapInPandas — no shuffle before top-k."""
+        """PayloadTermQuery (Search/Payloads/PayloadTermQuery.cs) in the
+        positions kernel: the term is one leaf shipping its payloads,
+        scored by payload_term_match; one key, so no shuffle."""
         for s in self.segments:
             if s["manifest"].get("payload_provider") is None:
                 raise NotImplementedError(
@@ -1630,80 +1655,17 @@ class IndexSearcher:
         key = (q.field, q.term)
         if self.doc_freqs([key])[key] == 0:
             return self._empty_hits()
-        fn, include_span = q.function, q.include_span_score
-        if fn not in ("avg", "min", "max"):
-            raise ValueError(f"unknown payload function {fn!r}")
+        if q.function not in ("avg", "min", "max"):
+            raise ValueError(f"unknown payload function {q.function!r}")
         w = self._sim_weights([([key], q.field, q.boost)])[0]
-        sim = self.sim
-
-        def score_batches(it):
-            from .codec import decode_block, decode_float_payloads
-
-            for pdf in it:
-                outs = []
-                for r in pdf.itertuples(index=False):
-                    docids, tfs = decode_block(
-                        r.docids_enc, r.tfs_enc, r.first_docid, r.count
-                    )
-                    if r.docbase:
-                        docids = docids + r.docbase
-                    n_pos = int(tfs.sum())
-                    vals = decode_float_payloads(r.pay_enc, n_pos)
-                    valid = ~np.isnan(vals)
-                    starts = np.concatenate(
-                        [[0], np.cumsum(tfs.astype(np.int64))[:-1]]
-                    )
-                    m = len(tfs)
-                    if fn == "avg":
-                        # strict left-to-right f32 fold per doc, vectorized
-                        # across the block's docs one occurrence-column at a
-                        # time (payloadScore accumulates per match in C#)
-                        acc = np.zeros(m, dtype=np.float32)
-                        cnt = np.zeros(m, dtype=np.int64)
-                        for j in range(int(tfs.max())):
-                            live = np.nonzero(tfs > j)[0]
-                            v = vals[starts[live] + j]
-                            ok = valid[starts[live] + j]
-                            upd = live[ok]
-                            acc[upd] = (acc[upd] + v[ok]).astype(np.float32)
-                            cnt[upd] += 1
-                        factor = np.where(
-                            cnt > 0,
-                            acc / cnt.astype(np.float32),
-                            np.float32(1.0),
-                        ).astype(np.float32)
-                    else:
-                        fill = np.float32(np.inf if fn == "min" else -np.inf)
-                        red = np.minimum if fn == "min" else np.maximum
-                        filled = np.where(valid, vals, fill).astype(np.float32)
-                        factor = red.reduceat(filled, starts).astype(np.float32)
-                        cnt = np.add.reduceat(
-                            valid.astype(np.int64), starts
-                        )
-                        factor = np.where(
-                            cnt > 0, factor, np.float32(1.0)
-                        ).astype(np.float32)
-                    if include_span:
-                        freq = tfs.astype(np.float32) * np.float32(0.5)
-                        nbytes = np.frombuffer(r.norms_enc, dtype=np.uint8)
-                        span = sim.score(w, freq, nbytes, r.field)
-                        score = (span * factor).astype(np.float32)
-                    else:
-                        score = factor
-                    outs.append(pd.DataFrame({"docid": docids, "score": score}))
-                yield pd.concat(outs, ignore_index=True) if outs else pd.DataFrame(
-                    {
-                        "docid": pd.Series(dtype="int64"),
-                        "score": pd.Series(dtype="float32"),
-                    }
-                )
-
-        cols = [
-            "field", "first_docid", "count", "docids_enc", "tfs_enc",
-            "norms_enc", "pay_enc", "docbase",
-        ]
-        blocks = self._blocks_for([key]).select(cols)
-        return blocks.mapInPandas(score_batches, "docid long, score float")
+        return self._position_hits(
+            self._blocks_for([key]),
+            {key: [(0, 0)]},
+            payload_term_match(q.function, q.include_span_score),
+            w,
+            q.field,
+            pay=True,
+        )
 
     def _dismax_scores(self, q: DisMaxQuery, prune_k: int | None) -> DataFrame:
         """max + tie*(sum-max) over clause scores (DisjunctionMaxScorer).
@@ -1822,14 +1784,11 @@ class IndexSearcher:
 
         BM25 (BM25Similarity.cs ExplainScore:296-320): freq, docFreq, idf,
         the byte-decoded norm denominator k1*((1-b) + b*dl/avgdl), and the
-        recomposed score — bit-identical to search().
-        Classic (TFIDFSimilarity.cs ExplainScore:720-767): freq, docFreq,
-        idf, queryNorm, the byte315-decoded fieldNorm, and the score.
-
-        Every float column repeats the engine's own f32 operation order, so
-        leaves recompose exactly: BM25 score == f32(f32(weight*freq) /
-        f32(freq + norm_k)); classic score == f32(f32(f32(sqrt(freq)) *
-        f32(f32(idf*boost*qnorm)*idf)) * field_norm).
+        score. Classic (TFIDFSimilarity.cs ExplainScore:720-767): freq,
+        docFreq, idf, queryNorm, the byte315-decoded fieldNorm, and the
+        score. idf and queryNorm are the term's SimWeight leaves, the norm
+        the SimScorer's table entry and the score `sim.score` itself, so it
+        is bit-identical to search() and the leaves recompose exactly.
         """
         k = min(k, self.max_doc)  # see search()
         if isinstance(q, BooleanQuery) and not q.must and not q.must_not \
@@ -1844,89 +1803,44 @@ class IndexSearcher:
             raise NotImplementedError(
                 "explain() covers bm25 and classic similarities"
             )
-        key = (q.field, q.term)
-        df = self.doc_freqs([key])[key]
-        classic = self.similarity == "classic"
-        leaf_schema = "docid long, freq long, nrm float"
-        if df == 0:
-            # empty result with the final schema — skipping the score
-            # arithmetic keeps ANSI constant folding away from 0/0
-            cols = (
-                "docid long, freq long, df long, idf float, "
-                + ("query_norm float, field_norm float, score float"
-                   if classic else "norm_k float, score float")
-            )
-            return self.spark.createDataFrame([], cols)
-        else:
-            table = self.sim.norms[q.field]
+        key, field = (q.field, q.term), q.field
+        w = self._sim_weights([([key], field, q.boost)])[0]
+        sim, table = self.sim, self.sim.norms[field]
 
-            def leaf_batches(it):
-                from .codec import decode_block  # executor-side import
+        def decode_leaves(it):
+            from .codec import decode_block  # executor-side import
 
-                for pdf in it:
-                    outs = []
-                    for r in pdf.itertuples(index=False):
-                        docids, tfs = decode_block(
-                            r.docids_enc, r.tfs_enc, r.first_docid, r.count
-                        )
-                        nbytes = np.frombuffer(r.norms_enc, dtype=np.uint8)
-                        outs.append(pd.DataFrame({
-                            "docid": docids + r.docbase,
-                            "freq": tfs.astype(np.int64),
-                            "nrm": table[nbytes],
-                        }))
-                    yield pd.concat(outs, ignore_index=True) if outs else (
-                        pd.DataFrame({
-                            "docid": pd.Series(dtype="int64"),
-                            "freq": pd.Series(dtype="int64"),
-                            "nrm": pd.Series(dtype="float32"),
-                        })
+            for pdf in it:
+                for r in pdf.itertuples(index=False):
+                    docids, tfs = decode_block(
+                        r.docids_enc, r.tfs_enc, r.first_docid, r.count
                     )
+                    nbytes = np.frombuffer(r.norms_enc, dtype=np.uint8)
+                    yield pd.DataFrame({
+                        "docid": docids + r.docbase,
+                        "freq": tfs.astype(np.int64),
+                        "nrm": table[nbytes],
+                        "score": sim.score(w, tfs.astype(np.float32), nbytes, field),
+                    })
 
-            cols = ["first_docid", "count", "docids_enc", "tfs_enc",
-                    "norms_enc", "docbase"]
-            rows = self._blocks_for([key]).select(cols).mapInPandas(
-                leaf_batches, leaf_schema
+        cols = ["first_docid", "count", "docids_enc", "tfs_enc", "norms_enc", "docbase"]
+        rows = self._apply_live_docs(
+            self._blocks_for([key]).select(cols).mapInPandas(
+                decode_leaves, "docid long, freq long, nrm float, score float"
             )
-        rows = self._apply_live_docs(rows)
-        freq32 = F.col("freq").cast("float")
-        dfl = F.lit(int(df)).cast("long").alias("df")
-        if classic:
-            from ..oracle import classic_idf
-
-            idf = classic_idf(df, self.max_doc) if df else np.float32(0.0)
-            qw = np.float32(idf * np.float32(q.boost))
-            ssq = np.float32(qw * qw)
-            qnorm = (
-                np.float32(np.float64(1.0) / np.sqrt(np.float64(ssq)))
-                if ssq > 0 else np.float32(1.0)
-            )
-            value = np.float32(np.float32(qw * qnorm) * idf)
-            score = (
-                (F.sqrt(F.col("freq").cast("double")).cast("float")
-                 * F.lit(float(value)).cast("float"))
-                * F.col("nrm")
-            ).alias("score")
-            out = rows.select(
-                "docid", "freq", dfl,
-                F.lit(float(idf)).cast("float").alias("idf"),
-                F.lit(float(qnorm)).cast("float").alias("query_norm"),
+        )
+        leaves = [
+            F.lit(int(self.doc_freqs([key])[key])).cast("long").alias("df"),
+            F.lit(float(w.idf)).cast("float").alias("idf"),
+        ] + (
+            [
+                F.lit(float(w.query_norm)).cast("float").alias("query_norm"),
                 F.col("nrm").alias("field_norm"),
-                score,
-            )
-        else:
-            idf = idf_f32(df, self.max_doc) if df else np.float32(0.0)
-            w = self._sim_weights([([key], q.field, q.boost)])[0].value
-            score = (
-                (F.lit(float(w)).cast("float") * freq32)
-                / (freq32 + F.col("nrm"))
-            ).alias("score")
-            out = rows.select(
-                "docid", "freq", dfl,
-                F.lit(float(idf)).cast("float").alias("idf"),
-                F.col("nrm").alias("norm_k"),
-                score,
-            )
+            ]
+            if self.similarity == "classic"
+            else [F.col("nrm").alias("norm_k")]
+        )
+        out = rows.select("docid", "freq", *leaves, "score")
         return out.orderBy(F.desc("score"), F.asc("docid")).limit(k)
 
     # below this many (bounded) hits, the hits side of a collector's

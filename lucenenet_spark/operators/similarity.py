@@ -4,8 +4,8 @@ Similarity.cs:119-140).
 
 An IndexSearcher builds one SimScorer from its `similarity` name (with `mu`
 / `lam`) and the collection stats. Every scoring path — term blocks,
-booleans, DisMax, exact/sloppy phrases, spans, payload queries and the bulk
-DAAT scorer — asks it for clause weights and scores a whole decoded block
+booleans, DisMax, exact/sloppy phrases, spans, payload queries and
+explain() — asks it for clause weights and scores a whole decoded block
 (or a batch of phrase/span freqs) through `score`, so this module is the
 only code that branches on the similarity family:
 
@@ -61,11 +61,15 @@ class SimWeight:
 
     value: BM25 idf*boost*(k1+1); TF-IDF queryWeight, then the normalized
     value once `normalize` ran; SimilarityBase families: the f32 boost.
-    idf:   the TF-IDF f32 idf fold (0 elsewhere).
+    idf:   the BM25 / TF-IDF f32 idf fold over the leaf terms (0 elsewhere).
+    query_norm: the queryNorm `normalize` applied (TF-IDF; 1 elsewhere) —
+           kept beside idf and value like TFIDFSimilarity's IDFStats, so
+           explain() reads its leaves from here.
     parts: SimilarityBase per-leaf-term parameters, declaration order."""
 
     value: np.float32
     idf: np.float32 = np.float32(0.0)
+    query_norm: np.float32 = np.float32(1.0)
     parts: tuple = ()
 
 
@@ -161,7 +165,7 @@ class SimScorer:
                 s = np.float32(s + idf_of(df, self.max_doc))
             qw = np.float32(s * b32)
             if self.family == "bm25":
-                return SimWeight(np.float32(qw * self.k1p1))
+                return SimWeight(np.float32(qw * self.k1p1), idf=s)
             return SimWeight(qw, idf=s)
         nft = self.field_tokens.get(field, 0)
         if self.family == "base":
@@ -200,7 +204,11 @@ class SimScorer:
             else np.float32(1.0)
         )
         return [
-            replace(w, value=np.float32(np.float32(w.value * qnorm) * w.idf))
+            replace(
+                w,
+                value=np.float32(np.float32(w.value * qnorm) * w.idf),
+                query_norm=qnorm,
+            )
             for w in weights
         ]
 

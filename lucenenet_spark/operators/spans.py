@@ -28,9 +28,9 @@ on non-overlapping inputs (fixture-tested against hand-traces of the
 reference algorithms).
 
 Scoring (Spans/SpanScorer.cs:79-95): freq = float32 fold over a doc's
-matches of sloppyFreq(end - start) = 1/(1 + matchLength); weight = the
-phrase chain (f32 sum of leaf idfs, duplicates counted, * boost * (k1+1));
-score = weight * freq / (freq + norm_cache[norm_byte]).
+matches of sloppyFreq(end - start) = 1/(1 + matchLength); the doc's (freq,
+norm byte) goes through the searcher's SimScorer with one weight over every
+leaf's termStats, duplicates counted (span_scores).
 """
 from __future__ import annotations
 
@@ -47,31 +47,37 @@ Span = tuple[int, int]
 
 
 @dataclass(frozen=True)
-class SpanTermQuery(Query):
+class SpanQuery(Query):
+    """A span node (Search/Spans/SpanQuery.cs): IndexSearcher scores it
+    through span_scores."""
+
+
+@dataclass(frozen=True)
+class SpanTermQuery(SpanQuery):
     term: str = ""
     field: str = "text"
 
 
 @dataclass(frozen=True)
-class SpanOrQuery(Query):
+class SpanOrQuery(SpanQuery):
     clauses: tuple = ()
 
 
 @dataclass(frozen=True)
-class SpanNearQuery(Query):
+class SpanNearQuery(SpanQuery):
     clauses: tuple = ()
     slop: int = 0
     in_order: bool = True
 
 
 @dataclass(frozen=True)
-class SpanFirstQuery(Query):
+class SpanFirstQuery(SpanQuery):
     match: Query | None = None
     end: int = 1
 
 
 @dataclass(frozen=True)
-class SpanNotQuery(Query):
+class SpanNotQuery(SpanQuery):
     include: Query | None = None
     exclude: Query | None = None
 
@@ -103,7 +109,7 @@ class PayloadNearQuery(Query):
 
 
 @dataclass(frozen=True)
-class SpanMultiTermQueryWrapper(Query):
+class SpanMultiTermQueryWrapper(SpanQuery):
     """Span wrapper over a MultiTermQuery (Search/Spans/
     SpanMultiTermQueryWrapper.cs): rewrites to a SpanOrQuery containing a
     SpanTermQuery for every term the wrapped query matches in the index,
@@ -499,8 +505,9 @@ def payload_near_scores_oracle(
     return out
 
 
-def span_scores(searcher, q: Query) -> DataFrame:
-    """Engine-side: DataFrame(docid, score) for a span query.
+def span_scores(searcher, q: Query, scored: bool = True) -> DataFrame:
+    """Engine-side: DataFrame(docid, score) for a span query; docids only
+    when not scored (a MUST_NOT span only bans).
 
     Through the positions kernel (search.slice_positions +
     reduce_positions), like the phrase scorer: every (field, term) leaf of
@@ -520,7 +527,7 @@ def span_scores(searcher, q: Query) -> DataFrame:
     if any(dfs[k] == 0 for k in req):
         return searcher._empty_hits()
     field = keys[0][0]
-    w = searcher._sim_weights([(leaves, field, q.boost)])[0]
+    w = searcher._sim_weights([(leaves, field, q.boost)])[0] if scored else None
     blocks = searcher._blocks_for(keys)
     if len(req) >= 2:
         blocks = searcher._conjunction_prune(blocks, sorted(req))
@@ -536,12 +543,9 @@ def span_scores(searcher, q: Query) -> DataFrame:
 
 
 def span_search(searcher, q: Query, k: int = 10) -> DataFrame:
-    """Top-k span search with the standard tie-break; k capped at maxDoc
-    like IndexSearcher.search."""
-    k = min(k, searcher.max_doc)
-    # _apply_live_docs carries the broadcast-vs-shuffle size guard
-    scored = searcher._apply_live_docs(span_scores(searcher, q))
-    return scored.orderBy(F.desc("score"), F.asc("docid")).limit(k)
+    """Top-k span search: IndexSearcher.search (k capped at maxDoc,
+    liveDocs masked, HitQueue order)."""
+    return searcher.search(q, k)
 
 
 def payload_near_scores(searcher, q: PayloadNearQuery) -> DataFrame:
@@ -614,6 +618,5 @@ def payload_near_scores(searcher, q: PayloadNearQuery) -> DataFrame:
 
 
 def payload_near_search(searcher, q: PayloadNearQuery, k: int = 10) -> DataFrame:
-    k = min(k, searcher.max_doc)  # see IndexSearcher.search
-    scored = searcher._apply_live_docs(payload_near_scores(searcher, q))
-    return scored.orderBy(F.desc("score"), F.asc("docid")).limit(k)
+    """Top-k PayloadNearQuery search: IndexSearcher.search."""
+    return searcher.search(q, k)

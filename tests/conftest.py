@@ -89,6 +89,26 @@ def searcher_1seg(spark, index_dir_1seg):
     return IndexSearcher(spark, index_dir_1seg)
 
 
+def phrase_pairs(corpus_pdf, oracle_index, n: int = 1, min_docs: int = 3):
+    """The n adjacent-token pairs held by the most docs (ties in token
+    order), each checked to match at least min_docs docs as an exact phrase.
+    Ranking by occurrences instead picks a pair repeated inside one doc
+    ("spark spark", 49 times in one turn), and every phrase test built on
+    it then checks a one-hit result."""
+    from lucenenet_spark import oracle
+    from lucenenet_spark.functions.analysis import tokenize_text
+
+    docs_of: dict = {}
+    for text in corpus_pdf["text"]:
+        toks = tokenize_text(text)
+        for pair in set(zip(toks, toks[1:])):
+            docs_of[pair] = docs_of.get(pair, 0) + 1
+    pairs = sorted(docs_of, key=lambda p: (-docs_of[p], p))[:n]
+    for p in pairs:
+        assert len(oracle.phrase_scores(oracle_index, list(p))) >= min_docs, p
+    return pairs
+
+
 def hits(df) -> list[tuple[int, "np.float32"]]:
     """Collect a search result into [(docid, float32 score)]."""
     import numpy as np

@@ -60,7 +60,8 @@ def test_msm_unsatisfiable_should_with_must(searcher, oracle_index):
 
 
 def test_bulk_boost0_must_is_live_constraint(spark, index_dir_1seg, oracle_index):
-    # prune_min_postings=1 pushes the query onto the bulk path (total_df >= 4)
+    # prune_min_postings=1 lets the conjunction skip prune popcorn's blocks
+    # to hello's docids before the range reducer; 1 << 60 keeps it off
     s_bulk = IndexSearcher(spark, index_dir_1seg, prune_min_postings=1)
     s_rel = IndexSearcher(spark, index_dir_1seg, prune_min_postings=1 << 60)
     q = BooleanQuery(

@@ -21,7 +21,7 @@ from lucenenet_spark.plans.query import (
     TermQuery,
 )
 
-from .conftest import hits
+from .conftest import hits, phrase_pairs
 
 SIMS = ["bm25", "classic", "sweetspot:1.5:2", "lmd", "lmjm", "dfr_gb2", "ib_spl"]
 
@@ -53,15 +53,28 @@ def _forced(spark, d, sim, bulk_range):
     return s
 
 
-@pytest.fixture()
-def bulk_searcher(spark, index_dir, sim, bulk_range):
-    return _forced(spark, index_dir, sim, bulk_range)
+@pytest.fixture(scope="module")
+def searchers():
+    """The module's searchers over the shared index, one per setting, so
+    each loads a term's stats once for all its tests (a test that deletes
+    docs builds its own over a copy)."""
+    return {}
 
 
 @pytest.fixture()
-def rel_searcher(spark, index_dir, sim):
+def bulk_searcher(spark, index_dir, sim, bulk_range, searchers):
+    key = ("forced", sim, bulk_range)
+    if key not in searchers:
+        searchers[key] = _forced(spark, index_dir, sim, bulk_range)
+    return searchers[key]
+
+
+@pytest.fixture()
+def rel_searcher(spark, index_dir, sim, searchers):
     # the default thresholds: no conjunction skip or WAND on this corpus
-    return IndexSearcher(spark, index_dir, similarity=sim)
+    if sim not in searchers:
+        searchers[sim] = IndexSearcher(spark, index_dir, similarity=sim)
+    return searchers[sim]
 
 
 def _oracle_scores(oidx, sim, must=(), should=(), must_not=(), min_should_match=0):
@@ -178,49 +191,48 @@ def test_bulk_respects_deletes(spark, index_dir, oracle_index, tmp_path, sim, bu
 
 
 @pytest.fixture(scope="module")
-def pair(corpus_pdf):
-    """The most frequent adjacent-token pair in the corpus."""
-    from lucenenet_spark.functions.analysis import tokenize_text
-
-    pairs = {}
-    for text in corpus_pdf["text"]:
-        toks = tokenize_text(text)
-        for a, b in zip(toks, toks[1:]):
-            pairs[(a, b)] = pairs.get((a, b), 0) + 1
-    return max(pairs.items(), key=lambda kv: kv[1])[0]
+def pair(corpus_pdf, oracle_index):
+    """The adjacent-token pair held by the most docs (at least 3)."""
+    return phrase_pairs(corpus_pdf, oracle_index)[0]
 
 
 def _check_phrase_boolean(
-    spark, index_dir, oracle_index, tmp_path, sim, bulk_range, deletes, q, **kw
+    spark, index_dir, oracle_index, tmp_path, sim, bulk_range, deletes, shared,
+    q, **kw
 ):
-    d, dead = index_dir, set()
+    """q on the shared (forced, default) searchers, or with deletes on
+    fresh ones over a copy of the index."""
+    searchers, dead = shared, set()
     if deletes:
         d, dead = _delete_hello(spark, index_dir, oracle_index, tmp_path, sim)
+        searchers = (
+            _forced(spark, d, sim, bulk_range), IndexSearcher(spark, d, similarity=sim)
+        )
     want = [
         (doc, sc) for doc, sc in _oracle(oracle_index, sim, k=10**6, **kw)
         if doc not in dead
     ][:20]
     assert want
-    _check(
-        _forced(spark, d, sim, bulk_range), IndexSearcher(spark, d, similarity=sim),
-        q, 20, want,
-    )
+    _check(*searchers, q, 20, want)
 
 
 @pytest.mark.parametrize("deletes", [False, True])
 def test_bulk_phrase_should(
-    spark, index_dir, oracle_index, tmp_path, sim, bulk_range, pair, deletes
+    spark, index_dir, oracle_index, tmp_path, sim, bulk_range, pair, deletes,
+    bulk_searcher, rel_searcher,
 ):
     q = BooleanQuery(should=(TermQuery(term="popcorn"), PhraseQuery(terms=pair)))
     _check_phrase_boolean(
-        spark, index_dir, oracle_index, tmp_path, sim, bulk_range, deletes, q,
+        spark, index_dir, oracle_index, tmp_path, sim, bulk_range, deletes,
+        (bulk_searcher, rel_searcher), q,
         should=["popcorn", ("phrase", list(pair), 0)],
     )
 
 
 @pytest.mark.parametrize("deletes", [False, True])
 def test_bulk_phrase_must_not(
-    spark, index_dir, oracle_index, tmp_path, sim, bulk_range, pair, deletes
+    spark, index_dir, oracle_index, tmp_path, sim, bulk_range, pair, deletes,
+    bulk_searcher, rel_searcher,
 ):
     # the pair's first term as a SHOULD clause: the banned phrase then
     # removes docs that would otherwise match
@@ -229,7 +241,8 @@ def test_bulk_phrase_must_not(
         must_not=(PhraseQuery(terms=pair),),
     )
     _check_phrase_boolean(
-        spark, index_dir, oracle_index, tmp_path, sim, bulk_range, deletes, q,
+        spark, index_dir, oracle_index, tmp_path, sim, bulk_range, deletes,
+        (bulk_searcher, rel_searcher), q,
         should=["popcorn", pair[0]], must_not=[("phrase", list(pair), 0)],
     )
 

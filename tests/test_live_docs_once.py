@@ -3,14 +3,16 @@ are scored unmasked and only the top-level scores() applies the delete set
 (acceptDocs, SegmentReader.cs:100). Deleted docs still count in the stats
 until merged away, so masking once cannot change a live doc's score.
 """
+import re
 import shutil
 
 from lucenenet_spark import oracle
+from lucenenet_spark.operators import spans
 from lucenenet_spark.operators.search import IndexSearcher
 from lucenenet_spark.plans.parser import parse
 from lucenenet_spark.plans.query import BooleanQuery, PhraseQuery, TermQuery
 
-from .conftest import count_jobs, hits
+from .conftest import count_jobs, hits, phrase_pairs
 
 NESTED_Q = BooleanQuery(
     should=(
@@ -47,15 +49,8 @@ def test_banned_phrase_is_matched_not_scored(spark, index_dir, oracle_index, cor
     """A MUST_NOT phrase only bans: the positions kernel emits its docids
     and nothing scores it, so the plan has no scoring pass of its own (one
     mapInPandas fewer than scoring it as a one-clause boolean)."""
-    from lucenenet_spark.functions.analysis import tokenize_text
-
     # the adjacent pair found in the most docs, so the ban removes several
-    docs_of = {}
-    for text in corpus_pdf["text"]:
-        toks = tokenize_text(text)
-        for pair in set(zip(toks, toks[1:])):
-            docs_of[pair] = docs_of.get(pair, 0) + 1
-    t1, t2 = max(sorted(docs_of), key=docs_of.get)
+    [(t1, t2)] = phrase_pairs(corpus_pdf, oracle_index)
     q = parse(f'+{t1} -"{t1} {t2}"')
     assert isinstance(q.must_not[0], PhraseQuery)
     df = IndexSearcher(spark, index_dir).search(q, 20)
@@ -70,6 +65,36 @@ def test_banned_phrase_is_matched_not_scored(spark, index_dir, oracle_index, cor
     # term slicer, phrase slicer, phrase match (docids only), ban slicer,
     # reducer
     assert _initial_plan(df).count("MapInPandas") == 5
+
+
+def test_banned_span_is_matched_not_scored(spark, index_dir, oracle_index, corpus_pdf):
+    """A MUST_NOT span only bans, like a banned phrase: the positions
+    kernel's reducer emits the span's docids and no score column."""
+    [(t1, t2)] = phrase_pairs(corpus_pdf, oracle_index)
+    span = spans.SpanNearQuery(
+        clauses=(spans.SpanTermQuery(term=t1), spans.SpanTermQuery(term=t2))
+    )
+    q = BooleanQuery(must=(TermQuery(term=t1),), must_not=(span,))
+    df = IndexSearcher(spark, index_dir).search(q, 20)
+    banned = spans.span_scores_oracle(oracle_index, span)
+    want = oracle.top_k(
+        {
+            d: sc
+            for d, sc in oracle.sim_mixed_boolean_scores(
+                oracle_index, "bm25", must=[t1]
+            ).items()
+            if d not in banned
+        },
+        20,
+    )
+    assert banned and want and hits(df) == want
+    # the one reducer over position rows (its input carries the leaf
+    # column) outputs the docid column alone
+    outs = re.findall(
+        r"MapInPandas \w+\(rid#\d+L, leaf#\d+, [^)]*\)[^,]*, \[([^\]]*)\]",
+        _initial_plan(df),
+    )
+    assert len(outs) == 1 and re.fullmatch(r"docid#\d+L", outs[0]), outs
 
 
 def _initial_plan(df) -> str:

@@ -11,7 +11,7 @@ from lucenenet_spark import oracle
 from lucenenet_spark.plans.parser import parse
 from lucenenet_spark.plans.query import BooleanQuery, PhraseQuery, TermQuery
 
-from .conftest import hits
+from .conftest import hits, phrase_pairs
 
 
 # -- oracle-level fixture sanity (hand-checkable positions) ------------------
@@ -56,21 +56,8 @@ def test_oracle_sloppy_matches_exact_at_slop0_shape():
 # -- engine vs oracle --------------------------------------------------------
 
 
-def _phrase_pairs(corpus_pdf, min_df=3):
-    """A few (t1, t2) adjacent-token pairs actually present in the corpus."""
-    from lucenenet_spark.functions.analysis import tokenize_text
-
-    pairs = {}
-    for text in corpus_pdf["text"]:
-        toks = tokenize_text(text)
-        for a, b in zip(toks, toks[1:]):
-            pairs[(a, b)] = pairs.get((a, b), 0) + 1
-    common = sorted(pairs.items(), key=lambda kv: -kv[1])[:3]
-    return [p for p, _n in common]
-
-
 def test_exact_phrase_parity(searcher, oracle_index, corpus_pdf):
-    for t1, t2 in _phrase_pairs(corpus_pdf):
+    for t1, t2 in phrase_pairs(corpus_pdf, oracle_index, 3):
         q = PhraseQuery(terms=(t1, t2))
         want = oracle.top_k(oracle.phrase_scores(oracle_index, [t1, t2]), 10)
         got = hits(searcher.search(q, 10))
@@ -78,7 +65,7 @@ def test_exact_phrase_parity(searcher, oracle_index, corpus_pdf):
 
 
 def test_sloppy_phrase_parity(searcher, oracle_index, corpus_pdf):
-    for t1, t2 in _phrase_pairs(corpus_pdf):
+    for t1, t2 in phrase_pairs(corpus_pdf, oracle_index, 3):
         for slop in (1, 3):
             q = PhraseQuery(terms=(t1, t2), slop=slop)
             want = oracle.top_k(
@@ -90,7 +77,7 @@ def test_sloppy_phrase_parity(searcher, oracle_index, corpus_pdf):
 
 def test_phrase_with_query_gap(searcher, oracle_index, corpus_pdf):
     # a stopword inside the quoted phrase leaves a position gap in the query
-    (t1, t2), *_ = _phrase_pairs(corpus_pdf)
+    (t1, t2), *_ = phrase_pairs(corpus_pdf, oracle_index, 3)
     q = parse(f'"{t1} the {t2}"')
     assert isinstance(q, PhraseQuery) and q.positions == (0, 2)
     want = oracle.top_k(
@@ -101,7 +88,7 @@ def test_phrase_with_query_gap(searcher, oracle_index, corpus_pdf):
 
 
 def test_phrase_in_boolean(searcher, oracle_index, corpus_pdf):
-    (t1, t2), *_ = _phrase_pairs(corpus_pdf)
+    (t1, t2), *_ = phrase_pairs(corpus_pdf, oracle_index, 3)
     q = BooleanQuery(
         should=(PhraseQuery(terms=(t1, t2)), TermQuery(term="popcorn"))
     )
@@ -144,7 +131,7 @@ def test_phrase_bulk_gather_parity(spark, index_dir, oracle_index, corpus_pdf):
 
     default = IndexSearcher(spark, index_dir)
     pruned = IndexSearcher(spark, index_dir, prune_min_postings=0)
-    (t1, t2), (t3, t4), *_ = _phrase_pairs(corpus_pdf)
+    (t1, t2), (t3, t4), *_ = phrase_pairs(corpus_pdf, oracle_index, 3)
     for slop in (0, 2):
         q = PhraseQuery(terms=(t1, t2), slop=slop)
         want = oracle.top_k(
@@ -191,7 +178,7 @@ def test_phrase_longer_than_63_slots(searcher, oracle_index, corpus_pdf):
 def test_multi_phrase_exact_parity(searcher, oracle_index, corpus_pdf):
     from lucenenet_spark.plans.query import MultiPhraseQuery
 
-    (a1, b1), (a2, b2), *_ = _phrase_pairs(corpus_pdf)
+    (a1, b1), (a2, b2), *_ = phrase_pairs(corpus_pdf, oracle_index, 3)
     arrays = [[a1, a2] if a1 != a2 else [a1], [b1, b2] if b1 != b2 else [b1]]
     q = MultiPhraseQuery(term_arrays=tuple(tuple(a) for a in arrays))
     want = oracle.top_k(oracle.multi_phrase_scores(oracle_index, arrays), 10)
@@ -202,7 +189,7 @@ def test_multi_phrase_exact_parity(searcher, oracle_index, corpus_pdf):
 def test_multi_phrase_sloppy_parity(searcher, oracle_index, corpus_pdf):
     from lucenenet_spark.plans.query import MultiPhraseQuery
 
-    (a1, b1), (a2, b2), *_ = _phrase_pairs(corpus_pdf)
+    (a1, b1), (a2, b2), *_ = phrase_pairs(corpus_pdf, oracle_index, 3)
     arrays = [[a1, a2] if a1 != a2 else [a1], [b1, b2] if b1 != b2 else [b1]]
     for slop in (1, 3):
         q = MultiPhraseQuery(
@@ -220,7 +207,7 @@ def test_multi_phrase_absent_alternative(searcher, oracle_index, corpus_pdf):
     MultiPhraseWeight allTermStats) but not the match set."""
     from lucenenet_spark.plans.query import MultiPhraseQuery
 
-    (t1, t2), *_ = _phrase_pairs(corpus_pdf)
+    (t1, t2), *_ = phrase_pairs(corpus_pdf, oracle_index, 3)
     arrays = [[t1, "zzz_absent_term"], [t2]]
     q = MultiPhraseQuery(term_arrays=(tuple(arrays[0]), (t2,)))
     want = oracle.top_k(oracle.multi_phrase_scores(oracle_index, arrays), 10)
@@ -234,7 +221,7 @@ def test_multi_phrase_absent_alternative(searcher, oracle_index, corpus_pdf):
 def test_multi_phrase_rewrites(searcher, oracle_index, corpus_pdf):
     from lucenenet_spark.plans.query import MultiPhraseQuery
 
-    (t1, t2), *_ = _phrase_pairs(corpus_pdf)
+    (t1, t2), *_ = phrase_pairs(corpus_pdf, oracle_index, 3)
     # all-singleton slots == plain PhraseQuery
     q = MultiPhraseQuery(term_arrays=((t1,), (t2,)))
     assert hits(searcher.search(q, 10)) == hits(

@@ -15,22 +15,15 @@ from lucenenet_spark import oracle
 from lucenenet_spark.operators.search import IndexSearcher
 from lucenenet_spark.plans.query import PhraseQuery
 
-from .conftest import hits
+from .conftest import hits, phrase_pairs
 
 SIMS = ["classic", "lmd", "lmjm", "dfr_gb2", "dfr_pl2", "ib_ll", "dfr:in:b:z"]
 
 
 @pytest.fixture(scope="module")
-def pair(corpus_pdf):
-    """The most frequent adjacent-token pair actually in the corpus."""
-    from lucenenet_spark.functions.analysis import tokenize_text
-
-    pairs = {}
-    for text in corpus_pdf["text"]:
-        toks = tokenize_text(text)
-        for a, b in zip(toks, toks[1:]):
-            pairs[(a, b)] = pairs.get((a, b), 0) + 1
-    return max(pairs.items(), key=lambda kv: kv[1])[0]
+def pair(corpus_pdf, oracle_index):
+    """The adjacent-token pair held by the most docs (at least 3)."""
+    return phrase_pairs(corpus_pdf, oracle_index)[0]
 
 
 def _want(oracle_index, terms, sim, slop=0, boost=1.0, k=15):
