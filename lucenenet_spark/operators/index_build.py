@@ -165,6 +165,19 @@ CHECKPOINTS_DDL = (
 # bound sits below that crossover.
 LOCAL_MAX_DOCS = 8192
 
+# Largest query volume (Σ df over the plan's keys, and the capped delete
+# count) that search runs on the driver (IndexSearcher.run_local) instead
+# of as Spark jobs; both runners execute the same plan with the same
+# kernels. Set from a sweep of warm search(q, 10).collect() on a 240k-turn
+# index (local[4] on a 4-core host, median of 3), ms local / Spark:
+#   OR  Σdf 19k 70/551   78k 135/886   155k 224/870   616k 575/1117
+#   AND Σdf 68k 103/938; exact phrase 68k 78/736
+#   sloppy phrase (a per-doc Python merge) Σdf 39k 511/1120, 68k 807/1441
+# The sloppy phrase crosses over first, near twice that volume. The bound
+# starts the sweep at prune_min_postings, so conjunction skipping and WAND
+# never engage on a local plan at the defaults.
+LOCAL_MAX_POSTINGS = 1 << 16
+
 
 def runs_in_process(n_docs: int) -> bool:
     return n_docs <= LOCAL_MAX_DOCS
@@ -1518,21 +1531,32 @@ def docs_view(spark: SparkSession, manifest: dict) -> DataFrame:
     return out
 
 
-def docs_frame(manifest: dict) -> pd.DataFrame:
-    """docs_view read on the driver with pyarrow (small indexes only).
-    Timestamps come back as UTC instants whichever writer stored them
-    (Spark's INT96 reads as naive UTC, pyarrow's as tz-aware UTC)."""
+def docs_frame(manifest: dict, docids: np.ndarray | None = None) -> pd.DataFrame:
+    """docs_view read on the driver with pyarrow (small indexes, or only
+    the given docids). Timestamps come back as UTC instants whichever
+    writer stored them (Spark's INT96 reads as naive UTC, pyarrow's as
+    tz-aware UTC)."""
     cols = DOC_COLS + list(manifest.get("numeric_fields") or [])
     if manifest.get("docs_table"):
-        parts = [read_local(manifest["docs_table"], ["docid"] + cols)]
+        where = None if docids is None else ds.field("docid").isin(docids)
+        parts = [read_local(manifest["docs_table"], ["docid"] + cols, where)]
     else:
         parts = []
         for sg in stagings_of(manifest):
-            df = read_local(sg["path"], ["pid", "local_rank"] + cols, ds.field("local_rank") >= 0)
             offsets = {int(k): v + int(sg.get("docbase", 0)) for k, v in sg["offsets"].items()}
+            where = ds.field("local_rank") >= 0
+            if docids is not None:  # each wanted docid's rank inside its pid
+                offs = np.sort(np.fromiter(offsets.values(), dtype=np.int64))
+                ids = np.asarray(docids, dtype=np.int64)
+                ids = ids[ids >= offs[0]]
+                ranks = ids - offs[np.searchsorted(offs, ids, side="right") - 1]
+                where = where & ds.field("local_rank").isin(np.unique(ranks))
+            df = read_local(sg["path"], ["pid", "local_rank"] + cols, where)
             docid = df["pid"].map(offsets).to_numpy(dtype=np.int64) + df["local_rank"].to_numpy(
                 dtype=np.int64
             )
             parts.append(df[cols].assign(docid=docid))
     out = pd.concat([p.assign(ts=pd.to_datetime(p["ts"], utc=True)) for p in parts])
+    if docids is not None:
+        out = out[out["docid"].isin(docids)]
     return out[["docid"] + cols].sort_values("docid").reset_index(drop=True)

@@ -7,17 +7,22 @@ Lifecycle mirrors IndexSearcher.Search (SURVEY.md §3.1):
                  Lucene counts deleted-until-merged) -> one frozen SimWeight
                  per clause from the active similarity's SimScorer
                  (operators/similarity.py; BM25: idf * boost * (k1+1))
- 3. scoring    — bucket- and term-pruned scan of posting blocks; numpy decode
-                 + the vectorized float32 SimScorer kernel inside mapInPandas
-                 (Arrow batches);
+ 3. plan       — plan(q, k): a small tree of block scans, slices, reduces
+                 and opaque Spark-only leaves; the only code that decides
+                 the row sources, slicers, reducers, shuffles, banned
+                 clauses and the one liveDocs mask
+ 4. scoring    — bucket- and term-pruned scan of posting blocks; numpy decode
+                 + the vectorized float32 SimScorer kernel;
                  boolean algebra in one range reducer (BooleanScorer's bucket
                  table, BooleanScorer.cs:28-55): MUST = match count, SHOULD =
-                 sum, MUST_NOT = banned clause, minShouldMatch = count mask;
-                 liveDocs = one anti-join per query
- 4. collect    — orderBy(score desc, docid asc).limit(k): Spark's
-                 TakeOrderedAndProject is per-partition heaps + driver merge,
-                 exactly TopScoreDocCollector + TopDocs.Merge semantics
-                 (HitQueue.cs:88-100, TopDocs.cs:157-191)
+                 sum, MUST_NOT = banned clause, minShouldMatch = count mask.
+                 Two runners execute a plan with the same kernels: run_local
+                 on driver pandas frames when Σdf <= LOCAL_MAX_POSTINGS (no
+                 Spark job), run_spark as mapInPandas stages otherwise
+ 5. collect    — top-k in HitQueue order (score desc, docid asc,
+                 HitQueue.cs:88-100): a sort on the driver, or Spark's
+                 TakeOrderedAndProject (per-partition heaps + driver merge,
+                 TopScoreDocCollector + TopDocs.Merge, TopDocs.cs:157-191)
 
 Block-max pruning (north rule; absent in Lucene 4.8 — SURVEY.md §4.1):
 two-phase WAND-style. Phase 1 decodes only the top ceil(k/128) blocks per
@@ -36,11 +41,15 @@ see oracle.py for the cited arithmetic.
 from __future__ import annotations
 
 import dataclasses
+import logging
 import math
+import os
 from dataclasses import dataclass
+from typing import Callable
 
 import numpy as np
 import pandas as pd
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType
@@ -65,24 +74,33 @@ from ..plans.query import (
     TermRangeQuery,
     WildcardQuery,
 )
+from . import index_build
 from .codec import BLOCK_SIZE
 from .index_build import (
+    DOCS_DDL,
     FIELD,
     FKEY_SEP,
     POSTINGS_DDL,
+    docs_frame,
     docs_view,
     load_manifest,
+    read_local,
     read_table,
     term_bucket,
+    with_numeric,
 )
 from .similarity import SimScorer, SimWeight
 
+log = logging.getLogger("lucenenet_spark")
+
 RANGE_ROWS_SCHEMA = "rid long, clause int, offs binary, scores binary"
 HITS_SCHEMA = "docid long, score float"
+DOCIDS_SCHEMA = "docid long"
 BLOCK_COLS = [
     "field", "term", "first_docid", "count", "docids_enc", "tfs_enc",
     "norms_enc", "docbase",
 ]
+DOCID_COLS = ["first_docid", "count", "docids_enc", "tfs_enc", "docbase"]
 
 
 @dataclass
@@ -468,6 +486,108 @@ def per_doc(freq_of):
     return match
 
 
+def decode_docids(it):
+    """Posting blocks (first_docid, count, docids_enc, tfs_enc, docbase) ->
+    their global docids, nothing scored."""
+    from .codec import decode_block
+
+    for pdf in it:
+        ids = [
+            decode_block(r.docids_enc, r.tfs_enc, r.first_docid, r.count)[0] + r.docbase
+            for r in pdf.itertuples(index=False)
+        ]
+        yield pd.DataFrame(
+            {"docid": np.concatenate(ids) if ids else np.empty(0, dtype=np.int64)}
+        )
+
+
+# -- the query plan: one tree, two runners -------------------------------------
+# IndexSearcher.plan(q, k) builds it; run_spark runs each Reduce as
+# mapInPandas stages over Spark block scans, run_local calls the same
+# slicer and reducer closures on pandas frames read with pyarrow. Neither
+# runner looks at the Query: every decision is already in the tree.
+
+
+@dataclass
+class BlockScan:
+    """The posting blocks of (field, term) `keys` in every segment,
+    docbase-shifted. `prune` (required keys: conjunction skipping to the
+    rarest one's docid ranges) and `wand` ((clauses, k) of block-max WAND)
+    are rank-safe block filters; they engage only above
+    prune_min_postings, a volume the local runner never reads at the
+    defaults, so only run_spark applies them."""
+
+    keys: list
+    prune: list = dataclasses.field(default_factory=list)
+    wand: tuple | None = None
+
+
+@dataclass
+class Slice:
+    """One row source cut by a slicer kernel: `cols` of the source's rows
+    (a BlockScan's blocks, or another node's hits) in, `schema` rows out."""
+
+    source: object
+    cols: list
+    slicer: Callable
+    schema: str
+
+
+@dataclass
+class Reduce:
+    """The union of the slices' rows through a reducer kernel. Without
+    `shuffle` the one slice's rows of a doc all sit in one task, so the
+    reducer runs in the slicing tasks."""
+
+    slices: list
+    reducer: Callable
+    schema: str
+    shuffle: bool
+
+
+@dataclass
+class Empty:
+    """No hits (an absent term, a clause-less boolean)."""
+
+
+@dataclass
+class SparkOnly:
+    """An opaque leaf only Spark evaluates: FilteredQuery's SQL `where`,
+    the multi-term and constant-score docid sets, MatchAll."""
+
+    build: Callable[[], DataFrame]
+
+
+@dataclass
+class Plan:
+    """A query's tree plus the collector's k (None: every hit, unordered)
+    and the runner chosen for it; keys and Σdf are the volume it reads.
+    Deleted docs are masked once, at the root."""
+
+    root: object
+    k: int | None
+    runner: str
+    keys: list
+    sum_df: int
+
+
+def plan_nodes(node):
+    """Every node of a plan tree, parents first."""
+    yield node
+    children = node.slices if isinstance(node, Reduce) else (
+        [node.source] if isinstance(node, Slice) else []
+    )
+    for c in children:
+        yield from plan_nodes(c)
+
+
+def _empty_frame(schema: str) -> pd.DataFrame:
+    types = {"long": np.int64, "float": np.float32}
+    return pd.DataFrame(
+        {n: np.empty(0, dtype=types[t]) for n, t in (c.split() for c in schema.split(","))}
+    )
+
+
 class IndexSearcher:
     """Searcher over one or more index segments.
 
@@ -567,14 +687,50 @@ class IndexSearcher:
         self._prunable = len(self.segments) == 1
         self._live_docs_cache: DataFrame | None | bool = False  # False = unloaded
         self._deleted_count_cache: int | None = None  # capped; see _deleted_count_capped
+        self._deleted_array_cache: np.ndarray | None = None
+        self.last_plan: Plan | None = None  # of the last scores()/search()
 
     # -- table accessors -------------------------------------------------------
+    def _postings_table(self, s: dict) -> DataFrame:
+        """A segment's postings table, listed once per searcher: a segment
+        is immutable, and a read lists its 1 + n_buckets dirs again (past
+        Spark's 32-path threshold, as a parallel-listing job)."""
+        if "postings_df" not in s:
+            s["postings_df"] = read_table(
+                self.spark, s["manifest"]["tables"]["postings"], POSTINGS_DDL
+            )
+        return s["postings_df"]
+
+    def _read_rows(self, keys, cols: list[str], stats: bool = False) -> pd.DataFrame:
+        """The block rows (stats: the block_no == -2 stat rows) of (field,
+        term) keys in every segment, read on the driver with pyarrow from
+        the keys' bucket dirs only, docbase-shifted."""
+        keys = set(self._as_keys(keys))
+        tset = sorted({t for _f, t in keys})
+        fkeys = {f + FKEY_SEP + t for f, t in keys}
+        where = ds.field("term").isin(tset) & (
+            (ds.field("block_no") == -2) if stats else (ds.field("block_no") >= 0)
+        )
+        read = list(dict.fromkeys(["field", "term"] + [c for c in cols if c != "docbase"]))
+        parts = []
+        for s in self.segments:
+            nb = int(s["manifest"]["n_buckets"])
+            for b in sorted({term_bucket(t, nb) for t in tset}):
+                path = os.path.join(s["manifest"]["tables"]["postings"], f"bucket={b}")
+                pdf = read_local(path, read, where)
+                hit = (pdf["field"] + FKEY_SEP + pdf["term"]).isin(fkeys)
+                if hit.any():
+                    parts.append(pdf[hit].assign(docbase=s["docbase"]))
+        if not parts:
+            return pd.DataFrame(columns=cols)
+        return pd.concat(parts, ignore_index=True)[cols]
+
     def postings(self) -> DataFrame:
         # block_no >= 0 excludes the per-partition checkpoint meta rows
         out = None
         for s in self.segments:
             df = (
-                read_table(self.spark, s["manifest"]["tables"]["postings"], POSTINGS_DDL)
+                self._postings_table(s)
                 .filter(F.col("block_no") >= 0)
                 .withColumn("docbase", F.lit(s["docbase"]))
             )
@@ -605,28 +761,13 @@ class IndexSearcher:
             )
         return out
 
-    def _stat_rows(self, terms=None) -> DataFrame:
+    def _stat_rows(self) -> DataFrame:
         """RAW terms-dict stat rows (block_no == -2), one per (field, term,
         salt, segment) — NO aggregation, so uses that only need term
-        membership (semi-joins) or can sum driver-side (term_meta) skip the
-        groupBy shuffle entirely. terms: optional term refs to prune the
-        scan to their bucket dirs + row-group term stats (VERDICT r02 #1:
-        the per-query stats aggregate was the q_prefix regression)."""
-        tset = None
-        if terms is not None:
-            tset = sorted({t for _f, t in self._as_keys(terms)})
+        membership (semi-joins) skip the groupBy shuffle entirely."""
         out = None
         for s in self.segments:
-            df = read_table(
-                self.spark, s["manifest"]["tables"]["postings"], POSTINGS_DDL
-            ).filter(F.col("block_no") == -2)
-            if tset is not None:
-                nb = int(s["manifest"]["n_buckets"])
-                buckets = sorted({term_bucket(t, nb) for t in tset})
-                df = df.filter(F.col("bucket").isin(buckets)).filter(
-                    F.col("term").isin(tset)
-                )
-            df = df.select(
+            df = self._postings_table(s).filter(F.col("block_no") == -2).select(
                 "field", "term", "count", "sum_tf", "max_score_bound"
             )
             out = df if out is None else out.unionByName(df)
@@ -639,33 +780,25 @@ class IndexSearcher:
         return [(FIELD, t) if isinstance(t, str) else tuple(t) for t in terms]
 
     def term_meta(self, terms) -> dict[tuple[str, str], tuple[int, int, float]]:
-        """(df, ttf, max_block_bound) per (field, term) (one pruned scan;
-        cached).
+        """(df, ttf, max_block_bound) per (field, term) (cached).
 
         The stats role of TermContext.cs:90-145 plus the WAND per-term upper
-        bound, precomputed at build time so planning needs no metadata job."""
+        bound, precomputed at build time: the RAW stat rows (one per (field,
+        term, salt, segment)) of the terms' bucket dirs, read with pyarrow
+        and summed here on the driver — no Spark job (TermContext.cs:90-145
+        sums the same way)."""
         keys = set(self._as_keys(terms))
         missing = [k for k in keys if k not in self._stats_cache]
         if missing:
-            # bucket-dir + row-group-pruned scan of the RAW stat rows (one
-            # per (field, term, salt, segment)); the tiny sum over salts/
-            # segments happens here on the driver — a single-stage job, no
-            # groupBy shuffle (TermContext.cs:90-145 sums the same way)
-            rows = (
-                self._stat_rows(missing)
-                .filter(
-                    F.concat_ws(FKEY_SEP, "field", "term").isin(
-                        [f + FKEY_SEP + t for f, t in missing]
-                    )
-                )
-                .collect()
+            rows = self._read_rows(
+                missing, ["field", "term", "count", "sum_tf", "max_score_bound"], stats=True
             )
             found: dict[tuple[str, str], list] = {}
-            for r in rows:
-                acc = found.setdefault((r["field"], r["term"]), [0, 0, 0.0])
-                acc[0] += int(r["count"])
-                acc[1] += int(r["sum_tf"])
-                acc[2] = max(acc[2], float(r["max_score_bound"]))
+            for r in rows.itertuples(index=False):
+                acc = found.setdefault((r.field, r.term), [0, 0, 0.0])
+                acc[0] += int(r.count)
+                acc[1] += int(r.sum_tf)
+                acc[2] = max(acc[2], float(r.max_score_bound))
             for k in missing:
                 self._stats_cache[k] = tuple(found.get(k, (0, 0, 0.0)))
         return {k: self._stats_cache[k] for k in keys}
@@ -712,6 +845,20 @@ class IndexSearcher:
             )
         return self._deleted_count_cache
 
+    def _has_deletes(self) -> bool:
+        return self._deleted_count_capped() > 0
+
+    def _deleted_array(self) -> np.ndarray:
+        """Every segment's deleted docids, docbase-shifted, read on the
+        driver (the local runner's liveDocs set)."""
+        if self._deleted_array_cache is None:
+            from .deletes import DeleteLog
+
+            self._deleted_array_cache = np.concatenate(
+                [DeleteLog(self.spark, s["dir"]).deleted_array() + s["docbase"] for s in self.segments]
+            )
+        return self._deleted_array_cache
+
     def _apply_live_docs(self, scored: DataFrame) -> DataFrame:
         """acceptDocs mask (SegmentReader.cs:100,136,272): deleted docs never
         match; stats still count them until merged away — exactly Lucene.
@@ -747,6 +894,7 @@ class IndexSearcher:
                 DeleteLog(self.spark, s["dir"]).delete_docids(local)
         self._live_docs_cache = False  # invalidate
         self._deleted_count_cache = None
+        self._deleted_array_cache = None
 
     def delete_by_term(self, term: str) -> None:
         """IndexWriter.DeleteDocuments(Term) analogue."""
@@ -813,7 +961,7 @@ class IndexSearcher:
             nb = int(s["manifest"]["n_buckets"])
             buckets = sorted({term_bucket(t, nb) for t in tset})
             df = (
-                read_table(self.spark, s["manifest"]["tables"]["postings"], POSTINGS_DDL)
+                self._postings_table(s)
                 .filter(F.col("bucket").isin(buckets))  # dir partition pruning
                 .filter(F.col("term").isin(tset))  # row-group stats pruning
                 .filter(F.concat_ws(FKEY_SEP, "field", "term").isin(fkeys))
@@ -839,22 +987,19 @@ class IndexSearcher:
     def _decode_docids(self, blocks: DataFrame, dedupe: bool = True) -> DataFrame:
         """Decode docids (only) from block rows -> docid DF (distinct when
         dedupe, which only matters across multiple terms)."""
-
-        def decode_batches(it):
-            from .codec import decode_block
-
-            for pdf in it:
-                outs = []
-                for r in pdf.itertuples(index=False):
-                    docids, _ = decode_block(r.docids_enc, r.tfs_enc, r.first_docid, r.count)
-                    outs.append(pd.DataFrame({"docid": docids + r.docbase}))
-                yield pd.concat(outs, ignore_index=True) if outs else pd.DataFrame(
-                    {"docid": pd.Series(dtype="int64")}
-                )
-
-        cols = blocks.select("first_docid", "count", "docids_enc", "tfs_enc", "docbase")
-        out = cols.mapInPandas(decode_batches, "docid long")
+        out = blocks.select(DOCID_COLS).mapInPandas(decode_docids, DOCIDS_SCHEMA)
         return out.distinct() if dedupe else out
+
+    def matching_docids(self, keys) -> np.ndarray:
+        """Docids holding any of the (field, term) keys, deletes not masked
+        (a delete probe): the keys' blocks decoded on the driver when their
+        Σdf fits LOCAL_MAX_POSTINGS, else by one Spark job."""
+        keys = self._as_keys(keys)
+        if sum(self.doc_freqs(keys).values()) <= index_build.LOCAL_MAX_POSTINGS:
+            frames = decode_docids([self._read_rows(keys, DOCID_COLS)])
+        else:
+            frames = [self._docids_of_terms(keys, dedupe=False).toPandas()]
+        return pd.concat(frames)["docid"].to_numpy(dtype=np.int64)
 
     # -- rewrite -------------------------------------------------------------------
     def _multiterm_cond(self, q: Query):
@@ -1085,15 +1230,113 @@ class IndexSearcher:
         )
         return BooleanQuery(must=(low_q,), should=(high_q,))
 
-    # -- scoring (returns docid/score DF, unordered) --------------------------------
-    def scores(self, q: Query, prune_k: int | None = None) -> DataFrame:
-        """Evaluate a query -> DataFrame(docid long, score float). Unordered.
+    # -- planning and the two runners -------------------------------------------
+    def plan(self, q: Query, k: int | None = None, prune: bool = True) -> Plan:
+        """The query's plan for a top-k collector (k None: every hit,
+        unordered). With `prune` each reducer range keeps its top k and a
+        large disjunction may take block-max WAND.
 
-        prune_k: if set and the query shape allows (pure disjunction / term),
-        applies block-max pruning safe for top-prune_k retrieval.
-        Deleted docs are masked out (acceptDocs) after scoring.
-        """
-        return self._apply_live_docs(self._scores_raw(q, prune_k))
+        The local runner runs it when no Spark-only leaf is in the tree and
+        both the Σdf of its keys and the (capped) delete count fit
+        index_build.LOCAL_MAX_POSTINGS; the Spark runner otherwise."""
+        root = self._plan(q, k if prune else None)
+        nodes = list(plan_nodes(root))
+        keys = sorted({key for n in nodes if isinstance(n, BlockScan) for key in n.keys})
+        sum_df = sum(self.doc_freqs(keys).values()) if keys else 0
+        cap = index_build.LOCAL_MAX_POSTINGS
+        local = (
+            not any(isinstance(n, SparkOnly) for n in nodes)
+            and sum_df <= cap
+            and self._deleted_count_capped() <= cap
+        )
+        return Plan(root, k, "local" if local else "spark", keys, sum_df)
+
+    def _execute(self, p: Plan) -> DataFrame:
+        self.last_plan = p
+        log.debug("plan runner=%s sum_df=%d k=%s keys=%s", p.runner, p.sum_df, p.k, p.keys)
+        return self.run_local(p) if p.runner == "local" else self.run_spark(p)
+
+    def run_spark(self, p: Plan) -> DataFrame:
+        """The plan as Spark stages, liveDocs masked once by an anti-join;
+        top-k by TakeOrderedAndProject."""
+        out = self._apply_live_docs(self._spark(p.root))
+        if p.k is None:
+            return out
+        return out.orderBy(F.desc("score"), F.asc("docid")).limit(p.k)
+
+    def _spark(self, node) -> DataFrame:
+        """One plan node as a DataFrame, liveDocs unmasked."""
+        if isinstance(node, SparkOnly):
+            return node.build()
+        if isinstance(node, Empty):
+            return self._empty_hits()
+        if isinstance(node, BlockScan):
+            blocks = self._blocks_for(node.keys)
+            if node.prune:
+                blocks = self._conjunction_prune(blocks, node.prune)
+            if node.wand:
+                blocks, _ = self._prune_blocks(blocks, *node.wand)
+            return blocks
+        if not node.shuffle:
+            (s,) = node.slices
+            # the task closure holds the two kernels only, never the plan
+            # tree (a Spark-only leaf's builder holds the session)
+            slicer, reducer = s.slicer, node.reducer
+            frame = self._spark(s.source).select(s.cols)
+            return frame.mapInPandas(lambda it: reducer(slicer(it)), node.schema)
+        sliced = None
+        for s in node.slices:
+            part = self._spark(s.source).select(s.cols).mapInPandas(s.slicer, s.schema)
+            sliced = part if sliced is None else sliced.unionByName(part)
+        return sliced.repartition("rid").mapInPandas(node.reducer, node.schema)
+
+    def run_local(self, p: Plan) -> DataFrame:
+        """The plan on the driver: each block scan read with pyarrow from
+        its keys' bucket dirs, each slicer and reducer called on the pandas
+        frames, liveDocs masked with the delete logs' docids; the hits come
+        back as a local DataFrame (no Spark job), top-k already in HitQueue
+        order."""
+        hits = self._local(p.root)
+        if self._has_deletes():
+            hits = hits[~np.isin(hits["docid"].to_numpy(), self._deleted_array())]
+        if p.k is not None:
+            order = np.lexsort((hits["docid"].to_numpy(), -hits["score"].to_numpy()))
+            hits = hits.iloc[order[: p.k]]
+        hits = hits.reset_index(drop=True)
+        out = self._local_relation(hits, HITS_SCHEMA)
+        out._local_hits = hits  # fetch() reads their docs on the driver too
+        return out
+
+    def _local_relation(self, pdf: pd.DataFrame, ddl: str) -> DataFrame:
+        """A driver frame as a LocalRelation, which collects with no job.
+        createDataFrame of 0 rows builds an RDD instead, so an empty
+        frame is one null row cut by limit(0), which folds to an empty
+        LocalRelation."""
+        if len(pdf):
+            return self.spark.createDataFrame(pdf, ddl)
+        cols = [c.split()[0] for c in ddl.split(",")]
+        null_row = pd.DataFrame([[None] * len(cols)], columns=cols)
+        return self.spark.createDataFrame(null_row, ddl).limit(0)
+
+    def _local(self, node) -> pd.DataFrame:
+        """One plan node's hits as a pandas frame, liveDocs unmasked."""
+        if isinstance(node, Empty):
+            return _empty_frame(HITS_SCHEMA)
+        parts = []
+        for s in node.slices:
+            if isinstance(s.source, BlockScan):
+                rows = self._read_rows(s.source.keys, s.cols)
+            else:
+                rows = self._local(s.source)[s.cols]
+            parts.extend(s.slicer([rows]))
+        out = list(node.reducer(iter(parts)))
+        return pd.concat(out, ignore_index=True) if out else _empty_frame(node.schema)
+
+    # -- scoring (returns docid/score DF, unordered) --------------------------------
+    def scores(self, q: Query) -> DataFrame:
+        """Evaluate a query -> DataFrame(docid long, score float). Unordered.
+        Deleted docs are masked out (acceptDocs) after scoring."""
+        return self._execute(self.plan(q))
 
     def _filter_docids(self, f) -> DataFrame:
         """Evaluate a Filter tree to its docid set (Search/Filter.cs
@@ -1202,7 +1445,7 @@ class IndexSearcher:
             cond = col.isNull() if f.negate else col.isNotNull()
             return self.docs().filter(cond).select("docid")
         if isinstance(f, QueryWrapperFilter):
-            return self._scores_raw(f.query, None).select("docid").distinct()
+            return self._scores_raw(f.query).select("docid").distinct()
         if isinstance(f, BooleanFilter):
             res = None
             for c in f.should:
@@ -1254,52 +1497,60 @@ class IndexSearcher:
             return res
         raise TypeError(f"unknown Filter {type(f).__name__}")
 
-    def _scores_raw(self, q: Query, prune_k: int | None = None) -> DataFrame:
+    def _scores_raw(self, q: Query) -> DataFrame:
+        """A query's hits as Spark stages, liveDocs unmasked (a nested
+        query inside a Spark-only leaf)."""
+        return self._spark(self._plan(q))
+
+    def _plan(self, q: Query, prune_k: int | None = None):
+        """The plan node of one query node (prune_k: the top-k each reducer
+        range may keep)."""
         if isinstance(q, FilteredQuery):
-            # doc-side predicate: semi-join scores against the filtered docs
-            # view — the predicate pushes down to the typed parquet columns
-            passing = self.docs().filter(F.expr(q.where)).select("docid")
-            if q.filter is not None:
-                passing = passing.join(
-                    self._filter_docids(q.filter), "docid", "left_semi"
-                )
-            # prune_k deliberately NOT propagated: block-max pruning bounds the
-            # unfiltered top-k; a filter could surface docs below that θ
-            return self._scores_raw(q.query, None).join(
-                passing, "docid", "left_semi"
-            )
+            return SparkOnly(lambda: self._filtered_scores(q))
         q = self.rewrite(q)
-        if isinstance(q, MatchAllQuery):
-            return self.docs().select("docid", F.lit(float(np.float32(q.boost))).cast("float").alias("score"))
-        cond = self._multiterm_cond(q)
-        if cond is not None:
-            # CONSTANT_SCORE filter rewrite, distributed. Prefix/range
-            # predicates are plain term comparisons, so they evaluate
-            # DIRECTLY on the (term-sorted) postings scan and push down to
-            # parquet row-group min/max stats — one job, no terms-dict
-            # expansion at all. Wildcard/regexp keep the broadcast
-            # semi-join against the raw stat rows (regex runs once per
-            # vocab row, the block scan then hash-probes; duplicates
-            # across salts are harmless under left_semi, no groupBy job).
-            blocks = self.postings().filter(F.col("field") == FIELD)
-            if isinstance(q, PrefixQuery):
-                blocks = blocks.filter(
-                    (F.col("term") >= q.prefix) & (F.col("term") < q.prefix + "￿")
-                )
-            elif isinstance(q, TermRangeQuery):
-                blocks = blocks.filter(cond)
-            else:
-                matching = F.broadcast(
-                    self._stat_rows()
-                    .filter(F.col("field") == FIELD)
-                    .filter(cond)
-                    .select("term")
-                )
-                blocks = blocks.join(matching, "term", "left_semi")
-            docids = self._decode_docids(blocks)
-            return docids.select(
-                "docid", F.lit(float(np.float32(q.boost))).cast("float").alias("score")
+        if isinstance(q, (MatchAllQuery, ConstantScoreQuery)) or (
+            self._multiterm_cond(q) is not None
+        ):
+            return SparkOnly(lambda: self._constant_scores(q))
+        if isinstance(q, PayloadTermQuery):
+            return self._plan_payload_term(q)
+        if isinstance(q, (TermQuery, PhraseQuery, MultiPhraseQuery)):
+            # a lone term/phrase is a one-clause boolean: same weight,
+            # queryNorm over itself, coord 1
+            q = BooleanQuery(should=(q,))
+        if isinstance(q, DisMaxQuery):
+            return self._plan_dismax(q, prune_k)
+        if isinstance(q, BooleanQuery):
+            return self._plan_boolean(q, prune_k)
+        # SpanQuery as a scores() citizen: a span clause inside a boolean
+        # (the reference's SpanQuery IS-A Query) routes through the span
+        # machinery, which already honors the active similarity
+        from . import spans as _spans
+
+        if isinstance(q, _spans.SpanQuery):
+            return _spans.span_plan(self, q)
+        if isinstance(q, _spans.PayloadNearQuery):
+            return _spans.payload_near_plan(self, q)
+        raise TypeError(f"unsupported query node {type(q).__name__}")
+
+    def _filtered_scores(self, q: FilteredQuery) -> DataFrame:
+        # doc-side predicate: semi-join scores against the filtered docs
+        # view — the predicate pushes down to the typed parquet columns
+        passing = self.docs().filter(F.expr(q.where)).select("docid")
+        if q.filter is not None:
+            passing = passing.join(
+                self._filter_docids(q.filter), "docid", "left_semi"
             )
+        # no per-range top-k: it bounds the unfiltered top-k; a filter
+        # could surface docs below it
+        return self._scores_raw(q.query).join(passing, "docid", "left_semi")
+
+    def _constant_scores(self, q: Query) -> DataFrame:
+        """MatchAll, the multi-term rewrites and ConstantScoreQuery: a docid
+        set scored with the query's boost."""
+        const = F.lit(float(np.float32(q.boost))).cast("float").alias("score")
+        if isinstance(q, MatchAllQuery):
+            return self.docs().select("docid", const)
         if isinstance(q, ConstantScoreQuery):
             # ConstantScoreQuery.cs: matches exactly the docs the wrapped
             # query (or filter) matches, score = boost. Docid-union of the
@@ -1307,7 +1558,6 @@ class IndexSearcher:
             # FuzzyQuery rewrite shape) — anything else evaluates the inner
             # query and keeps its docids.
             inner = q.query
-            const = F.lit(float(np.float32(q.boost))).cast("float").alias("score")
             if q.filter is not None:
                 return self._filter_docids(q.filter).select("docid", const)
             pure_should = isinstance(inner, TermQuery) or (
@@ -1318,30 +1568,33 @@ class IndexSearcher:
                 and all(isinstance(c, TermQuery) for c in inner.should)
             )
             if pure_should:
-                terms = _collect_terms(inner)
-                docids = self._docids_of_terms(terms)
-                return docids.select("docid", const)
-            return self._scores_raw(inner, None).select("docid", const)
-        if isinstance(q, PayloadTermQuery):
-            return self._payload_term_scores(q)
-        if isinstance(q, (TermQuery, PhraseQuery, MultiPhraseQuery)):
-            # a lone term/phrase is a one-clause boolean: same weight,
-            # queryNorm over itself, coord 1
-            q = BooleanQuery(should=(q,))
-        if isinstance(q, DisMaxQuery):
-            return self._dismax_scores(q, prune_k)
-        if isinstance(q, BooleanQuery):
-            return self._boolean_scores(q, prune_k)
-        # SpanQuery as a scores() citizen: a span clause inside a boolean
-        # (the reference's SpanQuery IS-A Query) routes through the span
-        # machinery, which already honors the active similarity
-        from . import spans as _spans
-
-        if isinstance(q, _spans.SpanQuery):
-            return _spans.span_scores(self, q)
-        if isinstance(q, _spans.PayloadNearQuery):
-            return _spans.payload_near_scores(self, q)
-        raise TypeError(f"unsupported query node {type(q).__name__}")
+                return self._docids_of_terms(_collect_terms(inner)).select("docid", const)
+            return self._scores_raw(inner).select("docid", const)
+        # CONSTANT_SCORE filter rewrite, distributed. Prefix/range
+        # predicates are plain term comparisons, so they evaluate
+        # DIRECTLY on the (term-sorted) postings scan and push down to
+        # parquet row-group min/max stats — one job, no terms-dict
+        # expansion at all. Wildcard/regexp keep the broadcast
+        # semi-join against the raw stat rows (regex runs once per
+        # vocab row, the block scan then hash-probes; duplicates
+        # across salts are harmless under left_semi, no groupBy job).
+        cond = self._multiterm_cond(q)
+        blocks = self.postings().filter(F.col("field") == FIELD)
+        if isinstance(q, PrefixQuery):
+            blocks = blocks.filter(
+                (F.col("term") >= q.prefix) & (F.col("term") < q.prefix + "\uffff")
+            )
+        elif isinstance(q, TermRangeQuery):
+            blocks = blocks.filter(cond)
+        else:
+            matching = F.broadcast(
+                self._stat_rows()
+                .filter(F.col("field") == FIELD)
+                .filter(cond)
+                .select("term")
+            )
+            blocks = blocks.join(matching, "term", "left_semi")
+        return self._decode_docids(blocks).select("docid", const)
 
     def _empty_hits(self) -> DataFrame:
         return self.spark.range(0).select(
@@ -1371,7 +1624,7 @@ class IndexSearcher:
             weights[i] = w
         return out, weights
 
-    def _combine(
+    def _plan_combine(
         self,
         subs,
         weights,
@@ -1383,15 +1636,15 @@ class IndexSearcher:
         coord: np.ndarray | None = None,
         tie: np.float32 | None = None,
         wand: bool = False,
-    ) -> DataFrame:
-        """Hits of one boolean/DisMax level through the range reducer.
+    ):
+        """One boolean/DisMax level through the range reducer.
 
         Every matchable term clause, and every term MUST_NOT clause, scores
         in one block pass (restricted to the rarest MUST term's docid
         ranges; block-max pruned when `wand`); a phrase clause runs its
         phrase scorer with its weight (a MUST_NOT phrase or span without
-        one: it only matches) and any other sub is scored on its own,
-        unmasked — scores() applies liveDocs once per query. With one
+        one: it only matches) and any other sub is planned on its own,
+        unmasked — liveDocs are masked once, at the plan's root. With one
         row source and no MUST_NOT clause every doc has one row per clause
         inside one task, so the reducer runs in the scoring tasks; anything
         else meets in one coalescable shuffle on the range id. Each range
@@ -1401,7 +1654,7 @@ class IndexSearcher:
         n = len(subs)
         live = [self._matchable(c) for c in subs]
         if not any(live):
-            return self._empty_hits()
+            return Empty()
         banned = [c for c in must_not if self._matchable(c)]
         terms = [
             Clause(i, c.term, weights[i], field=c.field)
@@ -1412,28 +1665,27 @@ class IndexSearcher:
             for j, c in enumerate(banned)
             if isinstance(c, TermQuery)
         ]
-        sources = []  # (frame, slicer) per row source
+        slices = []  # one per row source
         if terms:
-            blocks = self._blocks_for([c.key for c in terms])
-            must_keys = [c.key for c in terms if c.clause_id < n_must]
-            if must_keys:
+            scan = BlockScan(
+                [c.key for c in terms],
                 # leapfrog analogue: restrict every clause's blocks to the
                 # rarest MUST term's docid ranges before decode
-                blocks = self._conjunction_prune(blocks, must_keys)
-            if wand:
-                blocks, _ = self._prune_blocks(blocks, terms, prune_k)
-            sources.append(
-                (blocks.select(BLOCK_COLS), slice_blocks(terms, self.sim, R))
+                prune=[c.key for c in terms if c.clause_id < n_must],
+                wand=(terms, prune_k) if wand else None,
+            )
+            slices.append(
+                Slice(scan, BLOCK_COLS, slice_blocks(terms, self.sim, R), RANGE_ROWS_SCHEMA)
             )
         for i, c in enumerate(subs):
             if isinstance(c, TermQuery) or not live[i]:
                 continue
-            sc = (
-                self._phrase_scores(c, weights[i])
+            sub = (
+                self._plan_phrase(c, weights[i])
                 if weights[i] is not None
-                else self._scores_raw(c)
+                else self._plan(c)
             )
-            sources.append((sc.select("docid", "score"), slice_scored(i, R)))
+            slices.append(Slice(sub, ["docid", "score"], slice_scored(i, R), RANGE_ROWS_SCHEMA))
         from . import spans as _spans
 
         for j, c in enumerate(banned):
@@ -1441,25 +1693,22 @@ class IndexSearcher:
                 # a banned phrase or span only matches: its docids, never
                 # a score
                 if self._slots(c):
-                    ids = self._phrase_scores(c, None)
+                    sub = self._plan_phrase(c, None)
                 elif isinstance(c, _spans.SpanQuery):
-                    ids = _spans.span_scores(self, c, scored=False)
+                    sub = _spans.span_plan(self, c, scored=False)
                 else:
-                    ids = self._scores_raw(c)
-                sources.append((ids.select("docid"), slice_scored(n + j, R)))
-        k = prune_k if self._deleted_docids() is None else None
-        reduce = reduce_ranges(R, n, n_must, need_should, coord, tie, k)
-        # one row source: a single term's blocks or a single scored clause
-        if not banned and len(sources) == 1 and len({c.key for c in terms}) <= 1:
-            frame, slicer = sources[0]
-            return frame.mapInPandas(lambda it: reduce(slicer(it)), HITS_SCHEMA)
-        sliced = None
-        for frame, slicer in sources:
-            part = frame.mapInPandas(slicer, RANGE_ROWS_SCHEMA)
-            sliced = part if sliced is None else sliced.unionByName(part)
-        return sliced.repartition("rid").mapInPandas(reduce, HITS_SCHEMA)
+                    sub = self._plan(c)
+                slices.append(Slice(sub, ["docid"], slice_scored(n + j, R), RANGE_ROWS_SCHEMA))
+        k = None if self._has_deletes() else prune_k
+        return Reduce(
+            slices,
+            reduce_ranges(R, n, n_must, need_should, coord, tie, k),
+            HITS_SCHEMA,
+            # one row source: a single term's blocks or a single scored clause
+            shuffle=bool(banned) or len(slices) > 1 or len({c.key for c in terms}) > 1,
+        )
 
-    def _boolean_scores(self, q: BooleanQuery, prune_k: int | None) -> DataFrame:
+    def _plan_boolean(self, q: BooleanQuery, prune_k: int | None):
         """BooleanQuery under the active similarity (BooleanWeight +
         BooleanScorer2): MUST = every required clause matched, SHOULD =
         minShouldMatch count, clause scores summed f32 in clause order,
@@ -1467,12 +1716,12 @@ class IndexSearcher:
         clauses ban their docs. All in the range reducer."""
         if not q.must and not q.should:
             # clause-less query (e.g. all terms were stopwords) matches nothing
-            return self._empty_hits()
+            return Empty()
         n_must = len(q.must)
         subs, weights = self._clauses(q.must + q.should, q.boost)
         live = [self._matchable(c) for c in subs]
         if not all(live[:n_must]):
-            return self._empty_hits()
+            return Empty()
         live_terms = [
             (c.field, c.term)
             for c, ok in zip(subs, live)
@@ -1494,10 +1743,10 @@ class IndexSearcher:
             # deletes inflate probe θ (a high-scoring deleted doc is masked
             # only after scoring) — pruning with a delete log could drop
             # blocks holding live true top-k hits
-            and self._deleted_docids() is None
+            and not self._has_deletes()
         )
         msm = q.min_should_match
-        return self._combine(
+        return self._plan_combine(
             subs,
             weights,
             q.must_not,
@@ -1508,7 +1757,6 @@ class IndexSearcher:
             wand=bool(can_prune),
         )
 
-    # -- conjunction skipping (Advance analogue) -------------------------------
     def _conjunction_prune(
         self,
         blocks: DataFrame,
@@ -1573,7 +1821,7 @@ class IndexSearcher:
         return rare_blocks.unionByName(pruned)
 
     # -- phrase scoring --------------------------------------------------------
-    def _phrase_scores(self, q, w: SimWeight | None) -> DataFrame:
+    def _plan_phrase(self, q, w: SimWeight | None):
         """Phrase / MultiPhrase scorer through the positions kernel.
 
         Each slot is one leaf whose terms ship pos - queryOffset (blocks
@@ -1591,7 +1839,7 @@ class IndexSearcher:
         docLen)). w=None (a MUST_NOT phrase) yields the matching docids."""
         arrays = self._slots(q)
         if not arrays:
-            return self._empty_hits()
+            return Empty()
         if any(
             s["manifest"].get("index_options") == "docs_freqs"
             for s in self.segments
@@ -1601,7 +1849,7 @@ class IndexSearcher:
                 "index_options='docs_freqs'"
             )
         if not self._matchable(q):
-            return self._empty_hits()
+            return Empty()
         dfs = self.doc_freqs(set(self._leaf_keys(q)))
         leaves_of: dict[tuple[str, str], list[tuple[int, int]]] = {}
         for slot, arr in enumerate(arrays):
@@ -1610,56 +1858,57 @@ class IndexSearcher:
                     leaves_of.setdefault((q.field, t), []).append(
                         (slot, q.offsets[slot])
                     )
-        blocks = self._blocks_for(sorted(leaves_of))
-        # a matchable phrase's single-term slots are all present
-        single_keys = [(q.field, arr[0]) for arr in arrays if len(arr) == 1]
-        if single_keys:
-            blocks = self._conjunction_prune(blocks, single_keys)
         n, slop = len(arrays), int(q.slop)
         match = exact_phrase_match(n) if slop == 0 else sloppy_phrase_match(n, slop)
-        return self._position_hits(blocks, leaves_of, match, w, q.field)
+        # a matchable phrase's single-term slots are all present
+        single_keys = [(q.field, arr[0]) for arr in arrays if len(arr) == 1]
+        return self._plan_positions(leaves_of, match, w, q.field, prune=single_keys)
 
-    def _position_hits(
-        self, blocks: DataFrame, leaves_of, match, w: SimWeight | None,
-        field: str, pay: bool = False,
-    ) -> DataFrame:
-        """Hits of a position scorer: its blocks through slice_positions,
+    def _plan_positions(
+        self, leaves_of, match, w: SimWeight | None, field: str,
+        prune=(), pay: bool = False,
+    ) -> Reduce:
+        """A position scorer: its keys' blocks through slice_positions,
         one coalescable shuffle on the range id, then reduce_positions.
         With one (field, term) key every doc's positions sit in one block
         row (salts and segments split docids into disjoint ranges), so the
         reducer runs in the slicing tasks, with no shuffle."""
-        frame = blocks.select(BLOCK_COLS + ["pos_enc"] + (["pay_enc"] if pay else []))
-        slicer = slice_positions(leaves_of, self.BULK_RANGE)
-        reduce = reduce_positions(match, self.sim, w, field)
-        out = "docid long" if w is None else HITS_SCHEMA
-        if len(leaves_of) == 1:
-            return frame.mapInPandas(lambda it: reduce(slicer(it)), out)
         schema = (
             "rid long, leaf int, docids binary, pos binary, "
             + ("pay binary, " if pay else "")
             + "norms binary"
         )
-        sliced = frame.mapInPandas(slicer, schema)
-        return sliced.repartition("rid").mapInPandas(reduce, out)
+        scan = BlockScan(sorted(leaves_of), prune=list(prune))
+        cols = BLOCK_COLS + ["pos_enc"] + (["pay_enc"] if pay else [])
+        return Reduce(
+            [Slice(scan, cols, slice_positions(leaves_of, self.BULK_RANGE), schema)],
+            reduce_positions(match, self.sim, w, field),
+            DOCIDS_SCHEMA if w is None else HITS_SCHEMA,
+            shuffle=len(leaves_of) > 1,
+        )
 
-    def _payload_term_scores(self, q: PayloadTermQuery) -> DataFrame:
+    def _payload_guard(self, function: str) -> None:
+        """Every payload query's preconditions, checked at planning: each
+        segment was built with a payload provider, and the PayloadFunction
+        is one the positions kernel folds."""
+        if any(s["manifest"].get("payload_provider") is None for s in self.segments):
+            raise NotImplementedError(
+                "payload queries need an index built with a payload_provider "
+                "(a segment has none)"
+            )
+        if function not in ("avg", "min", "max"):
+            raise ValueError(f"unknown payload function {function!r}")
+
+    def _plan_payload_term(self, q: PayloadTermQuery):
         """PayloadTermQuery (Search/Payloads/PayloadTermQuery.cs) in the
         positions kernel: the term is one leaf shipping its payloads,
         scored by payload_term_match; one key, so no shuffle."""
-        for s in self.segments:
-            if s["manifest"].get("payload_provider") is None:
-                raise NotImplementedError(
-                    "payload queries need an index built with a "
-                    "payload_provider (this segment has none)"
-                )
+        self._payload_guard(q.function)
         key = (q.field, q.term)
         if self.doc_freqs([key])[key] == 0:
-            return self._empty_hits()
-        if q.function not in ("avg", "min", "max"):
-            raise ValueError(f"unknown payload function {q.function!r}")
+            return Empty()
         w = self._sim_weights([([key], q.field, q.boost)])[0]
-        return self._position_hits(
-            self._blocks_for([key]),
+        return self._plan_positions(
             {key: [(0, 0)]},
             payload_term_match(q.function, q.include_span_score),
             w,
@@ -1667,7 +1916,7 @@ class IndexSearcher:
             pay=True,
         )
 
-    def _dismax_scores(self, q: DisMaxQuery, prune_k: int | None) -> DataFrame:
+    def _plan_dismax(self, q: DisMaxQuery, prune_k: int | None):
         """max + tie*(sum-max) over clause scores (DisjunctionMaxScorer).
 
         Clause weights normalize together (DisjunctionMaxWeight
@@ -1676,9 +1925,9 @@ class IndexSearcher:
         mx + tie*(sum-mx) — each op single-precision, matching the oracle's
         numpy float32 chain bit for bit."""
         if not q.queries:
-            return self._empty_hits()
+            return Empty()
         subs, weights = self._clauses(q.queries, q.boost)
-        return self._combine(
+        return self._plan_combine(
             subs, weights, prune_k=prune_k, tie=np.float32(q.tie_breaker)
         )
 
@@ -1755,8 +2004,7 @@ class IndexSearcher:
         selector by the limit, so an uncapped k of 10**9 exhausts the
         JVM heap."""
         k = min(k, self.max_doc)
-        scored = self.scores(q, prune_k=k if prune else None)
-        return scored.orderBy(F.desc("score"), F.asc("docid")).limit(k)
+        return self._execute(self.plan(q, k, prune))
 
     def search_after(self, q: Query, k: int, after_score: float, after_doc: int) -> DataFrame:
         """Deep paging (IndexSearcher.cs:282-301): hits strictly after cursor;
@@ -1773,8 +2021,11 @@ class IndexSearcher:
         )
 
     def count(self, q: Query) -> int:
-        """TotalHitCountCollector analogue."""
-        return self.scores(q).count()
+        """TotalHitCountCollector analogue (the local runner's hits are
+        counted on the driver)."""
+        hits = self.scores(q)
+        local = getattr(hits, "_local_hits", None)
+        return hits.count() if local is None else len(local)
 
     def explain(self, q: Query, k: int = 10) -> DataFrame:
         """IndexSearcher.Explain parity for TermQuery (IndexSearcher.cs:
@@ -1855,9 +2106,35 @@ class IndexSearcher:
         terms). When it fits a broadcast, the join is hits-broadcast so the
         docs side never shuffles — at 10^9 docs that is the difference
         between a map-side hash probe and a full shuffle join."""
-        if hits_bound is not None and hits_bound <= self.BROADCAST_HITS_MAX:
+        bounded = hits_bound is not None and hits_bound <= self.BROADCAST_HITS_MAX
+        local = getattr(hits, "_local_hits", None)
+        if local is not None:
+            return self._fetch_local(local, bounded)
+        if bounded:
             return self.docs().join(F.broadcast(hits), "docid", "inner")
         return hits.join(self.docs(), "docid", "inner")
+
+    def _fetch_local(self, hits: pd.DataFrame, docs_first: bool) -> DataFrame:
+        """fetch() of the local runner's hits: their docs read on the
+        driver with a pyarrow docid filter, in the Spark join's column
+        order (docs columns first when the hits side was broadcast)."""
+        ids = hits["docid"].to_numpy()
+        parts = []
+        for s in self.segments:
+            base, n = s["docbase"], int(s["manifest"]["max_doc"])
+            own = ids[(ids >= base) & (ids < base + n)] - base
+            if len(own):
+                parts.append(docs_frame(s["manifest"], own).assign(
+                    docid=lambda d, b=base: d["docid"] + b
+                ))
+        docs = pd.concat(parts) if parts else docs_frame(self.manifest, ids)
+        out = hits.merge(docs, on="docid", how="inner")
+        docs_ddl = with_numeric(DOCS_DDL, list(self.manifest.get("numeric_fields") or []))
+        if docs_first:
+            ddl = docs_ddl + ", score float"
+        else:
+            ddl = HITS_SCHEMA + docs_ddl.removeprefix("docid long")
+        return self._local_relation(out[[c.split()[0] for c in ddl.split(",")]], ddl)
 
     def _hits_bound(self, q: Query) -> int | None:
         """Upper bound on the match count: Σ df over the query's terms

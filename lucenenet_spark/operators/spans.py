@@ -30,7 +30,7 @@ reference algorithms).
 Scoring (Spans/SpanScorer.cs:79-95): freq = float32 fold over a doc's
 matches of sloppyFreq(end - start) = 1/(1 + matchLength); the doc's (freq,
 norm byte) goes through the searcher's SimScorer with one weight over every
-leaf's termStats, duplicates counted (span_scores).
+leaf's termStats, duplicates counted (span_plan).
 """
 from __future__ import annotations
 
@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.query import Query
-from .search import per_doc
+from .search import Empty, per_doc
 
 Span = tuple[int, int]
 
@@ -49,7 +49,7 @@ Span = tuple[int, int]
 @dataclass(frozen=True)
 class SpanQuery(Query):
     """A span node (Search/Spans/SpanQuery.cs): IndexSearcher scores it
-    through span_scores."""
+    through span_plan."""
 
 
 @dataclass(frozen=True)
@@ -505,8 +505,8 @@ def payload_near_scores_oracle(
     return out
 
 
-def span_scores(searcher, q: Query, scored: bool = True) -> DataFrame:
-    """Engine-side: DataFrame(docid, score) for a span query; docids only
+def span_plan(searcher, q: Query, scored: bool = True):
+    """A span query's plan node: its hits (docid, score), or docids only
     when not scored (a MUST_NOT span only bans).
 
     Through the positions kernel (search.slice_positions +
@@ -520,17 +520,14 @@ def span_scores(searcher, q: Query, scored: bool = True) -> DataFrame:
     leaves = leaf_terms(q)
     if not leaves:
         # e.g. a wrapper whose multi-term query matched nothing
-        return searcher._empty_hits()
+        return Empty()
     keys = sorted(set(leaves))
     dfs = searcher.doc_freqs(keys)
     req = required_terms(q)
     if any(dfs[k] == 0 for k in req):
-        return searcher._empty_hits()
+        return Empty()
     field = keys[0][0]
     w = searcher._sim_weights([(leaves, field, q.boost)])[0] if scored else None
-    blocks = searcher._blocks_for(keys)
-    if len(req) >= 2:
-        blocks = searcher._conjunction_prune(blocks, sorted(req))
 
     def freq_of(p, lf, _pay):
         pos: dict = {k: [] for k in keys}
@@ -539,7 +536,9 @@ def span_scores(searcher, q: Query, scored: bool = True) -> DataFrame:
         return span_freq(eval_spans(q, pos)), None
 
     leaves_of = {k: [(i, 0)] for i, k in enumerate(keys)}
-    return searcher._position_hits(blocks, leaves_of, per_doc(freq_of), w, field)
+    return searcher._plan_positions(
+        leaves_of, per_doc(freq_of), w, field, prune=sorted(req) if len(req) >= 2 else ()
+    )
 
 
 def span_search(searcher, q: Query, k: int = 10) -> DataFrame:
@@ -548,10 +547,10 @@ def span_search(searcher, q: Query, k: int = 10) -> DataFrame:
     return searcher.search(q, k)
 
 
-def payload_near_scores(searcher, q: PayloadNearQuery) -> DataFrame:
-    """DataFrame(docid, score) for a PayloadNearQuery (flat term clauses).
+def payload_near_plan(searcher, q: PayloadNearQuery):
+    """A PayloadNearQuery's plan node (flat term clauses).
 
-    Through the positions kernel like span_scores, with the aligned f32
+    Through the positions kernel like span_plan, with the aligned f32
     payload channel sliced beside the positions. The candidate set is
     conjunction-pruned on all clauses (a near requires every clause).
 
@@ -580,26 +579,17 @@ def payload_near_scores(searcher, q: PayloadNearQuery) -> DataFrame:
         raise ValueError(
             f"PayloadNearQuery clauses must share one field, got {sorted(fields)}"
         )
-    for seg in searcher.segments:
-        if seg["manifest"].get("payload_provider") is None:
-            raise NotImplementedError(
-                "payload queries need an index built with a payload_provider"
-            )
+    searcher._payload_guard(q.function)
     clauses = [(c.field, c.term) for c in q.clauses]
     keys = sorted(set(clauses))
     dfs = searcher.doc_freqs(keys)
     if any(dfs[k] == 0 for k in keys):
-        return searcher._empty_hits()
+        return Empty()
     field = keys[0][0]
     w = searcher._sim_weights([(clauses, field, q.boost)])[0]
-    blocks = searcher._blocks_for(keys)
-    if len(keys) >= 2:
-        blocks = searcher._conjunction_prune(blocks, keys)
     key_of = {k: i for i, k in enumerate(keys)}
     clause_keys = [key_of[c] for c in clauses]
     slop, fn = q.slop, q.function
-    if fn not in ("avg", "min", "max"):
-        raise ValueError(f"unknown payload function {fn!r}")
 
     def freq_of(p, lf, pay):
         pos_k: list[list[int]] = [[] for _ in keys]
@@ -612,9 +602,16 @@ def payload_near_scores(searcher, q: PayloadNearQuery) -> DataFrame:
         return payload_near_doc_score(children, slop, payload_of, fn)
 
     leaves_of = {k: [(i, 0)] for k, i in key_of.items()}
-    return searcher._position_hits(
-        blocks, leaves_of, per_doc(freq_of), w, field, pay=True
+    return searcher._plan_positions(
+        leaves_of, per_doc(freq_of), w, field,
+        prune=keys if len(keys) >= 2 else (), pay=True,
     )
+
+
+def payload_near_scores(searcher, q: PayloadNearQuery) -> DataFrame:
+    """DataFrame(docid, score) of a PayloadNearQuery, liveDocs unmasked
+    (payload_near_plan run by Spark)."""
+    return searcher._scores_raw(q)
 
 
 def payload_near_search(searcher, q: PayloadNearQuery, k: int = 10) -> DataFrame:

@@ -263,11 +263,12 @@ class NRTIndex:
         (re-deleting would wrongly mask the batch's OWN published docs).
 
         Jobs: the batch is collected once (see process_batch) and its keys
-        are read from that frame; the delete probe is one bucket-pruned
-        keyword-postings scan for those keys, whose victims are collected
-        once, routed to their segments on the driver and logged with
-        pyarrow. A batch over LOCAL_MAX_DOCS takes its keys with one more
-        distinct job and is built on Spark.
+        are read from that frame; the delete probe decodes those keys'
+        keyword postings on the driver (IndexSearcher.matching_docids; one
+        bucket-pruned Spark scan above LOCAL_MAX_POSTINGS), and the victims
+        are routed to their segments and logged with pyarrow. A batch over
+        LOCAL_MAX_DOCS takes its keys with one more distinct job and is
+        built on Spark.
         """
         key_col = key_col or key_field
         if self._built(batch_id):
@@ -285,11 +286,9 @@ class NRTIndex:
                 )
             if keys:
                 s = self.searcher()
-                victims = s._docids_of_terms(
-                    [(key_field, k) for k in keys], dedupe=False
-                ).toPandas()["docid"]
+                victims = s.matching_docids([(key_field, k) for k in keys])
                 if len(victims):
-                    s.delete_docids(victims.to_numpy())
+                    s.delete_docids(victims)
         self._add(batch, batch_id)
 
     # -- public API ------------------------------------------------------------

@@ -11,11 +11,18 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-ONLY = sys.argv[2].split(",") if len(sys.argv) > 2 else None
+# --spark-runner: every query on the Spark runner (LOCAL_MAX_POSTINGS -1)
+SPARK_RUNNER = "--spark-runner" in sys.argv
+ARGS = [a for a in sys.argv[1:] if a != "--spark-runner"]
+SF_DIR = ARGS[0] if ARGS else "/root/testdata/sf0.01"
+ONLY = ARGS[1].split(",") if len(ARGS) > 1 else None
 
 import __spark_entry__ as e
+from lucenenet_spark.operators import index_build
 from lucenenet_spark.session import get_spark
+
+if SPARK_RUNNER:
+    index_build.LOCAL_MAX_POSTINGS = -1
 
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:

@@ -158,3 +158,24 @@ def in_process_path():
 def spark_path():
     with forced_build_path("spark") as p:
         yield p
+
+
+@contextmanager
+def forced_runner(runner: str):
+    """Force every query onto one runner: "local" (every plan without a
+    Spark-only leaf runs on the driver) or "spark" (none does)."""
+    from lucenenet_spark.operators import index_build
+
+    mp = pytest.MonkeyPatch()
+    mp.setattr(index_build, "LOCAL_MAX_POSTINGS", {"local": 10**12, "spark": -1}[runner])
+    try:
+        yield runner
+    finally:
+        mp.undo()
+
+
+@pytest.fixture(scope="module")
+def spark_runner():
+    """For tests that assert Spark plans or job counts of a search."""
+    with forced_runner("spark") as r:
+        yield r

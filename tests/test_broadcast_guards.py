@@ -17,6 +17,9 @@ from lucenenet_spark.plans.query import BooleanQuery, TermQuery
 
 from .conftest import hits
 
+# asserts Spark plans or job counts: run the Spark runner
+pytestmark = pytest.mark.usefixtures("spark_runner")
+
 
 def _plan(df) -> str:
     import io

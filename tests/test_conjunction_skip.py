@@ -16,6 +16,9 @@ from lucenenet_spark.plans.query import BooleanQuery, TermQuery
 
 from .conftest import hits
 
+# asserts Spark plans or job counts: run the Spark runner
+pytestmark = pytest.mark.usefixtures("spark_runner")
+
 N = 6000
 RARE_LO, RARE_HI = 3100, 3120  # 20 rare docs, docid-clustered
 

@@ -3,6 +3,7 @@ FieldCacheRange/DocTermOrdsRange/CachingWrapper filters — docid-set
 parity against directly-computed sets (Search/PrefixFilter.cs,
 NumericRangeFilter.cs, FieldCacheTermsFilter.cs, FieldCacheRangeFilter.cs,
 DocTermOrdsRangeFilter.cs, CachingWrapperFilter.cs)."""
+import pytest
 from pyspark.sql import functions as F
 
 from lucenenet_spark.plans.query import (
@@ -15,6 +16,9 @@ from lucenenet_spark.plans.query import (
     PrefixFilter,
     PrefixQuery,
 )
+
+# asserts Spark plans or job counts: run the Spark runner
+pytestmark = pytest.mark.usefixtures("spark_runner")
 
 
 def _ids(df):

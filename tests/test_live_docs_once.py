@@ -6,6 +6,8 @@ until merged away, so masking once cannot change a live doc's score.
 import re
 import shutil
 
+import pytest
+
 from lucenenet_spark import oracle
 from lucenenet_spark.operators import spans
 from lucenenet_spark.operators.search import IndexSearcher
@@ -13,6 +15,9 @@ from lucenenet_spark.plans.parser import parse
 from lucenenet_spark.plans.query import BooleanQuery, PhraseQuery, TermQuery
 
 from .conftest import count_jobs, hits, phrase_pairs
+
+# asserts Spark plans or job counts: run the Spark runner
+pytestmark = pytest.mark.usefixtures("spark_runner")
 
 NESTED_Q = BooleanQuery(
     should=(

@@ -5,7 +5,12 @@ for in BENCH.md, locked against regressions."""
 import io
 from contextlib import redirect_stdout
 
+import pytest
+
 from lucenenet_spark.plans.query import TermQuery
+
+# asserts Spark plans or job counts: run the Spark runner
+pytestmark = pytest.mark.usefixtures("spark_runner")
 
 
 def _plan(df) -> str:

@@ -2,6 +2,8 @@
 tasks: every doc's positions sit in one block row (salts and segments
 split docids into disjoint ranges), so a single-term span and a
 PayloadTermQuery run with no shuffle before their top-k."""
+import pytest
+
 from lucenenet_spark import oracle
 from lucenenet_spark.operators import spans
 from lucenenet_spark.operators.index_build import IndexBuilder
@@ -9,6 +11,9 @@ from lucenenet_spark.operators.search import IndexSearcher
 from lucenenet_spark.plans.query import PayloadTermQuery
 
 from .conftest import hits
+
+# asserts Spark plans or job counts: run the Spark runner
+pytestmark = pytest.mark.usefixtures("spark_runner")
 
 
 def _executed_plan(df) -> str:
