@@ -56,22 +56,37 @@ from pyspark.sql.types import ArrayType
 
 from ..oracle import sloppy_phrase_freq
 from ..plans.query import (
+    CHAIN_AND,
+    CHAIN_ANDNOT,
+    CHAIN_XOR,
+    BooleanFilter,
     BooleanQuery,
+    CachingWrapperFilter,
+    ChainedFilter,
     CommonTermsQuery,
     ConstantScoreQuery,
     DisMaxQuery,
+    DocTermOrdsRangeFilter,
+    FieldCacheRangeFilter,
+    FieldCacheTermsFilter,
+    FieldValueFilter,
     FilteredQuery,
     FuzzyQuery,
     MatchAllQuery,
     MultiPhraseQuery,
     NGramPhraseQuery,
+    NumericRangeFilter,
     PayloadTermQuery,
     PhraseQuery,
+    PrefixFilter,
     PrefixQuery,
     Query,
+    QueryWrapperFilter,
     RegexpQuery,
     TermQuery,
     TermRangeQuery,
+    TermsFilter,
+    ValueSourceFilter,
     WildcardQuery,
 )
 from . import index_build
@@ -107,7 +122,7 @@ DOCID_COLS = ["first_docid", "count", "docids_enc", "tfs_enc", "docbase"]
 class Clause:
     clause_id: int
     term: str
-    weight: SimWeight | None  # the clause's normalized weight; None = MUST_NOT
+    weight: SimWeight | None  # the clause's normalized weight; None = docid-only
     field: str = FIELD
 
     @property
@@ -183,9 +198,9 @@ def slice_blocks(clauses: list[Clause], sim: SimScorer, R: int):
 
 
 def slice_scored(clause: int, R: int):
-    """Pre-scored (docid[, score]) rows of one phrase, span, nested or
-    multi-term clause -> range rows; without a score column the clause is
-    a MUST_NOT one and only bans."""
+    """Pre-scored (docid[, score]) rows of one phrase, span or nested
+    clause -> range rows; without a score column the clause is docid-only
+    (a constant-score, FILTER or MUST_NOT clause)."""
 
     def run(it):
         for pdf in it:
@@ -210,18 +225,29 @@ def reduce_ranges(
     coord: np.ndarray | None = None,
     tie: np.float32 | None = None,
     k: int | None = None,
+    n_filter: int = 0,
+    const: dict[int, np.float32] | None = None,
+    scored: bool = True,
 ):
-    """Range rows -> (docid, score) hits, one range at a time.
+    """Range rows -> (docid, score) hits, one range at a time (docid only
+    when not `scored`).
 
-    Clause ids below n_must are MUST, those below n_score score, the rest
-    are MUST_NOT bans. A range's accumulators are sized by its distinct
+    Clause ids below n_must are MUST, those below n_score SHOULD, the next
+    n_filter FILTER (required, unscored), the rest MUST_NOT bans. A
+    docid-only clause (no score bytes) in the scoring bands adds
+    const[clause]. A range's accumulators are sized by its distinct
     docids (np.unique + inverse), so a sparse range pays for its postings
-    only. Clause scores add in float32 in clause order (Lucene's scorer
-    order; adding nothing where a clause is absent is the exact identity
-    of adding +0f); then the MUST and minShouldMatch masks, the bans,
-    coord(overlap) where the family has one — or, for a DisMax (tie set),
-    max + tie*(sum - max) over the clauses present. With k set each range
-    keeps only its top k in HitQueue order (score desc, docid asc)."""
+    only. A clause's rows meet in one fancy-indexed update, which numpy
+    applies once per index: a docid held by several terms of one clause
+    counts and adds once, with no `distinct`. Clause scores add in float32
+    in clause order (Lucene's scorer order; adding nothing where a clause
+    is absent is the exact identity of adding +0f); then the MUST, FILTER
+    and minShouldMatch masks, the bans, coord(overlap) where the family
+    has one — or, for a DisMax (tie set), max + tie*(sum - max) over the
+    clauses present. With k set each range keeps only its top k in
+    HitQueue order (score desc, docid asc)."""
+    const = const or {}
+    n_req = n_score + n_filter
 
     def run(it):
         bufs = [p for p in it if len(p)]
@@ -238,50 +264,61 @@ def reduce_ranges(
         out_ids, out_scores = [], []
         for g0, g1 in zip(bounds[:-1], bounds[1:]):
             offs = [np.frombuffer(b, dtype=np.uint32) for b in offs_b[g0:g1]]
+            at = np.concatenate([[0], np.cumsum([len(o) for o in offs])])
             docs, inv = np.unique(np.concatenate(offs), return_inverse=True)
             acc = np.zeros(len(docs), dtype=np.float32)
             mx = np.zeros(len(docs), dtype=np.float32) if tie is not None else None
             nm = np.zeros(len(docs), dtype=np.int16)
             ns = np.zeros(len(docs), dtype=np.int16)
+            nf = np.zeros(len(docs), dtype=np.int16)
             banned = np.zeros(len(docs), dtype=bool)
-            at = 0
-            for i, o in zip(range(g0, g1), offs):  # clause-ascending
-                idx = inv[at : at + len(o)]
-                at += len(o)
-                cid = int(cls[i])
-                if cid >= n_score:
+            cl = cls[g0:g1]
+            runs = np.concatenate([[0], np.nonzero(cl[1:] != cl[:-1])[0] + 1, [g1 - g0]])
+            for c0, c1 in zip(runs[:-1], runs[1:]):  # one clause's rows, clause-ascending
+                idx = inv[at[c0] : at[c1]]
+                cid = int(cl[c0])
+                if cid >= n_req:
                     banned[idx] = True
                     continue
-                sc = np.frombuffer(sc_b[i], dtype=np.float32)
-                acc[idx] = acc[idx] + sc  # float32, clause order
-                if tie is not None:
-                    mx[idx] = np.maximum(mx[idx], sc)
+                if cid >= n_score:
+                    nf[idx] += 1
+                    continue
+                if scored:
+                    sc = const[cid] if cid in const else np.frombuffer(
+                        b"".join(sc_b[g0 + c0 : g0 + c1]), dtype=np.float32
+                    )
+                    acc[idx] = acc[idx] + sc  # float32, clause order
+                    if tie is not None:
+                        mx[idx] = np.maximum(mx[idx], sc)
+                if tie is not None or cid >= n_must:
                     ns[idx] += 1
-                elif cid < n_must:
-                    nm[idx] += 1
                 else:
-                    ns[idx] += 1
+                    nm[idx] += 1
             mask = (nm == n_must) if n_must else (ns > 0)
             if need_should:
                 mask &= ns >= need_should
+            if n_filter:
+                mask &= nf == n_filter
             cand = np.nonzero(mask & ~banned)[0]
             if not len(cand):
                 continue
-            if tie is not None:
-                scores = mx[cand] + tie * (acc[cand] - mx[cand])
-            else:
-                scores = acc[cand]
-                if coord is not None:
-                    scores = scores * coord[nm[cand] + ns[cand]]
-            if k is not None and len(cand) > k:
-                o = np.lexsort((cand, -scores))[:k]
-                cand, scores = cand[o], scores[o]
+            if scored:
+                if tie is not None:
+                    scores = mx[cand] + tie * (acc[cand] - mx[cand])
+                else:
+                    scores = acc[cand]
+                    if coord is not None:
+                        scores = scores * coord[nm[cand] + ns[cand]]
+                if k is not None and len(cand) > k:
+                    o = np.lexsort((cand, -scores))[:k]
+                    cand, scores = cand[o], scores[o]
+                out_scores.append(scores.astype(np.float32))
             out_ids.append(int(rids[g0]) * R + docs[cand].astype(np.int64))
-            out_scores.append(scores.astype(np.float32))
         if out_ids:
-            yield pd.DataFrame(
-                {"docid": np.concatenate(out_ids), "score": np.concatenate(out_scores)}
-            )
+            out = {"docid": np.concatenate(out_ids)}
+            if scored:
+                out["score"] = np.concatenate(out_scores)
+            yield pd.DataFrame(out)
 
     return run
 
@@ -525,12 +562,15 @@ class BlockScan:
 @dataclass
 class Slice:
     """One row source cut by a slicer kernel: `cols` of the source's rows
-    (a BlockScan's blocks, or another node's hits) in, `schema` rows out."""
+    (a BlockScan's blocks, or another node's hits) in, `schema` rows out.
+    `spread`: a doc's rows may come from several source rows in different
+    tasks (the blocks of several terms)."""
 
     source: object
     cols: list
     slicer: Callable
     schema: str
+    spread: bool = False
 
 
 @dataclass
@@ -552,8 +592,9 @@ class Empty:
 
 @dataclass
 class SparkOnly:
-    """An opaque leaf only Spark evaluates: FilteredQuery's SQL `where`,
-    the multi-term and constant-score docid sets, MatchAll."""
+    """An opaque row source only Spark evaluates: a docs-table predicate
+    (a SQL `where`, MatchAll, the docs-column filters), a multi-term block
+    scan, or a sequential filter fold (_filter_docids)."""
 
     build: Callable[[], DataFrame]
 
@@ -747,19 +788,13 @@ class IndexSearcher:
         return out
 
     def term_stats(self) -> DataFrame:
-        from .index_build import term_stats_view
-
-        out = None
-        for s in self.segments:
-            df = term_stats_view(self.spark, s["manifest"]["tables"]["postings"])
-            out = df if out is None else out.unionByName(df)
-        if len(self.segments) > 1:
-            out = out.groupBy("field", "term").agg(
-                F.sum("df").alias("df"),
-                F.sum("ttf").alias("ttf"),
-                F.max("max_bound").alias("max_bound"),
-            )
-        return out
+        """(field, term, df, ttf, max_bound): the stat rows of the
+        per-searcher listing summed across salts and segments."""
+        return self._stat_rows().groupBy("field", "term").agg(
+            F.sum("count").alias("df"),
+            F.sum("sum_tf").alias("ttf"),
+            F.max("max_score_bound").alias("max_bound"),
+        )
 
     def _stat_rows(self) -> DataFrame:
         """RAW terms-dict stat rows (block_no == -2), one per (field, term,
@@ -971,40 +1006,19 @@ class IndexSearcher:
             out = df if out is None else out.unionByName(df)
         return out
 
-    def _docids_of_terms(self, terms: list[str], dedupe: bool = True) -> DataFrame:
-        """Matching docids only (for MUST_NOT / constant score) — no scoring.
-
-        dedupe=False skips the distinct shuffle: correct whenever duplicates
-        are harmless (semi/anti-join probes) or impossible (a single
-        (field, term) key has one row per docid by construction)."""
-        if not terms:
-            return self.spark.range(0).select(F.col("id").alias("docid"))
-        keys = self._as_keys(terms)
-        if len(set(keys)) == 1:
-            dedupe = False  # single term-salt chain: docids already unique
-        return self._decode_docids(self._blocks_for(keys), dedupe=dedupe)
-
-    def _decode_docids(self, blocks: DataFrame, dedupe: bool = True) -> DataFrame:
-        """Decode docids (only) from block rows -> docid DF (distinct when
-        dedupe, which only matters across multiple terms)."""
-        out = blocks.select(DOCID_COLS).mapInPandas(decode_docids, DOCIDS_SCHEMA)
-        return out.distinct() if dedupe else out
-
     def matching_docids(self, keys) -> np.ndarray:
         """Docids holding any of the (field, term) keys, deletes not masked
-        (a delete probe): the keys' blocks decoded on the driver when their
-        Σdf fits LOCAL_MAX_POSTINGS, else by one Spark job."""
-        keys = self._as_keys(keys)
-        if sum(self.doc_freqs(keys).values()) <= index_build.LOCAL_MAX_POSTINGS:
-            frames = decode_docids([self._read_rows(keys, DOCID_COLS)])
-        else:
-            frames = [self._docids_of_terms(keys, dedupe=False).toPandas()]
-        return pd.concat(frames)["docid"].to_numpy(dtype=np.int64)
+        (a delete probe): the docid plan of TermsFilter(keys), run by the
+        runner plan() would pick."""
+        p = self._planned(self._plan_filter(TermsFilter(terms=tuple(self._as_keys(keys)))), None)
+        hits = self._local(p.root) if p.runner == "local" else self._spark(p.root).toPandas()
+        return hits["docid"].to_numpy(dtype=np.int64)
 
     # -- rewrite -------------------------------------------------------------------
-    def _multiterm_cond(self, q: Query):
-        """Terms-dict predicate for a MultiTermQuery node, or None."""
-        if isinstance(q, PrefixQuery):
+    def _multiterm_cond(self, q):
+        """Terms-dict predicate of a MultiTermQuery node or a term-range
+        filter, or None."""
+        if isinstance(q, (PrefixQuery, PrefixFilter)):
             return F.col("term").startswith(q.prefix)
         if isinstance(q, WildcardQuery):
             rx = "^" + "".join(
@@ -1034,23 +1048,18 @@ class IndexSearcher:
                 return out
 
             return cond(lucene_regexp_to_tree(q.pattern))
-        if isinstance(q, TermRangeQuery):
-            cond = F.lit(True)
-            if q.lower is not None:
-                cond = cond & (F.col("term") >= q.lower if q.include_lower else F.col("term") > q.lower)
-            if q.upper is not None:
-                cond = cond & (F.col("term") <= q.upper if q.include_upper else F.col("term") < q.upper)
-            return cond
+        if isinstance(q, (TermRangeQuery, DocTermOrdsRangeFilter)):
+            return _range_cond(F.col("term"), q)
         return None
 
     def rewrite(self, q: Query) -> Query:
         """Rewrite fixpoint (IndexSearcher.cs:753-760).
 
         FuzzyQuery expands to its 50 best terms (boolean constant-score);
-        the other MultiTermQuery kinds stay as-is and are evaluated as a
-        distributed semi-join against the terms dict in scores() — the
-        scale-safe equivalent of Lucene's CONSTANT_SCORE filter rewrite
-        (MultiTermQuery.cs:95): no term list ever hits the driver."""
+        the other MultiTermQuery kinds stay as-is: planning makes each one
+        constant-score clause over a predicate-filtered block scan
+        (_docid_slice) — Lucene's CONSTANT_SCORE filter rewrite
+        (MultiTermQuery.cs:95) with no term list on the driver."""
         if isinstance(q, FuzzyQuery):
             # Lucene's FuzzyQuery uses Damerau-Levenshtein automata
             # (transpositions=true, LevenshteinAutomata.cs); matched with a
@@ -1239,7 +1248,10 @@ class IndexSearcher:
         The local runner runs it when no Spark-only leaf is in the tree and
         both the Σdf of its keys and the (capped) delete count fit
         index_build.LOCAL_MAX_POSTINGS; the Spark runner otherwise."""
-        root = self._plan(q, k if prune else None)
+        return self._planned(self._plan(q, k if prune else None), k)
+
+    def _planned(self, root, k: int | None) -> Plan:
+        """A plan tree with its runner chosen (see plan())."""
         nodes = list(plan_nodes(root))
         keys = sorted({key for n in nodes if isinstance(n, BlockScan) for key in n.keys})
         sum_df = sum(self.doc_freqs(keys).values()) if keys else 0
@@ -1339,46 +1351,17 @@ class IndexSearcher:
         return self._execute(self.plan(q))
 
     def _filter_docids(self, f) -> DataFrame:
-        """Evaluate a Filter tree to its docid set (Search/Filter.cs
-        GetDocIdSet, distributed: every set op is a docid-keyed
-        join/union — never a driver-side bitset).
-
-        - TermsFilter: union of the (field, term) postings
-          (Lucene.Net.Queries/TermsFilter.cs)
-        - FieldValueFilter: docsWithField via the typed docs column
-          (Search/FieldValueFilter.cs)
-        - QueryWrapperFilter: inner query's matches, scores dropped
-          (Search/QueryWrapperFilter.cs)
-        - BooleanFilter: OR(shoulds) -> AndNot(nots; from ALL docs when no
-          should clause) -> And(musts) (Lucene.Net.Queries/BooleanFilter.cs)
-        - ChainedFilter: InitialResult + DoChain fold with per-filter
-          OR/AND/ANDNOT/XOR (Lucene.Net.Queries/ChainedFilter.cs)
-        """
-        from ..plans.query import (
-            CHAIN_AND,
-            CHAIN_ANDNOT,
-            CHAIN_XOR,
-            BooleanFilter,
-            CachingWrapperFilter,
-            ChainedFilter,
-            DocTermOrdsRangeFilter,
-            FieldCacheRangeFilter,
-            FieldCacheTermsFilter,
-            FieldValueFilter,
-            NumericRangeFilter,
-            PrefixFilter,
-            QueryWrapperFilter,
-            TermsFilter,
-            ValueSourceFilter,
-        )
-
+        """A Filter tree's docid set as a Spark frame, liveDocs unmasked
+        (Search/Filter.cs GetDocIdSet): _plan_filter(f) run by Spark, but
+        for the sequential filters, which fold such frames: ValueSourceFilter
+        (Lucene.Net.Spatial/Util/ValueSourceFilter.cs), CachingWrapperFilter
+        (one cached frame per searcher) and ChainedFilter's InitialResult +
+        DoChain OR/AND/ANDNOT/XOR fold (Lucene.Net.Queries/ChainedFilter.cs)."""
         if isinstance(f, ValueSourceFilter):
-            # Lucene.Net.Spatial/Util/ValueSourceFilter.cs: docs of the
-            # starting filter whose double value source value sits in the
-            # INCLUSIVE [min, max] window. The circle arm of
-            # PointVectorStrategy: bbox ranges prune first (pushed-down
-            # numeric predicates), then the vectorized haversine UDF runs
-            # over the survivors only.
+            # docs in the INCLUSIVE [min, max] window of the distance; the
+            # circle arm of PointVectorStrategy: bbox ranges prune first
+            # (pushed-down numeric predicates), then the vectorized
+            # haversine UDF runs over the survivors only
             from .spatial import distance_column
 
             base = self.docs()
@@ -1390,49 +1373,6 @@ class IndexSearcher:
             return base.filter(
                 (v >= F.lit(f.min)) & (v <= F.lit(f.max))
             ).select("docid")
-        if isinstance(f, TermsFilter):
-            return self._docids_of_terms([tuple(p) for p in f.terms])
-        if isinstance(f, PrefixFilter):
-            # MultiTermQueryWrapperFilter over the prefix enum: terms-dict
-            # range pushdown, then decode docids (never a term collect)
-            blocks = self.postings().filter(F.col("field") == f.field).filter(
-                (F.col("term") >= f.prefix)
-                & (F.col("term") < f.prefix + "￿")
-            )
-            return self._decode_docids(blocks)
-        if isinstance(f, (NumericRangeFilter, FieldCacheRangeFilter)):
-            col = F.col(f.field)
-            cond = F.lit(True)
-            if f.lower is not None:
-                cond = cond & (
-                    (col >= f.lower) if f.include_lower else (col > f.lower)
-                )
-            if f.upper is not None:
-                cond = cond & (
-                    (col <= f.upper) if f.include_upper else (col < f.upper)
-                )
-            return self.docs().filter(cond).select("docid")
-        if isinstance(f, FieldCacheTermsFilter):
-            return (
-                self.docs()
-                .filter(F.col(f.field).isin(list(f.terms)))
-                .select("docid")
-            )
-        if isinstance(f, DocTermOrdsRangeFilter):
-            blocks = self.postings().filter(F.col("field") == f.field)
-            if f.lower is not None:
-                blocks = blocks.filter(
-                    (F.col("term") >= f.lower)
-                    if f.include_lower
-                    else (F.col("term") > f.lower)
-                )
-            if f.upper is not None:
-                blocks = blocks.filter(
-                    (F.col("term") <= f.upper)
-                    if f.include_upper
-                    else (F.col("term") < f.upper)
-                )
-            return self._decode_docids(blocks)
         if isinstance(f, CachingWrapperFilter):
             key = f.filter
             cached = self._filter_cache.get(key)
@@ -1440,31 +1380,6 @@ class IndexSearcher:
                 cached = self._filter_docids(key).cache()
                 self._filter_cache[key] = cached
             return cached
-        if isinstance(f, FieldValueFilter):
-            col = F.col(f.field)
-            cond = col.isNull() if f.negate else col.isNotNull()
-            return self.docs().filter(cond).select("docid")
-        if isinstance(f, QueryWrapperFilter):
-            return self._scores_raw(f.query).select("docid").distinct()
-        if isinstance(f, BooleanFilter):
-            res = None
-            for c in f.should:
-                d = self._filter_docids(c)
-                res = d if res is None else res.union(d)
-            if res is not None:
-                res = res.distinct()
-            for c in f.must_not:
-                if res is None:  # no SHOULD clauses: start from ALL docs
-                    res = self.docs().select("docid")
-                res = res.join(
-                    self._filter_docids(c), "docid", "left_anti"
-                )
-            for c in f.must:
-                d = self._filter_docids(c)
-                res = d if res is None else res.join(d, "docid", "left_semi")
-            if res is None:
-                return self.spark.range(0).select(F.col("id").alias("docid"))
-            return res
         if isinstance(f, ChainedFilter):
             logic = list(f.logic) or [0] * len(f.filters)
             if len(logic) != len(f.filters):
@@ -1495,117 +1410,150 @@ class IndexSearcher:
                 else:  # OR (and the reference's DEFAULT fallthrough)
                     res = res.union(d).distinct()
             return res
-        raise TypeError(f"unknown Filter {type(f).__name__}")
+        return self._spark(self._plan_filter(f))
 
-    def _scores_raw(self, q: Query) -> DataFrame:
-        """A query's hits as Spark stages, liveDocs unmasked (a nested
-        query inside a Spark-only leaf)."""
-        return self._spark(self._plan(q))
-
-    def _plan(self, q: Query, prune_k: int | None = None):
-        """The plan node of one query node (prune_k: the top-k each reducer
-        range may keep)."""
+    def _plan(self, q: Query, prune_k: int | None = None, scored: bool = True, filters=()):
+        """The plan node of one query node: its (docid, score) hits, or its
+        docids only when not `scored` (a banned or constant-score node
+        weighs nothing). prune_k: the top-k each reducer range may keep;
+        filters: FILTER clauses every hit passes (see _docid_slice)."""
         if isinstance(q, FilteredQuery):
-            return SparkOnly(lambda: self._filtered_scores(q))
+            # the inner query plus FILTER clauses, with no per-range top-k:
+            # it bounds the unfiltered top-k; a filter could surface docs
+            # below it
+            extra = ((q.filter,) if q.filter is not None else ()) + (
+                (q.where,) if q.where != "true" else ()
+            )
+            return self._plan(q.query, None, scored, filters + extra)
         q = self.rewrite(q)
-        if isinstance(q, (MatchAllQuery, ConstantScoreQuery)) or (
-            self._multiterm_cond(q) is not None
-        ):
-            return SparkOnly(lambda: self._constant_scores(q))
-        if isinstance(q, PayloadTermQuery):
-            return self._plan_payload_term(q)
+        if isinstance(q, (PhraseQuery, MultiPhraseQuery)) and not (scored or filters):
+            return self._plan_phrase(q, None)
         if isinstance(q, (TermQuery, PhraseQuery, MultiPhraseQuery)):
             # a lone term/phrase is a one-clause boolean: same weight,
             # queryNorm over itself, coord 1
             q = BooleanQuery(should=(q,))
         if isinstance(q, DisMaxQuery):
-            return self._plan_dismax(q, prune_k)
+            return self._plan_dismax(q, prune_k, scored, filters)
         if isinstance(q, BooleanQuery):
-            return self._plan_boolean(q, prune_k)
+            return self._plan_boolean(q, prune_k, scored, filters)
+        if filters or self._constant(q):
+            # one clause beside the filters: a constant-score node's
+            # docids, or a node planned on its own
+            return self._plan_combine((q,), [None], (), prune_k, scored=scored, filters=filters)
+        if isinstance(q, PayloadTermQuery):
+            return self._plan_payload_term(q, scored)
         # SpanQuery as a scores() citizen: a span clause inside a boolean
         # (the reference's SpanQuery IS-A Query) routes through the span
         # machinery, which already honors the active similarity
         from . import spans as _spans
 
         if isinstance(q, _spans.SpanQuery):
-            return _spans.span_plan(self, q)
+            return _spans.span_plan(self, q, scored)
         if isinstance(q, _spans.PayloadNearQuery):
-            return _spans.payload_near_plan(self, q)
+            return _spans.payload_near_plan(self, q, scored)
         raise TypeError(f"unsupported query node {type(q).__name__}")
 
-    def _filtered_scores(self, q: FilteredQuery) -> DataFrame:
-        # doc-side predicate: semi-join scores against the filtered docs
-        # view — the predicate pushes down to the typed parquet columns
-        passing = self.docs().filter(F.expr(q.where)).select("docid")
-        if q.filter is not None:
-            passing = passing.join(
-                self._filter_docids(q.filter), "docid", "left_semi"
-            )
-        # no per-range top-k: it bounds the unfiltered top-k; a filter
-        # could surface docs below it
-        return self._scores_raw(q.query).join(passing, "docid", "left_semi")
+    def _constant(self, q) -> bool:
+        """A node scoring its boost on every doc it matches (multi-term
+        queries: the CONSTANT_SCORE rewrite)."""
+        return isinstance(q, (ConstantScoreQuery, MatchAllQuery)) or self._multiterm_cond(q) is not None
 
-    def _constant_scores(self, q: Query) -> DataFrame:
-        """MatchAll, the multi-term rewrites and ConstantScoreQuery: a docid
-        set scored with the query's boost."""
-        const = F.lit(float(np.float32(q.boost))).cast("float").alias("score")
-        if isinstance(q, MatchAllQuery):
-            return self.docs().select("docid", const)
-        if isinstance(q, ConstantScoreQuery):
-            # ConstantScoreQuery.cs: matches exactly the docs the wrapped
-            # query (or filter) matches, score = boost. Docid-union of the
-            # inner terms is only that set for a pure term disjunction (the
-            # FuzzyQuery rewrite shape) — anything else evaluates the inner
-            # query and keeps its docids.
-            inner = q.query
-            if q.filter is not None:
-                return self._filter_docids(q.filter).select("docid", const)
-            pure_should = isinstance(inner, TermQuery) or (
-                isinstance(inner, BooleanQuery)
-                and not inner.must
-                and not inner.must_not
-                and inner.min_should_match <= 1
-                and all(isinstance(c, TermQuery) for c in inner.should)
+    def _plan_filter(self, f):
+        """A Filter's docid set as a plan node (docid only).
+
+        BooleanFilter (Lucene.Net.Queries/BooleanFilter.cs) is its clauses
+        in the reducer's bands: OR over SHOULD, AndNot MUST_NOT, And MUST.
+        Where the reference starts from all docs — MUST_NOT clauses with
+        neither a SHOULD nor a MUST one — MatchAll's docs source is the
+        SHOULD clause. Any other filter is one docid-only clause."""
+        if not isinstance(f, BooleanFilter):
+            return self._plan_combine((f,), [None], scored=False)
+        should = f.should or ((MatchAllQuery(),) if f.must_not and not f.must else ())
+        subs = f.must + should
+        if not subs:
+            return Empty()
+        return self._plan_combine(
+            subs, [None] * len(subs), f.must_not, n_must=len(f.must),
+            need_should=1 if should else 0, scored=False,
+        )
+
+    def _docid_slice(self, x, cid: int) -> Slice:
+        """The docid-only range rows of clause `cid`, which ship no score:
+        a Filter, a constant-score node, a FilteredQuery's SQL `where` (a
+        str over the docs table), or any other query's unscored plan.
+
+        A term or TermsFilter (Lucene.Net.Queries/TermsFilter.cs) is a
+        block scan of its keys; a multi-term query, PrefixFilter and
+        DocTermOrdsRangeFilter the predicate-filtered block scan of their
+        terms, decoded to docids; the docs-column filters and MatchAll a
+        docs-table predicate. The reducer unions a clause's rows, so the
+        docids of several terms need no `distinct`."""
+        R = self.BULK_RANGE
+        if isinstance(x, ConstantScoreQuery):
+            # ConstantScoreQuery.cs: exactly the wrapped query's or filter's docs
+            return self._docid_slice(x.query if x.filter is None else x.filter, cid)
+        if isinstance(x, QueryWrapperFilter):
+            return self._docid_slice(x.query, cid)
+        if isinstance(x, TermQuery):
+            x = TermsFilter(terms=((x.field, x.term),))
+        if isinstance(x, TermsFilter):
+            clauses = [Clause(cid, t, None, field=f) for f, t in dict.fromkeys(map(tuple, x.terms))]
+            return Slice(
+                BlockScan([c.key for c in clauses]), BLOCK_COLS,
+                slice_blocks(clauses, self.sim, R), RANGE_ROWS_SCHEMA,
+                spread=len(clauses) > 1,
             )
-            if pure_should:
-                return self._docids_of_terms(_collect_terms(inner)).select("docid", const)
-            return self._scores_raw(inner).select("docid", const)
-        # CONSTANT_SCORE filter rewrite, distributed. Prefix/range
-        # predicates are plain term comparisons, so they evaluate
-        # DIRECTLY on the (term-sorted) postings scan and push down to
-        # parquet row-group min/max stats — one job, no terms-dict
-        # expansion at all. Wildcard/regexp keep the broadcast
-        # semi-join against the raw stat rows (regex runs once per
-        # vocab row, the block scan then hash-probes; duplicates
-        # across salts are harmless under left_semi, no groupBy job).
-        cond = self._multiterm_cond(q)
-        blocks = self.postings().filter(F.col("field") == FIELD)
-        if isinstance(q, PrefixQuery):
-            blocks = blocks.filter(
-                (F.col("term") >= q.prefix) & (F.col("term") < q.prefix + "\uffff")
+        if self._multiterm_cond(x) is not None:
+            cut = slice_scored(cid, R)
+            return Slice(
+                SparkOnly(lambda: self._multiterm_blocks(x)), DOCID_COLS,
+                lambda it: cut(decode_docids(it)), RANGE_ROWS_SCHEMA, spread=True,
             )
-        elif isinstance(q, TermRangeQuery):
-            blocks = blocks.filter(cond)
+        if isinstance(x, (str, MatchAllQuery, FieldValueFilter, FieldCacheTermsFilter,
+                          NumericRangeFilter, FieldCacheRangeFilter)):
+            node = SparkOnly(lambda: self.docs().filter(_docs_cond(x)).select("docid"))
+        elif isinstance(x, (ChainedFilter, ValueSourceFilter, CachingWrapperFilter)):
+            node = SparkOnly(lambda: self._filter_docids(x))
+        elif isinstance(x, BooleanFilter):
+            node = self._plan_filter(x)
         else:
-            matching = F.broadcast(
-                self._stat_rows()
-                .filter(F.col("field") == FIELD)
-                .filter(cond)
-                .select("term")
+            node = self._plan(x, scored=False)
+        return Slice(node, ["docid"], slice_scored(cid, R), RANGE_ROWS_SCHEMA)
+
+    def _multiterm_blocks(self, x) -> DataFrame:
+        """The posting blocks of every term a multi-term query or filter
+        matches. Prefix and range predicates are plain term comparisons,
+        so they run on the (term-sorted) block scan and push down to
+        parquet row-group min/max stats; a wildcard or regexp runs once per
+        terms-dict row, and the block scan hash-probes the broadcast
+        matches (duplicates across salts are harmless under left_semi)."""
+        field = getattr(x, "field", FIELD)
+        blocks = self.postings().filter(F.col("field") == field)
+        if isinstance(x, (PrefixQuery, PrefixFilter)):
+            return blocks.filter(
+                (F.col("term") >= x.prefix) & (F.col("term") < x.prefix + "\uffff")
             )
-            blocks = blocks.join(matching, "term", "left_semi")
-        return self._decode_docids(blocks).select("docid", const)
+        cond = self._multiterm_cond(x)
+        if isinstance(x, (TermRangeQuery, DocTermOrdsRangeFilter)):
+            return blocks.filter(cond)
+        matching = F.broadcast(
+            self._stat_rows().filter(F.col("field") == field).filter(cond).select("term")
+        )
+        return blocks.join(matching, "term", "left_semi")
 
     def _empty_hits(self) -> DataFrame:
         return self.spark.range(0).select(
             F.col("id").alias("docid"), F.lit(0.0).cast("float").alias("score")
         )
 
-    def _clauses(self, subs, top_boost: float) -> tuple[list[Query], list]:
+    def _clauses(self, subs, top_boost: float, scored: bool = True) -> tuple[list, list]:
         """Weigh one boolean/DisMax level: its subs with the level's boost
         folded in where the family does (SimScorer.clause_boost), and per
         sub the normalized SimWeight of a term/phrase clause, or None for a
-        sub scored on its own (nested booleans, spans, ...)."""
+        sub scored on its own (nested booleans, spans, ...). An unscored
+        level weighs nothing."""
+        if not scored:
+            return list(subs), [None] * len(subs)
         out = []
         for c in subs:
             b = self.sim.clause_boost(c.boost, top_boost)
@@ -1636,22 +1584,29 @@ class IndexSearcher:
         coord: np.ndarray | None = None,
         tie: np.float32 | None = None,
         wand: bool = False,
+        scored: bool = True,
+        filters=(),
     ):
-        """One boolean/DisMax level through the range reducer.
+        """One boolean/DisMax level through the range reducer, its bands in
+        clause-id order: the MUST and SHOULD subs, the FILTER clauses, the
+        MUST_NOT ones.
 
-        Every matchable term clause, and every term MUST_NOT clause, scores
+        Every matchable term clause, and every term MUST_NOT clause, reads
         in one block pass (restricted to the rarest MUST term's docid
-        ranges; block-max pruned when `wand`); a phrase clause runs its
-        phrase scorer with its weight (a MUST_NOT phrase or span without
-        one: it only matches) and any other sub is planned on its own,
-        unmasked — liveDocs are masked once, at the plan's root. With one
-        row source and no MUST_NOT clause every doc has one row per clause
-        inside one task, so the reducer runs in the scoring tasks; anything
+        ranges; block-max pruned when `wand`), scored by its weight when it
+        has one. A weighed phrase runs its phrase scorer; a constant-score
+        sub (ConstantScoreQuery, MatchAll, a multi-term query) is a
+        docid-only clause adding its boost; any other sub is planned on its
+        own, unscored when the level is. FILTER and MUST_NOT clauses only
+        match (_docid_slice). Sub-plans are unmasked — liveDocs are masked
+        once, at the plan's root. With one row source that holds each doc
+        in one task (one term's blocks, or one nested node's hits) and no
+        MUST_NOT clause the reducer runs in the slicing tasks; anything
         else meets in one coalescable shuffle on the range id. Each range
-        keeps its top prune_k only when no doc is deleted: the liveDocs mask
-        comes after the reducer."""
+        keeps its top prune_k only when no doc is deleted: the liveDocs
+        mask comes after the reducer."""
         R = self.BULK_RANGE
-        n = len(subs)
+        n, nf = len(subs), len(filters)
         live = [self._matchable(c) for c in subs]
         if not any(live):
             return Empty()
@@ -1661,7 +1616,7 @@ class IndexSearcher:
             for i, c in enumerate(subs)
             if live[i] and isinstance(c, TermQuery)
         ] + [
-            Clause(n + j, c.term, None, field=c.field)
+            Clause(n + nf + j, c.term, None, field=c.field)
             for j, c in enumerate(banned)
             if isinstance(c, TermQuery)
         ]
@@ -1674,41 +1629,37 @@ class IndexSearcher:
                 prune=[c.key for c in terms if c.clause_id < n_must],
                 wand=(terms, prune_k) if wand else None,
             )
-            slices.append(
-                Slice(scan, BLOCK_COLS, slice_blocks(terms, self.sim, R), RANGE_ROWS_SCHEMA)
-            )
+            slices.append(Slice(
+                scan, BLOCK_COLS, slice_blocks(terms, self.sim, R), RANGE_ROWS_SCHEMA,
+                spread=len({c.key for c in terms}) > 1,
+            ))
+        const = {}
         for i, c in enumerate(subs):
             if isinstance(c, TermQuery) or not live[i]:
                 continue
-            sub = (
-                self._plan_phrase(c, weights[i])
-                if weights[i] is not None
-                else self._plan(c)
-            )
+            if not scored or self._constant(c):
+                slices.append(self._docid_slice(c, i))
+                if scored:
+                    const[i] = np.float32(c.boost)
+                continue
+            sub = self._plan_phrase(c, weights[i]) if weights[i] is not None else self._plan(c)
             slices.append(Slice(sub, ["docid", "score"], slice_scored(i, R), RANGE_ROWS_SCHEMA))
-        from . import spans as _spans
-
+        for j, x in enumerate(filters):
+            slices.append(self._docid_slice(x, n + j))
         for j, c in enumerate(banned):
             if not isinstance(c, TermQuery):
-                # a banned phrase or span only matches: its docids, never
-                # a score
-                if self._slots(c):
-                    sub = self._plan_phrase(c, None)
-                elif isinstance(c, _spans.SpanQuery):
-                    sub = _spans.span_plan(self, c, scored=False)
-                else:
-                    sub = self._plan(c)
-                slices.append(Slice(sub, ["docid"], slice_scored(n + j, R), RANGE_ROWS_SCHEMA))
+                slices.append(self._docid_slice(c, n + nf + j))
         k = None if self._has_deletes() else prune_k
         return Reduce(
             slices,
-            reduce_ranges(R, n, n_must, need_should, coord, tie, k),
-            HITS_SCHEMA,
-            # one row source: a single term's blocks or a single scored clause
-            shuffle=bool(banned) or len(slices) > 1 or len({c.key for c in terms}) > 1,
+            reduce_ranges(R, n, n_must, need_should, coord, tie, k, nf, const, scored),
+            HITS_SCHEMA if scored else DOCIDS_SCHEMA,
+            shuffle=bool(banned) or len(slices) > 1 or slices[0].spread,
         )
 
-    def _plan_boolean(self, q: BooleanQuery, prune_k: int | None):
+    def _plan_boolean(
+        self, q: BooleanQuery, prune_k: int | None, scored: bool = True, filters=()
+    ):
         """BooleanQuery under the active similarity (BooleanWeight +
         BooleanScorer2): MUST = every required clause matched, SHOULD =
         minShouldMatch count, clause scores summed f32 in clause order,
@@ -1718,7 +1669,7 @@ class IndexSearcher:
             # clause-less query (e.g. all terms were stopwords) matches nothing
             return Empty()
         n_must = len(q.must)
-        subs, weights = self._clauses(q.must + q.should, q.boost)
+        subs, weights = self._clauses(q.must + q.should, q.boost, scored)
         live = [self._matchable(c) for c in subs]
         if not all(live[:n_must]):
             return Empty()
@@ -1753,8 +1704,10 @@ class IndexSearcher:
             prune_k,
             n_must=n_must,
             need_should=msm if n_must else max(1, msm) if q.should else 0,
-            coord=self.sim.coord(len(subs)) if len(subs) > 1 else None,
+            coord=self.sim.coord(len(subs)) if scored and len(subs) > 1 else None,
             wand=bool(can_prune),
+            scored=scored,
+            filters=filters,
         )
 
     def _conjunction_prune(
@@ -1798,10 +1751,12 @@ class IndexSearcher:
         glo = F.col("first_docid") + F.col("docbase")
         ghi = F.col("last_docid") + F.col("docbase")
         if df_rare <= max_rare_df:
-            # dedupe=False: one (field, term) -> docids unique by
-            # construction; skipping distinct makes planning a 1-stage job
+            # one (field, term): docids unique by construction, so
+            # planning is a 1-stage job
             ids = F.broadcast(
-                self._decode_docids(self._blocks_for([rare]), dedupe=False)
+                self._blocks_for([rare]).select(DOCID_COLS).mapInPandas(
+                    decode_docids, DOCIDS_SCHEMA
+                )
             )
             pruned = others.join(
                 ids, (glo <= F.col("docid")) & (ghi >= F.col("docid")), "left_semi"
@@ -1899,15 +1854,16 @@ class IndexSearcher:
         if function not in ("avg", "min", "max"):
             raise ValueError(f"unknown payload function {function!r}")
 
-    def _plan_payload_term(self, q: PayloadTermQuery):
+    def _plan_payload_term(self, q: PayloadTermQuery, scored: bool = True):
         """PayloadTermQuery (Search/Payloads/PayloadTermQuery.cs) in the
         positions kernel: the term is one leaf shipping its payloads,
-        scored by payload_term_match; one key, so no shuffle."""
+        scored by payload_term_match (docids only when not `scored`); one
+        key, so no shuffle."""
         self._payload_guard(q.function)
         key = (q.field, q.term)
         if self.doc_freqs([key])[key] == 0:
             return Empty()
-        w = self._sim_weights([([key], q.field, q.boost)])[0]
+        w = self._sim_weights([([key], q.field, q.boost)])[0] if scored else None
         return self._plan_positions(
             {key: [(0, 0)]},
             payload_term_match(q.function, q.include_span_score),
@@ -1916,7 +1872,9 @@ class IndexSearcher:
             pay=True,
         )
 
-    def _plan_dismax(self, q: DisMaxQuery, prune_k: int | None):
+    def _plan_dismax(
+        self, q: DisMaxQuery, prune_k: int | None, scored: bool = True, filters=()
+    ):
         """max + tie*(sum-max) over clause scores (DisjunctionMaxScorer).
 
         Clause weights normalize together (DisjunctionMaxWeight
@@ -1926,9 +1884,10 @@ class IndexSearcher:
         numpy float32 chain bit for bit."""
         if not q.queries:
             return Empty()
-        subs, weights = self._clauses(q.queries, q.boost)
+        subs, weights = self._clauses(q.queries, q.boost, scored)
         return self._plan_combine(
-            subs, weights, prune_k=prune_k, tie=np.float32(q.tie_breaker)
+            subs, weights, prune_k=prune_k, tie=np.float32(q.tie_breaker),
+            scored=scored, filters=filters,
         )
 
     # docids per reducer range: bounds one range's accumulators (512 KB of
@@ -2955,6 +2914,34 @@ def _with_dl_edits(terms_df: DataFrame, query: str) -> DataFrame:
         return s.map(lambda t: dl_distance(t, query)).astype("int32")
 
     return terms_df.withColumn("edits", edits(F.col("term")))
+
+
+def _range_cond(col, r):
+    """col inside r's optionally open, optionally exclusive [lower, upper]."""
+    cond = F.lit(True)
+    if r.lower is not None:
+        cond = cond & ((col >= r.lower) if r.include_lower else (col > r.lower))
+    if r.upper is not None:
+        cond = cond & ((col <= r.upper) if r.include_upper else (col < r.upper))
+    return cond
+
+
+def _docs_cond(x):
+    """The docs-table predicate of a FilteredQuery's SQL `where` (a str),
+    MatchAll or a docs-column filter: docsWithField (Search/
+    FieldValueFilter.cs), a value set (FieldCacheTermsFilter.cs) or a range
+    (NumericRangeFilter.cs, FieldCacheRangeFilter.cs); it pushes down to
+    the typed parquet columns."""
+    if isinstance(x, str):
+        return F.expr(x)
+    if isinstance(x, MatchAllQuery):
+        return F.lit(True)
+    col = F.col(x.field)
+    if isinstance(x, FieldValueFilter):
+        return col.isNull() if x.negate else col.isNotNull()
+    if isinstance(x, FieldCacheTermsFilter):
+        return col.isin(list(x.terms))
+    return _range_cond(col, x)
 
 
 def _collect_terms(q: Query) -> list:

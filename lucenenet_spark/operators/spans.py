@@ -547,8 +547,10 @@ def span_search(searcher, q: Query, k: int = 10) -> DataFrame:
     return searcher.search(q, k)
 
 
-def payload_near_plan(searcher, q: PayloadNearQuery):
-    """A PayloadNearQuery's plan node (flat term clauses).
+def payload_near_plan(searcher, q: PayloadNearQuery, scored: bool = True):
+    """A PayloadNearQuery's plan node (flat term clauses); unscored (a
+    MUST_NOT one only bans) it is the ordered SpanNear over the same
+    clauses, which matches the same docs with no payload read.
 
     Through the positions kernel like span_plan, with the aligned f32
     payload channel sliced beside the positions. The candidate set is
@@ -580,6 +582,8 @@ def payload_near_plan(searcher, q: PayloadNearQuery):
             f"PayloadNearQuery clauses must share one field, got {sorted(fields)}"
         )
     searcher._payload_guard(q.function)
+    if not scored:
+        return span_plan(searcher, SpanNearQuery(clauses=q.clauses, slop=q.slop), False)
     clauses = [(c.field, c.term) for c in q.clauses]
     keys = sorted(set(clauses))
     dfs = searcher.doc_freqs(keys)
@@ -611,7 +615,7 @@ def payload_near_plan(searcher, q: PayloadNearQuery):
 def payload_near_scores(searcher, q: PayloadNearQuery) -> DataFrame:
     """DataFrame(docid, score) of a PayloadNearQuery, liveDocs unmasked
     (payload_near_plan run by Spark)."""
-    return searcher._scores_raw(q)
+    return searcher._spark(searcher._plan(q))
 
 
 def payload_near_search(searcher, q: PayloadNearQuery, k: int = 10) -> DataFrame:

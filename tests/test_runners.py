@@ -14,13 +14,17 @@ from lucenenet_spark.operators.index_build import IndexBuilder
 from lucenenet_spark.operators.search import IndexSearcher
 from lucenenet_spark.plans.parser import parse
 from lucenenet_spark.plans.query import (
+    BooleanFilter,
     BooleanQuery,
     ConstantScoreQuery,
     DisMaxQuery,
+    FilteredQuery,
     MultiPhraseQuery,
     PayloadTermQuery,
     PhraseQuery,
+    PrefixQuery,
     TermQuery,
+    TermsFilter,
 )
 
 from .conftest import count_jobs, forced_build_path, forced_runner, hits, phrase_pairs
@@ -38,6 +42,11 @@ def _families(t1: str, t2: str) -> dict:
     near = spans.SpanNearQuery(
         clauses=(spans.SpanTermQuery(term=t1), spans.SpanTermQuery(term=t2)), slop=1
     )
+    pop = TermsFilter(terms=(("text", "popcorn"),))
+
+    def banned(q):
+        return BooleanQuery(must=(TermQuery(term=t1),), must_not=(q,))
+
     return {
         "term": parse("popcorn"),
         "and": parse("+popcorn +common3"),
@@ -58,6 +67,27 @@ def _families(t1: str, t2: str) -> dict:
         ),
         "span": near,
         "banned_span": BooleanQuery(must=(TermQuery(term=t1),), must_not=(near,)),
+        "constant_term": ConstantScoreQuery(query=TermQuery(term=t1), boost=1.5),
+        "constant_or": ConstantScoreQuery(query=parse(f"popcorn common3 {t2}")),
+        "constant_and": BooleanQuery(should=(
+            ConstantScoreQuery(query=parse("+popcorn +common3"), boost=2.0),
+            TermQuery(term=t2),
+        )),
+        "constant_terms_filter": ConstantScoreQuery(
+            filter=TermsFilter(terms=(("text", "popcorn"), ("text", t2), ("role", "tool"))),
+            boost=0.5,
+        ),
+        "filtered_terms_filter": FilteredQuery(
+            query=parse("popcorn common3"),
+            filter=TermsFilter(terms=(("text", t1), ("text", "common3"))),
+        ),
+        "bool_filter": ConstantScoreQuery(filter=BooleanFilter(
+            should=(pop, TermsFilter(terms=(("text", t1),))),
+            must_not=(TermsFilter(terms=(("text", "common3"),)),),
+        )),
+        "banned_nested": banned(parse("popcorn common3")),
+        "banned_constant": banned(ConstantScoreQuery(query=TermQuery(term="popcorn"))),
+        "banned_payload_near": banned(spans.PayloadNearQuery(clauses=near.clauses, slop=1)),
         "payload_term": PayloadTermQuery(term="popcorn"),
         "payload_near": spans.PayloadNearQuery(clauses=near.clauses, slop=1),
     }
@@ -135,14 +165,94 @@ def test_runners_bit_identical_one_segment(searcher, families):
 
 
 def test_spark_only_leaf_runs_on_spark(searcher):
-    """A Spark-only leaf (here ConstantScoreQuery) sends the whole plan to
-    the Spark runner, also as the one row source of a boolean, whose
-    reducer then runs in the slicing tasks."""
-    q = BooleanQuery(should=(ConstantScoreQuery(query=TermQuery(term="popcorn"), boost=2.0),))
+    """A Spark-only leaf (here FilteredQuery's SQL `where`) sends the whole
+    plan to the Spark runner, also as the one row source of a boolean,
+    whose reducer then runs in the slicing tasks."""
+    q = BooleanQuery(should=(FilteredQuery(
+        query=ConstantScoreQuery(query=TermQuery(term="popcorn"), boost=2.0),
+        where="docid >= 0",
+    ),))
     got = hits(searcher.search(q, 1000))
     assert searcher.last_plan.runner == "spark"
     want = sorted(searcher.matching_docids([("text", "popcorn")]))
     assert [d for d, _ in got] == want and {sc for _, sc in got} == {np.float32(2.0)}
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_docid_clauses_plan_no_join(searcher):
+    """Multi-term, constant-score and filter clauses meet in the range
+    reducer: on an index with no deletes their Spark plans hold no join
+    and no `distinct` aggregate, and their hits are the local runner's."""
+    pop, hello = TermsFilter(terms=(("text", "popcorn"),)), TermsFilter(terms=(("text", "hello"),))
+    qs = [
+        PrefixQuery(prefix="word1"),
+        ConstantScoreQuery(query=parse("popcorn hello common3")),
+        FilteredQuery(query=parse("common3 word7"), filter=TermsFilter(
+            terms=(("text", "popcorn"), ("text", "hello"))
+        )),
+        ConstantScoreQuery(filter=BooleanFilter(should=(pop, hello), must_not=(
+            TermsFilter(terms=(("text", "common3"),)),
+        ))),
+    ]
+    assert not searcher._has_deletes()
+    with forced_runner("spark"):
+        for q in qs:
+            df = searcher.search(q, 50)
+            plan = _executed_plan(df)
+            assert "Join" not in plan and "HashAggregate" not in plan, (q, plan)
+            got = hits(df)
+            with forced_runner("local"):
+                if not isinstance(q, PrefixQuery):  # a Spark-only leaf
+                    assert got == hits(searcher.search(q, 50))
+            assert got, q
+
+
+def test_constant_and_filter_queries_start_no_job(spark, searcher):
+    """ConstantScore and a TermsFilter FilteredQuery are reducer clauses
+    of the keys they read: once stats are warm, the local runner runs them
+    with no Spark job."""
+    tf = TermsFilter(terms=(("text", "common3"), ("role", "tool")))
+    qs = [
+        ConstantScoreQuery(query=TermQuery(term="popcorn"), boost=3.0),
+        ConstantScoreQuery(filter=tf),
+        FilteredQuery(query=TermQuery(term="popcorn"), filter=tf),
+    ]
+    for q in qs:
+        searcher.search(q, 10).collect()  # warm the stats cache
+    for q in qs:
+        with count_jobs(spark) as jobs:
+            assert searcher.search(q, 10).collect()
+        assert searcher.last_plan.runner == "local" and jobs["jobs"] == 0, (q, jobs)
+
+
+def test_banned_nodes_are_planned_unscored(spark, three_segments, monkeypatch, families):
+    """A banned PayloadNearQuery, nested boolean, ConstantScore or
+    FilteredQuery plans its docids only (DOCIDS_SCHEMA) and weighs
+    nothing: the one SimWeight computed is the MUST term's."""
+    from lucenenet_spark.operators.search import DOCIDS_SCHEMA
+
+    s = IndexSearcher(spark, three_segments)
+    must = families["banned_nested"].must[0]
+    weighed = []
+    real = s._sim_weights
+    monkeypatch.setattr(
+        s, "_sim_weights", lambda specs, *a: weighed.extend(specs) or real(specs, *a)
+    )
+    for x in (
+        families["banned_payload_near"].must_not[0],
+        families["banned_nested"].must_not[0],
+        ConstantScoreQuery(query=parse("popcorn common3")),
+        FilteredQuery(query=TermQuery(term="popcorn"), filter=TermsFilter(
+            terms=(("text", "common3"),)
+        )),
+    ):
+        weighed.clear()
+        root = s.plan(BooleanQuery(must=(must,), must_not=(x,)), 10).root
+        assert root.slices[-1].source.schema == DOCIDS_SCHEMA, x
+        assert [keys for keys, _f, _b in weighed] == [[(must.field, must.term)]], x
 
 
 def test_payload_guard_is_one_error(searcher):
@@ -260,7 +370,8 @@ def _bucket_index(spark, base, n_segments: int) -> list[str]:
 def test_warm_spark_search_lists_postings_once(spark, tmp_path, n_segments):
     """Each segment's postings table is listed once per searcher: a warm
     term search on the Spark runner is its one query job, a 2-term AND
-    its two (slice + reduce), with no listing job."""
+    its two (slice + reduce), and term_stats() its two, with no listing
+    job."""
     s = IndexSearcher(spark, _bucket_index(spark, tmp_path, n_segments))
     with forced_runner("spark"):
         for q in ("popcorn", "+popcorn +common3"):
@@ -269,6 +380,12 @@ def test_warm_spark_search_lists_postings_once(spark, tmp_path, n_segments):
             with count_jobs(spark) as jobs:
                 assert s.search(parse(q), 10).collect()
             assert jobs["jobs"] == want, (q, jobs)
+    # term_stats() groups the same listing's stat rows: its scan and its
+    # aggregate, whatever the segment count
+    s.term_stats().collect()
+    with count_jobs(spark) as jobs:
+        assert s.term_stats().collect()
+    assert jobs["jobs"] == 2, jobs
 
 
 def test_nrt_update_delete_phase_starts_no_job(spark, tmp_path, monkeypatch):
