@@ -95,26 +95,18 @@ def naive_bayes_classify(
     uniq_terms = sorted(set(tokens))
     wc: dict[tuple[str, str], int] = {}
     if uniq_terms:
+        import numpy as np
         import pandas as pd
 
         def decode_term_docids(it):
-            from .codec import decode_block
+            from .codec import decode_frame
 
             for pdf in it:
-                outs = []
-                for r in pdf.itertuples(index=False):
-                    docids, _ = decode_block(
-                        r.docids_enc, r.tfs_enc, r.first_docid, r.count
-                    )
-                    outs.append(
-                        pd.DataFrame({"term": r.term, "docid": docids + r.docbase})
-                    )
-                yield pd.concat(outs, ignore_index=True) if outs else pd.DataFrame(
-                    {
-                        "term": pd.Series(dtype="object"),
-                        "docid": pd.Series(dtype="int64"),
-                    }
-                )
+                f = decode_frame(pdf)
+                yield pd.DataFrame({
+                    "term": np.repeat(pdf["term"].to_numpy(), np.diff(f.at)),
+                    "docid": f.docids,
+                })
 
         blocks = searcher._blocks_for([("text", t) for t in uniq_terms])
         decoded = blocks.select(

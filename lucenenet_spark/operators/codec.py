@@ -4,7 +4,7 @@ Re-derivation of the *capability* of Lucene41's postings format
 (src/Lucene.Net/Codecs/Lucene41/Lucene41PostingsWriter.cs:283-354 — 128-int
 FOR-packed blocks of docID deltas and term frequencies; ForUtil.cs:33-124 —
 per-block bit width) re-designed for columnar storage: each 128-posting block
-is one parquet row carrying two binary payloads plus skip/block-max metadata
+is one parquet row carrying binary payloads plus skip/block-max metadata
 columns. The multi-level skip list (Lucene41SkipWriter.cs:28-75) collapses to
 the flat metadata columns (first_docid/last_docid/max_score_bound) which a
 columnar scan prunes directly — Spark's analogue of Advance().
@@ -12,156 +12,331 @@ columnar scan prunes directly — Spark's analogue of Advance().
 Wire format per payload:  [width:1 byte][bit-packed big-endian values]
   width == 0 encodes an all-equal block: the single value follows as 8-byte
   big-endian (Lucene's all-equal optimization, Lucene41PostingsFormat.cs:38-40).
-docids payload packs deltas: docid[0] - first_docid (==0, elided is NOT done:
-we pack deltas[i] = docid[i] - docid[i-1] for i>=1, n-1 values), tfs payload
-packs raw tf values (n values). Norm bytes ride along raw (1 byte/posting) so
-scoring never joins back to a norms table.
+docids_enc packs the n-1 deltas docid[i] - docid[i-1], tfs_enc the n tfs,
+pos_enc a position per occurrence, off_enc [start, end-start] per occurrence,
+pay_enc the payload lengths followed by the payload bytes; norm bytes ride
+along raw (1 byte/posting). An empty buffer: the block lacks that channel.
 
-All encode/decode is vectorized numpy — this code runs inside Arrow-batched
-UDFs on executors; there is no per-row Python.
+Both directions work on a whole batch of blocks, one np.unpackbits /
+np.packbits per bit width ("Columnar Formatted Inverted Index for
+Highly-Paralleled, Vectorized Query Processing", ICDE 2025): most blocks hold
+a handful of postings, so per-call overhead is what a batch saves.
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass
 
 import numpy as np
 
 BLOCK_SIZE = 128  # Lucene41PostingsFormat.cs:375
 
 
-def _pack(values: np.ndarray) -> bytes:
-    """Fixed-width bit-pack non-negative int64 values (vectorized)."""
-    v = np.asarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return bytes([0]) + (0).to_bytes(8, "big")
-    mx = int(v.max())
-    if int(v.min()) == mx:
-        return bytes([0]) + mx.to_bytes(8, "big")
-    width = max(1, mx.bit_length())
-    # bit matrix (n, width), MSB first, then packbits
-    shifts = np.arange(width - 1, -1, -1, dtype=np.uint64)
-    bits = ((v[:, None] >> shifts[None, :]) & np.uint64(1)).astype(np.uint8)
-    return bytes([width]) + np.packbits(bits.reshape(-1)).tobytes()
+def _offsets(counts) -> np.ndarray:
+    """[0, c0, c0+c1, …]: where each run of `counts` starts, plus the end."""
+    out = np.zeros(len(counts) + 1, dtype=np.int64)
+    np.cumsum(counts, out=out[1:])
+    return out
 
 
-def _unpack(buf: bytes, n: int) -> np.ndarray:
-    """Inverse of _pack; returns int64 array of length n."""
-    width = buf[0]
-    if width == 0:
-        val = int.from_bytes(buf[1:9], "big")
-        return np.full(n, val, dtype=np.int64)
-    raw = np.frombuffer(buf, dtype=np.uint8, offset=1)
-    bits = np.unpackbits(raw)[: n * width].reshape(n, width)
-    shifts = np.arange(width - 1, -1, -1, dtype=np.uint64)
-    return (bits.astype(np.uint64) << shifts[None, :]).sum(axis=1).astype(np.int64)
+def _ranges(starts, lens) -> np.ndarray:
+    """Flat indices of the runs [starts[i], starts[i] + lens[i])."""
+    lens = np.asarray(lens, dtype=np.int64)
+    ends = np.cumsum(lens)
+    return np.arange(int(ends[-1]) if len(ends) else 0, dtype=np.int64) + np.repeat(
+        np.asarray(starts, dtype=np.int64) - (ends - lens), lens
+    )
 
 
-def encode_block(docids: np.ndarray, tfs: np.ndarray) -> tuple[bytes, bytes]:
-    """Encode one block (docids strictly ascending). Returns (docids_enc, tfs_enc)."""
-    docids = np.asarray(docids, dtype=np.int64)
-    deltas = np.diff(docids)
-    return _pack(deltas), _pack(np.asarray(tfs, dtype=np.int64))
+def runs(*keys: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(starts, ends) of the runs of equal consecutive rows of `keys`."""
+    n = len(keys[0])
+    cut = np.zeros(max(n - 1, 0), dtype=bool)
+    for k in keys:
+        cut |= k[1:] != k[:-1]
+    starts = np.flatnonzero(np.r_[n > 0, cut])
+    return starts, np.r_[starts[1:], n][: len(starts)]
+
+
+def join_bytes(col) -> tuple[np.ndarray, np.ndarray]:
+    """A binary column as (its values' bytes concatenated, _offsets of
+    their lengths)."""
+    vals = list(col)
+    lens = np.fromiter(map(len, vals), dtype=np.int64, count=len(vals))
+    return np.frombuffer(b"".join(vals), dtype=np.uint8), _offsets(lens)
+
+
+def cut_bytes(a: np.ndarray, starts: np.ndarray, ends: np.ndarray) -> np.ndarray:
+    """A binary column: the bytes of a[s:e] for each run (s, e)."""
+    buf, n = a.tobytes(), a.itemsize
+    out = [buf[s * n : e * n] for s, e in zip(starts.tolist(), ends.tolist())]
+    return np.fromiter(out, dtype=object, count=len(out))
+
+
+def _pad_mask(n_bits: np.ndarray, n_bytes: np.ndarray) -> np.ndarray:
+    """Over the bits of buffers of n_bytes bytes laid end to end, True on
+    each buffer's first n_bits (its values) and False on its tail padding."""
+    keep = np.ones(8 * int(n_bytes.sum()), dtype=bool)
+    pad = 8 * n_bytes - n_bits
+    keep[_ranges(8 * np.cumsum(n_bytes) - pad, pad)] = False
+    return keep
+
+
+def _pack(values: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Fixed-width bit-pack runs of non-negative ints: run i (the next
+    counts[i] values) becomes one buffer, [width][values as width-bit
+    big-endian fields, zero-padded to a byte]; an all-equal or empty run is
+    [0][its value as 8 big-endian bytes]. Returns an object array of bytes."""
+    v = np.asarray(values).astype(np.uint64)
+    counts = np.asarray(counts, dtype=np.int64)
+    begin = np.cumsum(counts) - counts
+    live = np.nonzero(counts)[0]
+    mx = np.zeros(len(counts), dtype=np.uint64)
+    width = np.zeros(len(counts), dtype=np.int64)
+    if len(live):
+        mx[live] = np.maximum.reduceat(v, begin[live])
+        mn = np.minimum.reduceat(v, begin[live])
+        bit_len = np.searchsorted(
+            np.uint64(1) << np.arange(64, dtype=np.uint64), mx[live], side="right"
+        )
+        width[live] = np.where(mn == mx[live], 0, bit_len)
+    n_bytes = np.where(width == 0, 8, (counts * width + 7) // 8)
+    at = _offsets(1 + n_bytes)
+    out = np.zeros(int(at[-1]), dtype=np.uint8)
+    out[at[:-1]] = width
+    for w in np.unique(width):
+        blk = np.flatnonzero(width == w)
+        if w == 0:  # an all-equal run stores its value once, in 64 bits
+            vals, n, w = mx[blk], np.ones(len(blk), dtype=np.int64), 64
+        else:
+            vals, n = v[_ranges(begin[blk], counts[blk])], counts[blk]
+        nb = (int(w) + 7) // 8
+        bits = np.unpackbits(vals.astype(">u8").view(np.uint8).reshape(-1, 8)[:, 8 - nb :], axis=1)
+        keep = _pad_mask(n * w, n_bytes[blk])
+        stream = np.zeros(len(keep), dtype=np.uint8)
+        stream[keep] = bits[:, 8 * nb - w :].reshape(-1)
+        out[_ranges(at[blk] + 1, n_bytes[blk])] = np.packbits(stream)
+    return cut_bytes(out, at[:-1], at[1:])
+
+
+def _unpack(data: np.ndarray, at: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Inverse of _pack: buffer i, data[at[i]:at[i+1]], holds counts[i]
+    values (a count of 0 reads nothing). Returns them flat, int64."""
+    counts = np.asarray(counts, dtype=np.int64)
+    out = np.empty(int(counts.sum()), dtype=np.int64)
+    live = np.nonzero(counts)[0]
+    begin = np.cumsum(counts) - counts
+    width = data[at[live]].astype(np.int64)
+    for w in np.unique(width):
+        blk = live[width == w]
+        n = counts[blk]
+        eq = w == 0  # an all-equal run stores its value once, in 64 bits
+        stored, w = (np.ones(len(blk), dtype=np.int64), 64) if eq else (n, int(w))
+        n_bytes = (stored * w + 7) // 8
+        bits = np.unpackbits(data[_ranges(at[blk] + 1, n_bytes)])
+        bits = bits[_pad_mask(stored * w, n_bytes)].reshape(-1, w)
+        nb = (w + 7) // 8  # each value: w bits -> nb bytes -> 8 big-endian bytes
+        field = np.zeros((len(bits), 8 * nb), dtype=np.uint8)
+        field[:, 8 * nb - w :] = bits
+        by = np.zeros((len(bits), 8), dtype=np.uint8)
+        by[:, 8 - nb :] = np.packbits(field, axis=1)
+        vals = by.view(">u8").reshape(-1).astype(np.int64)
+        out[_ranges(begin[blk], n)] = np.repeat(vals, n if eq else 1)
+    return out
+
+
+@dataclass
+class Frame:
+    """A batch of block rows, decoded flat. Block i holds postings
+    at[i]:at[i+1]; posting j holds occurrences occ_at[j]:occ_at[j+1] of the
+    per-occurrence arrays (positions, offsets, payload lengths). A channel
+    is None when the batch has no column for it; has_* marks the blocks
+    whose buffer carries it (the others read as zeros)."""
+
+    at: np.ndarray
+    docids: np.ndarray  # int64, plus the batch's docbase column if any
+    tfs: np.ndarray  # int64
+    occ_at: np.ndarray
+    norms: np.ndarray | None = None  # uint8
+    pos: np.ndarray | None = None  # int64
+    has_pos: np.ndarray | None = None
+    off_start: np.ndarray | None = None  # int64
+    off_end: np.ndarray | None = None
+    has_off: np.ndarray | None = None
+    pay_len: np.ndarray | None = None  # int64, 0 = no payload
+    pay_buf: np.ndarray | None = None  # uint8, every payload's bytes in order
+    pay_at: np.ndarray | None = None  # block i's bytes: pay_buf[pay_at[i]:pay_at[i+1]]
+    has_pay: np.ndarray | None = None
+
+    def block_of(self) -> np.ndarray:
+        """Each posting's block index."""
+        return np.repeat(np.arange(len(self.at) - 1), np.diff(self.at))
+
+    def float_payloads(self) -> np.ndarray:
+        """The payloads read as 4-byte big-endian float32
+        (PayloadHelper.EncodeSingle — Analysis.Common/Analysis/Payloads/
+        PayloadHelper.cs); an occurrence without one is NaN."""
+        out = np.full(len(self.pay_len), np.nan, dtype=np.float32)
+        has = self.pay_len == 4
+        start = np.cumsum(self.pay_len) - self.pay_len
+        out[has] = self.pay_buf[_ranges(start[has], np.full(int(has.sum()), 4))].view(">f4")
+        return out
+
+
+def _channel(col, n_occ: np.ndarray, per: int = 1):
+    """A per-occurrence channel (`per` values an occurrence) of a batch:
+    (values in occurrence order, zero where a block has none; blocks that
+    have it; the raw bytes and their _offsets)."""
+    data, at = join_bytes(col)
+    has = at[1:] > at[:-1]
+    counts = per * n_occ * has
+    vals = _unpack(data, at, counts)
+    if not has.all():
+        full = np.zeros(per * int(n_occ.sum()), dtype=np.int64)
+        full[_ranges(per * (np.cumsum(n_occ) - n_occ)[has], counts[has])] = vals
+        vals = full
+    return vals, has, data, at
+
+
+def decode_frame(frame) -> Frame:
+    """Decode a batch of block rows (a pandas frame or a dict of columns:
+    first_docid, count, docids_enc, tfs_enc, and optionally docbase,
+    norms_enc, pos_enc, off_enc, pay_enc). Each optional channel decodes
+    when the batch has its column; docbase shifts the docids."""
+    count = np.asarray(frame["count"], dtype=np.int64)
+    at = _offsets(count)
+    head = at[:-1]
+    inc = np.zeros(int(at[-1]), dtype=np.int64)
+    body = np.ones(len(inc), dtype=bool)
+    body[head] = False
+    inc[body] = _unpack(*join_bytes(frame["docids_enc"]), count - 1)
+    run = np.cumsum(inc)  # a block's deltas summed from its head on
+    first = np.asarray(frame["first_docid"], dtype=np.int64)
+    if "docbase" in frame:
+        first = first + np.asarray(frame["docbase"], dtype=np.int64)
+    docids = run + np.repeat(first - run[head], count)
+    tfs = _unpack(*join_bytes(frame["tfs_enc"]), count)
+    occ_at = _offsets(tfs)
+    out = Frame(at=at, docids=docids, tfs=tfs, occ_at=occ_at)
+    if "norms_enc" in frame:
+        out.norms = np.frombuffer(b"".join(frame["norms_enc"]), dtype=np.uint8)
+        if len(out.norms) != len(docids):
+            raise ValueError("norms_enc lengths do not match the block counts")
+    n_occ = np.diff(occ_at[at])
+    if "pos_enc" in frame:
+        out.pos, out.has_pos, _, _ = _channel(frame["pos_enc"], n_occ)
+    if "off_enc" in frame:
+        flat, out.has_off, _, _ = _channel(frame["off_enc"], n_occ, per=2)
+        out.off_start = flat[0::2]
+        out.off_end = out.off_start + flat[1::2]
+    if "pay_enc" in frame:
+        out.pay_len, has, data, b_at = _channel(frame["pay_enc"], n_occ)
+        # the payload bytes follow the packed lengths
+        n, w = n_occ[has], data[b_at[:-1][has]].astype(np.int64)
+        start = b_at[:-1][has] + 1 + np.where(w == 0, 8, (n * w + 7) // 8)
+        n_bytes = np.zeros(len(count), dtype=np.int64)
+        n_bytes[has] = b_at[1:][has] - start
+        out.pay_buf = data[_ranges(start, n_bytes[has])]
+        out.pay_at, out.has_pay = _offsets(n_bytes), has
+    return out
+
+
+def encode_frame(
+    at: np.ndarray,
+    docids: np.ndarray,
+    tfs: np.ndarray,
+    norms: np.ndarray,
+    denoms: np.ndarray,
+    block_size: int = BLOCK_SIZE,
+    pos: tuple | None = None,
+    off: tuple | None = None,
+    pay: tuple | None = None,
+) -> dict[str, np.ndarray]:
+    """Encode many posting lists into block rows at once.
+
+    Group g, postings at[g]:at[g+1] (docids strictly ascending), is one
+    (field, term, salt) list, cut into blocks of block_size. denoms[i] is
+    posting i's norm cache entry: a block's max_score_bound is
+    max(tf / (tf + denom)), the term-independent part of the BM25 upper
+    bound — block-max metadata absent from Lucene 4.8's skip entries
+    (SURVEY.md §4.1); pruning with it is rank-safe.
+
+    Per-occurrence channels (Lucene41PostingsWriter.cs:283-354 writes pos
+    blocks beside doc blocks), each with per-group _offsets: pos =
+    (positions, at); off = (flat [start, end-start] pairs, at); pay =
+    (lengths, at, bytes as uint8, bytes_at), a length of 0 = no payload.
+    A group keeps a channel only when it covers every occurrence (offsets
+    and payloads also need positions); otherwise its blocks carry an empty
+    buffer, so a merge of segments at mixed index levels keeps the lowest.
+
+    Returns the postings table's block columns (bar field, term, salt and
+    bucket) plus `group`, each block's group index."""
+    at = np.asarray(at, dtype=np.int64)
+    tfs = np.asarray(tfs, dtype=np.int64)
+    n_blocks = -(-np.diff(at) // block_size)
+    group = np.repeat(np.arange(len(n_blocks)), n_blocks)
+    block_no = np.arange(len(group)) - np.repeat(np.cumsum(n_blocks) - n_blocks, n_blocks)
+    b0 = at[group] + block_no * block_size
+    b1 = np.minimum(b0 + block_size, at[group + 1])
+    count = b1 - b0
+    tf32 = tfs.astype(np.float32)
+    kern = tf32 / (tf32 + np.asarray(denoms, dtype=np.float32))
+    out = {
+        "group": group,
+        "block_no": block_no,
+        "first_docid": docids[b0],
+        "last_docid": docids[b1 - 1],
+        "count": count,
+        "sum_tf": np.add.reduceat(tfs, b0),
+        "max_score_bound": np.maximum.reduceat(kern, b0).astype(np.float64),
+        "docids_enc": _pack(np.diff(docids)[_ranges(b0, count - 1)], count - 1),
+        "tfs_enc": _pack(tfs, count),
+        "norms_enc": cut_bytes(np.asarray(norms, dtype=np.uint8), b0, b1),
+    }
+    empty = np.full(len(group), b"", dtype=object)
+    occ_at = _offsets(tfs)
+    g_occ = np.diff(occ_at[at])
+    rel = occ_at[b0] - occ_at[at[group]]  # a block's first occurrence in its group
+    n_occ = occ_at[b1] - occ_at[b0]
+
+    def complete(ch, per=1):
+        """Groups whose channel holds `per` values for every occurrence."""
+        return np.diff(ch[1]) == per * g_occ if ch is not None else g_occ < 0
+
+    def packed(ok, values, v_at, per=1):
+        blk = np.nonzero(ok[group])[0]
+        n = per * n_occ[blk]
+        enc = empty.copy()
+        enc[blk] = _pack(values[_ranges(v_at[group[blk]] + per * rel[blk], n)], n)
+        return enc, blk
+
+    has = complete(pos)
+    out["pos_enc"] = packed(has, *pos)[0] if has.any() else empty
+    ok = has & complete(off, 2)
+    out["off_enc"] = packed(ok, *off, per=2)[0] if ok.any() else empty
+    out["pay_enc"] = empty
+    if (ok := has & complete(pay)).any():
+        lens, l_at, buf, b_at = pay
+        out["pay_enc"], blk = packed(ok, lens, l_at)
+        # the payload bytes follow their packed lengths
+        g, l0 = group[blk], l_at[group[blk]] + rel[blk]
+        cum = _offsets(lens)
+        y0 = b_at[g] + cum[l0] - cum[l_at[g]]
+        y1 = y0 + cum[l0 + n_occ[blk]] - cum[l0]
+        out["pay_enc"][blk] += cut_bytes(np.asarray(buf, dtype=np.uint8), y0, y1)
+    return out
 
 
 def decode_block(
     docids_enc: bytes, tfs_enc: bytes, first_docid: int, count: int
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Decode one block -> (docids ascending int64, tfs int64)."""
-    if count == 1:
-        deltas = np.empty(0, dtype=np.int64)
-    else:
-        deltas = _unpack(docids_enc, count - 1)
-    docids = np.empty(count, dtype=np.int64)
-    docids[0] = first_docid
-    if count > 1:
-        np.cumsum(deltas, out=docids[1:])
-        docids[1:] += first_docid
-    tfs = _unpack(tfs_enc, count)
-    return docids, tfs
-
-
-def block_max_bound(
-    tfs: np.ndarray, norm_bytes: np.ndarray, cache: np.ndarray
-) -> float:
-    """max over block of tf/(tf + cache[norm_byte]) — the term-independent part
-    of the BM25 upper bound (weight multiplies in at query time).
-
-    This is the block-max metadata the north rule requires (absent in Lucene
-    4.8's skip entries — SURVEY.md §4.1); pruning with it is rank-safe.
-    """
-    tf = np.asarray(tfs, dtype=np.float32)
-    norm = cache[np.asarray(norm_bytes, dtype=np.uint8)]
-    return float(np.max(tf / (tf + norm)))
-
-
-def decode_positions(pos_enc: bytes, n_positions: int) -> np.ndarray:
-    """Decode a block's positions payload -> flat int64 array (length =
-    sum of the block's tfs; split per posting by cumsum(tfs))."""
-    if n_positions == 0:
-        return np.empty(0, dtype=np.int64)
-    return _unpack(pos_enc, n_positions)
-
-
-def decode_offsets(off_enc: bytes, n_positions: int) -> tuple[np.ndarray, np.ndarray]:
-    """Decode a block's offsets payload -> (starts, ends) int64 arrays of
-    length = sum of the block's tfs (aligned with the positions payload).
-    Wire format: one packed array of 2*n values [s0, e0-s0, s1, e1-s1, …]
-    (lengths instead of ends keep the bit width small)."""
-    if n_positions == 0:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
-    flat = _unpack(off_enc, 2 * n_positions)
-    starts = flat[0::2]
-    return starts, starts + flat[1::2]
-
-
-def _packed_len(buf: bytes, n: int) -> int:
-    """Byte length of a _pack(values) prefix of n values inside buf."""
-    width = buf[0]
-    if width == 0:
-        return 9
-    return 1 + (n * width + 7) // 8
-
-
-def encode_payloads(lens: np.ndarray, payload_buf: bytes) -> bytes:
-    """Encode per-occurrence payload bytes (the PayloadAttribute channel —
-    Lucene41PostingsWriter.cs stores payload length + bytes inside the pos
-    block). Wire format: _pack(lens) ++ concatenated payload bytes; no
-    header needed — the packed-lengths prefix size is derivable from its
-    width byte and the occurrence count."""
-    return _pack(np.asarray(lens, dtype=np.int64)) + payload_buf
-
-
-def decode_payloads(pay_enc: bytes, n_positions: int) -> tuple[np.ndarray, bytes]:
-    """Decode a block's payloads payload -> (lens int64 array aligned with
-    the positions payload, concatenated payload bytes). A zero len means
-    'no payload at this occurrence'."""
-    if n_positions == 0 or not pay_enc:
-        return np.zeros(n_positions, dtype=np.int64), b""
-    plen = _packed_len(pay_enc, n_positions)
-    lens = _unpack(pay_enc[:plen], n_positions)
-    return lens, pay_enc[plen:]
-
-
-def decode_float_payloads(pay_enc: bytes, n_positions: int) -> np.ndarray:
-    """Decode payloads that are all 4-byte big-endian float32
-    (PayloadHelper.EncodeSingle — Analysis.Common/Analysis/Payloads/
-    PayloadHelper.cs); occurrences without a payload decode as NaN."""
-    lens, buf = decode_payloads(pay_enc, n_positions)
-    out = np.full(n_positions, np.nan, dtype=np.float32)
-    if not len(buf):
-        return out
-    has = lens == 4
-    if not has.all():
-        starts = np.concatenate([[0], np.cumsum(lens)[:-1]])
-        vals = np.frombuffer(
-            b"".join(
-                buf[int(s) : int(s) + 4] for s, h in zip(starts, has) if h
-            ),
-            dtype=">f4",
-        )
-        out[has] = vals
-        return out
-    out[:] = np.frombuffer(buf, dtype=">f4", count=n_positions)
-    return out
+    """Decode one block -> (docids ascending int64, tfs int64): a frame of
+    one row."""
+    f = decode_frame({
+        "first_docid": [first_docid], "count": [count],
+        "docids_enc": [docids_enc], "tfs_enc": [tfs_enc],
+    })
+    return f.docids, f.tfs
 
 
 def encode_posting_list(
@@ -170,69 +345,13 @@ def encode_posting_list(
     norm_bytes: np.ndarray,
     cache: np.ndarray,
     block_size: int = BLOCK_SIZE,
-    positions: np.ndarray | None = None,
-    offsets: np.ndarray | None = None,
-    payload_lens: np.ndarray | None = None,
-    payload_bytes: bytes | None = None,
 ) -> list[dict]:
-    """Split one term's (sorted) postings into encoded block rows.
-
-    positions: flat per-occurrence token positions, aligned with the
-    postings via tfs (posting i owns positions[cum_tf[i]:cum_tf[i+1]]) —
-    the DOCS_AND_FREQS_AND_POSITIONS payload
-    (Lucene41PostingsWriter.cs:283-354 writes pos blocks alongside doc
-    blocks). None -> DOCS_AND_FREQS only (pos_enc = b"").
-    offsets: flat interleaved [start, end-start] per occurrence
-    (2*len(positions) values) — the …_AND_OFFSETS level
-    (FieldInfo.cs:315-356; Lucene41 stores startOffset/length deltas in
-    the pos block). None -> off_enc = b"".
-    payload_lens/payload_bytes: per-occurrence payload byte lengths
-    (aligned with positions; 0 = no payload) + their concatenated bytes —
-    the PayloadAttribute channel (Lucene41 stores payload length + bytes
-    in the pos block). None -> pay_enc = b"".
-
-    Returns list of dicts matching the postings table schema (minus
-    field/term/salt, which the caller adds).
-    """
-    n = len(docids)
-    out = []
-    cum = None
-    pay_starts = None
-    if positions is not None:
-        cum = np.concatenate([[0], np.cumsum(np.asarray(tfs, dtype=np.int64))])
-        if payload_lens is not None:
-            pay_starts = np.concatenate(
-                [[0], np.cumsum(np.asarray(payload_lens, dtype=np.int64))]
-            )
-    for b0 in range(0, n, block_size):
-        b1 = min(b0 + block_size, n)
-        d, t, nb = docids[b0:b1], tfs[b0:b1], norm_bytes[b0:b1]
-        de, te = encode_block(d, t)
-        pe = oe = ye = b""
-        if positions is not None:
-            p = positions[cum[b0] : cum[b1]]
-            pe = _pack(np.asarray(p, dtype=np.int64)) if len(p) else b""
-            if offsets is not None:
-                o = offsets[2 * cum[b0] : 2 * cum[b1]]
-                oe = _pack(np.asarray(o, dtype=np.int64)) if len(o) else b""
-            if pay_starts is not None and len(p):
-                ye = encode_payloads(
-                    payload_lens[cum[b0] : cum[b1]],
-                    payload_bytes[int(pay_starts[cum[b0]]) : int(pay_starts[cum[b1]])],
-                )
-        out.append(
-            {
-                "block_no": b0 // block_size,
-                "first_docid": int(d[0]),
-                "last_docid": int(d[-1]),
-                "count": int(b1 - b0),
-                "max_score_bound": block_max_bound(t, nb, cache),
-                "docids_enc": de,
-                "tfs_enc": te,
-                "norms_enc": np.asarray(nb, dtype=np.uint8).tobytes(),
-                "pos_enc": pe,
-                "off_enc": oe,
-                "pay_enc": ye,
-            }
-        )
-    return out
+    """Split one term's sorted postings into encoded block rows (dicts of
+    the postings table's block columns): a frame of one group."""
+    nb = np.asarray(norm_bytes, dtype=np.uint8)
+    cols = encode_frame(
+        np.array([0, len(docids)]), np.asarray(docids, dtype=np.int64), tfs, nb,
+        cache[nb], block_size,
+    )
+    del cols["group"], cols["sum_tf"]
+    return [dict(zip(cols, row)) for row in zip(*cols.values())]

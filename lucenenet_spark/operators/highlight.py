@@ -225,34 +225,17 @@ def highlight_offsets(
     def extract(it):
         import numpy as np
 
-        from .codec import decode_block, decode_offsets
+        from .codec import decode_frame
 
         ids = np.array(sorted(hitset), dtype=np.int64)
         for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                docids, tfs = decode_block(
-                    r.docids_enc, r.tfs_enc, r.first_docid, r.count
-                )
-                if r.docbase:
-                    docids = docids + r.docbase
-                sel = np.isin(docids, ids)
-                if not sel.any():
-                    continue
-                st, en = decode_offsets(r.off_enc, int(tfs.sum()))
-                cum = np.concatenate([[0], np.cumsum(tfs)])
-                for i in np.nonzero(sel)[0]:
-                    for j in range(cum[i], cum[i + 1]):
-                        rows.append((int(docids[i]), int(st[j]), int(en[j])))
-            yield pd.DataFrame(
-                rows, columns=["docid", "s", "e"]
-            ) if rows else pd.DataFrame(
-                {
-                    "docid": pd.Series(dtype="int64"),
-                    "s": pd.Series(dtype="int64"),
-                    "e": pd.Series(dtype="int64"),
-                }
-            )
+            f = decode_frame(pdf)
+            sel = np.repeat(np.isin(f.docids, ids), f.tfs)
+            yield pd.DataFrame({
+                "docid": np.repeat(f.docids, f.tfs)[sel],
+                "s": f.off_start[sel],
+                "e": f.off_end[sel],
+            })
 
     occ = blocks.select(
         "first_docid", "count", "docids_enc", "tfs_enc", "off_enc", "docbase"

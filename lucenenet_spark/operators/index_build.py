@@ -82,7 +82,7 @@ from ..functions.analysis import (
     tokenize_with_positions,
 )
 from ..oracle import norm_cache
-from .codec import BLOCK_SIZE, encode_posting_list
+from .codec import BLOCK_SIZE, encode_frame, join_bytes, runs
 
 FIELD = "text"
 
@@ -292,19 +292,6 @@ PARTIALS_DDL = (
 )
 
 
-def split_salts(docids: np.ndarray, n_salts: int, max_doc: int) -> list[tuple[int, int, int]]:
-    """(salt, start, end) slices of a docid-sorted array under the contiguous
-    range salting salt = docid * n_salts // max_doc."""
-    if n_salts <= 1:
-        return [(0, 0, len(docids))]
-    salts = (docids * n_salts // max(max_doc, 1)).astype(np.int64)
-    change = np.nonzero(salts[1:] != salts[:-1])[0]
-    bounds = np.concatenate([[0], change + 1, [len(docids)]])
-    return [
-        (int(salts[b0]), int(b0), int(b1)) for b0, b1 in zip(bounds[:-1], bounds[1:])
-    ]
-
-
 def make_merge_encode(
     caches: dict[str, np.ndarray] | np.ndarray,
     n_buckets: int,
@@ -340,98 +327,68 @@ def make_merge_encode(
         )
         codes = codes[order]
         salts = pdf["salt"].to_numpy()[order]
-        d_bins = pdf["docids"].to_numpy()[order]
-        t_bins = pdf["tfs"].to_numpy()[order]
-        n_bins = pdf["norms"].to_numpy()[order]
-        p_bins = pdf["poss"].to_numpy()[order]
-        o_bins = pdf["offs"].to_numpy()[order]
-        yl_bins = pdf["pay_lens"].to_numpy()[order]
-        yb_bins = pdf["pays"].to_numpy()[order]
-        pids = pdf["pid"].to_numpy()[order]
-        change = np.nonzero((codes[1:] != codes[:-1]) | (salts[1:] != salts[:-1]))[0]
-        bounds = np.concatenate([[0], change + 1, [len(codes)]])
-        uniques = np.asarray(uniques)
-        out_rows = []
-        postings = 0
-        for b0, b1 in zip(bounds[:-1], bounds[1:]):
-            field, term = uniques[codes[b0]].split(FKEY_SEP, 1)
-            if offset_map is None:
-                # merge path: ids are already global int64
-                docids = np.concatenate(
-                    [np.frombuffer(d_bins[i], dtype=np.int64) for i in range(b0, b1)]
-                )
-            else:
-                # build path: int32 local ranks + per-pid offset
-                docids = np.concatenate(
-                    [
-                        np.frombuffer(d_bins[i], dtype=np.int32).astype(np.int64)
-                        + offset_map[int(pids[i])]
-                        for i in range(b0, b1)
-                    ]
-                )
-            tfs = np.concatenate(
-                [np.frombuffer(t_bins[i], dtype=np.int32) for i in range(b0, b1)]
-            ).astype(np.int64)
-            norms = np.concatenate(
-                [np.frombuffer(n_bins[i], dtype=np.uint8) for i in range(b0, b1)]
-            )
-            positions = np.concatenate(
-                [np.frombuffer(p_bins[i], dtype=np.int32) for i in range(b0, b1)]
-            ).astype(np.int64)
-            offs = np.concatenate(
-                [np.frombuffer(o_bins[i], dtype=np.int32) for i in range(b0, b1)]
-            ).astype(np.int64)
-            pay_lens = np.concatenate(
-                [np.frombuffer(yl_bins[i], dtype=np.int32) for i in range(b0, b1)]
-            ).astype(np.int64)
-            pay_bytes = b"".join(
-                yb_bins[i] for i in range(b0, b1) if len(yb_bins[i])
-            )
-            postings += len(docids)
-            cache = caches[field]
-            rows = encode_posting_list(
-                docids, tfs, norms, cache, block, positions=positions,
-                offsets=offs if len(offs) == 2 * len(positions) and len(offs) else None,
-                payload_lens=pay_lens
-                if len(pay_lens) == len(positions) and len(pay_lens)
-                else None,
-                payload_bytes=pay_bytes,
-            )
-            bucket = term_bucket(term, n_buckets)
-            for i, r in enumerate(rows):
-                r["field"] = field
-                r["term"] = term
-                r["salt"] = int(salts[b0])
-                r["bucket"] = bucket
-                r["sum_tf"] = int(
-                    tfs[i * block : min((i + 1) * block, len(tfs))].sum()
-                )
-            out_rows.extend(rows)
-            # term-stats row (block_no = -2): df/ttf/max-bound for this
-            # (field, term, salt) group, materialized in the SAME write — the
-            # terms dictionary needs no separate aggregation job, and reads
-            # prune to it via the bucket dir + term row-group stats
-            out_rows.append(
-                {
-                    "field": field,
-                    "term": term,
-                    "salt": int(salts[b0]),
-                    "block_no": -2,
-                    "first_docid": int(docids[0]),
-                    "last_docid": int(docids[-1]),
-                    "count": int(len(docids)),
-                    "sum_tf": int(tfs.sum()),
-                    "max_score_bound": max(r["max_score_bound"] for r in rows),
-                    "docids_enc": b"",
-                    "tfs_enc": b"",
-                    "norms_enc": b"",
-                    "pos_enc": b"",
-                    "off_enc": b"",
-                    "pay_enc": b"",
-                    "bucket": bucket,
-                }
-            )
-        out = pd.DataFrame(out_rows)[POSTINGS_COLS]
+        bounds = np.r_[runs(codes, salts)[0], len(codes)]
+
+        def flat(col, dtype):
+            # the sorted partials' arrays laid end to end + each one's offset
+            data, at = join_bytes(pdf[col].to_numpy()[order])
+            return data.view(dtype), at // np.dtype(dtype).itemsize
+
+        d, d_at = flat("docids", np.int64 if offset_map is None else np.int32)
+        docids = d.astype(np.int64)
+        if offset_map is not None:
+            # build path: int32 local ranks + per-pid offset
+            pids = pdf["pid"].to_numpy()[order]
+            docids += np.repeat([offset_map[int(p)] for p in pids], np.diff(d_at))
+        tfs = flat("tfs", np.int32)[0].astype(np.int64)
+        norms = flat("norms", np.uint8)[0]
+        at = d_at[bounds]
+        keys = np.asarray(uniques)[codes[bounds[:-1]]]
+        fields = np.array([k.split(FKEY_SEP, 1)[0] for k in keys], dtype=object)
+        terms = [k.split(FKEY_SEP, 1)[1] for k in keys]
+        f_of = np.repeat(fields, np.diff(at))
+        denoms = np.empty(len(docids), dtype=np.float32)
+        for f in set(fields):
+            on = f_of == f
+            denoms[on] = caches[f][norms[on]]
+        pos, p_at = flat("poss", np.int32)
+        off, o_at = flat("offs", np.int32)
+        lens, l_at = flat("pay_lens", np.int32)
+        pays, y_at = flat("pays", np.uint8)
+        blocks = encode_frame(
+            at, docids, tfs, norms, denoms, block,
+            pos=(pos, p_at[bounds]), off=(off, o_at[bounds]),
+            pay=(lens, l_at[bounds], pays, y_at[bounds]),
+        )
+        g = blocks.pop("group")
+        # term-stats row (block_no = -2) per (field, term, salt) group:
+        # df/ttf/max-bound, materialized in the SAME write — the terms
+        # dictionary needs no separate aggregation job, and reads prune to
+        # it via the bucket dir + term row-group stats
+        first_block = np.concatenate([[0], np.cumsum(np.bincount(g))[:-1]])
+        empty = np.full(len(terms), b"", dtype=object)
+        stats = {
+            "block_no": np.full(len(terms), -2),
+            "first_docid": docids[at[:-1]],
+            "last_docid": docids[at[1:] - 1],
+            "count": np.diff(at),
+            "sum_tf": np.add.reduceat(tfs, at[:-1]),
+            "max_score_bound": np.maximum.reduceat(blocks["max_score_bound"], first_block),
+            **dict.fromkeys(
+                ["docids_enc", "tfs_enc", "norms_enc", "pos_enc", "off_enc", "pay_enc"],
+                empty,
+            ),
+        }
+        group = np.concatenate([g, np.arange(len(terms))])
+        row = np.lexsort((np.concatenate([np.zeros(len(g)), np.ones(len(terms))]), group))
+        out = pd.DataFrame({c: np.concatenate([blocks[c], stats[c]])[row] for c in stats})
+        group = group[row]
+        out["field"] = fields[group]
+        out["term"] = np.array(terms, dtype=object)[group]
+        out["salt"] = salts[bounds[:-1]][group]
+        out["bucket"] = np.array([term_bucket(t, n_buckets) for t in terms])[group]
+        postings = len(docids)
+        out = out[POSTINGS_COLS]
         elapsed = time.time() - gt0
         yield out
         # per-partition checkpoint meta row (lineage + rate metrics)

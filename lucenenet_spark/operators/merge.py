@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..oracle import norm_cache
-from .codec import BLOCK_SIZE
+from .codec import BLOCK_SIZE, cut_bytes, decode_frame, runs
 from .index_build import (
     DOC_COLS,
     DOCS_DDL,
@@ -51,7 +51,6 @@ from .index_build import (
     read_local,
     read_table,
     runs_in_process,
-    split_salts,
     stagings_of,
     term_stats_view,
     with_numeric,
@@ -95,94 +94,52 @@ def make_decode(deleted: np.ndarray, hot: dict, max_doc: int):
     ~postings/128 rows. Runs under mapInPandas or in-process."""
 
     def decode_partition(it):
-        from .codec import (
-            decode_block,
-            decode_offsets,
-            decode_payloads,
-            decode_positions,
-        )
-
         for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                docids, tfs = decode_block(
-                    r.docids_enc, r.tfs_enc, r.first_docid, r.count
-                )
-                docids = docids + r.docbase
-                norms = np.frombuffer(r.norms_enc, dtype=np.uint8)
-                n_pos = int(tfs.sum())
-                poss = decode_positions(r.pos_enc, n_pos).astype(np.int32)
-                if r.off_enc:
-                    st_, en_ = decode_offsets(r.off_enc, n_pos)
-                    offs = np.empty(2 * n_pos, dtype=np.int32)
-                    offs[0::2] = st_
-                    offs[1::2] = en_ - st_
-                else:
-                    offs = np.empty(0, dtype=np.int32)
-                if r.pay_enc:
-                    pay_lens, pay_buf = decode_payloads(r.pay_enc, n_pos)
-                    pay_lens = pay_lens.astype(np.int32)
-                else:
-                    pay_lens, pay_buf = np.empty(0, dtype=np.int32), b""
-                cum = np.concatenate([[0], np.cumsum(tfs)])
-                if deleted.size:
-                    keep, docids = _remap(docids, deleted)
-                    if not keep.all():
-                        # drop the deleted postings' position runs too
-                        pos_keep = np.repeat(keep, tfs)
-                        poss = poss[pos_keep]
-                        if len(offs):
-                            offs = offs.reshape(-1, 2)[pos_keep].reshape(-1)
-                        if len(pay_lens):
-                            byte_keep = np.repeat(pos_keep, pay_lens)
-                            pay_buf = (
-                                np.frombuffer(pay_buf, dtype=np.uint8)[byte_keep]
-                                .tobytes()
-                            )
-                            pay_lens = pay_lens[pos_keep]
-                    docids, tfs, norms = docids[keep], tfs[keep], norms[keep]
-                    cum = np.concatenate([[0], np.cumsum(tfs)])
-                if not len(docids):
-                    continue
-                pay_cum = (
-                    np.concatenate([[0], np.cumsum(pay_lens.astype(np.int64))])
-                    if len(pay_lens)
-                    else None
-                )
-                hkey = r.field + "\x1f" + r.term
-                for salt, b0, b1 in split_salts(
-                    docids, hot.get(hkey, 1), max_doc
-                ):
-                    rows.append(
-                        (
-                            r.field,
-                            r.term,
-                            salt,
-                            int(b1 - b0),
-                            int(docids[b0]),
-                            docids[b0:b1].tobytes(),
-                            tfs[b0:b1].astype(np.int32).tobytes(),
-                            norms[b0:b1].tobytes(),
-                            poss[cum[b0] : cum[b1]].tobytes(),
-                            offs[2 * cum[b0] : 2 * cum[b1]].tobytes()
-                            if len(offs)
-                            else b"",
-                            pay_lens[cum[b0] : cum[b1]].tobytes()
-                            if pay_cum is not None
-                            else b"",
-                            pay_buf[int(pay_cum[cum[b0]]) : int(pay_cum[cum[b1]])]
-                            if pay_cum is not None
-                            else b"",
-                            -1,  # ids already global (offset_map unused)
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "field", "term", "salt", "count", "first_docid", "docids",
-                    "tfs", "norms", "poss", "offs", "pay_lens", "pays", "pid",
-                ],
-            )
+            f = decode_frame(pdf)
+            docids, tfs, norms, blk = f.docids, f.tfs, f.norms, f.block_of()
+            poss = f.pos.astype(np.int32)
+            offs = np.empty(2 * len(poss), dtype=np.int32)
+            offs[0::2] = f.off_start
+            offs[1::2] = f.off_end - f.off_start
+            pay_lens, pay_buf = f.pay_len.astype(np.int32), f.pay_buf
+            if deleted.size:
+                keep, docids = _remap(docids, deleted)
+                if not keep.all():
+                    # drop the deleted postings' position runs too
+                    pos_keep = np.repeat(keep, tfs)
+                    poss = poss[pos_keep]
+                    offs = offs.reshape(-1, 2)[pos_keep].reshape(-1)
+                    pay_buf = pay_buf[np.repeat(pos_keep, pay_lens)]
+                    pay_lens = pay_lens[pos_keep]
+                    docids, tfs, norms, blk = docids[keep], tfs[keep], norms[keep], blk[keep]
+            # one partial per (block, merged salt) run of the kept postings
+            keys = (pdf["field"] + "\x1f" + pdf["term"]).to_numpy()
+            n_salts = np.array([hot.get(k, 1) for k in keys], dtype=np.int64)[blk]
+            salts = docids * n_salts // max(max_doc, 1)
+            b0, b1 = runs(blk, salts)
+            rb = blk[b0]
+            cum = np.concatenate([[0], np.cumsum(tfs)])
+            o0, o1 = cum[b0], cum[b1]
+            pay_cum = np.concatenate([[0], np.cumsum(pay_lens.astype(np.int64))])
+
+            def channel(a, has, x0, x1):
+                return np.where(has[rb], cut_bytes(a, x0, x1), b"")
+
+            yield pd.DataFrame({
+                "field": pdf["field"].to_numpy()[rb],
+                "term": pdf["term"].to_numpy()[rb],
+                "salt": salts[b0],
+                "count": b1 - b0,
+                "first_docid": docids[b0],
+                "docids": cut_bytes(docids, b0, b1),
+                "tfs": cut_bytes(tfs.astype(np.int32), b0, b1),
+                "norms": cut_bytes(norms, b0, b1),
+                "poss": channel(poss, f.has_pos, o0, o1),
+                "offs": channel(offs, f.has_off, 2 * o0, 2 * o1),
+                "pay_lens": channel(pay_lens, f.has_pay, o0, o1),
+                "pays": channel(pay_buf, f.has_pay, pay_cum[o0], pay_cum[o1]),
+                "pid": np.full(len(b0), -1, dtype=np.int32),  # ids already global
+            })
 
     return decode_partition
 

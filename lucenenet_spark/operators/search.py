@@ -104,6 +104,7 @@ from .index_build import (
     term_bucket,
     with_numeric,
 )
+from .codec import cut_bytes, decode_frame, runs
 from .similarity import SimScorer, SimWeight
 
 log = logging.getLogger("lucenenet_spark")
@@ -142,56 +143,48 @@ class Clause:
 # run under mapInPandas, and could as well run on a collected frame.
 
 
-def range_slices(docids: np.ndarray, R: int) -> list[tuple[int, int, int]]:
-    """(rid, start, end) of each run of ascending docids that falls in one
-    range of R docids."""
-    if not len(docids):
-        return []
-    rid = docids // R
-    change = np.nonzero(rid[1:] != rid[:-1])[0]
-    bounds = np.concatenate([[0], change + 1, [len(docids)]])
-    return [(int(rid[b0]), b0, b1) for b0, b1 in zip(bounds[:-1], bounds[1:])]
+def _range_rows(docids: np.ndarray, scores, clause: int, R: int, *blocks) -> zip:
+    """(rid, clause, offs, scores) rows of one clause's docids, ascending
+    (within each of their `blocks`, if given): one row per run in one
+    range of R docids (and one block). offs are uint32 offsets inside the
+    range, scores float32 bytes (empty for a docid-only clause)."""
+    s0, s1 = runs(*blocks, docids // R)
+    rid = (docids[s0] // R).tolist()
+    return zip(
+        rid,
+        [clause] * len(rid),
+        cut_bytes((docids % R).astype(np.uint32), s0, s1),
+        [b""] * len(rid) if scores is None else cut_bytes(scores, s0, s1),
+    )
 
 
-def _range_rows(docids: np.ndarray, scores, clause: int, R: int) -> list[tuple]:
-    """(rid, clause, offs, scores) rows of one clause's ascending docids:
-    offs are uint32 offsets inside the range, scores float32 bytes (empty
-    for a MUST_NOT clause, which only bans)."""
-    return [
-        (
-            rid,
-            clause,
-            (docids[b0:b1] - rid * R).astype(np.uint32).tobytes(),
-            b"" if scores is None else scores[b0:b1].tobytes(),
-        )
-        for rid, b0, b1 in range_slices(docids, R)
-    ]
+def _by_key(pdf: pd.DataFrame, blk: np.ndarray):
+    """Per (field, term) of a frame of blocks: the indices of its decoded
+    elements (postings or occurrences; blk[i] is element i's block)."""
+    code = pdf.groupby(["field", "term"], sort=False).ngroup().to_numpy()[blk]
+    order = np.argsort(code, kind="stable")
+    for s, e in zip(*runs(code[order])):
+        b = blk[order[s]]
+        yield (pdf["field"].iat[b], pdf["term"].iat[b]), order[s:e]
 
 
 def slice_blocks(clauses: list[Clause], sim: SimScorer, R: int):
-    """Posting blocks (BLOCK_COLS) -> range rows: each block decodes once and
-    scores once per clause on its (field, term) through the SimScorer
-    kernel; a MUST_NOT clause (weight None) ships its docids only."""
+    """Posting blocks (BLOCK_COLS) -> range rows: each frame decodes once and
+    each (field, term) scores once per clause through the SimScorer
+    kernel; a docid-only clause (weight None) ships its docids only."""
     by_key: dict[tuple[str, str], list[tuple[int, SimWeight | None]]] = {}
     for c in clauses:
         by_key.setdefault(c.key, []).append((c.clause_id, c.weight))
 
     def run(it):
-        from .codec import decode_block  # executor-side import
-
         for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                docids, tfs = decode_block(
-                    r.docids_enc, r.tfs_enc, r.first_docid, r.count
-                )
-                if r.docbase:
-                    docids = docids + r.docbase  # leafDocBase shift
-                nbytes = np.frombuffer(r.norms_enc, dtype=np.uint8)
-                freq = tfs.astype(np.float32)
-                for clause_id, w in by_key[(r.field, r.term)]:
-                    sc = None if w is None else sim.score(w, freq, nbytes, r.field)
-                    rows.extend(_range_rows(docids, sc, clause_id, R))
+            f = decode_frame(pdf)
+            blk, rows = f.block_of(), []
+            for key, el in _by_key(pdf, blk):
+                freq, nbytes = f.tfs[el].astype(np.float32), f.norms[el]
+                for clause_id, w in by_key[key]:
+                    sc = None if w is None else sim.score(w, freq, nbytes, key[0])
+                    rows.extend(_range_rows(f.docids[el], sc, clause_id, R, blk[el]))
             yield pd.DataFrame(rows, columns=["rid", "clause", "offs", "scores"])
 
     return run
@@ -342,31 +335,20 @@ def slice_positions(leaves_of: dict[tuple[str, str], list[tuple[int, int]]], R: 
     leaf per term at offset 0. Payloads ship when the frame carries pay_enc."""
 
     def run(it):
-        from .codec import decode_block, decode_float_payloads, decode_positions
-
         for pdf in it:
             pay = "pay_enc" in pdf
+            f = decode_frame(pdf)
+            drep, blk = np.repeat(f.docids, f.tfs), np.repeat(f.block_of(), f.tfs)
+            chans = [np.repeat(f.norms, f.tfs)] + ([f.float_payloads()] if pay else [])
             rows = []
-            for r in pdf.itertuples(index=False):
-                docids, tfs = decode_block(
-                    r.docids_enc, r.tfs_enc, r.first_docid, r.count
-                )
-                if r.docbase:
-                    docids = docids + r.docbase
-                n_pos = int(tfs.sum())
-                poss = decode_positions(r.pos_enc, n_pos)
-                pays = decode_float_payloads(r.pay_enc, n_pos) if pay else None
-                drep = np.repeat(docids, tfs)
-                nrep = np.repeat(np.frombuffer(r.norms_enc, dtype=np.uint8), tfs)
-                slices = range_slices(drep, R)
-                for leaf, off in leaves_of[(r.field, r.term)]:
-                    bpos = poss - off
-                    for rid, b0, b1 in slices:
-                        rows.append(
-                            (rid, leaf, drep[b0:b1].tobytes(), bpos[b0:b1].tobytes())
-                            + ((pays[b0:b1].tobytes(),) if pay else ())
-                            + (nrep[b0:b1].tobytes(),)
-                        )
+            for key, el in _by_key(pdf, blk):
+                s0, s1 = runs(blk[el], drep[el] // R)
+                rid = (drep[el][s0] // R).tolist()
+                ids = cut_bytes(drep[el], s0, s1)
+                norms, *pays = [cut_bytes(c[el], s0, s1) for c in chans]
+                for leaf, off in leaves_of[key]:
+                    pos = cut_bytes(f.pos[el] - off, s0, s1)
+                    rows.extend(zip(rid, [leaf] * len(rid), ids, pos, *pays, norms))
             cols = ["rid", "leaf", "docids", "pos"] + (["pay"] if pay else [])
             yield pd.DataFrame(rows, columns=cols + ["norms"])
 
@@ -526,16 +508,8 @@ def per_doc(freq_of):
 def decode_docids(it):
     """Posting blocks (first_docid, count, docids_enc, tfs_enc, docbase) ->
     their global docids, nothing scored."""
-    from .codec import decode_block
-
     for pdf in it:
-        ids = [
-            decode_block(r.docids_enc, r.tfs_enc, r.first_docid, r.count)[0] + r.docbase
-            for r in pdf.itertuples(index=False)
-        ]
-        yield pd.DataFrame(
-            {"docid": np.concatenate(ids) if ids else np.empty(0, dtype=np.int64)}
-        )
+        yield pd.DataFrame({"docid": decode_frame(pdf).docids})
 
 
 # -- the query plan: one tree, two runners -------------------------------------
@@ -707,6 +681,9 @@ class IndexSearcher:
         self._stats_cache: dict[tuple[str, str], tuple[int, float]] = {}
         # CachingWrapperFilter's per-searcher docid-set cache
         self._filter_cache: dict = {}
+        # (field, term, max_edits) -> a FuzzyQuery's expanded terms: the
+        # searcher's segments are immutable, so one expansion is exact
+        self._fuzzy_terms: dict[tuple[str, str, int], list[str]] = {}
         # below this many postings saved, a planning step costs more (its
         # extra jobs) than the decode it avoids: conjunction skipping (of
         # boolean, phrase and span blocks) engages above it; every boolean
@@ -1061,29 +1038,34 @@ class IndexSearcher:
         (_docid_slice) — Lucene's CONSTANT_SCORE filter rewrite
         (MultiTermQuery.cs:95) with no term list on the driver."""
         if isinstance(q, FuzzyQuery):
-            # Lucene's FuzzyQuery uses Damerau-Levenshtein automata
-            # (transpositions=true, LevenshteinAutomata.cs); matched with a
-            # vectorized OSA distance over the length-banded vocab slice.
-            ts = (
-                self._stat_rows()
-                .filter(F.col("field") == FIELD)
-                .filter(
-                    F.length("term").between(
-                        len(q.term) - q.max_edits, len(q.term) + q.max_edits
+            key = (FIELD, q.term, q.max_edits)
+            if key not in self._fuzzy_terms:
+                # Lucene's FuzzyQuery uses Damerau-Levenshtein automata
+                # (transpositions=true, LevenshteinAutomata.cs); matched with
+                # a vectorized OSA distance over the length-banded vocab slice
+                ts = (
+                    self._stat_rows()
+                    .filter(F.col("field") == FIELD)
+                    .filter(
+                        F.length("term").between(
+                            len(q.term) - q.max_edits, len(q.term) + q.max_edits
+                        )
                     )
+                    .select("term")
+                    .distinct()
                 )
-                .select("term")
-                .distinct()
-            )
-            cand = (
-                _with_dl_edits(ts, q.term)
-                .filter(F.col("edits") <= q.max_edits)
-                .orderBy("edits", "term")
-                .limit(50)  # FuzzyQuery maxExpansions default
-            )
-            terms = [r["term"] for r in cand.select("term").collect()]
+                cand = (
+                    _with_dl_edits(ts, q.term)
+                    .filter(F.col("edits") <= q.max_edits)
+                    .orderBy("edits", "term")
+                    .limit(50)  # FuzzyQuery maxExpansions default
+                )
+                self._fuzzy_terms[key] = [r["term"] for r in cand.select("term").collect()]
             return ConstantScoreQuery(
-                boost=q.boost, query=BooleanQuery(should=tuple(TermQuery(term=t) for t in terms))
+                boost=q.boost,
+                query=BooleanQuery(
+                    should=tuple(TermQuery(term=t) for t in self._fuzzy_terms[key])
+                ),
             )
         elif isinstance(q, CommonTermsQuery):
             return self._rewrite_common_terms(q)
@@ -2018,20 +2000,14 @@ class IndexSearcher:
         sim, table = self.sim, self.sim.norms[field]
 
         def decode_leaves(it):
-            from .codec import decode_block  # executor-side import
-
             for pdf in it:
-                for r in pdf.itertuples(index=False):
-                    docids, tfs = decode_block(
-                        r.docids_enc, r.tfs_enc, r.first_docid, r.count
-                    )
-                    nbytes = np.frombuffer(r.norms_enc, dtype=np.uint8)
-                    yield pd.DataFrame({
-                        "docid": docids + r.docbase,
-                        "freq": tfs.astype(np.int64),
-                        "nrm": table[nbytes],
-                        "score": sim.score(w, tfs.astype(np.float32), nbytes, field),
-                    })
+                f = decode_frame(pdf)
+                yield pd.DataFrame({
+                    "docid": f.docids,
+                    "freq": f.tfs,
+                    "nrm": table[f.norms],
+                    "score": sim.score(w, f.tfs.astype(np.float32), f.norms, field),
+                })
 
         cols = ["first_docid", "count", "docids_enc", "tfs_enc", "norms_enc", "docbase"]
         rows = self._apply_live_docs(

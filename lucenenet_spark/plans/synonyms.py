@@ -1,4 +1,4 @@
-"""Query-time synonyms: SolrSynonymParser's file format + the 4.8
+r"""Query-time synonyms: SolrSynonymParser's file format + the 4.8
 QueryBuilder expansion shapes.
 
 Reference semantics:

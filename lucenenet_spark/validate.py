@@ -26,6 +26,17 @@ from .operators.index_build import POSTINGS_DDL, docs_view, load_manifest, read_
 from .oracle import norm_cache
 
 
+def _run_descends(values: np.ndarray, run_at: np.ndarray) -> np.ndarray:
+    """Per element of runs laid end to end (run_at: each run's start, plus
+    the end): True where the next element of its run is not greater."""
+    bad = np.zeros(len(values), dtype=bool)
+    bad[:-1] = values[1:] <= values[:-1]
+    bad[run_at[1:-1] - 1] = False  # a run's last element has no next
+    if len(bad):
+        bad[-1] = False
+    return bad
+
+
 def check_index(spark: SparkSession, index_dir: str) -> dict:
     """Run all invariant checks; returns {check: {'ok': bool, ...detail}}."""
     m = load_manifest(index_dir)
@@ -47,86 +58,58 @@ def check_index(spark: SparkSession, index_dir: str) -> dict:
 
     # -- decode every block once: recount + chain + bound + position checks --
     def scan_blocks(it):
-        from .operators.codec import decode_block, decode_offsets, decode_positions
+        from .operators.codec import decode_frame
 
         for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                docids, tfs = decode_block(r.docids_enc, r.tfs_enc, r.first_docid, r.count)
-                nb = np.frombuffer(r.norms_enc, dtype=np.uint8)
-                tf32 = tfs.astype(np.float32)
-                kern = tf32 / (tf32 + caches[r.field][nb])
-                # positions payload: one ascending run of sum(tfs) positions
-                # per posting (DOCS_AND_FREQS_AND_POSITIONS invariant)
-                pos_ok = True
-                if r.pos_enc:
-                    poss = decode_positions(r.pos_enc, int(tfs.sum()))
-                    if len(poss) != int(tfs.sum()) or np.any(poss < 0):
-                        pos_ok = False
-                    elif len(poss):
-                        # within each posting's run, positions strictly ascend
-                        cum = np.cumsum(tfs)[:-1]
-                        d = np.diff(poss)
-                        brk = np.ones(len(poss) - 1, dtype=bool)
-                        brk[cum - 1] = False  # run boundaries may reset
-                        pos_ok = bool(np.all(d[brk] > 0))
-                    # offsets payload (…_AND_OFFSETS level): end > start and
-                    # starts non-decreasing within each posting's run
-                    # (CheckIndex.cs offset validations)
-                    if pos_ok and getattr(r, "off_enc", b""):
-                        st, en = decode_offsets(r.off_enc, int(tfs.sum()))
-                        if np.any(en <= st) or np.any(st < 0):
-                            pos_ok = False
-                        elif len(st) > 1:
-                            cum = np.cumsum(tfs)[:-1]
-                            d = np.diff(st)
-                            brk = np.ones(len(st) - 1, dtype=bool)
-                            brk[cum - 1] = False
-                            pos_ok = bool(np.all(d[brk] > 0))
-                    # payloads channel: one length per occurrence, lengths
-                    # non-negative, concatenated bytes exactly sum(lens)
-                    # (CheckIndex.cs payload-length validations)
-                    if pos_ok and getattr(r, "pay_enc", b""):
-                        from .operators.codec import decode_payloads
+            if not len(pdf):
+                continue
+            f = decode_frame(pdf)
+            n_blocks, head, tail = len(pdf), f.at[:-1], f.at[1:] - 1
+            blk = f.block_of()
+            occ_blk = np.repeat(blk, f.tfs)
 
-                        lens, buf = decode_payloads(r.pay_enc, int(tfs.sum()))
-                        if (
-                            len(lens) != int(tfs.sum())
-                            or np.any(lens < 0)
-                            or len(buf) != int(lens.sum())
-                        ):
-                            pos_ok = False
-                rows.append(
-                    {
-                        "field": r.field,
-                        "term": r.term,
-                        "salt": r.salt,
-                        "pos_ok": pos_ok,
-                        "block_no": r.block_no,
-                        "df": len(docids),
-                        "ttf": int(tfs.sum()),
-                        "mono_ok": bool(np.all(np.diff(docids) > 0)),
-                        "meta_ok": bool(
-                            docids[0] == r.first_docid
-                            and docids[-1] == r.last_docid
-                            and len(docids) == r.count
-                            and len(nb) == r.count
-                        ),
-                        "bound_ok": bool(np.max(kern) <= np.float32(r.max_score_bound)),
-                        "first_docid": int(docids[0]),
-                        "last_docid": int(docids[-1]),
-                        "min_tf": int(tfs.min()),
-                    }
-                )
-            yield pd.DataFrame(rows) if rows else pd.DataFrame(
-                {c: pd.Series(dtype=t) for c, t in [
-                    ("field", "object"), ("term", "object"), ("salt", "int32"),
-                    ("pos_ok", "bool"), ("block_no", "int32"),
-                    ("df", "int64"), ("ttf", "int64"), ("mono_ok", "bool"),
-                    ("meta_ok", "bool"), ("bound_ok", "bool"),
-                    ("first_docid", "int64"), ("last_docid", "int64"), ("min_tf", "int64"),
-                ]}
+            def any_in_block(bad, of=occ_blk):
+                return np.bincount(of[bad], minlength=n_blocks) > 0
+
+            den = np.empty(len(f.norms), dtype=np.float32)
+            fields = pdf["field"].to_numpy()[blk]
+            for fld in np.unique(fields):
+                on = fields == fld
+                den[on] = caches[fld][f.norms[on]]
+            tf32 = f.tfs.astype(np.float32)
+            kern = np.maximum.reduceat(tf32 / (tf32 + den), head)
+            # positions: one run of tf strictly ascending, non-negative
+            # positions per posting (DOCS_AND_FREQS_AND_POSITIONS invariant);
+            # offsets (…_AND_OFFSETS level): end > start and starts strictly
+            # ascending within each run; payloads: non-negative lengths whose
+            # sum is the block's payload byte count (CheckIndex.cs offset
+            # and payload-length validations)
+            bad = (f.pos < 0) | _run_descends(f.pos, f.occ_at)
+            bad |= f.has_off[occ_blk] & (
+                (f.off_end <= f.off_start) | (f.off_start < 0)
+                | _run_descends(f.off_start, f.occ_at)
             )
+            len_cum = np.concatenate([[0], np.cumsum(f.pay_len)])
+            block_lens = np.diff(len_cum[f.occ_at[f.at]])
+            bad_pay = f.has_pay & (
+                any_in_block(f.pay_len < 0) | (np.diff(f.pay_at) != block_lens)
+            )
+            yield pd.DataFrame({
+                "field": pdf["field"],
+                "term": pdf["term"],
+                "salt": pdf["salt"],
+                "pos_ok": ~(f.has_pos & (any_in_block(bad) | bad_pay)),
+                "block_no": pdf["block_no"],
+                "df": np.diff(f.at),
+                "ttf": np.add.reduceat(f.tfs, head),
+                "mono_ok": ~any_in_block(_run_descends(f.docids, f.at), blk),
+                "meta_ok": (f.docids[head] == pdf["first_docid"].to_numpy())
+                & (f.docids[tail] == pdf["last_docid"].to_numpy()),
+                "bound_ok": kern <= pdf["max_score_bound"].to_numpy(dtype=np.float32),
+                "first_docid": f.docids[head],
+                "last_docid": f.docids[tail],
+                "min_tf": np.minimum.reduceat(f.tfs, head),
+            })
 
     scanned = postings.mapInPandas(
         scan_blocks,

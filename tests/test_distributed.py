@@ -130,14 +130,31 @@ def test_check_index_passes(spark, index_dir):
     assert report["ok"], report
 
 
-def test_check_index_catches_corruption(spark, index_dir, tmp_path):
-    """Tamper with the embedded terms dictionary (block_no=-2 stat rows) —
-    the validator must notice the df mismatch (CheckIndex.cs:827)."""
+def _copy_index(index_dir: str, dst: str) -> str:
+    """A copy of an index whose manifest points at the copy's tables."""
     import json
     import shutil
 
-    broken = str(tmp_path / "broken")
-    shutil.copytree(index_dir, broken)
+    shutil.copytree(index_dir, dst)
+    mpath = os.path.join(dst, "_manifest.json")
+    with open(mpath) as f:
+        m = json.load(f)
+    # manifest paths are absolute — rewrite to the copy
+    m["tables"] = {k: v.replace(index_dir, dst) for k, v in m["tables"].items()}
+    m["stagings"] = [
+        dict(sg, path=sg["path"].replace(index_dir, dst)) for sg in m["stagings"]
+    ]
+    with open(mpath, "w") as f:
+        json.dump(m, f)
+    return dst
+
+
+def test_check_index_catches_corruption(spark, index_dir, tmp_path):
+    """Tamper with the embedded terms dictionary (block_no=-2 stat rows) —
+    the validator must notice the df mismatch (CheckIndex.cs:827)."""
+    import shutil
+
+    broken = _copy_index(index_dir, str(tmp_path / "broken"))
     p = spark.read.parquet(os.path.join(index_dir, "postings"))
     bad = p.withColumn(
         "count",
@@ -151,23 +168,84 @@ def test_check_index_catches_corruption(spark, index_dir, tmp_path):
     )
     shutil.rmtree(os.path.join(broken, "postings"))
     os.rename(os.path.join(broken, "postings_bad"), os.path.join(broken, "postings"))
-    # manifest paths are absolute — rewrite to the copy
-    mpath = os.path.join(broken, "_manifest.json")
-    with open(mpath) as f:
-        m = json.load(f)
-    m["tables"] = {k: v.replace(index_dir, broken) for k, v in m["tables"].items()}
-    m["stagings"] = [
-        dict(sg, path=sg["path"].replace(index_dir, broken)) for sg in m["stagings"]
-    ]
-    with open(mpath, "w") as f:
-        json.dump(m, f)
     report = check_index(spark, broken)
     assert not report["term_stats"]["ok"]
 
 
+def _plant(index_dir: str, dst: str, pick, fault) -> str:
+    """A copy of an index whose first posting block row `pick` accepts
+    gets the columns `fault(row)` returns, rewritten in place with pyarrow
+    (the values are hand-packed at bit width 8: [8][one byte a value])."""
+    import glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    _copy_index(index_dir, dst)
+    for path in sorted(glob.glob(os.path.join(dst, "postings", "*", "*.parquet"))):
+        t = pq.ParquetFile(path).read()
+        rows = t.to_pylist()
+        for i, r in enumerate(rows):
+            if r["block_no"] >= 0 and pick(r):
+                rows[i] = {**r, **fault(r)}
+                pq.write_table(pa.Table.from_pylist(rows, schema=t.schema), path)
+                crc = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.crc")
+                if os.path.exists(crc):
+                    os.remove(crc)
+                return dst
+    raise AssertionError("no posting block to plant the fault in")
+
+
+def _block_flags(report) -> dict:
+    return {k: v for k, v in report["block_payloads"].items() if k not in ("ok", "blocks")}
+
+
+def test_check_index_catches_descending_positions(spark, index_dir, tmp_path):
+    """A block whose positions descend within one posting's run (a posting
+    with tf >= 2) fails the positions check and nothing else
+    (DOCS_AND_FREQS_AND_POSITIONS: each run strictly ascends)."""
+    broken = _plant(
+        index_dir, str(tmp_path / "broken"),
+        lambda r: r["pos_enc"] and r["count"] < r["sum_tf"] <= 255,
+        lambda r: {"pos_enc": bytes([8]) + bytes(range(r["sum_tf"] - 1, -1, -1))},
+    )
+    report = check_index(spark, broken)
+    assert not report["ok"]
+    assert _block_flags(report) == {
+        "bad_mono": 0, "bad_meta": 0, "bad_bound": 0, "bad_tf": 0, "bad_pos": 1,
+    }
+
+
+def test_check_index_catches_empty_offset(spark, tmp_path):
+    """A block with an offset whose end is not past its start fails the
+    offsets check and nothing else (CheckIndex.cs offset validations)."""
+    from lucenenet_spark.datagen import transcripts_spark
+
+    out = str(tmp_path / "offsets")
+    IndexBuilder(
+        spark, out, n_buckets=2, n_segments=1,
+        index_options="docs_freqs_positions_offsets",
+    ).build(transcripts_spark(spark, 200, partitions=2))
+    assert check_index(spark, out)["ok"]
+    # occurrence i gets start i, length 0: starts still ascend, end == start
+    broken = _plant(
+        out, str(tmp_path / "broken"),
+        lambda r: r["off_enc"] and r["sum_tf"] <= 127,
+        lambda r: {"off_enc": bytes([8]) + bytes(
+            v for i in range(r["sum_tf"]) for v in (i, 0)
+        )},
+    )
+    report = check_index(spark, broken)
+    assert not report["ok"]
+    assert _block_flags(report) == {
+        "bad_mono": 0, "bad_meta": 0, "bad_bound": 0, "bad_tf": 0, "bad_pos": 1,
+    }
+
+
 def test_docs_freqs_index_options(spark, corpus_pdf, oracle_index, tmp_path):
     """DOCS_AND_FREQS (no positions): ~smaller index, identical BM25
-    scores, phrase queries refused with a clear error."""
+    scores, phrase queries refused with a clear error; a merge of it (no
+    position buffers to decode) keeps the scores and passes CheckIndex."""
     import pytest as _pytest
 
     from lucenenet_spark import oracle
@@ -187,6 +265,11 @@ def test_docs_freqs_index_options(spark, corpus_pdf, oracle_index, tmp_path):
     assert _hits(s.search(TermQuery(term="popcorn"), 10)) == want
     with _pytest.raises(NotImplementedError):
         s.search(PhraseQuery(terms=("popcorn", "hello")), 5).collect()
+    from lucenenet_spark.operators.merge import merge_segments
+
+    merge_segments(spark, [out], out + "_merged", n_buckets=4)
+    assert _hits(IndexSearcher(spark, out + "_merged").search(TermQuery(term="popcorn"), 10)) == want
+    assert check_index(spark, out + "_merged")["ok"]
 
 
 def test_partial_chunking_bit_identical(spark, corpus_pdf, index_dir, tmp_path):

@@ -12,11 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from lucenenet_spark import oracle
-from lucenenet_spark.operators.codec import (
-    decode_float_payloads,
-    decode_payloads,
-    encode_payloads,
-)
+from lucenenet_spark.operators.codec import decode_frame, encode_frame
 from lucenenet_spark.operators.index_build import IndexBuilder
 from lucenenet_spark.operators.merge import merge_segments
 from lucenenet_spark.operators.search import IndexSearcher
@@ -31,38 +27,51 @@ TERMS = ["popcorn", "hello", "word7"]  # hot (salted), mid, low
 # -- codec ------------------------------------------------------------------
 
 
+def _pay_frame(lens, buf):
+    """One block of len(lens) single-occurrence postings whose payloads are
+    `lens` and `buf`, through encode_frame and back through decode_frame."""
+    n = len(lens)
+    cols = encode_frame(
+        np.array([0, n]), np.arange(n), np.ones(n, np.int64), np.zeros(n, np.uint8),
+        np.ones(n, np.float32), max(n, 1), pos=(np.zeros(n), np.array([0, n])),
+        pay=(np.asarray(lens), np.array([0, n]), np.frombuffer(buf, np.uint8),
+             np.array([0, len(buf)])),
+    )
+    return decode_frame({c: list(v) for c, v in cols.items() if c != "group"})
+
+
 def test_payload_roundtrip_mixed_lens():
     rng = np.random.default_rng(7)
     lens = rng.integers(0, 9, size=200).astype(np.int64)
     lens[rng.random(200) < 0.3] = 0  # occurrences without a payload
     buf = rng.bytes(int(lens.sum()))
-    enc = encode_payloads(lens, buf)
-    got_lens, got_buf = decode_payloads(enc, 200)
-    assert np.array_equal(got_lens, lens)
-    assert got_buf == buf
+    f = _pay_frame(lens, buf)
+    assert np.array_equal(f.pay_len, lens)
+    assert f.pay_buf.tobytes() == buf
 
 
 def test_payload_roundtrip_empty():
-    lens, buf = decode_payloads(b"", 0)
-    assert len(lens) == 0 and buf == b""
-    lens, buf = decode_payloads(b"", 5)  # block without payloads
-    assert np.array_equal(lens, np.zeros(5, dtype=np.int64)) and buf == b""
+    f = _pay_frame(np.zeros(0, np.int64), b"")
+    assert len(f.pay_len) == 0 and f.pay_buf.tobytes() == b""
+    # a block without payloads (empty pay_enc) reads as zero lengths
+    f = decode_frame({
+        "first_docid": [0], "count": [5], "docids_enc": [bytes([0]) + (1).to_bytes(8, "big")],
+        "tfs_enc": [bytes([0]) + (1).to_bytes(8, "big")], "pay_enc": [b""],
+    })
+    assert np.array_equal(f.pay_len, np.zeros(5, dtype=np.int64))
+    assert f.pay_buf.tobytes() == b"" and not f.has_pay.any()
 
 
 def test_float_payload_decode():
     vals = np.array([1.5, -2.0, 3.25], dtype=np.float32)
-    lens = np.array([4, 4, 4], dtype=np.int64)
-    enc = encode_payloads(lens, vals.astype(">f4").tobytes())
-    got = decode_float_payloads(enc, 3)
+    got = _pay_frame(np.array([4, 4, 4]), vals.astype(">f4").tobytes()).float_payloads()
     assert np.array_equal(got, vals)
 
 
 def test_float_payload_decode_with_gaps():
     """Zero-length occurrences decode as NaN (IsPayloadAvailable false)."""
     vals = np.array([7.0, 9.0], dtype=np.float32)
-    lens = np.array([4, 0, 4], dtype=np.int64)
-    enc = encode_payloads(lens, vals.astype(">f4").tobytes())
-    got = decode_float_payloads(enc, 3)
+    got = _pay_frame(np.array([4, 0, 4]), vals.astype(">f4").tobytes()).float_payloads()
     assert got[0] == np.float32(7.0) and got[2] == np.float32(9.0)
     assert np.isnan(got[1])
 

@@ -19,6 +19,7 @@ from lucenenet_spark.plans.query import (
     ConstantScoreQuery,
     DisMaxQuery,
     FilteredQuery,
+    FuzzyQuery,
     MultiPhraseQuery,
     PayloadTermQuery,
     PhraseQuery,
@@ -226,6 +227,26 @@ def test_constant_and_filter_queries_start_no_job(spark, searcher):
         with count_jobs(spark) as jobs:
             assert searcher.search(q, 10).collect()
         assert searcher.last_plan.runner == "local" and jobs["jobs"] == 0, (q, jobs)
+
+
+def test_fuzzy_expands_once_per_searcher(spark, index_dir):
+    """A FuzzyQuery collects its expanded terms once per searcher: a second
+    search of it starts no job, and group_top_k of it (whose hit bound
+    rewrites the query again) starts no more jobs than group_top_k of a
+    ConstantScoreQuery over one term."""
+    s = IndexSearcher(spark, index_dir)
+    fuzzy = FuzzyQuery(term="popcorn", max_edits=1)
+    const = ConstantScoreQuery(query=TermQuery(term="popcorn"))
+    want = hits(s.search(fuzzy, 10))
+    with count_jobs(spark) as jobs:
+        assert hits(s.search(fuzzy, 10)) == want
+    assert jobs["jobs"] == 0
+    s.search(const, 10).collect()  # warm its stats too
+    counts = {}
+    for name, q in (("fuzzy", fuzzy), ("const", const)):
+        with count_jobs(spark) as counts[name]:
+            s.group_top_k(q).collect()
+    assert counts["fuzzy"]["jobs"] <= counts["const"]["jobs"], counts
 
 
 def test_banned_nodes_are_planned_unscored(spark, three_segments, monkeypatch, families):
