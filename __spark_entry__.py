@@ -1518,13 +1518,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # order is heap-dependent)
         s = _searcher(spark, sf_dir)
         return (
-            s._stat_rows()
+            s.term_stats()
             .filter(F.col("field") == "text")
-            .groupBy("term")
-            .agg(
-                F.sum("count").alias("df"),
-                F.sum("sum_tf").alias("ttf"),
-            )
+            .select("term", "df", "ttf")
             .orderBy(F.desc("ttf"), F.asc("term"))
             .limit(20)
         )

@@ -308,8 +308,10 @@ def lucene_regexp_to_java(pattern: str) -> str:
 
 
 def tree_matches(tree, term: str) -> bool:
-    """Reference evaluator for a lucene_regexp_to_tree node (tests and the
-    pure-Python oracle)."""
+    """Whether `term` is in a lucene_regexp_to_tree node's language, each
+    pattern node matched whole by Python `re` (the engine's RegexpQuery
+    expansion and the pure-Python oracle; the translated patterns use only
+    syntax Java and Python regex read alike)."""
     import re as _re
 
     if isinstance(tree, str):

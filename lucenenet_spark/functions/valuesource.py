@@ -161,18 +161,9 @@ def scale(x: VS, min_target: float, max_target: float, searcher) -> VS:
 def _sorted_field_terms(field_name: str, searcher) -> list[str]:
     """The field's terms-index value list (FieldCache.GetTermsIndex over
     the top-level reader — our index IS one logical top-level segment):
-    one metadata-only stats scan, driver-side sorted collect — the same
+    the searcher's sorted terms dictionary, read on the driver — the same
     memory shape as FieldCache building the terms index in RAM."""
-    from pyspark.sql import functions as F
-
-    return sorted(
-        r["term"]
-        for r in searcher.term_stats()
-        .filter(F.col("field") == field_name)
-        .select("term")
-        .distinct()
-        .collect()
-    )
+    return [t for t, _df in searcher.terms(field_name)]
 
 
 def _ord_case(field_name: str, terms: list[str]) -> str:

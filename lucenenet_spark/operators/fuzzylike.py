@@ -32,7 +32,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-from pyspark.sql import functions as F
 
 from ..plans.query import BooleanQuery, ConstantScoreQuery, TermQuery
 
@@ -81,30 +80,17 @@ def slow_fuzzy_variants(
     prefix, suffix = term[:p], term[p:]
     automaton = max_edits <= 2
 
-    ts = (
-        searcher._stat_rows()
-        .filter(F.col("field") == field)
-        .filter(
-            F.length("term").between(
-                len(term) - max_edits, len(term) + max_edits
-            )
-        )
-    )
-    if prefix:
-        ts = ts.filter(F.col("term").startswith(prefix))
-    rows = (
-        ts.groupBy("term").agg(F.sum("count").alias("df")).collect()
-    )
-
+    lo, hi = len(term) - max_edits, len(term) + max_edits
     out: list[tuple[str, int, np.float32]] = []
-    for r in sorted(rows, key=lambda r: r["term"]):
-        cand = r["term"]
+    for cand, df in searcher.terms(field, lo=prefix):
+        if not (cand.startswith(prefix) and lo <= len(cand) <= hi):
+            continue
         ed = _lev(suffix, cand[p:])
         if automaton:
             if ed > max_edits:
                 continue
             if ed == 0:
-                out.append((cand, int(r["df"]), np.float32(1.0)))
+                out.append((cand, df, np.float32(1.0)))
                 continue
             sim = np.float32(1.0) - np.float32(
                 np.float32(ed) / np.float32(min(len(cand), len(term)))
@@ -119,7 +105,7 @@ def slow_fuzzy_variants(
         if not raw and not (sim > min_sim):
             continue
         out.append(
-            (cand, int(r["df"]), np.float32(np.float32(sim - min_sim) * scale))
+            (cand, df, np.float32(np.float32(sim - min_sim) * scale))
         )
     return out
 

@@ -394,8 +394,6 @@ def spell_suggest(searcher, word: str, max_edits: int = 2, k: int = 5) -> DataFr
     (edits asc, df desc, term asc) — DirectSpellChecker's score-then-
     frequency ordering with its transposition-aware distance; the length
     band prunes the terms-dict scan exactly like the fuzzy rewrite."""
-    from .search import _with_dl_edits
-
     lo, hi = len(word) - max_edits, len(word) + max_edits
     banded = (
         searcher.term_stats()
@@ -409,6 +407,20 @@ def spell_suggest(searcher, word: str, max_edits: int = 2, k: int = 5) -> DataFr
         .orderBy(F.asc("edits"), F.desc("df"), F.asc("term"))
         .limit(k)
     )
+
+
+def _with_dl_edits(terms_df: DataFrame, query: str) -> DataFrame:
+    """terms_df(term) -> + edits column: DL distance to `query`, computed in
+    an Arrow-batched pandas UDF over the (length-banded) vocab slice."""
+    from pyspark.sql.functions import pandas_udf
+
+    from .search import dl_distance
+
+    @pandas_udf("int")
+    def edits(s: pd.Series) -> pd.Series:
+        return s.map(lambda t: dl_distance(t, query)).astype("int32")
+
+    return terms_df.withColumn("edits", edits(F.col("term")))
 
 
 def spell_suggest_sql(word: str, max_edits: int = 2, k: int = 5) -> str:

@@ -1,7 +1,8 @@
 """Query execution: top-k over the block-encoded index, Spark-first.
 
 Lifecycle mirrors IndexSearcher.Search (SURVEY.md §3.1):
- 1. rewrite()  — MultiTermQuery expansion against the terms dict
+ 1. rewrite()  — MultiTermQuery expansion against the terms dict, on the
+                 driver, into a constant-score TermsFilter
                  (MultiTermQuery.cs:65-118; fixpoint IndexSearcher.cs:753-760)
  2. weights    — global stats (field_stats/term_stats, counting all docs like
                  Lucene counts deleted-until-merged) -> one frozen SimWeight
@@ -44,6 +45,7 @@ import dataclasses
 import logging
 import math
 import os
+import re
 from dataclasses import dataclass
 from typing import Callable
 
@@ -117,6 +119,9 @@ BLOCK_COLS = [
     "norms_enc", "docbase",
 ]
 DOCID_COLS = ["first_docid", "count", "docids_enc", "tfs_enc", "docbase"]
+# the MultiTermQuery family and the filters over the same terms enums
+MULTI_TERM_QUERIES = (PrefixQuery, WildcardQuery, RegexpQuery, TermRangeQuery, FuzzyQuery)
+MULTI_TERM = MULTI_TERM_QUERIES + (PrefixFilter, DocTermOrdsRangeFilter)
 
 
 @dataclass
@@ -567,8 +572,9 @@ class Empty:
 @dataclass
 class SparkOnly:
     """An opaque row source only Spark evaluates: a docs-table predicate
-    (a SQL `where`, MatchAll, the docs-column filters), a multi-term block
-    scan, or a sequential filter fold (_filter_docids)."""
+    (a SQL `where`, MatchAll, the docs-column filters) or a sequential
+    filter fold (_filter_docids). Term-keyed nodes, multi-term ones
+    included, are block scans."""
 
     build: Callable[[], DataFrame]
 
@@ -681,9 +687,9 @@ class IndexSearcher:
         self._stats_cache: dict[tuple[str, str], tuple[int, float]] = {}
         # CachingWrapperFilter's per-searcher docid-set cache
         self._filter_cache: dict = {}
-        # (field, term, max_edits) -> a FuzzyQuery's expanded terms: the
+        # (multi-term node, field) -> its TermsFilter (_expand): the
         # searcher's segments are immutable, so one expansion is exact
-        self._fuzzy_terms: dict[tuple[str, str, int], list[str]] = {}
+        self._expansions: dict = {}
         # below this many postings saved, a planning step costs more (its
         # extra jobs) than the decode it avoids: conjunction skipping (of
         # boolean, phrase and span blocks) engages above it; every boolean
@@ -743,18 +749,6 @@ class IndexSearcher:
             return pd.DataFrame(columns=cols)
         return pd.concat(parts, ignore_index=True)[cols]
 
-    def postings(self) -> DataFrame:
-        # block_no >= 0 excludes the per-partition checkpoint meta rows
-        out = None
-        for s in self.segments:
-            df = (
-                self._postings_table(s)
-                .filter(F.col("block_no") >= 0)
-                .withColumn("docbase", F.lit(s["docbase"]))
-            )
-            out = df if out is None else out.unionByName(df)
-        return out
-
     def docs(self) -> DataFrame:
         out = None
         for s in self.segments:
@@ -765,25 +759,38 @@ class IndexSearcher:
         return out
 
     def term_stats(self) -> DataFrame:
-        """(field, term, df, ttf, max_bound): the stat rows of the
-        per-searcher listing summed across salts and segments."""
-        return self._stat_rows().groupBy("field", "term").agg(
+        """(field, term, df, ttf, max_bound): the stat rows (block_no == -2)
+        of the per-searcher listing summed across salts and segments."""
+        out = None
+        for s in self.segments:
+            df = self._postings_table(s).filter(F.col("block_no") == -2)
+            out = df if out is None else out.unionByName(df)
+        return out.groupBy("field", "term").agg(
             F.sum("count").alias("df"),
             F.sum("sum_tf").alias("ttf"),
             F.max("max_score_bound").alias("max_bound"),
         )
 
-    def _stat_rows(self) -> DataFrame:
-        """RAW terms-dict stat rows (block_no == -2), one per (field, term,
-        salt, segment) — NO aggregation, so uses that only need term
-        membership (semi-joins) skip the groupBy shuffle entirely."""
-        out = None
-        for s in self.segments:
-            df = self._postings_table(s).filter(F.col("block_no") == -2).select(
-                "field", "term", "count", "sum_tf", "max_score_bound"
-            )
-            out = df if out is None else out.unionByName(df)
-        return out
+    def terms(
+        self, field: str = FIELD, lo: str | None = None, hi: str | None = None
+    ) -> list[tuple[str, int]]:
+        """The field's terms dictionary: sorted (term, df) pairs with
+        lo <= term <= hi (a None bound is open), df summed over salts and
+        segments (TermContext.cs:90-145). Read on the driver with pyarrow
+        from every segment's stat rows (block_no == -2), the field and the
+        bounds pushed down to parquet; term order is code-point order, as
+        in Spark and parquet (UTF-8 bytes)."""
+        where = (ds.field("field") == field) & (ds.field("block_no") == -2)
+        if lo is not None:
+            where &= ds.field("term") >= lo
+        if hi is not None:
+            where &= ds.field("term") <= hi
+        rows = pd.concat([
+            read_local(s["manifest"]["tables"]["postings"], ["term", "count"], where)
+            for s in self.segments
+        ])
+        df = rows.groupby("term", sort=True)["count"].sum()
+        return list(zip(df.index, df.to_numpy().tolist()))
 
     # -- stats -------------------------------------------------------------------
     @staticmethod
@@ -992,81 +999,61 @@ class IndexSearcher:
         return hits["docid"].to_numpy(dtype=np.int64)
 
     # -- rewrite -------------------------------------------------------------------
-    def _multiterm_cond(self, q):
-        """Terms-dict predicate of a MultiTermQuery node or a term-range
-        filter, or None."""
+    def _expand(self, q, field: str | None = None) -> TermsFilter:
+        """The terms a multi-term query or filter matches, as a TermsFilter
+        over their (field, term) keys in term order: the one walk of the
+        terms dictionary (MultiTermQuery.cs:65-118), on the driver, memoized
+        per searcher. `field` overrides the node's own (a span wrapper's)."""
+        field = field or getattr(q, "field", FIELD)
+        if (q, field) in self._expansions:
+            return self._expansions[(q, field)]
         if isinstance(q, (PrefixQuery, PrefixFilter)):
-            return F.col("term").startswith(q.prefix)
-        if isinstance(q, WildcardQuery):
-            rx = "^" + "".join(
-                ".*" if ch == "*" else "." if ch == "?" else "\\" + ch if ch in ".^$+{}[]()|\\" else ch
-                for ch in q.pattern
-            ) + "$"
-            return F.col("term").rlike(rx)
-        if isinstance(q, RegexpQuery):
+            # code-point order: every term with the prefix sorts at or after it
+            terms = [t for t, _df in self.terms(field, lo=q.prefix) if t.startswith(q.prefix)]
+        elif isinstance(q, (TermRangeQuery, DocTermOrdsRangeFilter)):
+            terms = [t for t, _df in self.terms(field, q.lower, q.upper) if _range_cond(t, q)]
+        elif isinstance(q, WildcardQuery):
+            # WildcardQuery.cs: `*` any string, `?` one char, the rest literal
+            rx = re.compile("".join(
+                ".*" if ch == "*" else "." if ch == "?" else re.escape(ch) for ch in q.pattern
+            ))
+            terms = [t for t, _df in self.terms(field) if rx.fullmatch(t)]
+        elif isinstance(q, RegexpQuery):
             # Lucene-automaton grammar, not Java regex: `\d` is a literal
             # 'd', `^`/`$` are literals, `"..."` quotes, `<n-m>` is a
             # numeric interval, and the automaton is anchored
-            # (Util/Automaton/RegExp.cs). Whole-term complement `~(...)`
-            # and intersection `&` decompose into a boolean condition tree
-            # over the terms dict; embedded ones raise loudly.
-            from ..functions.regexp import lucene_regexp_to_tree
+            # (Util/Automaton/RegExp.cs). Whole-term complement `~(...)` and
+            # intersection `&` are a boolean tree over the terms; embedded
+            # ones raise loudly.
+            from ..functions.regexp import lucene_regexp_to_tree, tree_matches
 
-            def cond(node):
-                if isinstance(node, str):
-                    return F.col("term").rlike("^(?:" + node + ")$")
-                kind = node[0]
-                if kind == "not":
-                    return ~cond(node[1])
-                parts = [cond(t) for t in node[1]]
-                out = parts[0]
-                for p in parts[1:]:
-                    out = (out & p) if kind == "and" else (out | p)
-                return out
-
-            return cond(lucene_regexp_to_tree(q.pattern))
-        if isinstance(q, (TermRangeQuery, DocTermOrdsRangeFilter)):
-            return _range_cond(F.col("term"), q)
-        return None
+            tree = lucene_regexp_to_tree(q.pattern)
+            terms = [t for t, _df in self.terms(field) if tree_matches(tree, t)]
+        elif isinstance(q, FuzzyQuery):
+            # Damerau-Levenshtein automata (transpositions=true,
+            # LevenshteinAutomata.cs) over the length band, the 50 best by
+            # (edits, term) (FuzzyQuery maxExpansions default)
+            n, k = len(q.term), q.max_edits
+            edits = [
+                (dl_distance(t, q.term), t) for t, _df in self.terms(field)
+                if n - k <= len(t) <= n + k
+            ]
+            terms = sorted(t for _e, t in sorted(e for e in edits if e[0] <= k)[:50])
+        else:
+            raise TypeError(f"not a multi-term query: {type(q).__name__}")
+        out = TermsFilter(terms=tuple((field, t) for t in terms))
+        self._expansions[(q, field)] = out
+        return out
 
     def rewrite(self, q: Query) -> Query:
         """Rewrite fixpoint (IndexSearcher.cs:753-760).
 
-        FuzzyQuery expands to its 50 best terms (boolean constant-score);
-        the other MultiTermQuery kinds stay as-is: planning makes each one
-        constant-score clause over a predicate-filtered block scan
-        (_docid_slice) — Lucene's CONSTANT_SCORE filter rewrite
-        (MultiTermQuery.cs:95) with no term list on the driver."""
-        if isinstance(q, FuzzyQuery):
-            key = (FIELD, q.term, q.max_edits)
-            if key not in self._fuzzy_terms:
-                # Lucene's FuzzyQuery uses Damerau-Levenshtein automata
-                # (transpositions=true, LevenshteinAutomata.cs); matched with
-                # a vectorized OSA distance over the length-banded vocab slice
-                ts = (
-                    self._stat_rows()
-                    .filter(F.col("field") == FIELD)
-                    .filter(
-                        F.length("term").between(
-                            len(q.term) - q.max_edits, len(q.term) + q.max_edits
-                        )
-                    )
-                    .select("term")
-                    .distinct()
-                )
-                cand = (
-                    _with_dl_edits(ts, q.term)
-                    .filter(F.col("edits") <= q.max_edits)
-                    .orderBy("edits", "term")
-                    .limit(50)  # FuzzyQuery maxExpansions default
-                )
-                self._fuzzy_terms[key] = [r["term"] for r in cand.select("term").collect()]
-            return ConstantScoreQuery(
-                boost=q.boost,
-                query=BooleanQuery(
-                    should=tuple(TermQuery(term=t) for t in self._fuzzy_terms[key])
-                ),
-            )
+        Every MultiTermQuery (prefix, wildcard, regexp, term range, fuzzy)
+        takes Lucene's CONSTANT_SCORE rewrite (MultiTermQuery.cs:95): a
+        ConstantScoreQuery over the TermsFilter of its expanded terms
+        (_expand), planned as an ordinary block scan of those keys."""
+        if isinstance(q, MULTI_TERM_QUERIES):
+            return ConstantScoreQuery(boost=q.boost, filter=self._expand(q))
         elif isinstance(q, CommonTermsQuery):
             return self._rewrite_common_terms(q)
         elif isinstance(q, NGramPhraseQuery):
@@ -1418,7 +1405,7 @@ class IndexSearcher:
             return self._plan_dismax(q, prune_k, scored, filters)
         if isinstance(q, BooleanQuery):
             return self._plan_boolean(q, prune_k, scored, filters)
-        if filters or self._constant(q):
+        if filters or isinstance(q, (ConstantScoreQuery, MatchAllQuery)):
             # one clause beside the filters: a constant-score node's
             # docids, or a node planned on its own
             return self._plan_combine((q,), [None], (), prune_k, scored=scored, filters=filters)
@@ -1434,11 +1421,6 @@ class IndexSearcher:
         if isinstance(q, _spans.PayloadNearQuery):
             return _spans.payload_near_plan(self, q, scored)
         raise TypeError(f"unsupported query node {type(q).__name__}")
-
-    def _constant(self, q) -> bool:
-        """A node scoring its boost on every doc it matches (multi-term
-        queries: the CONSTANT_SCORE rewrite)."""
-        return isinstance(q, (ConstantScoreQuery, MatchAllQuery)) or self._multiterm_cond(q) is not None
 
     def _plan_filter(self, f):
         """A Filter's docid set as a plan node (docid only).
@@ -1465,34 +1447,32 @@ class IndexSearcher:
         str over the docs table), or any other query's unscored plan.
 
         A term or TermsFilter (Lucene.Net.Queries/TermsFilter.cs) is a
-        block scan of its keys; a multi-term query, PrefixFilter and
-        DocTermOrdsRangeFilter the predicate-filtered block scan of their
-        terms, decoded to docids; the docs-column filters and MatchAll a
-        docs-table predicate. The reducer unions a clause's rows, so the
-        docids of several terms need no `distinct`."""
+        block scan of its keys, and so is a multi-term query, PrefixFilter
+        or DocTermOrdsRangeFilter, as the TermsFilter of its expanded terms
+        (_expand); the docs-column filters and MatchAll a docs-table
+        predicate. The reducer unions a clause's rows, so the docids of
+        several terms need no `distinct`."""
         R = self.BULK_RANGE
         if isinstance(x, ConstantScoreQuery):
             # ConstantScoreQuery.cs: exactly the wrapped query's or filter's docs
             return self._docid_slice(x.query if x.filter is None else x.filter, cid)
         if isinstance(x, QueryWrapperFilter):
             return self._docid_slice(x.query, cid)
+        if isinstance(x, MULTI_TERM):
+            x = self._expand(x)
         if isinstance(x, TermQuery):
             x = TermsFilter(terms=((x.field, x.term),))
-        if isinstance(x, TermsFilter):
+        if isinstance(x, TermsFilter) and x.terms:
             clauses = [Clause(cid, t, None, field=f) for f, t in dict.fromkeys(map(tuple, x.terms))]
             return Slice(
                 BlockScan([c.key for c in clauses]), BLOCK_COLS,
                 slice_blocks(clauses, self.sim, R), RANGE_ROWS_SCHEMA,
                 spread=len(clauses) > 1,
             )
-        if self._multiterm_cond(x) is not None:
-            cut = slice_scored(cid, R)
-            return Slice(
-                SparkOnly(lambda: self._multiterm_blocks(x)), DOCID_COLS,
-                lambda it: cut(decode_docids(it)), RANGE_ROWS_SCHEMA, spread=True,
-            )
-        if isinstance(x, (str, MatchAllQuery, FieldValueFilter, FieldCacheTermsFilter,
-                          NumericRangeFilter, FieldCacheRangeFilter)):
+        if isinstance(x, TermsFilter):
+            node = Empty()  # an expansion that matched no term
+        elif isinstance(x, (str, MatchAllQuery, FieldValueFilter, FieldCacheTermsFilter,
+                            NumericRangeFilter, FieldCacheRangeFilter)):
             node = SparkOnly(lambda: self.docs().filter(_docs_cond(x)).select("docid"))
         elif isinstance(x, (ChainedFilter, ValueSourceFilter, CachingWrapperFilter)):
             node = SparkOnly(lambda: self._filter_docids(x))
@@ -1501,27 +1481,6 @@ class IndexSearcher:
         else:
             node = self._plan(x, scored=False)
         return Slice(node, ["docid"], slice_scored(cid, R), RANGE_ROWS_SCHEMA)
-
-    def _multiterm_blocks(self, x) -> DataFrame:
-        """The posting blocks of every term a multi-term query or filter
-        matches. Prefix and range predicates are plain term comparisons,
-        so they run on the (term-sorted) block scan and push down to
-        parquet row-group min/max stats; a wildcard or regexp runs once per
-        terms-dict row, and the block scan hash-probes the broadcast
-        matches (duplicates across salts are harmless under left_semi)."""
-        field = getattr(x, "field", FIELD)
-        blocks = self.postings().filter(F.col("field") == field)
-        if isinstance(x, (PrefixQuery, PrefixFilter)):
-            return blocks.filter(
-                (F.col("term") >= x.prefix) & (F.col("term") < x.prefix + "\uffff")
-            )
-        cond = self._multiterm_cond(x)
-        if isinstance(x, (TermRangeQuery, DocTermOrdsRangeFilter)):
-            return blocks.filter(cond)
-        matching = F.broadcast(
-            self._stat_rows().filter(F.col("field") == field).filter(cond).select("term")
-        )
-        return blocks.join(matching, "term", "left_semi")
 
     def _empty_hits(self) -> DataFrame:
         return self.spark.range(0).select(
@@ -1619,7 +1578,7 @@ class IndexSearcher:
         for i, c in enumerate(subs):
             if isinstance(c, TermQuery) or not live[i]:
                 continue
-            if not scored or self._constant(c):
+            if not scored or isinstance(c, (ConstantScoreQuery, MatchAllQuery)):
                 slices.append(self._docid_slice(c, i))
                 if scored:
                     const[i] = np.float32(c.boost)
@@ -2074,14 +2033,7 @@ class IndexSearcher:
     def _hits_bound(self, q: Query) -> int | None:
         """Upper bound on the match count: Σ df over the query's terms
         (None when the query shape doesn't expose one, e.g. MatchAll)."""
-        q = (
-            self.rewrite(q)
-            if isinstance(q, (FuzzyQuery, BooleanQuery, CommonTermsQuery))
-            else q
-        )
-        if isinstance(q, (MatchAllQuery, PrefixQuery, WildcardQuery, RegexpQuery, TermRangeQuery)):
-            return None
-        keys = _collect_terms(q)
+        keys = _collect_terms(self.rewrite(q))
         if not keys:
             return None
         dfs = self.doc_freqs(keys)
@@ -2879,26 +2831,14 @@ def dl_distance(a: str, b: str) -> int:
     return d[la + 1][lb + 1]
 
 
-def _with_dl_edits(terms_df: DataFrame, query: str) -> DataFrame:
-    """terms_df(term) -> + edits column: DL distance to `query`, computed in
-    an Arrow-batched pandas UDF over the (length-banded) vocab slice — the
-    distributed analogue of Lucene's terms-enum automaton intersection."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("int")
-    def edits(s: pd.Series) -> pd.Series:
-        return s.map(lambda t: dl_distance(t, query)).astype("int32")
-
-    return terms_df.withColumn("edits", edits(F.col("term")))
-
-
-def _range_cond(col, r):
-    """col inside r's optionally open, optionally exclusive [lower, upper]."""
-    cond = F.lit(True)
+def _range_cond(v, r):
+    """v — a term, or a Spark column — inside r's optionally open,
+    optionally exclusive [lower, upper]."""
+    cond = True if isinstance(v, str) else F.lit(True)
     if r.lower is not None:
-        cond = cond & ((col >= r.lower) if r.include_lower else (col > r.lower))
+        cond = cond & ((v >= r.lower) if r.include_lower else (v > r.lower))
     if r.upper is not None:
-        cond = cond & ((col <= r.upper) if r.include_upper else (col < r.upper))
+        cond = cond & ((v <= r.upper) if r.include_upper else (v < r.upper))
     return cond
 
 
@@ -2938,5 +2878,5 @@ def _collect_terms(q: Query) -> list:
             out.extend(_collect_terms(c))
         return out
     if isinstance(q, ConstantScoreQuery):
-        return _collect_terms(q.query)
+        return list(q.filter.terms) if isinstance(q.filter, TermsFilter) else _collect_terms(q.query)
     return []

@@ -38,7 +38,6 @@ from dataclasses import dataclass
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..plans.query import Query
 from .search import Empty, per_doc
@@ -127,29 +126,14 @@ class SpanMultiTermQueryWrapper(SpanQuery):
 
 def expand_span_multiterm(searcher, q: Query) -> Query:
     """Replace every SpanMultiTermQueryWrapper in the tree with its
-    SpanOrQuery expansion against the searcher's terms dict (one distributed
-    predicate scan per wrapper; only the matched TERM STRINGS reach the
-    driver — the same driver-side footprint as Lucene's rewrite, which
-    enumerates matching terms to build the SpanOr)."""
+    SpanOrQuery expansion against the searcher's terms dict: the wrapped
+    query's terms (IndexSearcher._expand, term order), cut at top_terms —
+    the driver-side term list of Lucene's rewrite, which enumerates the
+    matching terms to build the SpanOr."""
     if isinstance(q, SpanMultiTermQueryWrapper):
-        cond = searcher._multiterm_cond(q.query)
-        if cond is None:
-            raise TypeError(
-                f"not a multi-term query: {type(q.query).__name__}"
-            )
-        rows = (
-            searcher._stat_rows()
-            .filter(F.col("field") == q.field)
-            .filter(cond)
-            .select("term")
-            .distinct()
-            .orderBy("term")
-        )
-        if q.top_terms is not None:
-            rows = rows.limit(q.top_terms)
-        terms = [r["term"] for r in rows.collect()]
+        keys = searcher._expand(q.query, q.field).terms[: q.top_terms]
         return SpanOrQuery(
-            clauses=tuple(SpanTermQuery(term=t, field=q.field) for t in terms),
+            clauses=tuple(SpanTermQuery(term=t, field=f) for f, t in keys),
             boost=q.boost,
         )
     if isinstance(q, SpanOrQuery):

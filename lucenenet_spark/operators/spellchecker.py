@@ -28,7 +28,6 @@ Distances are step-for-step f32 ports:
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import functions as F
 
 MODE_WHEN_NOT_IN_INDEX = "SUGGEST_WHEN_NOT_IN_INDEX"
 MODE_MORE_POPULAR = "SUGGEST_MORE_POPULAR"
@@ -212,28 +211,14 @@ def suggest_similar_scored(
     ]
     if not grams:
         return []
-    cond = None
-    for g in set(grams):
-        c = F.col("term").contains(g)
-        cond = c if cond is None else (cond | c)
-    rows = (
-        searcher._stat_rows()
-        .filter(F.col("field") == field)
-        .filter(cond)
-        .groupBy("term")
-        .agg(F.sum("count").alias("df"))
-        .collect()
-    )
     acc = f32(accuracy)
     out: list[tuple[np.float32, int, str]] = []
-    for r in sorted(rows, key=lambda r: r["term"]):
-        cand = r["term"]
-        if cand == word:
+    for cand, cfreq in searcher.terms(field):
+        if cand == word or not any(g in cand for g in grams):
             continue
         score = dist(word, cand)
         if score < acc:
             continue
-        cfreq = int(r["df"])
         if (suggest_mode == MODE_MORE_POPULAR and goal_freq > cfreq) \
                 or cfreq < 1:
             continue

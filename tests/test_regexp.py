@@ -92,9 +92,7 @@ def test_malformed_raise(pattern):
 
 
 def _matched_terms(searcher, pattern):
-    q = RegexpQuery(pattern=pattern)
-    got = searcher._stat_rows().filter(searcher._multiterm_cond(q))
-    return {r["term"] for r in got.select("term").distinct().collect()}
+    return {t for _f, t in searcher._expand(RegexpQuery(pattern=pattern)).terms}
 
 
 def test_digit_class_is_literal(searcher, oracle_index):
@@ -203,3 +201,75 @@ def test_interval_regex_brute_force():
             assert bool(pat.match(s)) == expected(s, imin, imax, digits), (
                 (imin, imax, digits), s
             )
+
+
+# -- the engine's Python evaluation vs Java regex --------------------------------
+
+ENGINE_PATTERNS = [
+    "word\\d", "word<1-19>", "word<10-29>", "word.*&~(word7)", '"word"[0123456789]',
+    # the gate patterns
+    "sc?n", '"sc"[ae]n|filt.r{1,2}',
+    # the translation fixtures above, as patterns over the test vocabulary
+    "ab+c", "sc[ae]n", "a|bc*", "a{2,3}b", "(ab)?c", "a^b", "a$b", '"a.b"c',
+    "a@", "a#b", "a()b", "a\\.b", "a\\*b", "a.*&~(abc)|xyz", "~(~(ab))",
+    # broad ones, so the sets compared are large
+    "w.*", "[a-m]+", "~(.*o.*)", ".*[0-9]{2}", "(co|wo).*&~(.*[13579])",
+]
+WILDCARD_PATTERNS = ["wor?7*", "*corn", "w*d?", "*", "c*n*3", "a.b*", "pop$?*"]
+
+
+def _java_rlike(node):
+    """The Spark condition the engine evaluated a regexp tree with before
+    it expanded on the driver: each pattern node an anchored rlike."""
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+
+    if isinstance(node, str):
+        return F.col("term").rlike("^(?:" + node + ")$")
+    if node[0] == "not":
+        return ~_java_rlike(node[1])
+    parts = [_java_rlike(t) for t in node[1]]
+    return reduce((lambda a, b: a & b) if node[0] == "and" else (lambda a, b: a | b), parts)
+
+
+def _java_wildcard(pattern):
+    from pyspark.sql import functions as F
+
+    rx = "^" + "".join(
+        ".*" if ch == "*" else "." if ch == "?" else "\\" + ch if ch in ".^$+{}[]()|\\" else ch
+        for ch in pattern
+    ) + "$"
+    return F.col("term").rlike(rx)
+
+
+def test_expansion_matches_java_regex(searcher):
+    """Over the test index's whole text vocabulary, the driver's expansion
+    of every regexp and wildcard pattern above is the term set Spark's
+    Java regex (rlike) selects."""
+    from pyspark.sql import functions as F
+
+    from lucenenet_spark.functions.regexp import lucene_regexp_to_tree
+    from lucenenet_spark.plans.query import WildcardQuery
+
+    qs = [RegexpQuery(pattern=p) for p in ENGINE_PATTERNS] + [
+        WildcardQuery(pattern=p) for p in WILDCARD_PATTERNS
+    ]
+    conds = [
+        _java_rlike(lucene_regexp_to_tree(q.pattern)) if isinstance(q, RegexpQuery)
+        else _java_wildcard(q.pattern)
+        for q in qs
+    ]
+    rows = (
+        searcher.term_stats().filter(F.col("field") == "text")
+        .select("term", *[c.alias(f"m{i}") for i, c in enumerate(conds)])
+        .collect()
+    )
+    assert len(rows) > 1000
+    sizes = []
+    for i, q in enumerate(qs):
+        want = {r["term"] for r in rows if r[f"m{i}"]}
+        got = {t for _f, t in searcher._expand(q).terms}
+        assert got == want, (q, sorted(got ^ want)[:10])
+        sizes.append(len(want))
+    assert sum(s > 100 for s in sizes) >= 4, sizes

@@ -23,9 +23,13 @@ from lucenenet_spark.plans.query import (
     MultiPhraseQuery,
     PayloadTermQuery,
     PhraseQuery,
+    PrefixFilter,
     PrefixQuery,
+    RegexpQuery,
     TermQuery,
+    TermRangeQuery,
     TermsFilter,
+    WildcardQuery,
 )
 
 from .conftest import count_jobs, forced_build_path, forced_runner, hits, phrase_pairs
@@ -89,9 +93,27 @@ def _families(t1: str, t2: str) -> dict:
         "banned_nested": banned(parse("popcorn common3")),
         "banned_constant": banned(ConstantScoreQuery(query=TermQuery(term="popcorn"))),
         "banned_payload_near": banned(spans.PayloadNearQuery(clauses=near.clauses, slop=1)),
+        **MULTI_TERM_SHAPES,
+        "span_multiterm_near": spans.SpanNearQuery(clauses=(
+            spans.SpanMultiTermQueryWrapper(query=PrefixQuery(prefix=t1[:3])),
+            spans.SpanTermQuery(term=t2),
+        ), slop=4),
         "payload_term": PayloadTermQuery(term="popcorn"),
         "payload_near": spans.PayloadNearQuery(clauses=near.clauses, slop=1),
     }
+
+
+# every multi-term shape: each expands on the driver to a TermsFilter
+MULTI_TERM_SHAPES = {
+    "prefix": PrefixQuery(prefix="word1", boost=1.5),
+    "wildcard": WildcardQuery(pattern="wor?7*"),
+    "regexp_complement": RegexpQuery(pattern="word.*&~(word7)"),
+    "term_range": TermRangeQuery(lower="common", upper="popcorn", include_upper=False),
+    "fuzzy": FuzzyQuery(term="popcorm", max_edits=1),
+    "prefix_filter": FilteredQuery(
+        query=parse("popcorn common3"), filter=PrefixFilter(prefix="word"),
+    ),
+}
 
 
 @pytest.fixture(scope="module")
@@ -206,8 +228,7 @@ def test_docid_clauses_plan_no_join(searcher):
             assert "Join" not in plan and "HashAggregate" not in plan, (q, plan)
             got = hits(df)
             with forced_runner("local"):
-                if not isinstance(q, PrefixQuery):  # a Spark-only leaf
-                    assert got == hits(searcher.search(q, 50))
+                assert got == hits(searcher.search(q, 50))
             assert got, q
 
 
@@ -227,6 +248,37 @@ def test_constant_and_filter_queries_start_no_job(spark, searcher):
         with count_jobs(spark) as jobs:
             assert searcher.search(q, 10).collect()
         assert searcher.last_plan.runner == "local" and jobs["jobs"] == 0, (q, jobs)
+
+
+def test_multi_term_queries_start_no_job(spark, index_dir):
+    """A multi-term query expands against the terms dictionary on the
+    driver: each shape runs with no Spark job, cold (its expansion and
+    stats read with pyarrow) and warm."""
+    s = IndexSearcher(spark, index_dir)
+    for q in MULTI_TERM_SHAPES.values():
+        for _ in ("cold", "warm"):
+            with count_jobs(spark) as jobs:
+                assert s.search(q, 10).collect(), q
+            assert s.last_plan.runner == "local" and jobs["jobs"] == 0, (q, jobs)
+
+
+def test_term_suggesters_start_no_job(spark, searcher):
+    """SlowFuzzy variants and the spellchecker walk the terms dictionary
+    on the driver: a warm call starts no Spark job."""
+    from lucenenet_spark.operators.fuzzylike import slow_fuzzy_variants
+    from lucenenet_spark.operators.spellchecker import suggest_similar
+
+    calls = [
+        lambda: slow_fuzzy_variants(searcher, "popcorm", 0.5),
+        lambda: slow_fuzzy_variants(searcher, "popcorm", 0.5, prefix_length=3),
+        lambda: suggest_similar(searcher, "popcorm", 5),
+    ]
+    for call in calls:
+        want = call()
+        assert want
+        with count_jobs(spark) as jobs:
+            assert call() == want
+        assert jobs["jobs"] == 0, jobs
 
 
 def test_fuzzy_expands_once_per_searcher(spark, index_dir):
@@ -315,15 +367,15 @@ QUERY_MIX_SHAPES = {
     "not": ("+word7 -popcorn", "local"),
     "phrase": ('"common1 common2"', "local"),
     "phrase_sloppy": ('"common1 common2"~3', "local"),
-    "prefix": ("rare1*", "spark"),
+    "prefix": ("rare1*", "local"),
     "field": ("+role:tool +word7", "local"),
 }
 
 
 @pytest.mark.parametrize("family", sorted(QUERY_MIX_SHAPES))
 def test_query_mix_family_runner(searcher, family):
-    """Each benchmark family shape records the runner it ran on; only the
-    multi-term rewrite (a Spark-only leaf) leaves the driver."""
+    """Each benchmark family shape records the runner it ran on: every
+    one, the prefix expanded on the driver included, stays there."""
     qs, runner = QUERY_MIX_SHAPES[family]
     searcher.search(parse(qs), 10).collect()
     p = searcher.last_plan
